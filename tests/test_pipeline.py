@@ -350,6 +350,37 @@ def test_worker_timeout(spark, input_file, tmp_path):
         process_message(spark, _message(input_file), plist, workers)
 
 
+def test_worker_timeout_cancels_spark_job(spark, input_file, tmp_path):
+    """A timed-out worker's Spark job is cancelled with its batch's job
+    group, not left running to completion behind the TimeoutError."""
+    import threading
+    import time
+
+    from trollflow2_spark.plans.pipeline import register_plugin
+
+    outcome = {}
+    finished = threading.Event()
+
+    @register_plugin("slow_spark_job")
+    def _slow_spark_job(job):
+        rdd = job["spark"].sparkContext.parallelize([0], 1)
+        try:
+            rdd.map(lambda x: time.sleep(4) or x).collect()
+            outcome["job"] = "completed"
+        except Exception as exc:  # noqa: BLE001 - the cancellation under test
+            outcome["job"] = str(exc)
+        finally:
+            finished.set()
+
+    plist = read_product_list(raw_string=PL_YAML.format(out_dir=tmp_path))
+    workers = [{"fun": "slow_spark_job", "timeout": 1}]
+    with pytest.raises(TimeoutError):
+        process_message(spark, _message(input_file), plist, workers)
+    assert finished.wait(60)
+    assert outcome["job"] != "completed"
+    assert "cancelled" in outcome["job"]
+
+
 def test_cache_and_overviews(spark, input_file, tmp_path):
     out_dir = str(tmp_path / "out")
     yaml_text = """

@@ -313,8 +313,8 @@ class FakeKafkaBroker:
     DataFrame contracts the engine's Kafka integration uses: the READER
     contract (records exposed with Spark's Kafka wire schema —
     key/value binary, topic, partition, offset, timestamp) and the
-    WRITER contract (consuming a DataFrame with topic/value[/key]
-    columns, the shape ``to_kafka_rows`` produces). Lets the
+    WRITER contract (consuming topic/value[/key] rows, the shape
+    ``to_kafka_rows`` produces for ``publish_to_kafka``). Lets the
     message→jobs→files→publish path run end-to-end through the very
     same parse/shape code the real connector would drive."""
 
@@ -343,12 +343,11 @@ class FakeKafkaBroker:
         ]
         return spark.createDataFrame(rows, KAFKA_WIRE_SCHEMA)
 
-    def consume(self, kafka_rows_df):
-        """Writer side: accept a (topic, value[, key]) DataFrame —
-        exactly what ``df.write.format('kafka')`` would serialize."""
-        has_key = "key" in kafka_rows_df.columns
-        for r in kafka_rows_df.collect():
-            self.produce(r["topic"], r["value"], r["key"] if has_key else None)
+    def consume(self, kafka_rows):
+        """Writer side: accept (topic, value[, key]) rows — exactly what
+        ``publish_to_kafka`` hands to ``df.write.format('kafka')``."""
+        for r in kafka_rows:
+            self.produce(r["topic"], r["value"], r.get("key"))
 
 
 def test_kafka_e2e_through_fake_broker(spark, sf_dir, tmp_path):
@@ -359,7 +358,7 @@ def test_kafka_e2e_through_fake_broker(spark, sf_dir, tmp_path):
     — shaped by to_kafka_rows with area keying — land in the broker's
     per-file out-topics. Closes the 'shape-tested only' gap left when
     no broker exists in the sandbox."""
-    from trollflow2_spark.sinks.publish import publish_messages_df, to_kafka_rows
+    from trollflow2_spark.sinks.publish import publisher_messages, to_kafka_rows
     from trollflow2_spark.plans.pipeline import process_message
     from trollflow2_spark.streaming.runner import parse_kafka_records
 
@@ -400,15 +399,8 @@ def test_kafka_e2e_through_fake_broker(spark, sf_dir, tmp_path):
     for message in messages:
         summary = process_message(spark, message, plist)
         assert summary["status"] == "nominal"
-        msgs = publish_messages_df(
-            spark, summary["result"], base_mda=message
-        )
-        from pyspark.sql import functions as F
-
-        keyed = msgs.withColumn(
-            "area", F.get_json_object(F.col("message"), "$.area")
-        )
-        broker.consume(to_kafka_rows(keyed, key_col="area"))
+        msgs = publisher_messages(summary["result"], base_mda=message)
+        broker.consume(to_kafka_rows(msgs, key_field="area"))
 
     assert sorted(os.listdir(out_dir)) == ["SAT-A_p1.parquet", "SAT-B_p1.parquet"]
     published = broker.topics["/parquet/a1"]
@@ -425,7 +417,11 @@ def test_kafka_source_sink_shape(spark):
     """Kafka source/sink registration is shape-pinned without a broker:
     URI routing, constructed reader options, and the sink's
     (topic, value[, key]) row contract."""
-    from trollflow2_spark.sinks.publish import kafka_sink_options, to_kafka_rows
+    from trollflow2_spark.sinks.publish import (
+        kafka_sink_options,
+        publish_to_kafka,
+        to_kafka_rows,
+    )
     from trollflow2_spark.streaming.runner import (
         kafka_source_options,
         parse_message_source_uri,
@@ -454,17 +450,19 @@ def test_kafka_source_sink_shape(spark):
 
     fmt, opts = kafka_sink_options("b1:9092")
     assert (fmt, opts) == ("kafka", {"kafka.bootstrap.servers": "b1:9092"})
-    msgs = spark.createDataFrame(
-        [("/png/areaA", '{"uri":"f.png"}', "areaA")],
-        ["topic", "message", "area"],
-    )
+    msgs = [{"topic": "/png/areaA", "message": {"uri": "f.png", "area": "areaA"}}]
     rows = to_kafka_rows(msgs)
-    assert rows.columns == ["topic", "value"]
-    keyed = to_kafka_rows(msgs, key_col="area")
-    assert keyed.columns == ["topic", "value", "key"]
-    got = keyed.collect()[0]
+    assert list(rows[0]) == ["topic", "value"]
+    keyed = to_kafka_rows(msgs, key_field="area")
+    assert list(keyed[0]) == ["topic", "value", "key"]
+    got = keyed[0]
     assert got["topic"] == "/png/areaA" and got["key"] == "areaA"
     assert json.loads(got["value"])["uri"] == "f.png"
+    # the DataFrame handed to the connector builds; only the jar is absent
+    from pyspark.errors import AnalysisException
+
+    with _pytest.raises(AnalysisException, match="Failed to find data source: kafka"):
+        publish_to_kafka(spark, msgs, "b1:9092", key_field="area")
 
 
 def test_streaming_simhash_dedup(spark, tmp_path):

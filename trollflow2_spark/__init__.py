@@ -9,8 +9,9 @@ for satellite imagery), re-expressed Spark-first:
 - plugin worker chain  -> composition of ``DataFrame -> DataFrame`` stages
 - filter plugins       -> ``df.filter`` / join-back predicates
 - resampling           -> bucketed spatial equi-join + window top-1
-- multi-format sinks   -> persisted plan + N write actions + manifest DF
-- publisher            -> ``to_json(struct(...))`` sink rows
+- multi-format sinks   -> persisted plan + N write actions + output manifest
+- publisher            -> plain-Python messages, one atomically renamed
+                          JSON-lines file per batch (Kafka rows in production)
 
 Design notes (scale): everything is declarative DataFrame API so Catalyst
 handles pushdown/pruning/join strategy; small dims are broadcast; data-path

@@ -35,13 +35,13 @@ from __future__ import annotations
 
 import logging
 import math
-import threading
 import time
 import uuid
 from collections import OrderedDict
 from datetime import datetime, timezone
 from typing import Any, Callable, Sequence
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from trollflow2_spark.config.work_items import (
@@ -53,7 +53,7 @@ from trollflow2_spark.operators.transforms import (
     block_aggregate,
 )
 from trollflow2_spark.sinks.save import SaveResult, check_results, save_datasets
-from trollflow2_spark.sinks.publish import publish_messages_df, publish_to_json_dir
+from trollflow2_spark.sinks.publish import publisher_messages, write_messages
 from trollflow2_spark.sources.scene import (
     SceneCreationError,
     create_scene,
@@ -774,10 +774,9 @@ def publish_plugin(
     dispatch_targets: Sequence[str] | None = None,
 ) -> None:
     """Emit one message per produced file (≙ FilePublisher,
-    ``plugins/__init__.py:476-579``); JSON-dir sink locally, Kafka in
-    production."""
-    msgs = publish_messages_df(
-        job["spark"],
+    ``plugins/__init__.py:476-579``) as one JSON-lines file under the
+    output dir; plain Python, no Spark job."""
+    msgs = publisher_messages(
         job["produced_files"],
         base_mda=job["input_mda"],
         topic_pattern=topic_pattern,
@@ -786,7 +785,7 @@ def publish_plugin(
     target = out_dir
     if target is None:
         target = job["work_items"][0].get("output_dir", ".") if job["work_items"] else "."
-    job["published_to"] = publish_to_json_dir(msgs, target)
+    job["published_to"] = write_messages(msgs, target)
 
 
 # ---------------------------------------------------------------------------
@@ -819,7 +818,9 @@ def _run_with_timeout(
         except BaseException as exc:  # noqa: BLE001 - reported below
             err.append(exc)
 
-    t = threading.Thread(target=body, daemon=True)
+    # InheritableThread carries the batch's job group into the worker's JVM
+    # thread (pinned-thread mode), so cancelJobGroup reaches its jobs
+    t = InheritableThread(target=body, daemon=True)
     t.start()
     t.join(timeout)
     if t.is_alive():

@@ -1,6 +1,5 @@
 from trollflow2_spark.sinks.save import (  # noqa: F401
     CALLBACK_REGISTRY,
-    MANIFEST_SCHEMA,
     WRITER_REGISTRY,
     SaveResult,
     check_results,
@@ -9,6 +8,6 @@ from trollflow2_spark.sinks.save import (  # noqa: F401
     save_datasets,
 )
 from trollflow2_spark.sinks.publish import (  # noqa: F401
-    publish_messages_df,
-    publish_to_json_dir,
+    publisher_messages,
+    write_messages,
 )

@@ -36,15 +36,13 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # Writer registry (≙ geotiff/cf/simple_image/ninjotiff writers,
-# dict_tools.py:58, examples/pl.yaml:23-26). Real table formats write
-# natively; image/netcdf writers are explicit stubs in this container
-# (no rasterio/netCDF4): they persist the data as parquet plus a
-# `.meta.json` sidecar recording the intended format, keeping the
-# pipeline shape (fan-out, commit, manifest) fully exercised.
+# dict_tools.py:58, examples/pl.yaml:23-26). Table formats write natively
+# through Spark; image/netcdf writers encode single files with the
+# stdlib encoders in ``sinks.imagery`` / ``sinks.netcdf`` (PNG, GeoTIFF,
+# NetCDF CDF-1; no rasterio/netCDF4 needed).
 
 WRITER_REGISTRY: dict[str, Callable[[DataFrame, str, dict], None]] = {}
 
@@ -334,19 +332,6 @@ CALLBACK_REGISTRY: dict[str, Callable[[dict, dict], dict]] = {
 
 # ---------------------------------------------------------------------------
 
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType()),
-        T.StructField("area", T.StringType()),
-        T.StructField("product", T.StringType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("writer", T.StringType()),
-        T.StructField("size_bytes", T.LongType()),
-        T.StructField("n_files", T.IntegerType()),
-        T.StructField("elapsed_sec", T.DoubleType()),
-    ]
-)
-
 
 def _dir_size(path: str) -> tuple[int, int]:
     """(total data bytes, part-file count) for a committed directory
@@ -367,13 +352,6 @@ def _dir_size(path: str) -> tuple[int, int]:
 @dataclass
 class SaveResult:
     produced: list[dict] = field(default_factory=list)
-
-    def manifest_df(self, spark: SparkSession) -> DataFrame:
-        rows = [
-            tuple(p.get(f.name) for f in MANIFEST_SCHEMA.fields)
-            for p in self.produced
-        ]
-        return spark.createDataFrame(rows, MANIFEST_SCHEMA)
 
 
 def save_datasets(
