@@ -80,22 +80,6 @@ def test_stretch_nan_fill():
     assert out[1, 1] == 255
 
 
-def test_executor_side_encode_matches_driver_path(spark, tmp_path):
-    """encode_on_executor writes the identical single-file PNG/NetCDF via
-    one executor task (no driver gather) — the very-large-area path."""
-    rows = [(y, x, float(10 * y + x)) for y in range(10) for x in range(10)]
-    df = spark.createDataFrame(rows, "y int, x int, value double")
-    from trollflow2_spark.sinks.save import WRITER_REGISTRY
-
-    for writer, ext in (("simple_image", "png"), ("cf", "nc"), ("geotiff", "tif")):
-        p_driver = str(tmp_path / f"driver.{ext}")
-        p_exec = str(tmp_path / f"exec.{ext}")
-        WRITER_REGISTRY[writer](df, p_driver, {})
-        WRITER_REGISTRY[writer](df, p_exec, {"encode_on_executor": "true"})
-        with open(p_driver, "rb") as a, open(p_exec, "rb") as b:
-            assert a.read() == b.read(), writer
-
-
 def test_stretch_all_nan_writes_fill():
     """A fully-invalid product (left-join resample missing everywhere)
     must encode to a fill-valued image, not crash on nanmin of empty."""

@@ -923,9 +923,9 @@ def test_create_scene_reads_orc(spark, input_file, tmp_path):
 
 
 def test_save_manifest_carries_observed_row_count(spark, tmp_path):
-    """The manifest's n_rows comes from df.observe riding the write
-    action itself — no second count() scan — and a zero-row result
-    flags the audit as empty."""
+    """The manifest's n_rows is the gathered table's row count — no
+    second count() scan — and a zero-row result flags the audit as
+    empty."""
     from trollflow2_spark.sinks.save import check_results, save_datasets
 
     df = spark.range(37).selectExpr("id", "id * 2 AS v")

@@ -14,6 +14,7 @@ This is the engine's query lifecycle (≙ ``process_files`` →
       "scene":            DataFrame (set by create_scene),
       "resampled_scenes": {area: DataFrame},
       "produced_files":   SaveResult (set by save_datasets),
+      "cancelled":        threading.Event (set when a worker times out),
     }
 
 Worker plugins are ``fn(job, **kwargs)`` callables resolved from
@@ -22,7 +23,9 @@ tags). ``AbortProcessing`` skips the rest of the current priority batch
 (≙ ``plugins/__init__.py:82-83``, caught at ``launcher.py:456-457``).
 Per-worker ``timeout`` cancels the batch's Spark jobs via job-group
 cancellation — the cluster-side replacement for the reference's
-SIGALRM-based timers (``launcher.py:441-455``).
+SIGALRM-based timers (``launcher.py:441-455``) — and sets the batch's
+``cancelled`` event, so the abandoned worker commits and publishes
+nothing more.
 
 Scale notes: per-message work is one Spark job-group on the shared
 session; the work-item loop is config-sized; data-path operations stay
@@ -35,6 +38,7 @@ from __future__ import annotations
 
 import logging
 import math
+import threading
 import time
 import uuid
 from collections import OrderedDict
@@ -96,6 +100,7 @@ def message_to_jobs(
             "resampled_scenes": {},
             "produced_files": SaveResult(),
             "processing_priority": prio,
+            "cancelled": threading.Event(),
         }
     return jobs
 
@@ -785,6 +790,9 @@ def publish_plugin(
     target = out_dir
     if target is None:
         target = job["work_items"][0].get("output_dir", ".") if job["work_items"] else "."
+    if job.get("cancelled") is not None and job["cancelled"].is_set():
+        logger.warning("publish cancelled; %d messages dropped", len(msgs))
+        return
     job["published_to"] = write_messages(msgs, target)
 
 
@@ -802,11 +810,16 @@ DEFAULT_WORKERS: list[dict] = [
 
 
 def _run_with_timeout(
-    spark: SparkSession, fn: Callable[[], None], timeout: float | None, group: str
+    spark: SparkSession,
+    fn: Callable[[], None],
+    timeout: float | None,
+    group: str,
+    cancelled: threading.Event,
 ) -> None:
-    """Run a worker; on timeout cancel its Spark job group and fail the
-    batch (cluster-side analog of the SIGALRM timer at
-    ``launcher.py:441-455``)."""
+    """Run a worker; on timeout set ``cancelled``, cancel its Spark job
+    group and fail the batch (cluster-side analog of the SIGALRM timer at
+    ``launcher.py:441-455``). The worker thread cannot be killed, so the
+    plain-Python steps that follow it check ``cancelled`` instead."""
     if not timeout:
         fn()
         return
@@ -824,6 +837,7 @@ def _run_with_timeout(
     t.start()
     t.join(timeout)
     if t.is_alive():
+        cancelled.set()
         spark.sparkContext.cancelJobGroup(group)
         raise TimeoutError(f"worker exceeded {timeout}s; job group {group} cancelled")
     if err:
@@ -880,7 +894,7 @@ def process_message(
                         f"unknown worker {name!r}; registered: {sorted(PLUGIN_REGISTRY)}"
                     )
                 _run_with_timeout(
-                    spark, lambda: plugin(job, **conf), timeout, group
+                    spark, lambda: plugin(job, **conf), timeout, group, job["cancelled"]
                 )
                 if not job["work_items"]:
                     logger.info("priority %s: all work items pruned", prio)

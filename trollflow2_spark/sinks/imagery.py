@@ -14,8 +14,9 @@ grid), not by the input data size. Collecting one product's grid to the
 driver to encode is therefore the correct plan even when total input is
 100 TB: upstream resampling reduced the data to one fixed-size raster
 per output, and each output is encoded independently (the driver loop
-is over configured formats, never over input rows). The gather is one
-Arrow-backed ``toPandas`` of (y, x, value).
+is over configured formats, never over input rows). ``save_datasets``
+gathers a batch's output columns once, as Arrow, and each image writer
+encodes from its (y, x, value) slice of that table.
 
 Format background is public knowledge: the PNG spec (RFC 2083 /
 ISO 15948) and the TIFF 6.0 + GeoTIFF 1.1 (OGC 19-008r4) specs.

@@ -1,50 +1,64 @@
-"""Sinks: multi-format fan-out with atomic commit + output manifest.
+"""Sinks: one gather per batch, every format written from it, atomic commit.
 
 Maps the reference's writer stack (``save_datasets`` /
 ``save_dataset`` / tmp-file + staging-zone atomic renames / callbacks /
 ``check_results`` — ``/root/reference/trollflow2/plugins/__init__.py:
-223-473`` and ``launcher.py:90-143``) onto Spark write actions:
+223-473`` and ``launcher.py:90-143``):
 
-- *one computation, many sinks*: the shared scene plan is persisted once
-  and every format writes from it (≙ the single
-  ``compute_writer_results`` call at ``plugins/__init__.py:395``;
-  ``eager_writing=True`` skips the persist, like ``:376``);
+- *one computation, many sinks*: the columns every output of a batch
+  writes are gathered once, with one ``toArrow()`` Spark job, and each
+  writer encodes its file from that Arrow table on the driver
+  (≙ the single ``compute_writer_results`` call at
+  ``plugins/__init__.py:395``);
 - *atomic commit*: each output is written to ``<final>.<token>.tmp`` and
-  atomically renamed after success (≙ ``use_tmp_file``/``staging_zone``,
-  ``plugins/__init__.py:235-255``). Spark's own FileOutputCommitter
-  already stages task files; this directory-level rename additionally
-  makes the *whole dataset* appear atomically for downstream pollers;
+  renamed into place after success (≙ ``use_tmp_file``/``staging_zone``,
+  ``plugins/__init__.py:235-255``), so downstream pollers only ever see
+  whole products; a failing writer's ``.tmp`` is removed;
 - *callbacks*: per-output hooks run post-commit
   (≙ ``call_on_done``, ``plugins/__init__.py:1082-1138``);
 - *manifest*: every write appends a row; ``check_results`` audits it
   (counts / empty / missing — ``launcher.py:90-143``).
 
-Scale notes: outputs are directories of part-files (cluster-writable,
-committer-backed); writer fan-out is a driver loop over *formats*
-(config-sized), never over rows; the persisted prefix is unpersisted at
-the end to return executor memory.
+Table formats keep Spark's dataset layout (a directory holding one
+``part-00000-<uuid>-c000.<ext>`` file and ``_SUCCESS``) and its text
+tokens, so ``spark.read`` sees the same datasets Spark's own writers made.
+
+Scale notes: the gather is bounded by one batch's output columns over
+its area, the same bound the reference's single in-process compute has;
+writer fan-out is a driver loop over *formats* (config-sized).
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import json
+import logging
+import math
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import Any, Callable, Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Writer registry (≙ geotiff/cf/simple_image/ninjotiff writers,
-# dict_tools.py:58, examples/pl.yaml:23-26). Table formats write natively
-# through Spark; image/netcdf writers encode single files with the
-# stdlib encoders in ``sinks.imagery`` / ``sinks.netcdf`` (PNG, GeoTIFF,
-# NetCDF CDF-1; no rasterio/netCDF4 needed).
+# dict_tools.py:58, examples/pl.yaml:23-26). Every writer takes the
+# batch's gathered Arrow table (only the item's columns): table formats
+# write Spark-layout datasets with pyarrow / the text encoders below;
+# image/netcdf writers encode single files with the stdlib encoders in
+# ``sinks.imagery`` / ``sinks.netcdf`` (PNG, GeoTIFF, NetCDF CDF-1; no
+# rasterio/netCDF4 needed).
 
-WRITER_REGISTRY: dict[str, Callable[[DataFrame, str, dict], None]] = {}
+WRITER_REGISTRY: dict[str, Callable[[pa.Table, str, dict], None]] = {}
 
 
 def register_writer(name: str):
@@ -55,32 +69,148 @@ def register_writer(name: str):
     return deco
 
 
-def _strip_engine_kwargs(kwargs: dict) -> dict:
-    """Drop engine-only keys before handing kwargs to a writer
-    (≙ ``plugins/__init__.py:290-291``)."""
-    engine_only = {
-        "fname_pattern", "output_dir", "staging_zone", "use_tmp_file",
-        "eager_writing", "call_on_done", "format", "writer", "priority",
-        "productname", "areaname", "area", "product", "resolution",
-        "publish_topic", "dispatch",
-    }
-    return {k: str(v) for k, v in kwargs.items() if k not in engine_only and v is not None}
+def _remove(path: str) -> None:
+    """Delete a file or directory output if it exists."""
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
+def _write_dataset(path: str, ext: str, write_part: Callable[[str], None]) -> None:
+    """Write one part file plus ``_SUCCESS`` into a fresh dataset
+    directory, replacing any existing output (Spark's overwrite mode)."""
+    _remove(path)
+    os.makedirs(path)
+    write_part(os.path.join(path, f"part-00000-{uuid.uuid4()}-c000.{ext}"))
+    open(os.path.join(path, "_SUCCESS"), "wb").close()
+
+
+def _write_lines(path: str, ext: str, lines) -> None:
+    def write_part(part: str) -> None:
+        with open(part, "w", encoding="utf-8", newline="") as fh:
+            fh.writelines(lines)
+
+    _write_dataset(path, ext, write_part)
+
+
+# --- Spark's text tokens (JSON and CSV writers)
+
+
+def _java_float(v: float, single: bool = False) -> str:
+    """``Double.toString`` / ``Float.toString``: plain notation for
+    1e-3 <= |v| < 1e7, else ``d.dddE<n>``; always one fractional digit."""
+    if math.isnan(v):
+        return "NaN"
+    if math.isinf(v):
+        return "Infinity" if v > 0 else "-Infinity"
+    if v == 0:
+        return "-0.0" if math.copysign(1.0, v) < 0 else "0.0"
+    sign, digits, exp = Decimal(str(np.float32(v)) if single else repr(v)).as_tuple()
+    text = "".join(map(str, digits)).rstrip("0")
+    point = len(digits) + exp  # value = 0.<text> * 10**point
+    lo = float(np.float32(1e-3)) if single else 1e-3
+    if lo <= abs(v) < 1e7:
+        if point <= 0:
+            body = "0." + "0" * -point + text
+        elif point >= len(text):
+            body = text + "0" * (point - len(text)) + ".0"
+        else:
+            body = text[:point] + "." + text[point:]
+    else:
+        body = f"{text[0]}.{text[1:] or '0'}E{point - 1}"
+    return "-" + body if sign else body
+
+
+def _spark_timestamp(v: _dt.datetime) -> str:
+    """``yyyy-MM-dd'T'HH:mm:ss.SSS[XXX]`` (UTC offset written ``Z``)."""
+    text = v.isoformat(timespec="milliseconds")
+    return text[:-6] + "Z" if text.endswith("+00:00") else text
+
+
+def _scalar_token(t: pa.DataType) -> Callable[[Any], str]:
+    """The text Spark's JSON and CSV writers print for a non-string value."""
+    if pa.types.is_boolean(t):
+        return lambda v: "true" if v else "false"
+    if pa.types.is_floating(t):
+        single = t.bit_width == 32
+        return lambda v: _java_float(v, single)
+    if pa.types.is_integer(t) or pa.types.is_decimal(t):
+        return str
+    if pa.types.is_timestamp(t):
+        return _spark_timestamp
+    if pa.types.is_date(t):
+        return _dt.date.isoformat
+    raise TypeError(f"no text encoding for column type {t}")
+
+
+def _json_token(t: pa.DataType) -> Callable[[Any], str]:
+    """Spark's JSON token: strings escaped; non-finite floats, timestamps
+    and dates quoted; structs as objects without their null fields;
+    arrays with ``null``."""
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return lambda v: json.dumps(v, ensure_ascii=False)
+    if pa.types.is_struct(t):
+        fields = [(json.dumps(f.name, ensure_ascii=False) + ":", _json_token(f.type)) for f in t]
+        return lambda v: "{" + ",".join(
+            name + tok(x) for (name, tok), x in zip(fields, v.values()) if x is not None
+        ) + "}"
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        tok = _json_token(t.value_type)
+        return lambda v: "[" + ",".join("null" if x is None else tok(x) for x in v) + "]"
+    scalar = _scalar_token(t)
+    if pa.types.is_floating(t):
+        return lambda v: scalar(v) if math.isfinite(v) else f'"{scalar(v)}"'
+    if pa.types.is_timestamp(t) or pa.types.is_date(t):
+        return lambda v: f'"{scalar(v)}"'
+    return scalar
+
+
+_CSV_TRIM = "".join(map(chr, range(33)))  # what Spark trims on write: chars <= ' '
+
+
+def _csv_field(s: str) -> str:
+    """Spark's CSV text for a string: edges trimmed, empty as ``""``, and
+    quoted (``\\`` and ``\"`` escaped) when it held ``,`` ``"`` or a newline."""
+    quote = any(c in s for c in ',"\r\n')
+    s = s.strip(_CSV_TRIM)
+    if not s:
+        return '""'
+    return '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"' if quote else s
+
+
+def _csv_token(t: pa.DataType) -> Callable[[Any], str]:
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return _csv_field
+    return _scalar_token(t)
 
 
 @register_writer("parquet")
-def _write_parquet(df: DataFrame, path: str, kwargs: dict) -> None:
-    df.write.options(**_strip_engine_kwargs(kwargs)).mode("overwrite").parquet(path)
+def _write_parquet(table: pa.Table, path: str, kwargs: dict) -> None:
+    import pyarrow.parquet as pq
 
-
-@register_writer("csv")
-def _write_csv(df: DataFrame, path: str, kwargs: dict) -> None:
-    opts = {"header": "true", **_strip_engine_kwargs(kwargs)}
-    df.write.options(**opts).mode("overwrite").csv(path)
+    _write_dataset(
+        path, "snappy.parquet", lambda part: pq.write_table(table, part, compression="snappy")
+    )
 
 
 @register_writer("json")
-def _write_json(df: DataFrame, path: str, kwargs: dict) -> None:
-    df.write.options(**_strip_engine_kwargs(kwargs)).mode("overwrite").json(path)
+def _write_json(table: pa.Table, path: str, kwargs: dict) -> None:
+    """JSON lines as Spark writes them: one object per row, null fields omitted."""
+    row_token = _json_token(pa.struct(list(table.schema)))
+    _write_lines(path, "json", (row_token(row) + "\n" for row in table.to_pylist()))
+
+
+@register_writer("csv")
+def _write_csv(table: pa.Table, path: str, kwargs: dict) -> None:
+    """CSV as Spark writes it with a header row: nulls as empty fields."""
+    tokens = [_csv_token(f.type) for f in table.schema]
+    header = ",".join(map(_csv_field, table.column_names)) + "\n"
+    lines = (
+        ",".join("" if v is None else tok(v) for tok, v in zip(tokens, row)) + "\n"
+        for row in zip(*(col.to_pylist() for col in table.columns))
+    )
+    _write_lines(path, "csv", [header, *lines])
 
 
 def _float_opt(kwargs: dict, key: str):
@@ -89,10 +219,6 @@ def _float_opt(kwargs: dict, key: str):
 
 
 # --- blob builders: (pandas frame of (y, x, value...), kwargs) -> bytes.
-# Module-level so both encode paths can use them: the default driver
-# gather AND the executor-side single-task encode (pickled into the
-# kernel closure for very large areas).
-
 
 def _png_blob(pdf, kwargs: dict) -> bytes:
     from trollflow2_spark.sinks import imagery
@@ -161,73 +287,36 @@ def _cf_blob(pdf, kwargs: dict) -> bytes:
     return netcdf.encode_netcdf(grids, attrs)
 
 
-def _truthy(v) -> bool:
-    return str(v).lower() in ("true", "1", "yes", "on")
-
-
-def _write_single_file(df: DataFrame, path: str, kwargs: dict, blob_fn) -> None:
-    """Encode one bounded raster to a single file.
-
-    Default: one Arrow ``toPandas`` gather (the grid is area-definition-
-    sized, config-bounded — see the scale note in
-    :mod:`trollflow2_spark.sinks.imagery`). With
-    ``encode_on_executor: true`` the grid instead coalesces into ONE
-    executor task that assembles, encodes, and writes the file itself —
-    the driver never holds the pixels (the upgrade for very large areas,
-    e.g. a 10k×10k float grid ~800 MB; the output path must then be a
-    shared filesystem, which local mode and any DFS mount satisfy)."""
+def _write_single_file(table: pa.Table, path: str, kwargs: dict, blob_fn) -> None:
+    """Encode one bounded raster to a single file from the gathered grid
+    (area-definition-sized, config-bounded — see the scale note in
+    :mod:`trollflow2_spark.sinks.imagery`)."""
     x_col = kwargs.get("x_col", "x")
     y_col = kwargs.get("y_col", "y")
-    cols = [c for c in (y_col, x_col) if c in df.columns]
+    cols = [c for c in (y_col, x_col) if c in table.column_names]
     value_col = kwargs.get("value_col")
     if value_col:
         cols.append(value_col)
     else:
-        cols += [c for c in df.columns if c not in cols]
-    sel = df.select(*cols)
-    if not _truthy(kwargs.get("encode_on_executor")):
-        with open(path, "wb") as fh:
-            fh.write(blob_fn(sel.toPandas(), kwargs))
-        return
-
-    kw = {
-        k: v
-        for k, v in kwargs.items()
-        if isinstance(v, (str, int, float, bool, list, tuple, type(None)))
-    }
-
-    def kernel(batches):
-        import pandas as pd
-
-        frames = list(batches)
-        pdf = (
-            pd.concat(frames, ignore_index=True)
-            if frames
-            else pd.DataFrame(columns=cols)
-        )
-        blob = blob_fn(pdf, kw)
-        with open(path, "wb") as fh:
-            fh.write(blob)
-        yield pd.DataFrame({"path": [path], "n_bytes": [len(blob)]})
-
-    written = sel.coalesce(1).mapInPandas(kernel, "path string, n_bytes long")
-    written.collect()  # one control row; triggers the single encode task
+        cols += [c for c in table.column_names if c not in cols]
+    with open(path, "wb") as fh:
+        fh.write(blob_fn(table.select(cols).to_pandas(), kwargs))
 
 
-def _write_simple_image(df: DataFrame, path: str, kwargs: dict) -> None:
+def _write_simple_image(table: pa.Table, path: str, kwargs: dict) -> None:
     """Real single-file PNG (≙ satpy ``simple_image`` writer dispatch at
     ``plugins/__init__.py:277-310``): min-max stretch to uint8 + stdlib
     PNG encoding."""
-    _write_single_file(df, path, kwargs, _png_blob)
+    _write_single_file(table, path, kwargs, _png_blob)
 
 
 _write_simple_image.needs_coords = True
 
 
 def _geotiff_writer(ninjo: bool):
-    def writer(df: DataFrame, path: str, kwargs: dict) -> None:
+    def writer(table: pa.Table, path: str, kwargs: dict) -> None:
         _write_single_file(
-            df, path, kwargs, functools.partial(_geotiff_blob, ninjo=ninjo)
+            table, path, kwargs, functools.partial(_geotiff_blob, ninjo=ninjo)
         )
 
     writer.needs_coords = True
@@ -240,12 +329,12 @@ WRITER_REGISTRY["ninjotiff"] = _geotiff_writer(ninjo=True)
 WRITER_REGISTRY["ninjogeotiff"] = _geotiff_writer(ninjo=True)
 
 
-def _write_cf(df: DataFrame, path: str, kwargs: dict) -> None:
+def _write_cf(table: pa.Table, path: str, kwargs: dict) -> None:
     """Real single-file CF NetCDF (classic/CDF-1 encoded from the public
     spec — no netCDF4 in this container): every product column becomes
     an NC_DOUBLE variable on the shared (y, x) grid, with CF-ish global
     attributes from the work-item metadata."""
-    _write_single_file(df, path, kwargs, _cf_blob)
+    _write_single_file(table, path, kwargs, _cf_blob)
 
 
 _write_cf.needs_coords = True
@@ -256,7 +345,6 @@ WRITER_REGISTRY["cf"] = _write_cf
 # Filename composition (driver-side trollsift analog for output paths;
 # the Column version lives in operators/transforms.py).
 
-import datetime as _dt
 import re as _re
 
 _FIELD_RE = _re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)(?::([^}]+))?\}")
@@ -289,26 +377,39 @@ def compose_filename(pattern: str, mda: dict) -> str:
 def callback_log(produced: dict, job: dict) -> dict:
     """Log the size of a produced dataset (≙ ``callback_log``,
     ``plugins/__init__.py:1110-1121``)."""
-    import logging
-
     size = produced.get("size_bytes", -1)
-    logging.getLogger(__name__).info(
-        "Wrote %s (%d bytes)", produced.get("filename"), size
-    )
+    logger.info("Wrote %s (%d bytes)", produced.get("filename"), size)
     return produced
+
+
+def _commit(staged: str, final: str) -> None:
+    """Put ``staged`` in place of ``final`` so a reader always finds a
+    whole product. A file replaces the old one atomically; a directory
+    cannot, so the old output is renamed aside first and deleted only
+    once the new one is in. If the replace fails, the old output is
+    restored and the staged one removed."""
+    aside = None
+    if os.path.lexists(final) and (os.path.isdir(final) or os.path.isdir(staged)):
+        aside = f"{final}.{uuid.uuid4().hex[:8]}.old"
+        os.replace(final, aside)
+    try:
+        os.replace(staged, final)
+    except BaseException:
+        if aside:
+            os.replace(aside, final)
+        _remove(staged)
+        raise
+    if aside:
+        _remove(aside)
 
 
 def callback_move(produced: dict, job: dict) -> dict:
     """Move a finished output from the staging zone to its final
     destination (≙ ``callback_move``, ``plugins/__init__.py:1124-1138``)."""
-    import shutil
-
     staging = produced.get("staged_filename")
     final = produced["filename"]
     if staging and staging != final:
-        if os.path.exists(final):
-            shutil.rmtree(final) if os.path.isdir(final) else os.remove(final)
-        os.replace(staging, final)
+        _commit(staging, final)
         for side in (staging + ".meta.json",):
             if os.path.exists(side):
                 os.replace(side, final + ".meta.json")
@@ -317,9 +418,9 @@ def callback_move(produced: dict, job: dict) -> dict:
 
 
 def callback_close(produced: dict, job: dict) -> dict:
-    """Close/flush the output target (directory datasets are already
-    committed by Spark's committer — no-op hook kept for parity with
-    ``callback_close``, ``plugins/__init__.py:1096-1107``)."""
+    """Close/flush the output target (writers close their files before
+    the commit — no-op hook kept for parity with ``callback_close``,
+    ``plugins/__init__.py:1096-1107``)."""
     return produced
 
 
@@ -367,96 +468,97 @@ def save_datasets(
 ) -> SaveResult:
     """Fan out the scene to every work-item leaf's writer/format.
 
-    Parity: ``save_datasets`` (``plugins/__init__.py:330-395``) — shared
-    computation via persist (unless ``eager_writing``), per-leaf writer
-    dispatch, atomic tmp/staging commit, post-commit callbacks, manifest.
+    Parity: ``save_datasets`` (``plugins/__init__.py:330-395``) — one
+    shared computation, per-leaf writer dispatch, atomic tmp/staging
+    commit, post-commit callbacks, manifest.
 
-    The work-item loop is config-sized (driver-side by design); the data
-    itself never leaves the cluster.
+    The union of the columns the leaves write is gathered once, in one
+    Spark job, and every writer encodes from that Arrow table on the
+    driver. ``eager_writing`` is accepted so reference configs load; it
+    has no effect, since every batch is computed once anyway. When
+    ``job["cancelled"]`` is set (its worker timed out) no further output
+    is committed and the pending ``.tmp`` is removed.
     """
     result = SaveResult()
     callbacks = [CALLBACK_REGISTRY[c] for c in (call_on_done or ["callback_log"])]
     if use_tmp_file and "callback_move" not in (call_on_done or []):
         callbacks.append(callback_move)
+    cancelled = (job or {}).get("cancelled")
 
-    shared = scene if eager_writing else scene.persist()
-    try:
-        for item in work_items:
-            mda = {**(base_mda or {}), **{k: v for k, v in item.items() if v is not None}}
-            mda.setdefault("productname", (item.get("product") or [""])[0])
-            pattern = mda.get("fname_pattern", "{productname}.{format}")
-            out_dir = mda.get("output_dir", ".")
-            final_path = os.path.join(out_dir, compose_filename(pattern, mda))
-
-            stage_dir = staging_zone or out_dir
-            os.makedirs(stage_dir, exist_ok=True)
-            os.makedirs(out_dir, exist_ok=True)
-            write_path = final_path
-            if use_tmp_file:
-                token = uuid.uuid4().hex[:8]
-                write_path = os.path.join(
-                    stage_dir, os.path.basename(final_path) + f".{token}.tmp"
-                )
-
-            writer_name = mda.get("writer", "parquet")
-            writer = WRITER_REGISTRY.get(writer_name)
-            if writer is None:
-                raise ValueError(
-                    f"unknown writer {writer_name!r}; registered: "
-                    f"{sorted(WRITER_REGISTRY)}"
-                )
-
-            # tuple products: select only that product's columns when they
-            # exist in the scene; unknown product -> warn & skip
-            # (plugins/__init__.py:306-307).
-            prod_cols = [c for c in (item.get("product") or []) if c in shared.columns]
-            if item.get("product") and not prod_cols:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "product %s missing from scene, skipping", item.get("product")
-                )
-                continue
-            if getattr(writer, "needs_coords", False):
-                # image writers pivot on the grid coordinates
-                coord_cols = [
-                    c
-                    for c in (mda.get("y_col", "y"), mda.get("x_col", "x"))
-                    if c in shared.columns and c not in prod_cols
-                ]
-                prod_cols = coord_cols + prod_cols
-            to_write = shared.select(*prod_cols) if prod_cols else shared
-
-            t0 = time.time()
-            # single-pass row audit: df.observe rides the writer's own
-            # action, so the manifest gets a row count WITHOUT the
-            # separate count() scan a 100 TB write could not afford
-            from pyspark.sql import Observation, functions as _F
-
-            obs = Observation()
-            observed = to_write.observe(
-                obs, _F.count(_F.lit(1)).alias("n_rows")
+    # resolve every leaf's writer and columns before any data moves
+    columns = scene.columns
+    leaves = []
+    for item in work_items:
+        mda = {**(base_mda or {}), **{k: v for k, v in item.items() if v is not None}}
+        mda.setdefault("productname", (item.get("product") or [""])[0])
+        writer_name = mda.get("writer", "parquet")
+        writer = WRITER_REGISTRY.get(writer_name)
+        if writer is None:
+            raise ValueError(
+                f"unknown writer {writer_name!r}; registered: "
+                f"{sorted(WRITER_REGISTRY)}"
             )
-            writer(observed, write_path, dict(mda))
-            size, nfiles = _dir_size(write_path)
-            produced = {
-                "filename": final_path,
-                "staged_filename": write_path if use_tmp_file else None,
-                "area": item.get("area"),
-                "product": ",".join(item.get("product") or []) or mda.get("productname"),
-                "format": mda.get("format"),
-                "writer": writer_name,
-                "size_bytes": size,
-                "n_files": nfiles,
-                "n_rows": int(obs.get.get("n_rows", 0)),
-                "elapsed_sec": round(time.time() - t0, 3),
-            }
-            for cb in callbacks:
-                produced = cb(produced, job or {})
-            result.produced.append(produced)
-    finally:
-        if not eager_writing:
-            shared.unpersist()
+        # tuple products: select only that product's columns when they
+        # exist in the scene; unknown product -> warn & skip
+        # (plugins/__init__.py:306-307).
+        cols = [c for c in (item.get("product") or []) if c in columns]
+        if item.get("product") and not cols:
+            logger.warning("product %s missing from scene, skipping", item.get("product"))
+            continue
+        if getattr(writer, "needs_coords", False):
+            # image writers pivot on the grid coordinates
+            cols = [
+                c
+                for c in (mda.get("y_col", "y"), mda.get("x_col", "x"))
+                if c in columns and c not in cols
+            ] + cols
+        leaves.append((item, mda, writer_name, writer, cols or columns))
+    if not leaves:
+        return result
+
+    table = scene.select(*dict.fromkeys(c for *_, cols in leaves for c in cols)).toArrow()
+    for item, mda, writer_name, writer, cols in leaves:
+        pattern = mda.get("fname_pattern", "{productname}.{format}")
+        out_dir = mda.get("output_dir", ".")
+        final_path = os.path.join(out_dir, compose_filename(pattern, mda))
+        stage_dir = staging_zone or out_dir
+        os.makedirs(stage_dir, exist_ok=True)
+        os.makedirs(out_dir, exist_ok=True)
+        write_path = final_path
+        if use_tmp_file:
+            token = uuid.uuid4().hex[:8]
+            write_path = os.path.join(
+                stage_dir, os.path.basename(final_path) + f".{token}.tmp"
+            )
+
+        t0 = time.time()
+        try:
+            writer(table.select(cols), write_path, dict(mda))
+        except BaseException:
+            if use_tmp_file:
+                _remove(write_path)
+            raise
+        if cancelled is not None and cancelled.is_set():
+            if use_tmp_file:
+                _remove(write_path)
+            logger.warning("save_datasets cancelled before committing %s", final_path)
+            break
+        size, nfiles = _dir_size(write_path)
+        produced = {
+            "filename": final_path,
+            "staged_filename": write_path if use_tmp_file else None,
+            "area": item.get("area"),
+            "product": ",".join(item.get("product") or []) or mda.get("productname"),
+            "format": mda.get("format"),
+            "writer": writer_name,
+            "size_bytes": size,
+            "n_files": nfiles,
+            "n_rows": table.num_rows,
+            "elapsed_sec": round(time.time() - t0, 3),
+        }
+        for cb in callbacks:
+            produced = cb(produced, job or {})
+        result.produced.append(produced)
     return result
 
 
