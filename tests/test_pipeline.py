@@ -90,22 +90,36 @@ def test_create_scene_reads_parquet(spark, input_file):
 
 
 def test_netcdf_reader_roundtrip(spark, tmp_path):
-    """The engine reads back the NetCDF it writes: variables -> long-form
-    (product, y, x, value) rows, decoded executor-side."""
+    """The engine reads back the NetCDF it writes: one row per pixel,
+    (y, x, one double column per variable in sorted order), decoded
+    executor-side; a NaN pixel stays a NaN cell."""
+    import math
+
     import numpy as np
 
     from trollflow2_spark.sinks import netcdf
 
     arr = np.arange(12, dtype="float64").reshape(3, 4)
+    arr[0, 0] = np.nan
     path = str(tmp_path / "scene.nc")
     with open(path, "wb") as fh:
-        fh.write(netcdf.encode_netcdf({"t": arr, "u": arr * 2.0}, {"sensor": "x"}))
+        fh.write(netcdf.encode_netcdf({"u": arr * 2.0, "t": arr}, {"sensor": "x"}))
     scene = create_scene(spark, [path], reader="netcdf")
+    assert scene.columns == ["y", "x", "t", "u"]
     rows = scene.collect()
-    assert len(rows) == 24  # 2 variables x 12 pixels
-    got = {(r["product"], r["y"], r["x"]): r["value"] for r in rows}
-    assert got[("t", 1, 2)] == 6.0
-    assert got[("u", 2, 3)] == 22.0
+    assert len(rows) == 12  # every pixel, the NaN one included
+    got = {(r["y"], r["x"]): (r["t"], r["u"]) for r in rows}
+    assert got[(1, 2)] == (6.0, 12.0)
+    assert got[(2, 3)] == (11.0, 22.0)
+    assert all(v is not None and math.isnan(v) for v in got[(0, 0)])
+
+    small = np.arange(6, dtype="float64").reshape(2, 3)
+    path2 = str(tmp_path / "wide.nc")
+    with open(path2, "wb") as fh:
+        fh.write(netcdf.encode_netcdf({"a": small, "b": small + 10.0}))
+    wide = create_scene(spark, [path2], reader="netcdf")
+    row = {(r["y"], r["x"]): (r["a"], r["b"]) for r in wide.collect()}
+    assert row[(1, 2)] == (5.0, 15.0)
 
 
 def test_png_and_geotiff_readers_roundtrip(spark, tmp_path):
@@ -118,8 +132,9 @@ def test_png_and_geotiff_readers_roundtrip(spark, tmp_path):
     with open(png_path, "wb") as fh:
         fh.write(imagery.encode_png(gray.astype(np.uint8)))
     png_scene = create_scene(spark, [png_path], reader="png")
-    got = {(r["y"], r["x"]): r["value"] for r in png_scene.collect()}
-    assert got[(5, 5)] == 55.0
+    assert png_scene.columns == ["y", "x", "image"]
+    got = {(r["y"], r["x"]): r["image"] for r in png_scene.collect()}
+    assert len(got) == 100 and got[(5, 5)] == 55.0
 
     rgb = np.zeros((4, 4, 3), dtype=np.uint8)
     rgb[:, :, 1] = 200
@@ -127,10 +142,173 @@ def test_png_and_geotiff_readers_roundtrip(spark, tmp_path):
     with open(tif_path, "wb") as fh:
         fh.write(imagery.encode_geotiff(rgb, compress="DEFLATE"))
     tif_scene = create_scene(spark, [tif_path], reader="geotiff")
+    assert tif_scene.columns == ["y", "x", "band_0", "band_1", "band_2"]
     rows = tif_scene.collect()
-    assert {r["product"] for r in rows} == {"band_0", "band_1", "band_2"}
-    band1 = [r for r in rows if r["product"] == "band_1"]
-    assert len(band1) == 16 and all(r["value"] == 200.0 for r in band1)
+    assert len(rows) == 16 and all(r["band_1"] == 200.0 for r in rows)
+    assert all(r["band_0"] == r["band_2"] == 0.0 for r in rows)
+
+
+def test_png_palette_reader_names_bands_from_the_header(spark, tmp_path):
+    """A gray palette reads as one ``image`` variable; a colour palette
+    as three bands, even when the pixels use only its gray entries."""
+    import numpy as np
+
+    from trollflow2_spark.sinks import imagery
+
+    idx = np.array([[0, 1], [1, 0]], dtype=np.uint8)
+    cases = {
+        "gray.png": (np.array([[0, 0, 0], [9, 9, 9]], np.uint8), ["image"]),
+        "colour.png": (
+            np.array([[0, 0, 0], [9, 9, 9], [255, 0, 0]], np.uint8),
+            ["band_0", "band_1", "band_2"],
+        ),
+    }
+    for name, (palette, cols) in cases.items():
+        path = str(tmp_path / name)
+        with open(path, "wb") as fh:
+            fh.write(imagery.encode_png(idx, palette=palette))
+        scene = create_scene(spark, [path], reader="png")
+        assert scene.columns == ["y", "x", *cols]
+        got = {(r["y"], r["x"]): [r[c] for c in cols] for r in scene.collect()}
+        assert got[(0, 1)] == [9.0] * len(cols) and got[(1, 1)] == [0.0] * len(cols)
+
+
+def _write_netcdf(path, variables):
+    from trollflow2_spark.sinks import netcdf
+
+    with open(path, "wb") as fh:
+        fh.write(netcdf.encode_netcdf(variables))
+    return str(path)
+
+
+def test_raster_scene_build_starts_no_spark_job(spark, tmp_path):
+    """create_scene + scene_to_wide only read headers on the driver:
+    the scene's schema is known without a Spark job."""
+    import numpy as np
+
+    from trollflow2_spark.plans.pipeline import PLUGIN_REGISTRY
+    from trollflow2_spark.sinks import imagery
+
+    arr = np.arange(12, dtype="float64").reshape(3, 4)
+    paths = {"netcdf": _write_netcdf(tmp_path / "s.nc", {"t": arr})}
+    paths["png"] = str(tmp_path / "s.png")
+    with open(paths["png"], "wb") as fh:
+        fh.write(imagery.encode_png(arr.astype(np.uint8)))
+    paths["geotiff"] = str(tmp_path / "s.tif")
+    with open(paths["geotiff"], "wb") as fh:
+        fh.write(imagery.encode_geotiff(np.stack([arr.astype(np.uint8)] * 3, axis=2)))
+    sc = spark.sparkContext
+    for reader, path in paths.items():
+        group = f"raster-scene-{reader}"
+        job = {"spark": spark, "input_filenames": [path]}
+        sc.setJobGroup(group, "raster scene build probe", True)
+        try:
+            PLUGIN_REGISTRY["create_scene"](job, reader=reader)
+            PLUGIN_REGISTRY["scene_to_wide"](job)
+            started = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup("", "", False)
+        assert started == [], reader
+        assert job["scene"].columns[:2] == ["y", "x"]
+
+
+RASTER_PL_YAML = """
+product_list:
+  output_dir: "{out}"
+  fname_pattern: "{{productname}}.{{format}}"
+  areas:
+    a1:
+      areaname: a1
+      products:
+        v:
+          productname: v
+          formats:
+            - format: png
+              writer: simple_image
+"""
+
+
+def _raster_workers(**valid_fraction):
+    return [
+        {"fun": "create_scene", "reader": "netcdf"},
+        {"fun": "scene_to_wide"},
+        {"fun": "check_valid_data_fraction", **valid_fraction},
+        {"fun": "save_datasets"},
+    ]
+
+
+def test_sparse_granule_is_pruned_by_valid_fraction(spark, tmp_path):
+    """5 finite pixels of 100 is 5% valid: below the default 10% the
+    item is pruned; at 1% the image keeps the full 10x10 grid."""
+    import numpy as np
+
+    from trollflow2_spark.sinks.imagery import decode_png
+
+    v = np.full((10, 10), np.nan)
+    v[2, 1:6] = [10.0, 20.0, 30.0, 40.0, 50.0]
+    path = _write_netcdf(tmp_path / "sparse.nc", {"v": v})
+    msg = {"type": "file", "platform_name": "TEST-1", "dataset": [{"uri": path}]}
+    out = tmp_path / "out"
+    plist = read_product_list(raw_string=RASTER_PL_YAML.format(out=out))
+
+    summary = process_message(spark, msg, plist, _raster_workers())
+    assert summary["result"].produced == []
+    assert not (out / "v.png").exists()
+
+    summary = process_message(
+        spark, msg, plist, _raster_workers(min_valid_data_fraction=1.0)
+    )
+    assert summary["status"] == "nominal"
+    with open(out / "v.png", "rb") as fh:
+        assert decode_png(fh.read()).shape == (10, 10)
+
+
+def test_files_repeating_a_variable_abort(spark, tmp_path):
+    """Two granules of one variable are rejected, not merged: the batch
+    aborts with a reason naming the variable."""
+    import numpy as np
+
+    arr = np.arange(6, dtype="float64").reshape(2, 3)
+    paths = [_write_netcdf(tmp_path / f"g{i}.nc", {"v": arr + i}) for i in (1, 2)]
+    msg = {"type": "file", "dataset": [{"uri": p} for p in paths]}
+    plist = read_product_list(raw_string=RASTER_PL_YAML.format(out=tmp_path / "out"))
+    summary = process_message(spark, msg, plist, _raster_workers())
+    assert summary["status"] == "aborted"
+    (reason,) = summary["aborted_priorities"].values()
+    assert "variable 'v'" in reason
+    assert summary["result"].produced == []
+
+
+def test_files_with_distinct_variables_on_one_grid_make_one_scene(spark, tmp_path):
+    import numpy as np
+
+    arr = np.arange(6, dtype="float64").reshape(2, 3)
+    paths = [
+        _write_netcdf(tmp_path / "ch_b.nc", {"b": arr + 10.0}),
+        _write_netcdf(tmp_path / "ch_a.nc", {"a": arr}),
+    ]
+    scene = create_scene(spark, paths, reader="netcdf")
+    assert scene.columns == ["y", "x", "a", "b"]
+    got = {(r["y"], r["x"]): (r["a"], r["b"]) for r in scene.collect()}
+    assert len(got) == 6 and got[(1, 2)] == (5.0, 15.0)
+
+
+def test_bad_scene_layouts_raise(spark, tmp_path):
+    """Variables on different grids, or a variable named like a pixel
+    index column, raise from create_scene."""
+    import numpy as np
+
+    from trollflow2_spark.sources.scene import SceneCreationError
+
+    paths = [
+        _write_netcdf(tmp_path / "a.nc", {"a": np.zeros((2, 3))}),
+        _write_netcdf(tmp_path / "b.nc", {"b": np.zeros((3, 2))}),
+    ]
+    with pytest.raises(SceneCreationError, match="one 2-D grid"):
+        create_scene(spark, paths, reader="netcdf")
+    clash = _write_netcdf(tmp_path / "x.nc", {"x": np.zeros((2, 3))})
+    with pytest.raises(SceneCreationError, match="pixel index"):
+        create_scene(spark, [clash], reader="netcdf")
 
 
 def test_raster_reader_rejects_wrong_magic(spark, tmp_path):
@@ -141,22 +319,6 @@ def test_raster_reader_rejects_wrong_magic(spark, tmp_path):
         fh.write(b"not a netcdf file")
     with pytest.raises(SceneCreationError):
         create_scene(spark, [path], reader="netcdf")
-
-
-def test_scene_long_to_wide_pivot(spark, tmp_path):
-    import numpy as np
-
-    from trollflow2_spark.sinks import netcdf
-    from trollflow2_spark.sources.scene import scene_long_to_wide
-
-    arr = np.arange(6, dtype="float64").reshape(2, 3)
-    path = str(tmp_path / "wide.nc")
-    with open(path, "wb") as fh:
-        fh.write(netcdf.encode_netcdf({"a": arr, "b": arr + 10.0}))
-    wide = scene_long_to_wide(create_scene(spark, [path], reader="netcdf"))
-    assert set(wide.columns) == {"y", "x", "a", "b"}
-    row = {(r["y"], r["x"]): (r["a"], r["b"]) for r in wide.collect()}
-    assert row[(1, 2)] == (5.0, 15.0)
 
 
 def test_message_to_jobs_priority_batches(spark, input_file, tmp_path):
@@ -770,6 +932,33 @@ def test_zip_filesystem_roundtrip(spark, sf_dir, tmp_path):
     # and the scene actually loads from the extracted member
     df = spark.read.parquet(paths[0])
     assert df.count() > 0
+
+
+def test_archive_message_is_unpacked_once(spark, sf_dir, tmp_path, monkeypatch):
+    """A zip message fanned out to two priority batches is unpacked once;
+    both batches read the same extracted file."""
+    import zipfile
+
+    from trollflow2_spark.sources import scene as scene_mod
+
+    zpath = tmp_path / "bundle.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.write(os.path.join(sf_dir, "events.parquet"), arcname="d/events.parquet")
+    calls = []
+    real = scene_mod._extract_archive_members
+    monkeypatch.setattr(
+        scene_mod,
+        "_extract_archive_members",
+        lambda *a, **k: calls.append(a) or real(*a, **k),
+    )
+    fs = {"protocol": "zip", "fo": str(zpath)}
+    msg = {**_message("zip://d/events.parquet"), "filesystem": fs}
+    plist = read_product_list(raw_string=PL_YAML.format(out_dir=tmp_path))
+    jobs = message_to_jobs(spark, msg, plist)
+    assert list(jobs) == [1, 999]
+    assert len(calls) == 1
+    (path,) = jobs[1]["input_filenames"]
+    assert jobs[999]["input_filenames"] == [path] and os.path.exists(path)
 
 
 def test_tar_filesystem_roundtrip(spark, sf_dir, tmp_path):

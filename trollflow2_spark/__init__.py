@@ -9,7 +9,8 @@ for satellite imagery), re-expressed Spark-first:
 - plugin worker chain  -> composition of ``DataFrame -> DataFrame`` stages
 - filter plugins       -> ``df.filter`` / join-back predicates
 - resampling           -> bucketed spatial equi-join + window top-1
-- multi-format sinks   -> persisted plan + N write actions + output manifest
+- multi-format sinks   -> one Arrow gather per priority batch feeding every
+                          writer + output manifest
 - publisher            -> plain-Python messages, one atomically renamed
                           JSON-lines file per batch (Kafka rows in production)
 

@@ -1,25 +1,6 @@
-"""Stage registry: name -> DataFrame transform.
-
-The reference's plugin chain (``workers:`` in the product list,
-``/root/reference/examples/pl.yaml:194-212``) becomes a composition of
-registered ``DataFrame -> DataFrame`` stages. Pipelines reference stages
-by *name* — no arbitrary code execution from config (an intentional
-improvement over the reference's UnsafeLoader at ``launcher.py:404``).
+"""DataFrame operators: the ``DataFrame -> DataFrame`` building blocks
+(metadata checks, composites and block aggregation, resampling joins,
+skew-safe aggregation, window top-k) that the worker plugins in
+``plans/pipeline.py`` and the query library import directly. Pipelines
+name worker plugins, not operators (``plans.pipeline.PLUGIN_REGISTRY``).
 """
-
-from __future__ import annotations
-
-from typing import Callable
-
-STAGE_REGISTRY: dict[str, Callable] = {}
-
-
-def register_stage(name: str):
-    def deco(fn):
-        STAGE_REGISTRY[name] = fn
-        return fn
-
-    return deco
-
-
-from trollflow2_spark.operators import checks, transforms, resample, skew, windows  # noqa: F401,E402

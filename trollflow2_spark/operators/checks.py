@@ -19,10 +19,7 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from trollflow2_spark.operators import register_stage
 
-
-@register_stage("check_metadata_categorical")
 def check_metadata_categorical(
     df: DataFrame, column: str, allowed: Sequence[str], keep_missing: bool = True
 ) -> DataFrame:
@@ -38,7 +35,6 @@ def check_metadata_categorical(
     return df.filter(pred)
 
 
-@register_stage("check_metadata_age")
 def check_metadata_age(
     df: DataFrame,
     ts_column: str,
@@ -70,7 +66,6 @@ def check_metadata_age(
     return df.filter(F.col(ts_column).isNull() | pred)
 
 
-@register_stage("metadata_alias")
 def metadata_alias(
     df: DataFrame, column: str, aliases: Mapping[str, str]
 ) -> DataFrame:
@@ -92,7 +87,6 @@ def metadata_alias(
     return df.withColumn(column, aliased)
 
 
-@register_stage("covers_filter")
 def covers_filter(
     df: DataFrame,
     coverage_col: str = "area_coverage_percent",
@@ -110,7 +104,6 @@ def covers_filter(
     )
 
 
-@register_stage("sza_check")
 def sza_check(
     df: DataFrame,
     sza_col: str = "sza",
@@ -128,7 +121,6 @@ def sza_check(
     return df.filter(min_ok & max_ok)
 
 
-@register_stage("valid_fraction_filter")
 def valid_fraction_filter(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -30,14 +30,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from trollflow2_spark.operators import register_stage
-
 
 def _with_cell(df: DataFrame, coord: str, cell_size: float, name: str) -> DataFrame:
     return df.withColumn(name, F.floor(F.col(coord) / F.lit(float(cell_size))).cast("long"))
 
 
-@register_stage("nearest_join_1d")
 def nearest_join_1d(
     target: DataFrame,
     source: DataFrame,
@@ -101,7 +98,6 @@ def nearest_join_1d(
     return out.drop("__rn", "__cell", "__scell", "__probe", "__tid")
 
 
-@register_stage("nearest_join_2d")
 def nearest_join_2d(
     target: DataFrame,
     source: DataFrame,
@@ -283,7 +279,6 @@ def grid_to_grid_mapping(
     return spark.createDataFrame(pdf, "t_row int, t_col int, s_row int, s_col int")
 
 
-@register_stage("resample_nearest_mapped")
 def resample_nearest_mapped(
     source: DataFrame,
     mapping: DataFrame,
@@ -300,7 +295,6 @@ def resample_nearest_mapped(
     return source.join(F.broadcast(mapping), list(key_cols), how)
 
 
-@register_stage("weighted_resample_2d")
 def weighted_resample_2d(
     target: DataFrame,
     source: DataFrame,
@@ -383,7 +377,6 @@ def weighted_resample_2d(
     return joined.groupBy(tid).agg(*aggs).drop("__tid")
 
 
-@register_stage("weighted_resample_1d")
 def weighted_resample_1d(
     target: DataFrame,
     source: DataFrame,

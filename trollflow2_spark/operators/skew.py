@@ -18,7 +18,6 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from trollflow2_spark.operators import register_stage
 
 # Aggregates that re-combine with themselves across salt partitions.
 _MERGE = {
@@ -29,7 +28,6 @@ _MERGE = {
 }
 
 
-@register_stage("salted_agg")
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
@@ -86,7 +84,6 @@ def salted_agg(
     return stage2
 
 
-@register_stage("sequence_fingerprint")
 def sequence_fingerprint(
     df: DataFrame,
     key_col: str,

@@ -17,7 +17,6 @@ from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from trollflow2_spark.operators import register_stage
 
 # ---------------------------------------------------------------------------
 # Composites: named derived-band expressions (≙ the satpy composite registry
@@ -33,7 +32,6 @@ def register_composite(name: str):
     return deco
 
 
-@register_stage("load_composites")
 def load_composites(
     df: DataFrame, composites: Mapping[str, Column]
 ) -> DataFrame:
@@ -45,7 +43,6 @@ def load_composites(
     return out
 
 
-@register_stage("block_aggregate")
 def block_aggregate(
     df: DataFrame,
     block_cols: Mapping[str, int],
@@ -137,7 +134,6 @@ def compose_pattern(pattern: str, types: Mapping[str, str] | None = None) -> Col
     return F.concat(*parts) if parts else F.lit("")
 
 
-@register_stage("compose_filename")
 def compose_filename(
     df: DataFrame,
     pattern: str,

@@ -13,10 +13,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from trollflow2_spark.operators import register_stage
 
-
-@register_stage("top1_per_group")
 def top1_per_group(
     df: DataFrame,
     partition_cols: Sequence[str],
@@ -36,7 +33,6 @@ def top1_per_group(
     return out if keep_rank_col else out.drop("__rn")
 
 
-@register_stage("topk_per_group")
 def topk_per_group(
     df: DataFrame,
     partition_cols: Sequence[str],
@@ -77,7 +73,6 @@ def topk_per_group(
     )
 
 
-@register_stage("funnel_stages")
 def funnel_stages(
     df: DataFrame,
     steps: Sequence[str],

@@ -88,11 +88,13 @@ def message_to_jobs(
         prio = DEFAULT_PRIORITY if prio is None else int(prio)
         by_prio.setdefault(prio, []).append(leaf)
 
+    # resolved once: an archive message is unpacked once, not per batch
+    input_filenames = resolve_filesystem_paths(message)
     jobs: "OrderedDict[int, dict]" = OrderedDict()
     for prio in sorted(by_prio):
         jobs[prio] = {
             "spark": spark,
-            "input_filenames": resolve_filesystem_paths(message),
+            "input_filenames": input_filenames,
             "input_mda": dict(message),
             "product_list": product_list,
             "work_items": by_prio[prio],
@@ -134,20 +136,9 @@ def create_scene_plugin(
 
 @register_plugin("scene_to_wide")
 def scene_to_wide_plugin(job: dict) -> None:
-    """Pivot a long-form raster scene (file, product, y, x, value — what
-    the netcdf/png/geotiff readers emit) into the wide (y, x, product
-    columns) shape the downstream operators consume. No-op for scenes
-    already wide. This is the bridge that makes the reference's primary
-    lifecycle (satellite file in -> named reader -> per-dataset columns,
-    ``plugins/__init__.py:86-121``) a two-stage YAML chain here:
-    ``create_scene(reader=netcdf) -> scene_to_wide``."""
-    scene = job.get("scene")
-    if scene is None:
-        raise AbortProcessing("scene_to_wide: no scene loaded")
-    if {"product", "y", "x", "value"} <= set(scene.columns):
-        from trollflow2_spark.sources.scene import scene_long_to_wide
-
-        job["scene"] = scene_long_to_wide(scene)
+    """No-op, kept so product lists that name it still load: every
+    reader, the raster ones included, already emits the wide scene (y, x,
+    one column per variable)."""
 
 
 @register_plugin("check_metadata")

@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import struct
 import zlib
+from typing import Iterator
 
 import numpy as np
 
@@ -261,6 +262,26 @@ def decode_png(data: bytes) -> np.ndarray:
             return np.ascontiguousarray(rgb[:, :, 0])
         return np.ascontiguousarray(rgb)
     return np.ascontiguousarray(img)
+
+
+def png_shape(data) -> tuple[int, ...]:
+    """Shape of the array :func:`decode_png` returns — (h, w) or (h, w,
+    channels) — from the chunks before the first IDAT. A palette counts
+    as gray only when every entry is gray; :func:`decode_png` also
+    collapses a colour palette whose *used* entries are all gray."""
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG (bad signature)")
+    w, h, _depth, color_type = struct.unpack_from(">IIBB", data, 16)
+    nch = {0: 1, 2: 3, 3: 3, 4: 2, 6: 4}[color_type]
+    if color_type == 3:
+        pos = 8
+        while data[pos + 4 : pos + 8] not in (b"PLTE", b"IDAT", b""):
+            pos += 12 + struct.unpack_from(">I", data, pos)[0]
+        if data[pos + 4 : pos + 8] == b"PLTE":
+            (length,) = struct.unpack_from(">I", data, pos)
+            plte = np.frombuffer(data[pos + 8 : pos + 8 + length], np.uint8).reshape(-1, 3)
+            nch = 1 if np.all(plte == plte[:, :1]) else 3
+    return (h, w) if nch == 1 else (h, w, nch)
 
 
 # ---------------------------------------------------------------------------
@@ -551,11 +572,10 @@ def tiff_lzw_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def decode_geotiff(data: bytes) -> tuple[list[np.ndarray], dict]:
-    """Decode a (Geo)TIFF written by :func:`encode_geotiff` (and any
-    strip TIFF, little- OR big-endian, with compression
-    NONE/deflate/LZW, optionally with the horizontal-differencing
-    predictor). Returns (pages, tags-of-page-0)."""
+def _tiff_ifds(data) -> Iterator[tuple[dict[int, list], str]]:
+    """Yield (tags, byte-order prefix) per TIFF IFD, in file order.
+    Touches only the IFDs and their out-of-line tag values, so ``data``
+    may be an ``mmap``."""
     if data[:4] == b"II*\x00":
         e = "<"
     elif data[:4] == b"MM\x00*":
@@ -563,8 +583,6 @@ def decode_geotiff(data: bytes) -> tuple[list[np.ndarray], dict]:
     else:
         raise ValueError("not a TIFF (bad byte-order signature)")
     (ifd_off,) = struct.unpack_from(e + "I", data, 4)
-    pages = []
-    first_tags: dict[int, list] = {}
     while ifd_off:
         (n,) = struct.unpack_from(e + "H", data, ifd_off)
         tags: dict[int, list] = {}
@@ -581,6 +599,27 @@ def decode_geotiff(data: bytes) -> tuple[list[np.ndarray], dict]:
             else:
                 fmt = {_T_SHORT: "H", _T_LONG: "I", _T_DOUBLE: "d", _T_RATIONAL: "II"}[typ]
                 tags[tag] = list(struct.unpack_from(f"{e}{count}{fmt}", data, vpos))
+        yield tags, e
+        (ifd_off,) = struct.unpack_from(e + "I", data, ifd_off + 2 + 12 * n)
+
+
+def geotiff_shape(data) -> tuple[int, ...]:
+    """Shape of page 0 as :func:`decode_geotiff` returns it — (h, w) or
+    (h, w, samples) — read from its IFD alone."""
+    tags, _e = next(_tiff_ifds(data))
+    h, w = tags[TAG_IMAGE_LENGTH][0], tags[TAG_IMAGE_WIDTH][0]
+    spp = tags.get(TAG_SAMPLES_PER_PIXEL, [1])[0]
+    return (h, w) if spp == 1 else (h, w, spp)
+
+
+def decode_geotiff(data: bytes) -> tuple[list[np.ndarray], dict]:
+    """Decode a (Geo)TIFF written by :func:`encode_geotiff` (and any
+    strip TIFF, little- OR big-endian, with compression
+    NONE/deflate/LZW, optionally with the horizontal-differencing
+    predictor). Returns (pages, tags-of-page-0)."""
+    pages = []
+    first_tags: dict[int, list] = {}
+    for tags, e in _tiff_ifds(data):
         if not pages:
             first_tags = tags
         w = tags[TAG_IMAGE_WIDTH][0]
@@ -621,7 +660,6 @@ def decode_geotiff(data: bytes) -> tuple[list[np.ndarray], dict]:
             # (uint8 cumsum wraps mod 256 by definition)
             page = np.cumsum(page, axis=1, dtype=np.uint8)
         pages.append(page)
-        (ifd_off,) = struct.unpack_from(e + "I", data, ifd_off + 2 + 12 * n)
     return pages, first_tags
 
 

@@ -99,9 +99,10 @@ def encode_netcdf(
     return out
 
 
-def decode_netcdf(data: bytes) -> tuple[dict[str, np.ndarray], dict]:
-    """Decode a classic NetCDF file written by :func:`encode_netcdf`
-    (non-record doubles over named dims). Returns (variables, attrs)."""
+def read_netcdf_header(data) -> tuple[list[tuple[str, tuple, int, int]], dict]:
+    """Parse the header of a classic NetCDF file: ([(name, shape, nc
+    type, data offset)] per variable, global attrs). Reads only the
+    header bytes, so ``data`` may be an ``mmap`` of a large file."""
     if data[:4] != b"CDF\x01":
         raise ValueError("not a classic (CDF-1) NetCDF file")
     pos = 8  # skip magic + numrecs
@@ -141,7 +142,7 @@ def decode_netcdf(data: bytes) -> tuple[dict[str, np.ndarray], dict]:
             else:
                 raise ValueError(f"unsupported attr type {typ}")
     tag, nvars = read_i(), read_i()
-    variables: dict[str, np.ndarray] = {}
+    variables = []
     if tag == _NC_VARIABLE:
         for _ in range(nvars):
             name = read_name()
@@ -157,12 +158,17 @@ def decode_netcdf(data: bytes) -> tuple[dict[str, np.ndarray], dict]:
             typ = read_i()
             _vsize = read_i()
             begin = read_i()
-            shape = tuple(dims[d][1] for d in dimids)
-            count = int(np.prod(shape)) if shape else 1
-            arr = np.frombuffer(
-                data, dtype=_TYPE_NP[typ], count=count, offset=begin
-            )
-            variables[name] = arr.reshape(shape).astype(
-                _TYPE_NP[typ].replace(">", "=")
-            )
+            variables.append((name, tuple(dims[d][1] for d in dimids), typ, begin))
+    return variables, attrs
+
+
+def decode_netcdf(data: bytes) -> tuple[dict[str, np.ndarray], dict]:
+    """Decode a classic NetCDF file written by :func:`encode_netcdf`
+    (non-record doubles over named dims). Returns (variables, attrs)."""
+    specs, attrs = read_netcdf_header(data)
+    variables: dict[str, np.ndarray] = {}
+    for name, shape, typ, begin in specs:
+        count = int(np.prod(shape)) if shape else 1
+        arr = np.frombuffer(data, dtype=_TYPE_NP[typ], count=count, offset=begin)
+        variables[name] = arr.reshape(shape).astype(_TYPE_NP[typ].replace(">", "="))
     return variables, attrs

@@ -410,9 +410,6 @@ def callback_move(produced: dict, job: dict) -> dict:
     final = produced["filename"]
     if staging and staging != final:
         _commit(staging, final)
-        for side in (staging + ".meta.json",):
-            if os.path.exists(side):
-                os.replace(side, final + ".meta.json")
         produced = {**produced, "staged_filename": None}
     return produced
 

@@ -19,12 +19,15 @@ multi-path scan (parallelism = files × row-groups), never a driver loop.
 from __future__ import annotations
 
 import json
+import mmap
 import os
 import tarfile
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from trollflow2_spark.sinks import imagery, netcdf
 
 # One row of the message stream (shape from the reference's example
 # payloads, tests/test_trollflow2.py:271-282).
@@ -368,133 +371,123 @@ def _read_orc(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
 # the repo's own stdlib decoders (sinks/netcdf.py, sinks/imagery.py):
 # every registered *writer* format is now also a registered *reader*.
 #
-# Output is the long-form scene table (file, product, y, x, value):
-# one row per pixel per variable/band, y/x being row/col indices
-# (row 0 = top). Scale shape: the message's file list becomes a
-# DataFrame of paths and the decode runs executor-side via mapInPandas
-# (one task per file — a 1000-granule message decodes with 1000-way
-# parallelism, nothing lands on the driver). Non-finite pixels are
-# dropped (miss -> fill round-trips as absent cells).
-
-SCENE_LONG_SCHEMA = (
-    "file string, product string, y int, x int, value double"
-)
-
-#: magic bytes checked driver-side so unreadable inputs fail at
-#: create_scene time (≙ the reference aborting on unopenable files),
-#: not lazily at first action
-_RASTER_MAGIC = {
-    "netcdf": (b"CDF\x01",),
-    "png": (b"\x89PNG",),
-    "geotiff": (b"II*\x00",),
-}
+# Output is the wide scene the operators consume — the reference's dict
+# of named 2-D arrays as a table: one row per pixel, ``y int, x int``
+# (row/col indices, row 0 = top), then one ``double`` column per
+# variable in sorted name order. Values pass through as decoded: NaN
+# stays NaN (the engine's in-data missing marker) and no pixel is
+# dropped. The schema comes from a driver-side read of every file's
+# header (mmap'd, so only header bytes are touched), so building the
+# scene starts no Spark job. A message's files decode in one mapInArrow
+# task that stacks their planes column-wise: the files must name each
+# variable once, all on one 2-D grid (one file per channel is fine; two
+# granules of one channel are rejected, not merged).
 
 
-def _check_raster_magic(paths: list[str], kind: str) -> None:
-    sigs = _RASTER_MAGIC[kind]
+def _scene_grid(paths: list[str], kind: str, magic: bytes, read_header) -> tuple[list[str], tuple]:
+    """Driver-side header read of a message's raster files: the scene's
+    variable names (sorted) and their shared (h, w) grid. An unopenable
+    or mistyped file, a variable named twice, or variables that do not
+    share one 2-D grid raise :class:`SceneCreationError` (≙ the reference
+    aborting on unopenable files), at create_scene time, not lazily at
+    the first action."""
+    owner: dict[str, str] = {}
+    grids: set[tuple] = set()
     for p in paths:
         try:
             with open(p, "rb") as fh:
                 head = fh.read(8)
+                if not head.startswith(magic):
+                    raise SceneCreationError(f"{p!r} is not a {kind} file (magic {head[:4]!r})")
+                with mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as buf:
+                    variables = read_header(buf)
         except OSError as exc:
             raise SceneCreationError(f"cannot open {p!r}: {exc}") from exc
-        if not any(head.startswith(s) for s in sigs):
-            raise SceneCreationError(
-                f"{p!r} is not a {kind} file (magic {head[:4]!r})"
-            )
+        for name, shape in variables.items():
+            if name in ("y", "x"):
+                raise SceneCreationError(f"{p!r}: variable {name!r} clashes with the pixel index")
+            if name in owner:
+                raise SceneCreationError(f"variable {name!r} is in both {owner[name]!r} and {p!r}")
+            owner[name] = p
+            grids.add(shape)
+    if len(grids) != 1 or len(next(iter(grids))) != 2:
+        raise SceneCreationError(f"variables of {paths} do not share one 2-D grid: {sorted(grids)}")
+    return sorted(owner), grids.pop()
 
 
-def _band_products(arr) -> list[tuple[str, "object"]]:
-    """(product name, 2-D plane) pairs for a decoded raster: gray ->
-    one ``image`` product, multi-channel -> ``band_0..N``."""
-    if arr.ndim == 2:
-        return [("image", arr)]
-    return [(f"band_{i}", arr[:, :, i]) for i in range(arr.shape[2])]
-
-
-def _raster_reader(kind: str, decode_products):
-    """Build a registered reader from a ``bytes -> [(product, 2-D
-    array)]`` decoder. ``decode_products`` must be importable on
-    executors (module-level in sinks/)."""
+def _raster_reader(kind: str, magic: bytes, read_header, decode_planes):
+    """Build a registered reader from a header read (``buffer ->
+    {variable: shape}``) and a decoder (``bytes -> {variable: 2-D
+    array}``)."""
 
     def loader(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        _check_raster_magic(paths, kind)
+        names, (h, w) = _scene_grid(paths, kind, magic, read_header)
+        schema = T.StructType(
+            [T.StructField("y", T.IntegerType()), T.StructField("x", T.IntegerType())]
+            + [T.StructField(n, T.DoubleType()) for n in names]
+        )
 
         def decode(batches):
-            for pdf in batches:
-                for path in pdf["path"]:
-                    with open(path, "rb") as fh:
-                        data = fh.read()
-                    for product, plane in decode_products(data):
-                        a = np.asarray(plane, dtype="float64")
-                        h, w = a.shape
-                        yy, xx = np.divmod(np.arange(h * w), w)
-                        v = a.ravel()
-                        keep = np.isfinite(v)
-                        yield pd.DataFrame(
-                            {
-                                "file": path,
-                                "product": product,
-                                "y": yy[keep].astype("int32"),
-                                "x": xx[keep].astype("int32"),
-                                "value": v[keep],
-                            }
-                        )
+            import numpy as np
+            import pyarrow as pa
 
-        files = spark.createDataFrame([(p,) for p in paths], "path string")
-        if len(paths) > 1:
-            files = files.repartition(min(len(paths), 1024))
-        return files.mapInPandas(decode, schema=SCENE_LONG_SCHEMA)
+            for batch in batches:
+                for files in batch.column("paths").to_pylist():
+                    planes = {}
+                    for path in files:
+                        with open(path, "rb") as fh:
+                            planes.update(decode_planes(fh.read()))
+                    yy, xx = np.divmod(np.arange(h * w, dtype="int32"), w)
+                    cols = [yy, xx] + [np.asarray(planes[n], "float64").ravel() for n in names]
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c) for c in cols], names=["y", "x", *names]
+                    )
+
+        # Arrow, not pandas: pandas -> Arrow would turn every NaN into NULL
+        files = spark.createDataFrame([(list(paths),)], "paths array<string>")
+        return files.mapInArrow(decode, schema=schema)
 
     loader.__name__ = f"_read_{kind}"
     return loader
 
 
-def _decode_netcdf_products(data: bytes):
-    from trollflow2_spark.sinks.netcdf import decode_netcdf
+def _image_reader(kind: str, magic: bytes, shape_of, decode):
+    """A raster reader for an image format: gray -> one ``image``
+    variable, multi-channel -> ``band_0..N``, named from the header
+    shape ``shape_of`` reads. Broadcasting covers a colour-palette PNG
+    whose used entries are all gray, which decodes to 2-D."""
 
-    variables, _attrs = decode_netcdf(data)
-    return [(name, arr) for name, arr in variables.items()]
+    def names(shape):
+        return ["image"] if len(shape) == 2 else [f"band_{i}" for i in range(shape[2])]
+
+    def header(buf):
+        shape = shape_of(buf)
+        return dict.fromkeys(names(shape), shape[:2])
+
+    def planes(data):
+        import numpy as np
+
+        shape = shape_of(data)
+        full = np.broadcast_to(np.atleast_3d(decode(data)), shape[:2] + (len(names(shape)),))
+        return dict(zip(names(shape), np.moveaxis(full, 2, 0)))
+
+    return _raster_reader(kind, magic, header, planes)
 
 
-def _decode_png_products(data: bytes):
-    from trollflow2_spark.sinks.imagery import decode_png
-
-    return _band_products(decode_png(data))
-
-
-def _decode_geotiff_products(data: bytes):
-    from trollflow2_spark.sinks.imagery import decode_geotiff
-
-    pages, _tags = decode_geotiff(data)
-    # page 0 is the full-resolution image; later pages are overview
-    # pyramid levels (NewSubfileType=1), not data
-    return _band_products(pages[0])
-
-
-READER_REGISTRY["netcdf"] = _raster_reader("netcdf", _decode_netcdf_products)
+READER_REGISTRY["netcdf"] = _raster_reader(
+    "netcdf",
+    b"CDF\x01",
+    lambda buf: {n: shape for n, shape, _typ, _at in netcdf.read_netcdf_header(buf)[0]},
+    lambda data: netcdf.decode_netcdf(data)[0],
+)
 READER_REGISTRY["cf"] = READER_REGISTRY["netcdf"]  # writer-name alias
-READER_REGISTRY["png"] = _raster_reader("png", _decode_png_products)
+READER_REGISTRY["png"] = _image_reader("png", b"\x89PNG", imagery.png_shape, imagery.decode_png)
 READER_REGISTRY["simple_image"] = READER_REGISTRY["png"]
-READER_REGISTRY["geotiff"] = _raster_reader("geotiff", _decode_geotiff_products)
-
-
-def scene_long_to_wide(scene: DataFrame) -> DataFrame:
-    """Pivot the long-form raster scene to the wide (y, x, product
-    columns...) shape the pipeline operators consume. One shuffle on the
-    pixel key; product names are read from the data (config-sized
-    distinct)."""
-    from pyspark.sql import functions as F
-
-    products = [r[0] for r in scene.select("product").distinct().collect()]
-    return (
-        scene.groupBy("y", "x")
-        .pivot("product", sorted(products))
-        .agg(F.first("value"))
-    )
+# page 0 is the full-resolution image; later pages are overview pyramid
+# levels (NewSubfileType=1), not data
+READER_REGISTRY["geotiff"] = _image_reader(
+    "geotiff", b"II*\x00", imagery.geotiff_shape, lambda data: imagery.decode_geotiff(data)[0][0]
+)
 
 
 def create_scene(
