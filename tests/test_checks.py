@@ -7,7 +7,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from trollflow2_spark.operators.checks import (
+from trollflow2_spark.extensions.column_plugins import (
     check_metadata_age,
     check_metadata_categorical,
     metadata_alias,

@@ -4,14 +4,12 @@ scene, nearest-neighbor with radius misses, top-1 preference)."""
 
 from pyspark.sql import functions as F
 
+from trollflow2_spark.extensions.column_plugins import compose_pattern
 from trollflow2_spark.operators.resample import (
     nearest_join_1d,
     weighted_resample_1d,
 )
-from trollflow2_spark.operators.transforms import (
-    block_aggregate,
-    compose_pattern,
-)
+from trollflow2_spark.operators.transforms import block_aggregate
 from trollflow2_spark.operators.windows import top1_per_group, topk_per_group
 
 

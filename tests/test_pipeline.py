@@ -796,6 +796,62 @@ def test_resample_plugin_mapped_path_broadcasts(spark):
     assert got[(1.0, 1.0)] == 0.0
 
 
+def test_mapped_resample_cache_reuses_and_drops_stale_sessions(
+    spark, tmp_path, monkeypatch
+):
+    """The mapped nearest path persists one mapping per grid pair: a
+    repeated pair reuses its mapping, a new pair adds one, and an entry
+    of a stopped session is dropped without being called."""
+    import numpy as np
+
+    from trollflow2_spark.operators.resample import GridArea, register_area
+    from trollflow2_spark.plans import pipeline
+
+    stopped = ("stopped-app", None, None, 0.0)
+    monkeypatch.setitem(pipeline._MAPPING_CACHE, stopped, object())
+    register_area(GridArea("src_rdd", width=8, height=8, dx=1.0, dy=1.0))
+    # grids no other test maps onto: equal mappings share one cache entry
+    register_area(GridArea("tgt_rdd_a", width=4, height=4, x0=0.5, dx=2.0, dy=2.0))
+    register_area(GridArea("tgt_rdd_b", width=2, height=2, dx=4.0, dy=4.0))
+    path = _write_netcdf(
+        tmp_path / "g.nc", {"v": np.arange(64, dtype="float64").reshape(8, 8)}
+    )
+    workers = [
+        {"fun": "create_scene", "reader": "netcdf"},
+        {"fun": "resample", "resampler": "nearest", "radius_of_influence": 4.0},
+        {"fun": "save_datasets"},
+    ]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    def run(uid, area):
+        plist = read_product_list(raw_string=f"""
+product_list:
+  output_dir: "{tmp_path / 'out'}"
+  fname_pattern: "{{uid}}_{{productname}}.{{format}}"
+  areas:
+    {area}:
+      products:
+        v:
+          productname: v
+          formats:
+            - format: parquet
+              writer: parquet
+""")
+        msg = {"type": "file", "uid": uid, "uri": path, "source_area": "src_rdd"}
+        summary = process_message(spark, msg, plist, workers)
+        assert summary["status"] == "nominal"
+        assert (tmp_path / "out" / f"{uid}_v.parquet").exists()
+        return set(jsc.getPersistentRDDs().keySet()) - before
+
+    first = run("m1", "tgt_rdd_a")
+    assert len(first) == 1
+    assert stopped not in pipeline._MAPPING_CACHE
+    assert run("m2", "tgt_rdd_a") == first
+    both = run("m3", "tgt_rdd_b")
+    assert len(both) == 2 and first < both
+
+
 def test_resample_plugin_ewa_radius_precedence(spark):
     """An explicit radius_of_influence must not be silently beaten by the
     *default* weight_distance_max=1.0; an explicit weight_distance_max

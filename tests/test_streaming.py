@@ -168,7 +168,7 @@ def test_windowed_counts_with_watermark(spark, sf_dir, tmp_path):
     availableNow into a memory sink."""
     import os
     from pyspark.sql import functions as F
-    from trollflow2_spark.streaming.windows import windowed_counts
+    from trollflow2_spark.extensions.stream_windows import windowed_counts
 
     from trollflow2_spark.tables import load_table
 
@@ -201,7 +201,7 @@ def test_windowed_counts_with_watermark(spark, sf_dir, tmp_path):
 def test_sessionized_counts_stream(spark, sf_dir, tmp_path):
     import os
     from pyspark.sql import functions as F
-    from trollflow2_spark.streaming.windows import sessionized_counts
+    from trollflow2_spark.extensions.stream_windows import sessionized_counts
 
     from trollflow2_spark.tables import load_table
 
@@ -232,7 +232,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     it reappears in batch 2 (state store carries the seen set)."""
     import json as _json
     import os
-    from trollflow2_spark.streaming.stateful import streaming_dedup
+    from trollflow2_spark.extensions.stream_state import streaming_dedup
 
     src_dir = str(tmp_path / "dedup_in")
     os.makedirs(src_dir)
@@ -269,7 +269,7 @@ def test_stateful_running_counts(spark, sf_dir, tmp_path):
     """applyInPandasWithState: counts accumulate across micro-batches."""
     import json as _json
     import os
-    from trollflow2_spark.streaming.stateful import running_counts
+    from trollflow2_spark.extensions.stream_state import running_counts
 
     src_dir = str(tmp_path / "state_in")
     os.makedirs(src_dir)
@@ -471,7 +471,7 @@ def test_streaming_simhash_dedup(spark, tmp_path):
     drop across batches while genuinely different docs pass."""
     import json as _json
 
-    from trollflow2_spark.streaming.stateful import streaming_simhash_dedup
+    from trollflow2_spark.extensions.stream_state import streaming_simhash_dedup
 
     src_dir = str(tmp_path / "shdedup_in")
     os.makedirs(src_dir)
@@ -560,7 +560,7 @@ def test_host_rate_limit_token_bucket(spark, tmp_path):
     import json
     import time
 
-    from trollflow2_spark.streaming.stateful import host_rate_limit
+    from trollflow2_spark.extensions.stream_state import host_rate_limit
 
     src = tmp_path / "frontier"
     src.mkdir()
@@ -620,7 +620,7 @@ def test_host_rate_limit_timeout_expires_state():
     accretion for the crawl frontier's long tail of one-shot hosts."""
     import pandas as pd
 
-    from trollflow2_spark.streaming.stateful import _rate_limit_kernel
+    from trollflow2_spark.extensions.stream_state import _rate_limit_kernel
 
     class FakeState:
         def __init__(self):
@@ -668,7 +668,7 @@ def test_stream_stream_join_attribution(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from trollflow2_spark.streaming.windows import stream_stream_join
+    from trollflow2_spark.extensions.stream_windows import stream_stream_join
 
     imp_dir, clk_dir = str(tmp_path / "imp"), str(tmp_path / "clk")
     os.makedirs(imp_dir), os.makedirs(clk_dir)

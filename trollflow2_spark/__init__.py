@@ -4,11 +4,13 @@ A from-scratch engine with the query and data-processing capabilities of
 pytroll/trollflow2 (a message-driven, YAML-configured batch ETL framework
 for satellite imagery), re-expressed Spark-first:
 
-- message stream       -> Structured Streaming DataFrame / batch DataFrame
-- product list (YAML)  -> work-items DataFrame (explode + coalesce inheritance)
-- plugin worker chain  -> composition of ``DataFrame -> DataFrame`` stages
-- filter plugins       -> ``df.filter`` / join-back predicates
-- resampling           -> bucketed spatial equi-join + window top-1
+- message stream       -> Structured Streaming source; each message row
+                          runs ``plans.process_message``
+- product list (YAML)  -> flat work-item dicts, batched by priority
+- plugin worker chain  -> named plugins ``fn(job)`` over the scene
+- filter plugins       -> plain-Python pruning of the work items
+- resampling           -> broadcast grid-to-grid mapping join, or a
+                          bucketed spatial equi-join + window top-1
 - multi-format sinks   -> one Arrow gather per priority batch feeding every
                           writer + output manifest
 - publisher            -> plain-Python messages, one atomically renamed
@@ -23,4 +25,3 @@ SQL NULL is the metadata missing marker.
 __version__ = "0.1.0"
 
 from trollflow2_spark.session import get_spark, tune_for_oracle  # noqa: F401
-from trollflow2_spark.tables import load_table, load_tables, TABLE_NAMES  # noqa: F401

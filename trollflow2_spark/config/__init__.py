@@ -6,6 +6,4 @@ from trollflow2_spark.config.product_list import (  # noqa: F401
 from trollflow2_spark.config.work_items import (  # noqa: F401
     flatten_product_list,
     get_config_value,
-    work_items_df,
-    WORK_ITEM_FIELDS,
 )

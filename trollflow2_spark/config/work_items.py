@@ -1,7 +1,7 @@
-"""Config expansion: product list -> work-items DataFrame.
+"""Config expansion: product list -> flat work-item dicts.
 
 The reference's logical planner is ``plist_iter`` + ``get_config_value``
-(``/root/reference/trollflow2/dict_tools.py:26-99``): a depth-wise walk of
+(``trollflow2/dict_tools.py:26-99``): a depth-wise walk of
 ``areas -> products -> formats`` yielding one flattened config per leaf,
 with *nearest-ancestor* inheritance (format level overrides product
 overrides area overrides global overrides ``/common``), a default format
@@ -9,15 +9,9 @@ overrides area overrides global overrides ``/common``), a default format
 and global ``formats`` propagated down independently (deep-copied) —
 ``launcher.py:276-300``, ``tests/test_launcher.py:199-204``.
 
-Spark design: the config is tiny (tens-to-thousands of leaves), so we
-flatten driver-side into rows and build a small DataFrame that later
-stages broadcast-join against data. The *same* semantics are also
-expressible purely relationally (explode + coalesce chain) — see
-``trollflow2_spark.queries.q_work_items`` which does exactly that so the
-inheritance algebra is oracle-checked.
-
-Scale note: the work-items DF is always broadcast (it is config, not
-data); per-leaf pruning therefore never shuffles the data tables.
+The config is tiny (tens to thousands of leaves), so this is pure
+dict-walking on the driver: the plans batch the leaves by priority and
+prune them as plain Python. Nothing here touches Spark.
 """
 
 from __future__ import annotations
@@ -25,52 +19,11 @@ from __future__ import annotations
 import copy
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
 DEFAULT_FORMAT = {"format": "tif", "writer": "geotiff"}
 DEFAULT_PRIORITY = 999
 
 # Keys that define the hierarchy rather than inheritable settings.
 _STRUCTURAL = {"areas", "products", "formats", "workers", "crash_handlers"}
-
-# The pinned work-item schema (FIXTURES.md §2). Open-world extras ride in
-# an `extra` map column.
-WORK_ITEM_FIELDS: list[tuple[str, T.DataType]] = [
-    ("area", T.StringType()),
-    ("areaname", T.StringType()),
-    ("priority", T.IntegerType()),
-    ("product", T.ArrayType(T.StringType())),
-    ("productname", T.StringType()),
-    ("resolution", T.IntegerType()),
-    ("format", T.StringType()),
-    ("writer", T.StringType()),
-    ("fname_pattern", T.StringType()),
-    ("output_dir", T.StringType()),
-    ("fill_value", T.DoubleType()),
-    ("min_coverage", T.DoubleType()),
-    ("sunzen_check_lon", T.DoubleType()),
-    ("sunzen_check_lat", T.DoubleType()),
-    ("sunzen_minimum_angle", T.DoubleType()),
-    ("sunzen_maximum_angle", T.DoubleType()),
-    ("sunlight_min", T.DoubleType()),
-    ("sunlight_max", T.DoubleType()),
-    ("check_pass", T.BooleanType()),
-    ("min_valid_data_fraction", T.DoubleType()),
-    ("resampler", T.StringType()),
-    ("radius_of_influence", T.DoubleType()),
-    ("reduce_data", T.BooleanType()),
-    ("epsilon", T.DoubleType()),
-    ("publish_topic", T.StringType()),
-]
-
-_FIELD_NAMES = [name for name, _ in WORK_ITEM_FIELDS]
-
-_CASTS = {
-    T.IntegerType(): int,
-    T.DoubleType(): float,
-    T.BooleanType(): bool,
-}
 
 
 def get_config_value(config: dict, path: list, key: str, default: Any = None) -> Any:
@@ -147,32 +100,3 @@ def flatten_product_list(
                 leaf.setdefault("format", DEFAULT_FORMAT["format"])
                 leaf.setdefault("writer", DEFAULT_FORMAT["writer"])
                 yield leaf
-
-
-def work_items_df(
-    spark: SparkSession, product_list: dict, base_mda: dict | None = None
-) -> DataFrame:
-    """Build the typed work-items DataFrame from a product list."""
-    schema = T.StructType(
-        [T.StructField(n, t, True) for n, t in WORK_ITEM_FIELDS]
-        + [T.StructField("extra", T.MapType(T.StringType(), T.StringType()), True)]
-    )
-    rows = []
-    for leaf in flatten_product_list(product_list, base_mda):
-        row = []
-        for name, dtype in WORK_ITEM_FIELDS:
-            val = leaf.get(name)
-            if val is not None and dtype in _CASTS:
-                val = _CASTS[dtype](val)
-            elif val is not None and isinstance(dtype, T.ArrayType):
-                val = [str(v) for v in val]
-            elif val is not None and dtype == T.StringType():
-                val = str(val)
-            row.append(val)
-        extra = {
-            str(k): str(v)
-            for k, v in leaf.items()
-            if k not in _FIELD_NAMES and v is not None and not isinstance(v, (dict, list))
-        }
-        rows.append(tuple(row) + (extra or None,))
-    return spark.createDataFrame(rows, schema)

@@ -1,10 +1,14 @@
-"""Filter / pruning operators — the engine's WHERE clauses.
+"""Column twins of the engine's worker plugins, for the query library.
 
-The reference prunes the work-list at three granularities (scene/area/
-product; ``/root/reference/trollflow2/plugins/__init__.py:582-1079``).
-Here every granularity is a ``df.filter`` (dropped groups simply vanish),
-and scene-level "abort" is an empty-DataFrame early exit handled by the
-pipeline runner (AbortProcessing ≙ ``plugins/__init__.py:82-83``).
+The engine runs its gates and filename templating over plain work-item
+dicts (``plans/pipeline.py``, ``sinks/save.py``). The contract queries
+express the same reference semantics as Column algebra so the oracle can
+check them relationally:
+
+- the pruning gates (``plugins/__init__.py:582-1079``) as ``df.filter``
+  predicates — dropped groups simply vanish;
+- trollsift filename/topic templating (``plugins/__init__.py:207-220,
+  258-274``) as a concat of column refs and ``date_format`` calls.
 
 Scale notes: all predicates are pure Column expressions (JVM-side,
 codegen'd, pushdown-eligible); the data-dependent check
@@ -15,6 +19,7 @@ aggregation it needs.
 
 from __future__ import annotations
 
+import re
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -158,3 +163,54 @@ def valid_fraction_filter(
         .select(*group_cols)
     )
     return df.join(F.broadcast(fractions), list(group_cols), "left_semi")
+
+
+# ---------------------------------------------------------------------------
+# Filename / topic / decoration templating (trollsift `compose` analog,
+# plugins/__init__.py:207-220,258-274). A pattern like
+#   "{platform_name}_{start_time:%Y%m%d_%H%M}_{areaname}.{format}"
+# becomes a concat of column refs and date_format calls — pure JVM-side
+# string functions, usable for partitioned output paths.
+
+_FIELD_RE = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)(?::([^}]+))?\}")
+
+_STRFTIME_TO_SPARK = {
+    "%Y": "yyyy",
+    "%m": "MM",
+    "%d": "dd",
+    "%H": "HH",
+    "%M": "mm",
+    "%S": "ss",
+    "%j": "DDD",
+    "%y": "yy",
+}
+
+
+def strftime_to_spark(fmt: str) -> str:
+    out = fmt
+    for k, v in _STRFTIME_TO_SPARK.items():
+        out = out.replace(k, v)
+    return out
+
+
+def compose_pattern(pattern: str, types: Mapping[str, str] | None = None) -> Column:
+    """Build a Column that renders ``pattern`` from row columns.
+
+    ``types`` maps field name -> Spark dtype string; fields typed
+    ``timestamp*`` use their strftime spec via ``date_format``.
+    """
+    types = types or {}
+    parts: list[Column] = []
+    pos = 0
+    for m in _FIELD_RE.finditer(pattern):
+        if m.start() > pos:
+            parts.append(F.lit(pattern[pos : m.start()]))
+        field, spec = m.group(1), m.group(2)
+        if spec and "%" in spec:
+            parts.append(F.date_format(F.col(field), strftime_to_spark(spec)))
+        else:
+            parts.append(F.col(field).cast("string"))
+        pos = m.end()
+    if pos < len(pattern):
+        parts.append(F.lit(pattern[pos:]))
+    return F.concat(*parts) if parts else F.lit("")

@@ -568,7 +568,7 @@ def simhash_column(
     scan stage via higher-order functions (one hash per distinct token,
     bound once through a single-element ``transform`` so the 32 bit
     filters never re-hash), which also makes it usable per-row in
-    Structured Streaming (:func:`trollflow2_spark.streaming.stateful.
+    Structured Streaming (:func:`trollflow2_spark.extensions.stream_state.
     streaming_simhash_dedup`).
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col

@@ -698,7 +698,7 @@ def replay_recipe_batches(
     ``availableNow`` drain) into a ``foreachBatch``
     :func:`streaming_recipe_sink`; returns the accumulated parquet
     output. The contract harness for the incremental recipe tier —
-    same replay discipline as ``streaming.stateful.replay_batches``."""
+    same replay discipline as ``stream_state.replay_batches``."""
     import json
     import os
     import tempfile

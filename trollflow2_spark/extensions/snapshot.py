@@ -298,7 +298,7 @@ def cms_replay_state(
     try:
         spark.conf.set(
             "spark.sql.shuffle.partitions", "2"
-        )  # fixture-scale replay: see streaming.stateful.replay_batches
+        )  # fixture-scale replay: see stream_state.replay_batches
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -395,7 +395,7 @@ def drift_replay_state(
     try:
         spark.conf.set(
             "spark.sql.shuffle.partitions", "2"
-        )  # fixture-scale replay: see streaming.stateful.replay_batches
+        )  # fixture-scale replay: see stream_state.replay_batches
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -645,7 +645,7 @@ def kmv_replay_state(
     try:
         spark.conf.set(
             "spark.sql.shuffle.partitions", "2"
-        )  # fixture-scale replay: see streaming.stateful.replay_batches
+        )  # fixture-scale replay: see stream_state.replay_batches
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -749,7 +749,7 @@ def balance_replay_state(
     try:
         spark.conf.set(
             "spark.sql.shuffle.partitions", "2"
-        )  # fixture-scale replay: see streaming.stateful.replay_batches
+        )  # fixture-scale replay: see stream_state.replay_batches
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)

@@ -3,7 +3,7 @@
 The reference keeps no cross-message state (each message is an
 independent job — SURVEY §2.10); a training-data intake pipeline does:
 running per-source document counts, dedup-seen sets, rate monitors.
-This module shows the engine's pattern for arbitrary keyed state:
+This module shows the query library's pattern for arbitrary keyed state:
 ``applyInPandasWithState`` — Arrow-batched groups, explicit state
 object, event-time or processing-time timeouts bounding state size.
 

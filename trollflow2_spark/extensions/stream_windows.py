@@ -3,8 +3,8 @@
 The reference processes each message independently — no event-time
 windows, no cross-message state (SURVEY §2.10). Structured Streaming
 gives both for free, and a training-data intake pipeline needs them
-(per-source rates, late-data handling), so the engine exposes them as
-first-class stages:
+(per-source rates, late-data handling), so the query library exposes
+them as first-class stages:
 
 - ``windowed_counts``: tumbling/sliding event-time windows with a
   watermark bounding state (late rows beyond the watermark are dropped —

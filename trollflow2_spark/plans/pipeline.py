@@ -369,9 +369,10 @@ def check_valid_data_fraction_plugin(job: dict, min_valid_data_fraction: float =
     """Prune work items whose product column has too little valid
     (non-NULL, non-NaN) data (≙ ``plugins/__init__.py:955-1079``).
 
-    One aggregation pass computes every product's fraction at once over
-    the persisted scene (≙ the batched ``dask.persist`` at ``:1014-1032``
-    — same compute-once motivation)."""
+    One aggregation pass over the scene computes every product's
+    fraction at once (≙ the batched ``dask.persist`` at ``:1014-1032`` —
+    same compute-once motivation). The scene is not persisted: this pass
+    and the save gather each decode it."""
     scene = job["scene"]
     prods = sorted(
         {p for item in job["work_items"] for p in (item.get("product") or []) if p in scene.columns}
@@ -436,10 +437,12 @@ def resolve_resampler_options(resampler: str, overrides: dict) -> dict:
 
 
 # (application id, source GridArea, target GridArea, radius) -> persisted
-# mapping DataFrame. GridArea is a frozen dataclass, so the key hashes;
-# the cache makes repeated messages onto the same area pair reuse one
-# broadcast table (≙ the reference's per-area resampler cache).
+# mapping DataFrame (≙ the reference's per-area resampler cache).
+# Rebuilding a mapping per batch measurably slowed the resample plugin, so
+# within one application the cache keeps one mapping per grid pair the
+# product lists name. Entries of a stopped application are dropped.
 _MAPPING_CACHE: dict[tuple, DataFrame] = {}
+_MAPPING_CACHE_LOCK = threading.Lock()
 
 
 def _resample_mapped(
@@ -453,17 +456,24 @@ def _resample_mapped(
     """Fixed grid-pair nearest resample through the precomputed broadcast
     mapping table (``operators/resample.py:grid_to_grid_mapping``): the
     big source side gets its pixel index map-side and broadcast-joins the
-    target-area-sized mapping — no explode, no source shuffle."""
+    target-area-sized mapping — no explode, no source shuffle. The
+    mapping is persisted once per grid pair and application."""
     from trollflow2_spark.operators.resample import (
         grid_to_grid_mapping,
         resample_nearest_mapped,
     )
 
-    key = (spark.sparkContext.applicationId, src_area, tgt_area, float(radius))
-    mapping = _MAPPING_CACHE.get(key)
-    if mapping is None:
-        mapping = grid_to_grid_mapping(spark, tgt_area, src_area, radius).persist()
-        _MAPPING_CACHE[key] = mapping
+    app = spark.sparkContext.applicationId
+    key = (app, src_area, tgt_area, float(radius))
+    with _MAPPING_CACHE_LOCK:
+        for stale in [k for k in _MAPPING_CACHE if k[0] != app]:
+            # a stopped session's cached blocks went with it: nothing to
+            # unpersist, and its DataFrames can no longer be called
+            del _MAPPING_CACHE[stale]
+        mapping = _MAPPING_CACHE.get(key)
+        if mapping is None:
+            mapping = grid_to_grid_mapping(spark, tgt_area, src_area, radius).persist()
+            _MAPPING_CACHE[key] = mapping
     x, y = coords
     value_cols = [
         c for c, t in scene.dtypes

@@ -23,7 +23,16 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from trollflow2_spark import qconst as C
-from trollflow2_spark.config.work_items import work_items_df
+from trollflow2_spark.config.work_items import flatten_product_list
+from trollflow2_spark.extensions.column_plugins import (
+    check_metadata_age,
+    check_metadata_categorical,
+    compose_pattern,
+    covers_filter,
+    metadata_alias,
+    sza_check,
+    valid_fraction_filter,
+)
 from trollflow2_spark.extensions.dedup import (
     duplicate_clusters,
     exact_dedup,
@@ -55,20 +64,12 @@ from trollflow2_spark.functions.geometry import (
     pseudo_coverage_percent,
     sun_zenith_angle_deg,
 )
-from trollflow2_spark.operators.checks import (
-    check_metadata_age,
-    check_metadata_categorical,
-    covers_filter,
-    metadata_alias,
-    sza_check,
-    valid_fraction_filter,
-)
 from trollflow2_spark.operators.resample import (
     nearest_join_1d,
     nearest_join_2d,
     weighted_resample_1d,
 )
-from trollflow2_spark.operators.transforms import block_aggregate, compose_pattern
+from trollflow2_spark.operators.transforms import block_aggregate
 from trollflow2_spark.operators.windows import top1_per_group, topk_per_group
 from trollflow2_spark.tables import load_table
 
@@ -290,6 +291,74 @@ CANONICAL_PRODUCT_LIST: dict = {
     },
     "common": {"sensor": "avhrr"},
 }
+
+
+# The pinned work-item schema (FIXTURES.md §2). Open-world extras ride in
+# an `extra` map column.
+WORK_ITEM_FIELDS: list[tuple[str, T.DataType]] = [
+    ("area", T.StringType()),
+    ("areaname", T.StringType()),
+    ("priority", T.IntegerType()),
+    ("product", T.ArrayType(T.StringType())),
+    ("productname", T.StringType()),
+    ("resolution", T.IntegerType()),
+    ("format", T.StringType()),
+    ("writer", T.StringType()),
+    ("fname_pattern", T.StringType()),
+    ("output_dir", T.StringType()),
+    ("fill_value", T.DoubleType()),
+    ("min_coverage", T.DoubleType()),
+    ("sunzen_check_lon", T.DoubleType()),
+    ("sunzen_check_lat", T.DoubleType()),
+    ("sunzen_minimum_angle", T.DoubleType()),
+    ("sunzen_maximum_angle", T.DoubleType()),
+    ("sunlight_min", T.DoubleType()),
+    ("sunlight_max", T.DoubleType()),
+    ("check_pass", T.BooleanType()),
+    ("min_valid_data_fraction", T.DoubleType()),
+    ("resampler", T.StringType()),
+    ("radius_of_influence", T.DoubleType()),
+    ("reduce_data", T.BooleanType()),
+    ("epsilon", T.DoubleType()),
+    ("publish_topic", T.StringType()),
+]
+
+_FIELD_NAMES = [name for name, _ in WORK_ITEM_FIELDS]
+
+_CASTS = {
+    T.IntegerType(): int,
+    T.DoubleType(): float,
+    T.BooleanType(): bool,
+}
+
+
+def work_items_df(
+    spark: SparkSession, product_list: dict, base_mda: dict | None = None
+) -> DataFrame:
+    """Build the typed work-items DataFrame from a product list."""
+    schema = T.StructType(
+        [T.StructField(n, t, True) for n, t in WORK_ITEM_FIELDS]
+        + [T.StructField("extra", T.MapType(T.StringType(), T.StringType()), True)]
+    )
+    rows = []
+    for leaf in flatten_product_list(product_list, base_mda):
+        row = []
+        for name, dtype in WORK_ITEM_FIELDS:
+            val = leaf.get(name)
+            if val is not None and dtype in _CASTS:
+                val = _CASTS[dtype](val)
+            elif val is not None and isinstance(dtype, T.ArrayType):
+                val = [str(v) for v in val]
+            elif val is not None and dtype == T.StringType():
+                val = str(val)
+            row.append(val)
+        extra = {
+            str(k): str(v)
+            for k, v in leaf.items()
+            if k not in _FIELD_NAMES and v is not None and not isinstance(v, (dict, list))
+        }
+        rows.append(tuple(row) + (extra or None,))
+    return spark.createDataFrame(rows, schema)
 
 
 def q_work_items_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2978,7 +3047,7 @@ def q_streaming_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state semantics as one aggregate: n_events = count, n_batches
     = count of distinct batches the key appears in (the kernel is
     invoked only for keys with data in the batch)."""
-    from trollflow2_spark.streaming.stateful import (
+    from trollflow2_spark.extensions.stream_state import (
         replay_batches,
         running_counts,
     )
@@ -3019,7 +3088,7 @@ def q_streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form, so the oracle replays the 3-step bucket recurrence in
     SQL — including hosts that miss batches (no invocation => no
     refill, no state)."""
-    from trollflow2_spark.streaming.stateful import (
+    from trollflow2_spark.extensions.stream_state import (
         host_rate_limit,
         replay_batches,
     )
@@ -8285,7 +8354,7 @@ def q_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 is the first filtered batch — the oracle restates the lag-2 rule
     row-by-row; final counts are the max update per (window, type)
     from the memory sink."""
-    from trollflow2_spark.streaming.stateful import replay_batches
+    from trollflow2_spark.extensions.stream_state import replay_batches
 
     ev = _replay_subset(
         load_table(spark, sf_dir, "events").where(
@@ -8330,8 +8399,8 @@ def q_streaming_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate case gates on window end), with the same lag-2 watermark
     propagation the late-data replay pins. The oracle restates the
     rule and the time-range join."""
-    from trollflow2_spark.streaming.stateful import replay_batches
-    from trollflow2_spark.streaming.windows import stream_stream_join
+    from trollflow2_spark.extensions.stream_state import replay_batches
+    from trollflow2_spark.extensions.stream_windows import stream_stream_join
 
     ev = _replay_subset(
         load_table(spark, sf_dir, "events").where(
@@ -8395,7 +8464,7 @@ def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches), so the state-store survivor set is closed-form — the
     min-batch doc of each content group. The digest column is the
     portable md5 hash the oracle replays."""
-    from trollflow2_spark.streaming.stateful import (
+    from trollflow2_spark.extensions.stream_state import (
         replay_batches,
         streaming_dedup,
     )

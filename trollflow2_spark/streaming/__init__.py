@@ -2,8 +2,3 @@ from trollflow2_spark.streaming.runner import (  # noqa: F401
     message_stream,
     run_streaming,
 )
-from trollflow2_spark.streaming.windows import (  # noqa: F401
-    sessionized_counts,
-    windowed_counts,
-)
-from trollflow2_spark.streaming.stateful import running_counts  # noqa: F401

@@ -110,20 +110,17 @@ def resolve_crash_handler(
     raise TypeError(f"bad crash handler spec: {spec!r}")
 
 
-def message_stream(
-    spark: SparkSession,
-    message_dir: str,
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
+def message_stream(spark: SparkSession, message_dir: str) -> DataFrame:
     """The unbounded message source: JSON message files appearing in a
     directory (the local stand-in for the ZMQ subscription; production
     swaps in ``spark.readStream.format("kafka")`` — same downstream
     code). One file per trigger ≙ the reference's one-message-at-a-time
     loop."""
-    reader = spark.readStream.schema(MESSAGE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.json(message_dir)
+    stream = (
+        spark.readStream.schema(MESSAGE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(message_dir)
+    )
     return stream.filter(F.col("type").isin(*ACCEPTED_MESSAGE_TYPES))
 
 
@@ -133,9 +130,9 @@ def message_stream_socket(
     """Network message source: newline-delimited JSON messages over a TCP
     socket — the shape of the reference's posttroll/ZMQ subscription
     (``launcher.py:146-171``: a network listener delivering one message
-    per line). Spark's built-in ``socket`` source yields the lines; the
-    payload parses against :data:`MESSAGE_SCHEMA` and filters to the
-    accepted types, identical to the file/Kafka variants downstream.
+    per line). Spark's built-in ``socket`` source yields the lines in a
+    ``value`` column, which :func:`parse_kafka_records` parses exactly
+    as it parses Kafka record values.
 
     Production note: the socket source is at-most-once (no replay); for
     exactly-once intake swap Kafka in — same downstream code. That
@@ -147,10 +144,7 @@ def message_stream_socket(
         .option("port", int(port))
         .load()
     )
-    parsed = raw.select(
-        F.from_json(F.col("value"), MESSAGE_SCHEMA).alias("m")
-    ).select("m.*")
-    return parsed.filter(F.col("type").isin(*ACCEPTED_MESSAGE_TYPES))
+    return parse_kafka_records(raw)
 
 
 def kafka_source_options(
@@ -186,9 +180,9 @@ def parse_kafka_records(raw: DataFrame) -> DataFrame:
     """Kafka wire records -> accepted messages: each record's ``value``
     is one JSON message (the same payload the file/socket sources
     carry), parsed against :data:`MESSAGE_SCHEMA` and filtered to
-    accepted types. Shared verbatim by the real connector source and
-    the embedded-fake e2e tests — what the tests pin IS the production
-    parse."""
+    accepted types. Shared verbatim by the real connector source, the
+    socket source and the embedded-fake e2e tests — what the tests pin
+    IS the production parse."""
     parsed = raw.select(
         F.from_json(F.col("value").cast("string"), MESSAGE_SCHEMA).alias("m")
     ).select("m.*")
