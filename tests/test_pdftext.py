@@ -297,3 +297,37 @@ def test_v5_r6_empty_password_opens_and_real_stays_locked():
         assert r["text"] == f"enc doc {d} code {d % 5}", d
     r = extract_pdf_text(_encrypted_pdf_blob(35))  # 35 % 7 == 0, % 4 == 3
     assert r["encrypted"] == 1 and r["text"] == ""
+
+
+def test_cipher_vectors_on_the_pure_python_route(monkeypatch):
+    """The published-vector tests above also hold with the native
+    backend absent (the stdlib-only route)."""
+    from trollflow2_spark.sources import pdftext
+
+    monkeypatch.setattr(pdftext, "_native", lambda: None)
+    pdftext.pdf2_hardened_hash.cache_clear()
+    try:
+        test_rc4_and_aes_published_vectors()
+        test_aes256_fips_vectors_and_hardened_hash_shape()
+    finally:
+        pdftext.pdf2_hardened_hash.cache_clear()
+
+
+def test_import_leaves_cryptography_unloaded():
+    """Importing the PDF source does not import the native cipher
+    backend; the first cipher call does (when it is installed)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import trollflow2_spark.sources.pdftext as p\n"
+        "before = 'cryptography' in sys.modules\n"
+        "p._rc4(bytes(16), b'x')\n"
+        "print(before, p._native() is None or 'cryptography' in sys.modules)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, capture_output=True,
+                         text=True, check=True).stdout.split()
+    assert out == ["False", "True"]

@@ -162,7 +162,8 @@ def parse_launcher_args(args: list[str] | None = None) -> dict:
     )
     parser.add_argument(
         "--checkpoint", type=str, required=False, default=None,
-        help="Streaming checkpoint directory (default: a temp dir)",
+        help="Replay log directory for file intake; the Structured Streaming "
+        "checkpoint for kafka:// (default: a temp dir)",
     )
     parser.add_argument(
         "--max-age", type=float, required=False, default=None,
@@ -175,7 +176,7 @@ def parse_launcher_args(args: list[str] | None = None) -> dict:
     parser.add_argument(
         "--master", type=str, required=False, default=None, help="Spark master",
     )
-    # parity no-op: Spark's foreachBatch is already in-process
+    # parity no-op: the message listener already runs in-process
     parser.add_argument("-t", "--threaded", action="store_true", help=argparse.SUPPRESS)
     return vars(parser.parse_args(args))
 
@@ -183,7 +184,7 @@ def parse_launcher_args(args: list[str] | None = None) -> dict:
 def launch(args_in: list[str] | None = None):
     """Streaming entry point (≙ ``launch``, ``launcher.py:500-515``).
 
-    With ``-m test_message.json`` the message is drained availableNow and
+    With ``-m test_message.json`` the message is drained (available_now) and
     the process exits (the reference's offline test mode); otherwise the
     daemon keeps running until interrupted.
     """
@@ -236,7 +237,7 @@ def launch(args_in: list[str] | None = None):
         try:  # pragma: no cover - interactive daemon loop
             query.awaitTermination()
         except KeyboardInterrupt:
-            logger.info("stopping (graceful: in-flight batch completes)")
+            logger.info("stopping (graceful: the in-flight message completes)")
             query.stop()
         return results
     finally:

@@ -36,6 +36,8 @@ task retry replace the reference's process-per-message model
 
 from __future__ import annotations
 
+import hashlib
+import json
 import logging
 import math
 import threading
@@ -781,7 +783,9 @@ def publish_plugin(
 ) -> None:
     """Emit one message per produced file (≙ FilePublisher,
     ``plugins/__init__.py:476-579``) as one JSON-lines file under the
-    output dir; plain Python, no Spark job."""
+    output dir; plain Python, no Spark job. The file is named after the
+    message metadata and the priority, so replaying a message replaces
+    its batch's file instead of publishing the batch twice."""
     msgs = publisher_messages(
         job["produced_files"],
         base_mda=job["input_mda"],
@@ -794,7 +798,9 @@ def publish_plugin(
     if job.get("cancelled") is not None and job["cancelled"].is_set():
         logger.warning("publish cancelled; %d messages dropped", len(msgs))
         return
-    job["published_to"] = write_messages(msgs, target)
+    identity = json.dumps(job["input_mda"], sort_keys=True, default=str)
+    name = f"{hashlib.sha1(identity.encode()).hexdigest()}-p{job.get('processing_priority')}"
+    job["published_to"] = write_messages(msgs, target, name=name)
 
 
 # ---------------------------------------------------------------------------

@@ -80,17 +80,21 @@ def publisher_messages(
     return messages
 
 
-def write_messages(messages: Sequence[dict], out_dir: str) -> str | None:
+def write_messages(
+    messages: Sequence[dict], out_dir: str, name: str | None = None
+) -> str | None:
     """Commit messages as one JSON-lines file in
     ``<out_dir>/published_messages/`` (the local Kafka stand-in: one
     ``{"topic", "message"}`` line per record, the payload as a JSON
-    string). Returns the file's path, or ``None`` when there is nothing
-    to publish and no file is written."""
+    string). ``name`` is the file's stem: writing the same name again
+    replaces the file atomically, so a replayed batch publishes once.
+    Without it the stem is a fresh uuid. Returns the file's path, or
+    ``None`` when there is nothing to publish and no file is written."""
     if not messages:
         return None
     pub_dir = os.path.join(out_dir, "published_messages")
     os.makedirs(pub_dir, exist_ok=True)
-    name = uuid.uuid4().hex
+    name = name or uuid.uuid4().hex
     tmp = os.path.join(pub_dir, f".{name}.tmp")
     final = os.path.join(pub_dir, f"{name}.json")
     try:

@@ -38,6 +38,7 @@ beyond-reference training-data surface.
 
 from __future__ import annotations
 
+import functools
 import re
 import zlib
 
@@ -48,24 +49,25 @@ import zlib
 # public `cryptography` package is importable, the CBC/RC4 entry
 # points route through its C primitives: the /R 6 hardened KDF alone
 # encrypts ~8k AES blocks per evaluation by spec, which is seconds of
-# pure Python per worker and microseconds in native code.
-try:  # pragma: no cover - exercised indirectly by the cipher tests
-    from cryptography.hazmat.primitives.ciphers import Cipher as _NCipher
-    from cryptography.hazmat.primitives.ciphers.algorithms import (
-        AES as _NAES,
-    )
-    from cryptography.hazmat.primitives.ciphers.modes import CBC as _NCBC
-
+# pure Python per worker and microseconds in native code. The import
+# happens on the first cipher call, so unencrypted PDFs never pay it.
+@functools.lru_cache(maxsize=1)
+def _native():
+    """``(Cipher, AES, CBC, ARC4)`` from `cryptography`, or ``None`` in a
+    stdlib-only environment (the pure-Python paths then serve)."""
     try:
-        from cryptography.hazmat.decrepit.ciphers.algorithms import (
-            ARC4 as _NARC4,
-        )
-    except ImportError:  # older package layout
-        from cryptography.hazmat.primitives.ciphers.algorithms import (
-            ARC4 as _NARC4,
-        )
-except ImportError:  # stdlib-only environment: pure-Python paths
-    _NCipher = None
+        from cryptography.hazmat.primitives.ciphers import Cipher
+        from cryptography.hazmat.primitives.ciphers.algorithms import AES
+        from cryptography.hazmat.primitives.ciphers.modes import CBC
+
+        try:
+            from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+        except ImportError:  # older package layout
+            from cryptography.hazmat.primitives.ciphers.algorithms import ARC4
+    except ImportError:
+        return None
+    return Cipher, AES, CBC, ARC4
+
 
 # RC4 key sizes the native backend accepts (bits); PDF object keys can
 # be 40..128 bits in 8-bit steps, but published test vectors use 24/32-
@@ -74,12 +76,14 @@ _NARC4_BITS = frozenset((40, 56, 64, 80, 128, 160, 192, 256))
 
 
 def _ncbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    enc = _NCipher(_NAES(key), _NCBC(iv)).encryptor()
+    cipher, aes, cbc, _ = _native()
+    enc = cipher(aes(key), cbc(iv)).encryptor()
     return enc.update(data) + enc.finalize()
 
 
 def _ncbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    dec = _NCipher(_NAES(key), _NCBC(iv)).decryptor()
+    cipher, aes, cbc, _ = _native()
+    dec = cipher(aes(key), cbc(iv)).decryptor()
     return dec.update(data) + dec.finalize()
 
 
@@ -337,8 +341,10 @@ _PDF_PAD = bytes(
 
 def _rc4(key: bytes, data: bytes) -> bytes:
     """RC4 stream cipher (symmetric: encrypts and decrypts)."""
-    if _NCipher is not None and len(key) * 8 in _NARC4_BITS:
-        enc = _NCipher(_NARC4(key), None).encryptor()
+    native = _native()
+    if native is not None and len(key) * 8 in _NARC4_BITS:
+        cipher, _, _, arc4 = native
+        enc = cipher(arc4(key), None).encryptor()
         return enc.update(data) + enc.finalize()
     s = list(range(256))
     j = 0
@@ -472,7 +478,7 @@ def _aes128_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """PDF AESV2 authoring: PKCS#5-pad, CBC-chain, prepend the IV."""
     pad = 16 - len(data) % 16
     data = data + bytes([pad]) * pad
-    if _NCipher is not None:
+    if _native() is not None:
         return iv + _ncbc_encrypt(key, iv, data)
     rks = _aes_expand_key(key)
     out = bytearray(iv)
@@ -567,7 +573,7 @@ def _aes_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     evaluation hot loop."""
     if len(data) % 16:
         raise ValueError("CBC-nopad needs a 16-byte multiple")
-    if _NCipher is not None:
+    if _native() is not None:
         return _ncbc_encrypt(key, iv, data)
     rkw = _rk_words(key)
     out = bytearray()
@@ -583,7 +589,7 @@ def _aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Raw CBC decrypt, no padding, no IV prefix."""
     if len(data) % 16:
         raise ValueError("CBC-nopad needs a 16-byte multiple")
-    if _NCipher is not None:
+    if _native() is not None:
         return _ncbc_decrypt(key, iv, data)
     rks = _aes_expand_key(key)
     out = bytearray()
@@ -595,9 +601,6 @@ def _aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
         )
         prev = blk
     return bytes(out)
-
-
-import functools
 
 
 @functools.lru_cache(maxsize=1024)
@@ -637,7 +640,7 @@ def _aes128_cbc_decrypt(key: bytes, data: bytes) -> bytes | None:
     padding. Returns None on malformed framing."""
     if len(data) < 32 or len(data) % 16:
         return None
-    if _NCipher is not None:
+    if _native() is not None:
         out = bytearray(_ncbc_decrypt(key, data[:16], data[16:]))
         pad = out[-1]
         if not 1 <= pad <= 16:

@@ -1,4 +1,1 @@
-from trollflow2_spark.streaming.runner import (  # noqa: F401
-    message_stream,
-    run_streaming,
-)
+from trollflow2_spark.streaming.runner import run_streaming  # noqa: F401

@@ -1,42 +1,227 @@
 """Streaming runner: unbounded message source -> per-message pipeline.
 
-Maps the reference's daemon loop (posttroll/ZMQ listener →
-per-message subprocess → plugin chain;
-``/root/reference/trollflow2/launcher.py:146-250``) to Structured
-Streaming:
+Maps the reference's daemon loop (posttroll/ZMQ listener → message
+queue → per-message plugin chain; ``trollflow2/launcher.py:146-250``):
 
-- the message stream is a ``readStream`` source (file/JSON locally; the
-  same code takes Kafka by swapping the reader) filtered to the accepted
-  message types (``launcher.py:60``);
-- each micro-batch runs the batch pipeline per message row via
-  ``foreachBatch`` (≙ the per-message spawned subprocess at
+- file and socket intake is one plain-Python listener thread (≙ the
+  reference's listener feeding its message queue,
+  ``launcher.py:146-183``). It polls a directory in arrival order, or
+  reads JSON lines from a TCP socket, and hands each accepted message to
+  :func:`process_message` (≙ the per-message subprocess at
   ``launcher.py:237-250`` — executor isolation + task retry replace
-  process isolation);
-- the stale-message age gate (``check_metadata`` ``start_time: -N``,
-  ``plugins/__init__.py:705-711``) maps to an event-time filter /
-  watermark;
-- graceful shutdown = ``query.stop()`` after the in-flight batch
+  process isolation). Messages are control rows, so no Spark job runs
+  before the pipeline opens the message's data;
+- every source shares one parse and gate: :func:`parse_message_line`
+  reads a line as :data:`MESSAGE_SCHEMA` made Spark read it, and
+  :func:`accept_message` keeps the accepted message types
+  (``launcher.py:60``) and applies the stale-message age gate
+  (``check_metadata`` ``start_time: -N``, ``plugins/__init__.py:705-711``);
+- Kafka stays a Structured Streaming source (the connector is its only
+  client); its ``foreachBatch`` collects the rows and calls the same
+  per-message handler;
+- replay: file intake appends a file's name to a log under
+  ``checkpoint_dir`` after its messages are handled, so a crash replays
+  the file in flight (at-least-once); product commits and publish file
+  names are idempotent, so the replay rewrites the same outputs;
+- graceful shutdown = ``stop()`` after the in-flight file
   (≙ SIGTERM drain, ``launcher.py:151-157``);
-- crash handlers = a listener/callback invoked on batch failure
+- crash handlers = a callback invoked on message failure
   (≙ ``crash_handlers`` config, ``launcher.py:410-416,483-497``).
 
 Scale notes: messages are tiny control rows — the heavy data is opened
 *inside* the per-message pipeline as a normal distributed scan, so the
-streaming layer itself never shuffles anything big. Checkpointing makes
-the message intake exactly-once per micro-batch.
+intake itself never touches anything big.
 """
 
 from __future__ import annotations
 
+import collections
+import functools
+import json
 import logging
-from typing import Callable, Sequence
+import os
+import re
+import socket
+import threading
+import time
+from datetime import datetime, timedelta, timezone
+from json.decoder import scanstring
+from typing import Callable, Iterator, Sequence
+from zoneinfo import ZoneInfo
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from trollflow2_spark.plans.pipeline import process_message
 from trollflow2_spark.sources.scene import ACCEPTED_MESSAGE_TYPES, MESSAGE_SCHEMA
 
 logger = logging.getLogger(__name__)
+
+#: pause between two listings of an idle message directory, and the
+#: socket read timeout after which the listener checks for ``stop()``
+POLL_INTERVAL_S = 0.01
+#: how long a socket listener waits for its connection
+CONNECT_TIMEOUT_S = 30.0
+#: progress entries a listener keeps (a StreamingQuery keeps 100 too)
+PROGRESS_KEPT = 100
+#: the replay log under ``checkpoint_dir``: one JSON-encoded file name a line
+PROCESSED_LOG = "processed-files.log"
+
+
+# ---------------------------------------------------------------------------
+# One parse and gate for every source: a JSON line as Spark's JSON reader
+# read it under MESSAGE_SCHEMA, then the type filter and the age gate.
+
+_DECODER = json.JSONDecoder()
+_WS = re.compile(r"[ \t\n\r]*")
+_LINE_BREAK = re.compile(r"\r\n|\r|\n")
+_LONG_RANGE = (-(2**63), 2**63 - 1)
+#: a value Spark cannot convert to its field's type (the field reads null)
+_BAD = object()
+
+
+def _convert(doc: str, pos: int, dtype: T.DataType) -> tuple[object, int]:
+    """The JSON value at ``doc[pos:]`` as ``dtype``, and the index after
+    it. A string field takes the source text of a non-string value; a
+    long takes only an integer in range; anything else is ``_BAD``."""
+    pos = _WS.match(doc, pos).end()
+    if isinstance(dtype, T.StructType) and doc.startswith("{", pos):
+        return _convert_object(doc, pos, dtype)
+    if isinstance(dtype, T.ArrayType) and doc.startswith("[", pos):
+        return _convert_array(doc, pos, dtype.elementType)
+    value, end = _DECODER.raw_decode(doc, pos)
+    if value is None:
+        return None, end
+    if isinstance(dtype, T.StringType):
+        return (value if isinstance(value, str) else doc[pos:end]), end
+    if isinstance(dtype, T.LongType) and type(value) is int:
+        if _LONG_RANGE[0] <= value <= _LONG_RANGE[1]:
+            return value, end
+    return _BAD, end
+
+
+def _convert_array(doc: str, pos: int, etype: T.DataType) -> tuple[object, int]:
+    """A JSON array at ``doc[pos]``; one element Spark cannot convert
+    makes the whole array ``_BAD``."""
+    out: list = []
+    pos = _WS.match(doc, pos + 1).end()
+    if doc.startswith("]", pos):
+        return out, pos + 1
+    while True:
+        value, pos = _convert(doc, pos, etype)
+        out.append(value)
+        pos = _WS.match(doc, pos).end()
+        if doc.startswith(",", pos):
+            pos += 1
+        elif doc.startswith("]", pos):
+            return (_BAD if any(v is _BAD for v in out) else out), pos + 1
+        else:
+            raise ValueError(f"expected ',' or ']' at {pos}")
+
+
+def _convert_object(doc: str, pos: int, schema: T.StructType) -> tuple[dict, int]:
+    """A JSON object at ``doc[pos]`` as a dict of the schema's fields:
+    unknown keys dropped, missing or unconvertible fields ``None``."""
+    types = {f.name: f.dataType for f in schema.fields}
+    out = dict.fromkeys(types)
+    pos = _WS.match(doc, pos + 1).end()
+    if doc.startswith("}", pos):
+        return out, pos + 1
+    while True:
+        if not doc.startswith('"', pos):
+            raise ValueError(f"expected a key at {pos}")
+        key, pos = scanstring(doc, pos + 1)
+        pos = _WS.match(doc, pos).end()
+        if not doc.startswith(":", pos):
+            raise ValueError(f"expected ':' at {pos}")
+        if key in types:
+            value, pos = _convert(doc, pos + 1, types[key])
+            out[key] = None if value is _BAD else value
+        else:
+            _, pos = _DECODER.raw_decode(doc, _WS.match(doc, pos + 1).end())
+        pos = _WS.match(doc, pos).end()
+        if doc.startswith(",", pos):
+            pos = _WS.match(doc, pos + 1).end()
+        elif doc.startswith("}", pos):
+            return out, pos + 1
+        else:
+            raise ValueError(f"expected ',' or '}}' at {pos}")
+
+
+def parse_message_line(line: str) -> dict:
+    """One JSON line -> a dict of every :data:`MESSAGE_SCHEMA` field, as
+    Spark's JSON reader read it under that schema: unknown keys dropped
+    (inside ``dataset`` entries too), ``orbit_number`` only from a JSON
+    integer, a string field given a non-string value holds that value's
+    JSON text, and a field Spark could not convert is ``None``. A line
+    that is not a JSON object reads as all ``None``s (Spark's reader split
+    a top-level array into rows; here it is one malformed line)."""
+    pos = _WS.match(line).end()
+    if line.startswith("{", pos):
+        try:
+            return _convert_object(line, pos, MESSAGE_SCHEMA)[0]
+        except (ValueError, RecursionError):
+            pass
+    return dict.fromkeys(MESSAGE_SCHEMA.fieldNames())
+
+
+_TIMESTAMP = re.compile(
+    r"(?P<y>\d{4})(?:-(?P<mo>\d{1,2})(?:-(?P<d>\d{1,2})"
+    r"(?:[T ](?P<h>\d{1,2})(?::(?P<mi>\d{1,2})(?::(?P<s>\d{1,2})(?:\.(?P<f>\d*))?)?)?)?)?)?"
+    r"\s*(?P<tz>.*)"
+)
+_OFFSET = re.compile(r"(?:UTC|GMT|UT)?(?P<sign>[+-])(?P<h>\d{1,2})(?::?(?P<m>\d{2}))?")
+
+
+def _parse_timestamp(text: str) -> datetime | None:
+    """An aware datetime from the forms Spark's string-to-timestamp cast
+    takes: ``yyyy[-m[-d[(T| )h[:m[:s[.fraction]]]]]]`` then an optional
+    zone (``Z``, ``UTC``, ``±hh[[:]mm]``, ``GMT+hh:mm``, a region such as
+    ``Europe/Paris``); no zone is the session zone, UTC. ``None`` where
+    the cast fails. Spark's time-only and signed-year forms are not taken."""
+    m = _TIMESTAMP.fullmatch(text.strip())
+    if m is None:
+        return None
+    zone, off = m["tz"], _OFFSET.fullmatch(m["tz"])
+    try:
+        if zone in ("", "Z", "UTC", "GMT", "UT"):
+            tz = timezone.utc
+        elif off is not None:
+            delta = timedelta(hours=int(off["h"]), minutes=int(off["m"] or 0))
+            tz = timezone(-delta if off["sign"] == "-" else delta)
+        else:
+            tz = ZoneInfo(zone)
+        return datetime(
+            int(m["y"]), int(m["mo"] or 1), int(m["d"] or 1),
+            int(m["h"] or 0), int(m["mi"] or 0), int(m["s"] or 0),
+            int((m["f"] or "")[:6].ljust(6, "0")), tzinfo=tz,
+        )
+    except (ValueError, KeyError, OSError):
+        return None
+
+
+def accept_message(row: dict, max_age_minutes: float | None = None) -> dict | None:
+    """The gate every source shares: the message with its ``None`` fields
+    dropped, or ``None`` when its ``type`` is not an accepted message
+    type or, with ``max_age_minutes``, its ``start_time`` is older than
+    that (Spark's filter rule: a missing ``start_time`` passes, an
+    unparseable one does not)."""
+    if row.get("type") not in ACCEPTED_MESSAGE_TYPES:
+        return None
+    start = row.get("start_time")
+    if max_age_minutes is not None and start is not None:
+        ts = _parse_timestamp(start)
+        cutoff = datetime.now(timezone.utc) - timedelta(minutes=float(max_age_minutes))
+        if ts is None or ts < cutoff:
+            return None
+    return {k: v for k, v in row.items() if v is not None}
+
+
+def _lines(text: str) -> list[str]:
+    """The non-blank lines of ``text``, split where Spark's line reader
+    splits (``\\n``, ``\\r\\n``, ``\\r``)."""
+    return [line for line in _LINE_BREAK.split(text) if line.strip()]
 
 
 # ---------------------------------------------------------------------------
@@ -110,43 +295,6 @@ def resolve_crash_handler(
     raise TypeError(f"bad crash handler spec: {spec!r}")
 
 
-def message_stream(spark: SparkSession, message_dir: str) -> DataFrame:
-    """The unbounded message source: JSON message files appearing in a
-    directory (the local stand-in for the ZMQ subscription; production
-    swaps in ``spark.readStream.format("kafka")`` — same downstream
-    code). One file per trigger ≙ the reference's one-message-at-a-time
-    loop."""
-    stream = (
-        spark.readStream.schema(MESSAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(message_dir)
-    )
-    return stream.filter(F.col("type").isin(*ACCEPTED_MESSAGE_TYPES))
-
-
-def message_stream_socket(
-    spark: SparkSession, host: str = "localhost", port: int = 40000
-) -> DataFrame:
-    """Network message source: newline-delimited JSON messages over a TCP
-    socket — the shape of the reference's posttroll/ZMQ subscription
-    (``launcher.py:146-171``: a network listener delivering one message
-    per line). Spark's built-in ``socket`` source yields the lines in a
-    ``value`` column, which :func:`parse_kafka_records` parses exactly
-    as it parses Kafka record values.
-
-    Production note: the socket source is at-most-once (no replay); for
-    exactly-once intake swap Kafka in — same downstream code. That
-    matches the reference: a missed ZMQ message is simply gone.
-    """
-    raw = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", int(port))
-        .load()
-    )
-    return parse_kafka_records(raw)
-
-
 def kafka_source_options(
     bootstrap_servers: str,
     topic: str,
@@ -180,9 +328,10 @@ def parse_kafka_records(raw: DataFrame) -> DataFrame:
     """Kafka wire records -> accepted messages: each record's ``value``
     is one JSON message (the same payload the file/socket sources
     carry), parsed against :data:`MESSAGE_SCHEMA` and filtered to
-    accepted types. Shared verbatim by the real connector source, the
-    socket source and the embedded-fake e2e tests — what the tests pin
-    IS the production parse."""
+    accepted types. Shared verbatim by the real connector source and the
+    embedded-fake e2e tests — what the tests pin IS the production
+    parse. The file and socket listeners parse the same payload in
+    Python (:func:`parse_message_line`)."""
     parsed = raw.select(
         F.from_json(F.col("value").cast("string"), MESSAGE_SCHEMA).alias("m")
     ).select("m.*")
@@ -195,15 +344,15 @@ def message_stream_kafka(
     topic: str,
     starting_offsets: str = "earliest",
 ) -> DataFrame:
-    """Kafka message source — identical downstream code to the
+    """Kafka message source — the same per-message handler as the
     file/socket listeners (see :func:`parse_kafka_records`). Requires
     the ``spark-sql-kafka`` connector on the classpath (not bundled in
     this container; the option shape and the record parse are pinned by
     tests against an embedded fake, the wire path needs a real
     deployment).
 
-    Unlike the socket source, Kafka offsets + checkpointing give
-    exactly-once intake per micro-batch.
+    Unlike the socket listener, Kafka offsets + checkpointing replay
+    intake per micro-batch.
     """
     fmt, opts = kafka_source_options(bootstrap_servers, topic, starting_offsets)
     raw = spark.readStream.format(fmt).options(**opts).load()
@@ -227,6 +376,222 @@ def parse_message_source_uri(uri: str) -> tuple[str, dict]:
     return "file", {"message_dir": uri}
 
 
+# ---------------------------------------------------------------------------
+# The listener
+
+
+def _message_handler(
+    spark: SparkSession,
+    product_list: dict,
+    workers: Sequence[dict] | None,
+    on_result: Callable[[dict, dict], None] | None,
+    on_crash: Callable[[dict, BaseException], None] | None,
+) -> Callable[[dict, int], None]:
+    """The per-message step of every source: :func:`process_message`,
+    then ``on_result``; on failure ``on_crash``, or without one the
+    exception propagates and ends the intake. ``process_message`` is
+    looked up in this module at each call, so a wrapper installed on the
+    module sees every message."""
+
+    def handle(message: dict, batch_id: int) -> None:
+        try:
+            summary = process_message(spark, message, product_list, workers)
+            logger.info(
+                "batch %d message %s: %s", batch_id, message.get("uid"), summary["status"]
+            )
+            if on_result is not None:
+                on_result(message, summary)
+        except BaseException as exc:  # noqa: BLE001 - crash handler hook
+            logger.exception("message processing crashed")
+            if on_crash is None:
+                raise
+            on_crash(message, exc)
+
+    return handle
+
+
+#: one unit of intake: (start time, its lines, the commit that follows
+#: handling them)
+Batch = tuple[float, list[str], Callable[[], None]]
+
+
+def _listing(message_dir: str) -> dict[str, os.DirEntry]:
+    """The regular files of ``message_dir`` by name, less the names
+    Spark's file source skips (a leading ``.`` or ``_``); a missing
+    directory lists as empty."""
+    try:
+        with os.scandir(message_dir) as it:
+            return {e.name: e for e in it if e.name[0] not in "._" and e.is_file()}
+    except FileNotFoundError:
+        return {}
+
+
+def _file_batches(
+    stop: threading.Event, message_dir: str, checkpoint_dir: str, drain: bool
+) -> Iterator[Batch]:
+    """File intake: each new file in ``message_dir`` is one batch of its
+    non-blank lines, oldest first by ``(st_mtime_ns, name)``. A batch's
+    commit appends the file's name to the replay log, and a restart skips
+    the logged names. The in-memory set of handled names keeps only names
+    still in the directory, so it is never larger than the directory.
+    ``drain`` handles the files of the first listing, then ends."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    log_path = os.path.join(checkpoint_dir, PROCESSED_LOG)
+    names = _listing(message_dir)
+    done: set[str] = set()
+    if os.path.exists(log_path):
+        with open(log_path, encoding="utf-8") as fh:
+            for line in fh:
+                try:
+                    name = json.loads(line)
+                except ValueError:  # the last line, torn by a crash mid-append
+                    continue
+                if name in names:
+                    done.add(name)
+
+    with open(log_path, "a", encoding="utf-8") as log:
+
+        def commit(name: str) -> None:
+            log.write(json.dumps(name) + "\n")
+            log.flush()
+            done.add(name)
+
+        while not stop.is_set():
+            done.intersection_update(names)
+            new = []
+            for name, entry in names.items():
+                if name not in done:
+                    try:
+                        new.append((entry.stat().st_mtime_ns, name, entry.path))
+                    except FileNotFoundError:  # removed since the listing
+                        pass
+            for _mtime, name, path in sorted(new):
+                if stop.is_set():
+                    return
+                t0 = time.perf_counter()
+                try:
+                    with open(path, "rb") as fh:
+                        text = fh.read().decode("utf-8-sig", "replace")
+                except FileNotFoundError:
+                    continue
+                yield t0, _lines(text), functools.partial(commit, name)
+            if drain:
+                return
+            if not new:
+                stop.wait(POLL_INTERVAL_S)
+            names = _listing(message_dir)
+
+
+def _socket_batches(
+    stop: threading.Event, host: str, port: int, drain: bool
+) -> Iterator[Batch]:
+    """Socket intake, at most once: connects to ``host:port`` as a client
+    and makes each non-blank line one batch. Nothing is logged, so a line
+    lost in a crash is gone, as a missed ZMQ message is. When the peer
+    closes, the listener idles until ``stop()``; with ``drain`` it ends."""
+    with socket.create_connection((host, port), timeout=CONNECT_TIMEOUT_S) as sock:
+        sock.settimeout(POLL_INTERVAL_S)
+        pending = b""
+        while not stop.is_set():
+            try:
+                chunk = sock.recv(1 << 16)
+            except TimeoutError:
+                continue
+            data, pending = pending + chunk, b""
+            if chunk:
+                data, _, pending = data.rpartition(b"\n")
+            for line in _lines(data.decode("utf-8", "replace")):
+                yield time.perf_counter(), [line], lambda: None
+            if not chunk:
+                break
+    if not drain:
+        stop.wait()
+
+
+class MessageListener:
+    """What :func:`run_streaming` returns for file and socket intake: the
+    StreamingQuery surface its callers use, over one listener thread. The
+    thread takes batches from ``batches``, hands each accepted message to
+    ``handle``, runs the batch's commit and records a progress entry
+    (``batchId``, ``numInputRows`` = lines read, ``durationMs`` with
+    ``triggerExecution`` = the whole batch and ``walCommit`` = the
+    commit)."""
+
+    def __init__(
+        self,
+        batches: Iterator[Batch],
+        stop: threading.Event,
+        handle: Callable[[dict, int], None],
+        max_age_minutes: float | None,
+    ) -> None:
+        self._stop = stop
+        self._error: BaseException | None = None
+        self._lock = threading.Lock()
+        self._progress: collections.deque = collections.deque(maxlen=PROGRESS_KEPT)
+        # InheritableThread carries the caller's Spark local properties into
+        # the listener's JVM thread (pinned-thread mode)
+        self._thread = InheritableThread(
+            target=self._run, args=(batches, handle, max_age_minutes),
+            name="trollflow2_spark_runner", daemon=True,
+        )
+        self._thread.start()
+
+    def _run(self, batches, handle, max_age_minutes) -> None:
+        try:
+            for batch_id, (t0, lines, commit) in enumerate(batches):
+                for line in lines:
+                    message = accept_message(parse_message_line(line), max_age_minutes)
+                    if message is not None:
+                        handle(message, batch_id)
+                t1 = time.perf_counter()
+                commit()
+                t2 = time.perf_counter()
+                entry = {
+                    "batchId": batch_id,
+                    "numInputRows": len(lines),
+                    "durationMs": {
+                        "triggerExecution": round((t2 - t0) * 1000),
+                        "walCommit": round((t2 - t1) * 1000),
+                    },
+                }
+                with self._lock:
+                    self._progress.append(entry)
+        except BaseException as exc:  # noqa: BLE001 - re-raised by awaitTermination
+            logger.error("message intake stopped: %r", exc)
+            self._error = exc
+        finally:
+            batches.close()
+
+    @property
+    def isActive(self) -> bool:
+        return self._thread.is_alive()
+
+    @property
+    def lastProgress(self) -> dict | None:
+        with self._lock:
+            return self._progress[-1] if self._progress else None
+
+    @property
+    def recentProgress(self) -> list[dict]:
+        with self._lock:
+            return list(self._progress)
+
+    def stop(self) -> None:
+        """Graceful: returns once the batch in flight is handled and
+        committed."""
+        self._stop.set()
+        if threading.current_thread() is not self._thread:
+            self._thread.join()
+
+    def awaitTermination(self, timeout: float | None = None) -> bool | None:
+        """Wait for the intake to end; re-raise the exception that ended
+        it. With ``timeout``, returns whether it ended in time."""
+        self._thread.join(timeout)
+        if self._error is not None:
+            raise self._error
+        return None if timeout is None else not self._thread.is_alive()
+
+
 def run_streaming(
     spark: SparkSession,
     message_dir: str,
@@ -242,60 +607,50 @@ def run_streaming(
     pipeline (≙ ``Runner.run``, ``launcher.py:197-250``).
 
     ``max_age_minutes`` drops stale messages by ``start_time`` before any
-    work happens (the watermark analog of ``check_metadata: start_time:
-    -N``). ``available_now=True`` drains what is present and stops — the
+    work happens (≙ ``check_metadata: start_time: -N``).
+    ``available_now=True`` drains what is present and stops — the
     test-message/batch mode (``launcher.py:206-215``).
 
-    Returns the StreamingQuery; callers stop it with ``query.stop()``
-    (graceful: the in-flight batch completes — SIGTERM semantics).
+    ``message_dir`` may be a directory path (file intake; its replay log
+    lives in ``checkpoint_dir``), a ``socket://host:port`` URI (network
+    listener, ≙ the daemon's ZMQ subscription), or a
+    ``kafka://servers/topic`` URI (production message bus; needs the
+    Kafka connector on the classpath, and ``checkpoint_dir`` is its
+    Structured Streaming checkpoint).
 
-    ``message_dir`` may be a directory path (file source), a
-    ``socket://host:port`` URI (network listener, ≙ the daemon's ZMQ
-    subscription), or a ``kafka://servers/topic`` URI (production
-    message bus; needs the Kafka connector on the classpath).
+    Returns a :class:`MessageListener` for file and socket intake and the
+    StreamingQuery for Kafka. Both have ``stop()`` (graceful: the
+    in-flight batch completes — SIGTERM semantics),
+    ``awaitTermination(timeout)``, ``isActive``, ``lastProgress`` and
+    ``recentProgress``.
     """
-    on_crash = resolve_crash_handler(on_crash)
+    handle = _message_handler(
+        spark, product_list, workers, on_result, resolve_crash_handler(on_crash)
+    )
     kind, kwargs = parse_message_source_uri(message_dir)
     if kind == "kafka":
-        stream = message_stream_kafka(spark, **kwargs)
-    elif kind == "socket":
-        stream = message_stream_socket(spark, **kwargs)
+
+        def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # Messages are control rows: collecting them is O(messages), never
+            # O(data). The data tables are scanned inside process_message.
+            for row in batch_df.collect():
+                message = accept_message(row.asDict(recursive=True), max_age_minutes)
+                if message is not None:
+                    handle(message, batch_id)
+
+        writer = (
+            message_stream_kafka(spark, **kwargs)
+            .writeStream.foreachBatch(handle_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .queryName("trollflow2_spark_runner")
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+    stop = threading.Event()
+    if kind == "socket":
+        batches = _socket_batches(stop, drain=available_now, **kwargs)
     else:
-        stream = message_stream(spark, **kwargs)
-    if max_age_minutes is not None:
-        cutoff = F.current_timestamp() - F.make_dt_interval(
-            mins=F.lit(float(max_age_minutes))
-        )
-        stream = stream.filter(
-            F.col("start_time").isNull()
-            | (F.to_timestamp("start_time") >= cutoff)
-        )
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Messages are control rows: collecting them is O(messages), never
-        # O(data). The data tables are scanned inside process_message.
-        for row in batch_df.collect():
-            message = {k: v for k, v in row.asDict(recursive=True).items() if v is not None}
-            try:
-                summary = process_message(spark, message, product_list, workers)
-                logger.info(
-                    "batch %d message %s: %s",
-                    batch_id, message.get("uid"), summary["status"],
-                )
-                if on_result is not None:
-                    on_result(message, summary)
-            except BaseException as exc:  # noqa: BLE001 - crash handler hook
-                logger.exception("message processing crashed")
-                if on_crash is not None:
-                    on_crash(message, exc)
-                else:
-                    raise
-
-    writer = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("trollflow2_spark_runner")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        batches = _file_batches(stop, kwargs["message_dir"], checkpoint_dir, available_now)
+    return MessageListener(batches, stop, handle, max_age_minutes)
