@@ -353,14 +353,14 @@ class FakeKafkaBroker:
 def test_kafka_e2e_through_fake_broker(spark, sf_dir, tmp_path):
     """End-to-end over the Kafka-shaped source/sink pair: JSON messages
     produced into the fake broker's in-topic flow through the SAME
-    record parse the connector source uses (parse_kafka_records), drive
+    record parse the connector source uses (kafka_record_lines), drive
     the batch pipeline to real output files, and the publisher messages
     — shaped by to_kafka_rows with area keying — land in the broker's
     per-file out-topics. Closes the 'shape-tested only' gap left when
     no broker exists in the sandbox."""
     from trollflow2_spark.sinks.publish import publisher_messages, to_kafka_rows
     from trollflow2_spark.plans.pipeline import process_message
-    from trollflow2_spark.streaming.runner import parse_kafka_records
+    from trollflow2_spark.streaming.runner import accepted_messages, kafka_record_lines
 
     input_file = str(tmp_path / "scene.parquet")
     (
@@ -389,10 +389,7 @@ def test_kafka_e2e_through_fake_broker(spark, sf_dir, tmp_path):
     out_dir = str(tmp_path / "out")
     plist = read_product_list(raw_string=PL_YAML.format(out_dir=out_dir))
     raw = broker.records_df(spark, "tf2-messages")
-    messages = [
-        {k: v for k, v in r.asDict(recursive=True).items() if v is not None}
-        for r in parse_kafka_records(raw).collect()
-    ]
+    messages = list(accepted_messages(kafka_record_lines(raw.collect())))
     # the 'beat' record is filtered by the shared parse, like file/socket
     assert sorted(m["platform_name"] for m in messages) == ["SAT-A", "SAT-B"]
 

@@ -167,7 +167,8 @@ def parse_launcher_args(args: list[str] | None = None) -> dict:
     )
     parser.add_argument(
         "--max-age", type=float, required=False, default=None,
-        help="Drop messages whose start_time is older than this many minutes",
+        help="Drop messages whose start_time (ISO 8601; no zone = UTC) is older "
+        "than this many minutes; an unreadable start_time is dropped too",
     )
     parser.add_argument(
         "--crash-handler", type=str, required=False, default="log",

@@ -147,20 +147,17 @@ def coverage_percent_udf():
     closed-form orbit model when the work item carries an
     ``area_extent``; the caller (``covers_plugin``) falls back to
     warn-and-skip for items without geometry — the reference's graceful
-    degradation (``plugins/__init__.py:588-591``)."""
+    degradation (``plugins/__init__.py:588-591``). The pass duration is
+    ``end_time - start_time``, both read by ``message_time``."""
 
     def cov(mda: dict, item: dict) -> float | None:
         extent = item.get("area_extent")
         if extent is None:
             return None
-        import datetime as _dtm
+        from trollflow2_spark.sources.scene import message_time
 
-        start = mda.get("start_time")
-        end = mda.get("end_time")
-        if isinstance(start, str):
-            start = _dtm.datetime.fromisoformat(start)
-        if isinstance(end, str):
-            end = _dtm.datetime.fromisoformat(end)
+        start = message_time(mda, "start_time")
+        end = message_time(mda, "end_time")
         if start is not None and end is not None:
             duration = (end - start).total_seconds()
         else:

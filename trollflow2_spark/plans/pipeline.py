@@ -20,7 +20,8 @@ This is the engine's query lifecycle (≙ ``process_files`` →
 Worker plugins are ``fn(job, **kwargs)`` callables resolved from
 :data:`PLUGIN_REGISTRY` by *name* (safe-YAML pipelines; no code-exec
 tags). ``AbortProcessing`` skips the rest of the current priority batch
-(≙ ``plugins/__init__.py:82-83``, caught at ``launcher.py:456-457``).
+(≙ ``plugins/__init__.py:82-83``, caught at ``launcher.py:456-457``), and
+so does the ``MessageTimeError`` of a message time that is unreadable.
 Per-worker ``timeout`` cancels the batch's Spark jobs via job-group
 cancellation — the cluster-side replacement for the reference's
 SIGALRM-based timers (``launcher.py:441-455``) — and sets the batch's
@@ -61,8 +62,11 @@ from trollflow2_spark.operators.transforms import (
 from trollflow2_spark.sinks.save import SaveResult, check_results, save_datasets
 from trollflow2_spark.sinks.publish import publisher_messages, write_messages
 from trollflow2_spark.sources.scene import (
+    ACCEPTED_MESSAGE_TYPES,
+    MessageTimeError,
     SceneCreationError,
     create_scene,
+    message_time,
     resolve_filesystem_paths,
 )
 
@@ -148,10 +152,11 @@ def check_metadata_plugin(job: dict, **criteria: Any) -> None:
     """Scene-level metadata gate on the *message* metadata
     (≙ ``plugins/__init__.py:687-714``): list criterion = categorical
     membership; numeric criterion on a ``*_time`` key = max age in
-    minutes (negative = "not older than"). Missing key: warn & pass."""
+    minutes (negative = "not older than"). A missing or null key (intake
+    drops null fields): warn & pass; an unreadable time aborts the batch."""
     mda = job["input_mda"]
     for key, want in criteria.items():
-        if key not in mda:
+        if mda.get(key) is None:
             logger.warning("check_metadata: %r not in message metadata, passing", key)
             continue
         val = mda[key]
@@ -164,12 +169,9 @@ def check_metadata_plugin(job: dict, **criteria: Any) -> None:
             key == "start_time" or key.endswith("_time")
         ):
             # age gate applies only to *_time keys (the reference limits
-            # the numeric criterion to start_time); tz-aware "now"
-            ts = datetime.fromisoformat(val) if isinstance(val, str) else val
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=timezone.utc)
-            now = datetime.now(timezone.utc)
-            age_min = (now - ts).total_seconds() / 60.0
+            # the numeric criterion to start_time)
+            ts = message_time(mda, key)
+            age_min = (datetime.now(timezone.utc) - ts).total_seconds() / 60.0
             if age_min > abs(float(want)):
                 raise AbortProcessing(
                     f"metadata {key} age {age_min:.1f} min exceeds {abs(want)} min"
@@ -228,7 +230,7 @@ def aggregate_plugin(job: dict, value_cols: Sequence[str] | None = None, **facto
 
 
 def _sun_zenith_angle_py(ts: datetime, lon: float, lat: float) -> float:
-    """Driver-side twin of functions.geometry.sun_zenith_angle_deg."""
+    """Driver-side twin of functions.geometry.sun_zenith_angle_deg (UTC ``ts``)."""
     doy = ts.timetuple().tm_yday
     decl = -23.44 * math.cos(2.0 * math.pi / 365.0 * (doy + 10.0))
     hour = ts.hour + ts.minute / 60.0 + ts.second / 3600.0
@@ -245,13 +247,13 @@ def _sun_zenith_angle_py(ts: datetime, lon: float, lat: float) -> float:
 @register_plugin("sza_check")
 def sza_check_plugin(job: dict) -> None:
     """Prune work items by sun-zenith angle at their configured
-    (lon, lat) and the message start time (≙ ``plugins/__init__.py:
-    739-783``). Items without SZA config pass untouched."""
-    start = job["input_mda"].get("start_time")
-    if start is None:
+    (lon, lat) and the message start time in UTC (≙ ``plugins/__init__.py:
+    739-783``). Items without SZA config pass untouched. No start time:
+    skip; an unreadable one aborts the batch."""
+    ts = message_time(job["input_mda"], "start_time")
+    if ts is None:
         logger.warning("sza_check: no start_time in message, skipping")
         return
-    ts = datetime.fromisoformat(start) if isinstance(start, str) else start
     kept = []
     for item in job["work_items"]:
         lo, hi = item.get("sunzen_minimum_angle"), item.get("sunzen_maximum_angle")
@@ -260,7 +262,7 @@ def sza_check_plugin(job: dict) -> None:
             continue
         lon = item.get("sunzen_check_lon", 0.0) or 0.0
         lat = item.get("sunzen_check_lat", 0.0) or 0.0
-        sza = _sun_zenith_angle_py(ts.replace(tzinfo=None), float(lon), float(lat))
+        sza = _sun_zenith_angle_py(ts, float(lon), float(lat))
         if (lo is None or sza >= float(lo)) and (hi is None or sza <= float(hi)):
             kept.append(item)
         else:
@@ -282,13 +284,11 @@ def check_sunlight_coverage_plugin(job: dict, grid_step_deg: float = 10.0) -> No
     a coarse lat/lon grid — the closed-form stand-in for the reference's
     spherical polygon intersection. Coverage is cached per (lon, lat)
     so areas sharing a grid compute once (≙ the per-area cache at
-    ``:829,853-856``)."""
-    start = job["input_mda"].get("start_time")
-    if start is None:
+    ``:829,853-856``). No start time: skip; an unreadable one aborts."""
+    ts = message_time(job["input_mda"], "start_time")
+    if ts is None:
         logger.warning("check_sunlight_coverage: no start_time, skipping")
         return
-    ts = datetime.fromisoformat(start) if isinstance(start, str) else start
-    ts = ts.replace(tzinfo=None)
     cache: dict[tuple, float] = {}
 
     def lit_fraction(lon0: float, lat0: float) -> float:
@@ -337,7 +337,7 @@ def covers_plugin(job: dict, coverage_fn: Callable[[dict, dict], float] | None =
     ``Pass.area_coverage``). Items without an ``area_extent`` (no
     geometry to intersect) pass with a warning — the reference's
     graceful degradation when its geo stack is missing
-    (``plugins/__init__.py:588-591``)."""
+    (``plugins/__init__.py:588-591``). An unreadable time aborts."""
     if coverage_fn is None:
         from trollflow2_spark.functions.geometry import coverage_percent_udf
 
@@ -865,7 +865,7 @@ def process_message(
     the merged :class:`SaveResult` and a ``check_results`` audit.
     """
     mtype = message.get("type")
-    if mtype is not None and mtype not in ("file", "dataset", "collection"):
+    if mtype is not None and mtype not in ACCEPTED_MESSAGE_TYPES:
         return {"status": "ignored", "reason": f"message type {mtype!r}"}
 
     # workers default: explicit arg > product list's own `workers:` section
@@ -906,7 +906,7 @@ def process_message(
                 if not job["work_items"]:
                     logger.info("priority %s: all work items pruned", prio)
                     break
-        except AbortProcessing as exc:
+        except (AbortProcessing, MessageTimeError) as exc:
             logger.warning("priority %s aborted: %s", prio, exc)
             aborted[prio] = str(exc)
         finally:

@@ -6,6 +6,5 @@ from trollflow2_spark.sources.scene import (  # noqa: F401
     create_scene,
     extract_filenames,
     gen_dict_extract,
-    read_message_file,
     register_reader,
 )

@@ -22,6 +22,7 @@ import json
 import mmap
 import os
 import tarfile
+from datetime import datetime, timezone
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +61,28 @@ MESSAGE_SCHEMA = T.StructType(
 
 #: message types the runner consumes (``launcher.py:60``)
 ACCEPTED_MESSAGE_TYPES = ("file", "dataset", "collection")
+
+
+class MessageTimeError(ValueError):
+    """A message time that is present but not readable."""
+
+
+def message_time(message: dict, key: str = "start_time") -> datetime | None:
+    """``message[key]`` as an aware UTC datetime, the one clock rule for
+    message times (≙ ``datetime_decoder``, ``cli.py:83-101``): a datetime
+    passes through, naive = UTC; a string is read by
+    ``datetime.fromisoformat`` (ISO 8601, no zone = UTC); missing or null
+    is ``None``; anything else raises :class:`MessageTimeError`."""
+    value = message.get(key)
+    if value is None:
+        return None
+    try:
+        ts = datetime.fromisoformat(value) if isinstance(value, str) else value
+        if ts.tzinfo is None:
+            return ts.replace(tzinfo=timezone.utc)
+        return ts.astimezone(timezone.utc)
+    except (AttributeError, TypeError, ValueError, OverflowError):
+        raise MessageTimeError(f"unreadable {key} {value!r}") from None
 
 
 class SceneCreationError(RuntimeError):
@@ -313,13 +336,6 @@ def resolve_filesystem_paths(message: dict) -> list[str]:
         for pos, fo, member in arc_slots:
             out[pos] = extracted[(fo, member)]
     return out
-
-
-def read_message_file(path: str) -> dict:
-    """One-shot batch source: a saved message JSON file instead of the
-    stream (≙ test-message mode, ``launcher.py:80-87,206-215``)."""
-    with open(path, "r", encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 # ---------------------------------------------------------------------------

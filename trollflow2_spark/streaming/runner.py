@@ -17,8 +17,8 @@ queue → per-message plugin chain; ``trollflow2/launcher.py:146-250``):
   (``launcher.py:60``) and applies the stale-message age gate
   (``check_metadata`` ``start_time: -N``, ``plugins/__init__.py:705-711``);
 - Kafka stays a Structured Streaming source (the connector is its only
-  client); its ``foreachBatch`` collects the rows and calls the same
-  per-message handler;
+  client); its ``foreachBatch`` collects each record's ``value`` text
+  into the same parse, gate and per-message handler;
 - replay: file intake appends a file's name to a log under
   ``checkpoint_dir`` after its messages are handled, so a crash replays
   the file in flight (at-least-once); product commits and publish file
@@ -46,15 +46,15 @@ import threading
 import time
 from datetime import datetime, timedelta, timezone
 from json.decoder import scanstring
-from typing import Callable, Iterator, Sequence
-from zoneinfo import ZoneInfo
+from typing import Callable, Iterable, Iterator, Sequence
 
 from pyspark import InheritableThread
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from trollflow2_spark.plans.pipeline import process_message
 from trollflow2_spark.sources.scene import ACCEPTED_MESSAGE_TYPES, MESSAGE_SCHEMA
+from trollflow2_spark.sources.scene import MessageTimeError, message_time
 
 logger = logging.getLogger(__name__)
 
@@ -156,7 +156,8 @@ def parse_message_line(line: str) -> dict:
     integer, a string field given a non-string value holds that value's
     JSON text, and a field Spark could not convert is ``None``. A line
     that is not a JSON object reads as all ``None``s (Spark's reader split
-    a top-level array into rows; here it is one malformed line)."""
+    a top-level array into rows; here it is one malformed line). Times
+    stay text, read by :func:`message_time` where they are used."""
     pos = _WS.match(line).end()
     if line.startswith("{", pos):
         try:
@@ -166,56 +167,32 @@ def parse_message_line(line: str) -> dict:
     return dict.fromkeys(MESSAGE_SCHEMA.fieldNames())
 
 
-_TIMESTAMP = re.compile(
-    r"(?P<y>\d{4})(?:-(?P<mo>\d{1,2})(?:-(?P<d>\d{1,2})"
-    r"(?:[T ](?P<h>\d{1,2})(?::(?P<mi>\d{1,2})(?::(?P<s>\d{1,2})(?:\.(?P<f>\d*))?)?)?)?)?)?"
-    r"\s*(?P<tz>.*)"
-)
-_OFFSET = re.compile(r"(?:UTC|GMT|UT)?(?P<sign>[+-])(?P<h>\d{1,2})(?::?(?P<m>\d{2}))?")
-
-
-def _parse_timestamp(text: str) -> datetime | None:
-    """An aware datetime from the forms Spark's string-to-timestamp cast
-    takes: ``yyyy[-m[-d[(T| )h[:m[:s[.fraction]]]]]]`` then an optional
-    zone (``Z``, ``UTC``, ``±hh[[:]mm]``, ``GMT+hh:mm``, a region such as
-    ``Europe/Paris``); no zone is the session zone, UTC. ``None`` where
-    the cast fails. Spark's time-only and signed-year forms are not taken."""
-    m = _TIMESTAMP.fullmatch(text.strip())
-    if m is None:
-        return None
-    zone, off = m["tz"], _OFFSET.fullmatch(m["tz"])
-    try:
-        if zone in ("", "Z", "UTC", "GMT", "UT"):
-            tz = timezone.utc
-        elif off is not None:
-            delta = timedelta(hours=int(off["h"]), minutes=int(off["m"] or 0))
-            tz = timezone(-delta if off["sign"] == "-" else delta)
-        else:
-            tz = ZoneInfo(zone)
-        return datetime(
-            int(m["y"]), int(m["mo"] or 1), int(m["d"] or 1),
-            int(m["h"] or 0), int(m["mi"] or 0), int(m["s"] or 0),
-            int((m["f"] or "")[:6].ljust(6, "0")), tzinfo=tz,
-        )
-    except (ValueError, KeyError, OSError):
-        return None
-
-
 def accept_message(row: dict, max_age_minutes: float | None = None) -> dict | None:
     """The gate every source shares: the message with its ``None`` fields
     dropped, or ``None`` when its ``type`` is not an accepted message
     type or, with ``max_age_minutes``, its ``start_time`` is older than
-    that (Spark's filter rule: a missing ``start_time`` passes, an
-    unparseable one does not)."""
+    that, read by :func:`message_time` (ISO 8601, no zone = UTC): a
+    missing ``start_time`` passes, an unreadable one is dropped."""
     if row.get("type") not in ACCEPTED_MESSAGE_TYPES:
         return None
-    start = row.get("start_time")
-    if max_age_minutes is not None and start is not None:
-        ts = _parse_timestamp(start)
+    if max_age_minutes is not None:
+        try:
+            ts = message_time(row)
+        except MessageTimeError:
+            return None
         cutoff = datetime.now(timezone.utc) - timedelta(minutes=float(max_age_minutes))
-        if ts is None or ts < cutoff:
+        if ts is not None and ts < cutoff:
             return None
     return {k: v for k, v in row.items() if v is not None}
+
+
+def accepted_messages(lines: Iterable[str], max_age_minutes: float | None = None) -> Iterator[dict]:
+    """Each line through :func:`parse_message_line` then
+    :func:`accept_message`: the accepted messages, in line order."""
+    for line in lines:
+        message = accept_message(parse_message_line(line), max_age_minutes)
+        if message is not None:
+            yield message
 
 
 def _lines(text: str) -> list[str]:
@@ -316,7 +293,7 @@ def kafka_source_options(
 
 #: The column layout Spark's Kafka reader produces (spark-sql-kafka
 #: docs). The embedded fake broker used in tests builds DataFrames with
-#: exactly this schema, so :func:`parse_kafka_records` is exercised
+#: exactly this schema, so :func:`kafka_record_lines` is exercised
 #: end-to-end without the connector jar.
 KAFKA_WIRE_SCHEMA = (
     "key binary, value binary, topic string, partition int, offset long,"
@@ -324,18 +301,17 @@ KAFKA_WIRE_SCHEMA = (
 )
 
 
-def parse_kafka_records(raw: DataFrame) -> DataFrame:
-    """Kafka wire records -> accepted messages: each record's ``value``
-    is one JSON message (the same payload the file/socket sources
-    carry), parsed against :data:`MESSAGE_SCHEMA` and filtered to
-    accepted types. Shared verbatim by the real connector source and the
-    embedded-fake e2e tests — what the tests pin IS the production
-    parse. The file and socket listeners parse the same payload in
-    Python (:func:`parse_message_line`)."""
-    parsed = raw.select(
-        F.from_json(F.col("value").cast("string"), MESSAGE_SCHEMA).alias("m")
-    ).select("m.*")
-    return parsed.filter(F.col("type").isin(*ACCEPTED_MESSAGE_TYPES))
+def kafka_record_lines(records: Iterable[Row]) -> list[str]:
+    """Kafka wire records -> message lines: each record's ``value`` as
+    UTF-8 text. A null or non-UTF-8 ``value`` becomes an empty line, which
+    parses as malformed and is dropped."""
+    lines = []
+    for record in records:
+        try:
+            lines.append(bytes(record["value"]).decode("utf-8"))
+        except (TypeError, UnicodeDecodeError):
+            lines.append("")
+    return lines
 
 
 def message_stream_kafka(
@@ -344,19 +320,18 @@ def message_stream_kafka(
     topic: str,
     starting_offsets: str = "earliest",
 ) -> DataFrame:
-    """Kafka message source — the same per-message handler as the
-    file/socket listeners (see :func:`parse_kafka_records`). Requires
-    the ``spark-sql-kafka`` connector on the classpath (not bundled in
-    this container; the option shape and the record parse are pinned by
-    tests against an embedded fake, the wire path needs a real
-    deployment).
+    """Kafka message source: the connector's raw records. Each batch's
+    ``value`` texts (:func:`kafka_record_lines`) go through the parse,
+    gate and clock the file and socket listeners use. Requires the
+    ``spark-sql-kafka`` connector on the classpath (not bundled here; the
+    option shape and the record parse are pinned by tests against an
+    embedded fake, the wire path needs a real deployment).
 
     Unlike the socket listener, Kafka offsets + checkpointing replay
     intake per micro-batch.
     """
     fmt, opts = kafka_source_options(bootstrap_servers, topic, starting_offsets)
-    raw = spark.readStream.format(fmt).options(**opts).load()
-    return parse_kafka_records(raw)
+    return spark.readStream.format(fmt).options(**opts).load()
 
 
 def parse_message_source_uri(uri: str) -> tuple[str, dict]:
@@ -384,28 +359,31 @@ def _message_handler(
     spark: SparkSession,
     product_list: dict,
     workers: Sequence[dict] | None,
+    max_age_minutes: float | None,
     on_result: Callable[[dict, dict], None] | None,
     on_crash: Callable[[dict, BaseException], None] | None,
-) -> Callable[[dict, int], None]:
-    """The per-message step of every source: :func:`process_message`,
+) -> Callable[[list[str], int], None]:
+    """The step every source runs on a batch of message lines: each
+    message :func:`accepted_messages` keeps goes to :func:`process_message`,
     then ``on_result``; on failure ``on_crash``, or without one the
     exception propagates and ends the intake. ``process_message`` is
     looked up in this module at each call, so a wrapper installed on the
     module sees every message."""
 
-    def handle(message: dict, batch_id: int) -> None:
-        try:
-            summary = process_message(spark, message, product_list, workers)
-            logger.info(
-                "batch %d message %s: %s", batch_id, message.get("uid"), summary["status"]
-            )
-            if on_result is not None:
-                on_result(message, summary)
-        except BaseException as exc:  # noqa: BLE001 - crash handler hook
-            logger.exception("message processing crashed")
-            if on_crash is None:
-                raise
-            on_crash(message, exc)
+    def handle(lines: list[str], batch_id: int) -> None:
+        for message in accepted_messages(lines, max_age_minutes):
+            try:
+                summary = process_message(spark, message, product_list, workers)
+                logger.info(
+                    "batch %d message %s: %s", batch_id, message.get("uid"), summary["status"]
+                )
+                if on_result is not None:
+                    on_result(message, summary)
+            except BaseException as exc:  # noqa: BLE001 - crash handler hook
+                logger.exception("message processing crashed")
+                if on_crash is None:
+                    raise
+                on_crash(message, exc)
 
     return handle
 
@@ -432,9 +410,10 @@ def _file_batches(
     """File intake: each new file in ``message_dir`` is one batch of its
     non-blank lines, oldest first by ``(st_mtime_ns, name)``. A batch's
     commit appends the file's name to the replay log, and a restart skips
-    the logged names. The in-memory set of handled names keeps only names
-    still in the directory, so it is never larger than the directory.
-    ``drain`` handles the files of the first listing, then ends."""
+    the logged names. The set of handled names keeps only names still in
+    the directory, and a start rewrites the log to that set, so neither
+    is ever larger than the directory. ``drain`` handles the files of the
+    first listing, then ends."""
     os.makedirs(checkpoint_dir, exist_ok=True)
     log_path = os.path.join(checkpoint_dir, PROCESSED_LOG)
     names = _listing(message_dir)
@@ -448,6 +427,9 @@ def _file_batches(
                     continue
                 if name in names:
                     done.add(name)
+    with open(log_path + ".tmp", "w", encoding="utf-8") as fh:
+        fh.writelines(json.dumps(name) + "\n" for name in sorted(done))
+    os.replace(log_path + ".tmp", log_path)
 
     with open(log_path, "a", encoding="utf-8") as log:
 
@@ -511,7 +493,7 @@ def _socket_batches(
 class MessageListener:
     """What :func:`run_streaming` returns for file and socket intake: the
     StreamingQuery surface its callers use, over one listener thread. The
-    thread takes batches from ``batches``, hands each accepted message to
+    thread takes batches from ``batches``, hands each batch's lines to
     ``handle``, runs the batch's commit and records a progress entry
     (``batchId``, ``numInputRows`` = lines read, ``durationMs`` with
     ``triggerExecution`` = the whole batch and ``walCommit`` = the
@@ -521,8 +503,7 @@ class MessageListener:
         self,
         batches: Iterator[Batch],
         stop: threading.Event,
-        handle: Callable[[dict, int], None],
-        max_age_minutes: float | None,
+        handle: Callable[[list[str], int], None],
     ) -> None:
         self._stop = stop
         self._error: BaseException | None = None
@@ -531,18 +512,15 @@ class MessageListener:
         # InheritableThread carries the caller's Spark local properties into
         # the listener's JVM thread (pinned-thread mode)
         self._thread = InheritableThread(
-            target=self._run, args=(batches, handle, max_age_minutes),
+            target=self._run, args=(batches, handle),
             name="trollflow2_spark_runner", daemon=True,
         )
         self._thread.start()
 
-    def _run(self, batches, handle, max_age_minutes) -> None:
+    def _run(self, batches, handle) -> None:
         try:
             for batch_id, (t0, lines, commit) in enumerate(batches):
-                for line in lines:
-                    message = accept_message(parse_message_line(line), max_age_minutes)
-                    if message is not None:
-                        handle(message, batch_id)
+                handle(lines, batch_id)
                 t1 = time.perf_counter()
                 commit()
                 t2 = time.perf_counter()
@@ -625,7 +603,8 @@ def run_streaming(
     ``recentProgress``.
     """
     handle = _message_handler(
-        spark, product_list, workers, on_result, resolve_crash_handler(on_crash)
+        spark, product_list, workers, max_age_minutes, on_result,
+        resolve_crash_handler(on_crash),
     )
     kind, kwargs = parse_message_source_uri(message_dir)
     if kind == "kafka":
@@ -633,10 +612,7 @@ def run_streaming(
         def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
             # Messages are control rows: collecting them is O(messages), never
             # O(data). The data tables are scanned inside process_message.
-            for row in batch_df.collect():
-                message = accept_message(row.asDict(recursive=True), max_age_minutes)
-                if message is not None:
-                    handle(message, batch_id)
+            handle(kafka_record_lines(batch_df.select("value").collect()), batch_id)
 
         writer = (
             message_stream_kafka(spark, **kwargs)
@@ -653,4 +629,4 @@ def run_streaming(
         batches = _socket_batches(stop, drain=available_now, **kwargs)
     else:
         batches = _file_batches(stop, kwargs["message_dir"], checkpoint_dir, available_now)
-    return MessageListener(batches, stop, handle, max_age_minutes)
+    return MessageListener(batches, stop, handle)
