@@ -1,6 +1,6 @@
-"""Message intake as plain Python: the listener's parse and age gate
-against Spark's JSON reader, the replay log, the handle's failure paths,
-and publishing that a replay does not duplicate."""
+"""Message intake as plain Python: the listener's parse and age gate,
+the replay log, the handle's failure paths, and publishing that a replay
+does not duplicate."""
 
 import datetime
 import json
@@ -78,13 +78,10 @@ def _tmp_leftovers(root):
             for n in dirs + files if n.endswith(".tmp")]
 
 
-def test_python_parse_and_age_gate_match_spark_reader(spark, tmp_path, monkeypatch):
-    """One corpus through Spark's file reader plus the type and age
-    filters, and through run_streaming's listener: identical dicts."""
-    from pyspark.sql import functions as F
-
-    from trollflow2_spark.sources.scene import ACCEPTED_MESSAGE_TYPES, MESSAGE_SCHEMA
-
+def test_parse_and_age_gate_keep_the_senders_object(spark, tmp_path, monkeypatch):
+    """One corpus through run_streaming's listener: each accepted message
+    is the JSON object on its line, every key and value as written, less
+    its top-level nulls; the type and age filters drop the rest."""
     now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
     fresh = (now - datetime.timedelta(minutes=5)).isoformat()
     stale = (now - datetime.timedelta(days=2)).isoformat()
@@ -108,21 +105,23 @@ def test_python_parse_and_age_gate_match_spark_reader(spark, tmp_path, monkeypat
     _write(corpus, "09_malformed.json", '{"type": "file", "uid": "broken"', "", "   ")
     _write(corpus, "10_two.json", msg(type="collection", uid="two-a"),
            msg(uid="two-b", start_time=fresh.replace("T", " ") + "Z"))
+    _write(corpus, "11_array.json", "[%s]" % msg(uid="array"))
+    _write(corpus, "12_deep.json",
+           '{"type": "file", "uid": "deep", "x": %s}' % ("[" * 100_000 + "]" * 100_000))
     _write(corpus, "_skipped.json", msg(uid="underscore"))
     _write(corpus, ".hidden.json", msg(uid="dot"))
 
-    # the file source's parse, type filter and age filter. The age filter
-    # used to_timestamp, which under ANSI mode fails the query on an
-    # unparseable start_time; its stated rule (dropped) is try_to_timestamp.
-    cutoff = F.current_timestamp() - F.make_dt_interval(mins=F.lit(60.0))
-    rows = (
-        spark.read.schema(MESSAGE_SCHEMA).json(corpus)
-        .filter(F.col("type").isin(*ACCEPTED_MESSAGE_TYPES))
-        .filter(F.col("start_time").isNull() | (F.try_to_timestamp("start_time") >= cutoff))
-        .collect()
-    )
-    want = [{k: v for k, v in r.asDict(recursive=True).items() if v is not None}
-            for r in rows]
+    want = [
+        {"type": "file", "start_time": fresh, "uid": "extra", "station": "norrköping",
+         "dataset": [{"uri": "/d/a.nc", "uid": "a.nc", "size": 5, "path": None}]},
+        {"type": "file", "uid": "num", "platform_name": 19, "sensor": 1.5,
+         "subject": {"a": [1, True]}, "start_time": fresh},
+        {"type": "dataset", "start_time": fresh, "uid": "orb-int", "orbit_number": 12345},
+        {"type": "file", "start_time": fresh, "uid": "orb-str", "orbit_number": "12345"},
+        {"type": "file", "uid": "null-time"},
+        {"type": "collection", "start_time": fresh, "uid": "two-a"},
+        {"type": "file", "start_time": fresh.replace("T", " ") + "Z", "uid": "two-b"},
+    ]
 
     got = []
 

@@ -1,5 +1,6 @@
-"""One message contract: Kafka, file and socket intake share one parse,
-and every reader of a message time uses message_time (ISO 8601 by
+"""One message contract: Kafka, file and socket intake share one decode
+and parse, a message is the JSON object its sender wrote, and every
+reader of a message time uses message_time (ISO 8601 by
 datetime.fromisoformat, no zone = UTC). Each test injects a message the
 old forks read differently or crashed on."""
 
@@ -41,8 +42,8 @@ product_list:
           formats: [{{format: parquet, writer: parquet}}]
 """
 
-#: numbers and an object in string fields: Spark's from_json rewrote
-#: them (1.5, 1.0E20, compact JSON), the file reader kept the source text
+#: numbers and an object where a Spark schema once read text: every
+#: source delivers them as the JSON values the sender wrote
 ODD_LINE = (
     '{"type": "file", "uid": "odd", "platform_name": "SAT-A", "sensor": 1.50,'
     ' "end_time": 1e20, "subject": {"a": [1, true]},'
@@ -190,7 +191,7 @@ def test_kafka_and_file_intake_deliver_identical_messages(spark, tmp_path, monke
     assert from_kafka == got
     assert len(got) == 1
     assert (got[0]["sensor"], got[0]["end_time"], got[0]["subject"]) == (
-        "1.50", "1e20", '{"a": [1, true]}')
+        1.5, 1e20, {"a": [1, True]})
 
 
 def test_age_gate_reads_iso_8601_only():
@@ -221,3 +222,146 @@ def test_start_rewrites_the_replay_log_to_present_files(spark, tmp_path, monkeyp
     with open(log_path, encoding="utf-8") as fh:
         assert fh.read().splitlines() == ['"kept.json"']
     assert os.listdir(ckpt) == [PROCESSED_LOG]
+
+
+LATIN1_LINE = b'{"type": "file", "uid": "latin1 \xe9"}'
+VALID_LINE = b'{"type": "file", "uid": "valid"}'
+
+
+def test_undecodable_line_is_dropped_from_file_and_socket(spark, tmp_path, monkeypatch):
+    """A Latin-1 byte makes its line malformed, as a non-UTF-8 Kafka
+    record is: a message file handles only its valid line, a socket
+    drops the line, and a leading UTF-8 BOM is still stripped."""
+    import socket
+    import threading
+
+    got = _record_messages(monkeypatch)
+    msg_dir = tmp_path / "messages"
+    msg_dir.mkdir()
+    (msg_dir / "a.json").write_bytes(LATIN1_LINE + b"\n" + VALID_LINE + b"\n")
+    (msg_dir / "b.json").write_bytes(b"\xef\xbb\xbf" + VALID_LINE.replace(b"valid", b"bom"))
+    assert run_streaming(spark, str(msg_dir), {}, str(tmp_path / "ckpt"),
+                         available_now=True).awaitTermination(120)
+    assert sorted(m["uid"] for m in got) == ["bom", "valid"]
+
+    got.clear()
+    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    srv.bind(("127.0.0.1", 0))
+    srv.listen(1)
+
+    def serve():
+        conn, _ = srv.accept()
+        conn.sendall(LATIN1_LINE + b"\n" + VALID_LINE + b"\n")
+        conn.close()
+        srv.close()
+
+    threading.Thread(target=serve, daemon=True).start()
+    query = run_streaming(spark, f"socket://127.0.0.1:{srv.getsockname()[1]}", {},
+                          str(tmp_path / "ckpt_sock"), available_now=True)
+    assert query.awaitTermination(120)
+    assert [m["uid"] for m in got] == ["valid"]
+
+
+def _scene(spark, tmp_path, cols="cast(id as double) as ch1"):
+    path = str(tmp_path / "scene.parquet")
+    spark.range(64).selectExpr(cols).write.parquet(path)
+    return path
+
+
+def _through_daemon(spark, tmp_path, message, product_list, workers):
+    """One message file through run_streaming(available_now=True): the
+    summary of the one message it handles."""
+    msg_dir = str(tmp_path / "messages")
+    _write(msg_dir, "m.json", json.dumps(message))
+    summaries = []
+    assert run_streaming(spark, msg_dir, product_list, str(tmp_path / "ckpt"),
+                         workers=workers, available_now=True,
+                         on_result=lambda m, s: summaries.append(s)).awaitTermination(120)
+    (summary,) = summaries
+    return summary
+
+
+def test_daemon_gates_on_a_key_outside_the_old_schema(spark, tmp_path):
+    message = {"type": "file", "uid": "nrt", "platform_name": "SAT-A", "variant": "NRT",
+               "dataset": [{"uri": _scene(spark, tmp_path)}]}
+    summary = _through_daemon(spark, tmp_path, message, _plist(tmp_path),
+                              [{"fun": "check_metadata", "variant": ["DR"]}, *DEFAULT_WORKERS])
+    assert summary["status"] == "aborted"
+    (reason,) = summary["aborted_priorities"].values()
+    assert "variant" in reason and "NRT" in reason
+
+
+def test_daemon_resamples_nearest_from_the_message_source_area(spark, tmp_path):
+    """source_area reaches the job: the mapped nearest path runs from the
+    daemon and writes the rows process_message writes for the same dict."""
+    from trollflow2_spark.operators.resample import GridArea, register_area
+
+    register_area(GridArea("src_daemon", width=8, height=8, dx=1.0, dy=1.0))
+    register_area(GridArea("tgt_daemon", width=4, height=4, dx=2.0, dy=2.0))
+    scene = _scene(spark, tmp_path, ["cast(id % 8 as double) + 0.5 as x",
+                                     "cast(id div 8 as double) + 0.5 as y",
+                                     "cast(id as double) as v"])
+    message = {"type": "file", "uid": "m", "source_area": "src_daemon",
+               "dataset": [{"uri": scene}]}
+    workers = [
+        {"fun": "create_scene"},
+        {"fun": "resample", "resampler": "nearest", "radius_of_influence": 2.0},
+        {"fun": "save_datasets"},
+    ]
+
+    def plist(out):
+        return read_product_list(raw_string=f"""
+product_list:
+  output_dir: "{tmp_path / out}"
+  fname_pattern: "{{uid}}_{{productname}}.{{format}}"
+  areas:
+    tgt_daemon:
+      products:
+        v:
+          productname: v
+          formats: [{{format: parquet, writer: parquet}}]
+""")
+
+    assert _through_daemon(spark, tmp_path, message, plist("daemon"), workers)["status"] == (
+        "nominal")
+    assert process_message(spark, dict(message), plist("direct"), workers)["status"] == (
+        "nominal")
+    daemon, direct = (
+        sorted(spark.read.parquet(str(tmp_path / out / "m_v.parquet")).collect())
+        for out in ("daemon", "direct"))
+    assert len(direct) == 16 and daemon == direct
+
+
+def test_daemon_aliases_a_list_sensor_element_wise(spark, tmp_path):
+    """metadata_alias maps a posttroll list sensor element by element; the
+    check_metadata after it and the published message see the mapped list."""
+    message = {"type": "file", "uid": "m", "platform_name": "SAT-A", "sensor": ["avhrr/3"],
+               "dataset": [{"uri": _scene(spark, tmp_path)}]}
+    workers = [
+        {"fun": "metadata_alias", "sensor": {"avhrr/3": "avhrr-3"}},
+        {"fun": "check_metadata", "sensor": [["avhrr-3"]]},
+        *DEFAULT_WORKERS,
+        {"fun": "publish"},
+    ]
+    summary = _through_daemon(spark, tmp_path, message, _plist(tmp_path), workers)
+    assert summary["status"] == "nominal"
+    pub_dir = tmp_path / "out" / "published_messages"
+    (published,) = [json.loads(line) for f in pub_dir.iterdir()
+                    for line in f.read_text(encoding="utf-8").splitlines()]
+    assert json.loads(published["message"])["sensor"] == ["avhrr-3"]
+
+
+def test_list_sensor_is_published_as_a_json_array(tmp_path):
+    from trollflow2_spark.sinks.publish import publisher_messages, write_messages
+    from trollflow2_spark.sinks.save import SaveResult
+
+    result = SaveResult()
+    result.produced = [{"filename": "/o/a.parquet", "product": "p", "area": "ar",
+                        "format": "parquet", "size_bytes": 5}]
+    msgs = publisher_messages(result, base_mda={"platform_name": "X",
+                                                "sensor": ["viirs", "avhrr-3"]})
+    with open(write_messages(msgs, str(tmp_path)), "rb") as fh:
+        assert fh.read() == (
+            rb'{"topic":"/parquet/ar","message":"{\"uri\":\"/o/a.parquet\",\"uid\":\"a.parquet\",'
+            rb'\"product\":\"p\",\"area\":\"ar\",\"format\":\"parquet\",\"size_bytes\":5,'
+            rb'\"platform_name\":\"X\",\"sensor\":[\"viirs\",\"avhrr-3\"]}"}' b"\n")

@@ -4,8 +4,9 @@ A from-scratch engine with the query and data-processing capabilities of
 pytroll/trollflow2 (a message-driven, YAML-configured batch ETL framework
 for satellite imagery), re-expressed Spark-first:
 
-- message stream       -> Structured Streaming source; each message row
-                          runs ``plans.process_message``
+- message stream       -> a listener thread (file, socket) or a Kafka
+                          stream; each message, the JSON object its
+                          sender wrote, runs ``plans.process_message``
 - product list (YAML)  -> flat work-item dicts, batched by priority
 - plugin worker chain  -> named plugins ``fn(job)`` over the scene
 - filter plugins       -> plain-Python pruning of the work items

@@ -34,7 +34,8 @@ FORWARDED_MDA_KEYS = (
     "end_time",
 )
 
-#: payload fields kept as JSON numbers; every other field is text
+#: payload fields kept as JSON numbers; a list value (posttroll's
+#: ``sensor``) is kept as a JSON array; every other field is text
 _INTEGER_KEYS = ("size_bytes", "orbit_number")
 
 #: compact JSON with non-ASCII written raw (the byte form Spark's JSON
@@ -69,7 +70,7 @@ def publisher_messages(
             **{k: mda.get(k) for k in FORWARDED_MDA_KEYS},
         }
         payload = {
-            k: v if k in _INTEGER_KEYS else str(v)
+            k: v if k in _INTEGER_KEYS or isinstance(v, list) else str(v)
             for k, v in fields.items()
             if v is not None
         }

@@ -1,6 +1,5 @@
 from trollflow2_spark.sources.scene import (  # noqa: F401
     ACCEPTED_MESSAGE_TYPES,
-    MESSAGE_SCHEMA,
     READER_REGISTRY,
     SceneCreationError,
     create_scene,

@@ -5,8 +5,9 @@ named reader, ``/root/reference/trollflow2/plugins/__init__.py:86-99``)
 fed by filenames pulled out of a posttroll message
 (``launcher.py:303-317``). Here:
 
-- a *message* is a plain dict (one row of the message stream; schema in
-  :data:`MESSAGE_SCHEMA`),
+- a *message* is a plain dict: the JSON object its sender wrote (shape
+  from the reference's example payloads,
+  ``tests/test_trollflow2.py:271-282``),
 - a *reader* is a registered ``(spark, paths, **kwargs) -> DataFrame``
   loader (≙ the satpy reader registry; ours maps to Spark datasources),
 - the scene is a DataFrame: lazy, columnar, schema known after load.
@@ -29,35 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from trollflow2_spark.sinks import imagery, netcdf
-
-# One row of the message stream (shape from the reference's example
-# payloads, tests/test_trollflow2.py:271-282).
-MESSAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("type", T.StringType()),
-        T.StructField("subject", T.StringType()),
-        T.StructField("platform_name", T.StringType()),
-        T.StructField("sensor", T.StringType()),
-        T.StructField("orbit_number", T.LongType()),
-        T.StructField("start_time", T.StringType()),
-        T.StructField("end_time", T.StringType()),
-        T.StructField("uri", T.StringType()),
-        T.StructField("uid", T.StringType()),
-        T.StructField(
-            "dataset",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("uri", T.StringType()),
-                        T.StructField("uid", T.StringType()),
-                        T.StructField("path", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("filesystem", T.StringType()),  # fsspec-style JSON spec
-    ]
-)
 
 #: message types the runner consumes (``launcher.py:60``)
 ACCEPTED_MESSAGE_TYPES = ("file", "dataset", "collection")

@@ -11,14 +11,17 @@ queue → per-message plugin chain; ``trollflow2/launcher.py:146-250``):
   ``launcher.py:237-250`` — executor isolation + task retry replace
   process isolation). Messages are control rows, so no Spark job runs
   before the pipeline opens the message's data;
-- every source shares one parse and gate: :func:`parse_message_line`
-  reads a line as :data:`MESSAGE_SCHEMA` made Spark read it, and
-  :func:`accept_message` keeps the accepted message types
-  (``launcher.py:60``) and applies the stale-message age gate
-  (``check_metadata`` ``start_time: -N``, ``plugins/__init__.py:705-711``);
+- every source shares one decode, parse and gate: :func:`decode_line`
+  reads a line's bytes as strict UTF-8, :func:`parse_message_line`
+  returns the JSON object its sender wrote (every key reaches the job's
+  ``input_mda``, as the whole posttroll message does in
+  ``launcher.py:276-300``), and :func:`accept_message` keeps the accepted
+  message types (``launcher.py:60``) and applies the stale-message age
+  gate (``check_metadata`` ``start_time: -N``,
+  ``plugins/__init__.py:705-711``);
 - Kafka stays a Structured Streaming source (the connector is its only
-  client); its ``foreachBatch`` collects each record's ``value`` text
-  into the same parse, gate and per-message handler;
+  client); its ``foreachBatch`` collects each record's ``value`` bytes
+  into the same decode, parse, gate and per-message handler;
 - replay: file intake appends a file's name to a log under
   ``checkpoint_dir`` after its messages are handled, so a crash replays
   the file in flight (at-least-once); product commits and publish file
@@ -35,6 +38,7 @@ intake itself never touches anything big.
 
 from __future__ import annotations
 
+import codecs
 import collections
 import functools
 import json
@@ -45,16 +49,14 @@ import socket
 import threading
 import time
 from datetime import datetime, timedelta, timezone
-from json.decoder import scanstring
 from typing import Callable, Iterable, Iterator, Sequence
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import types as T
 
 from trollflow2_spark.plans.pipeline import process_message
-from trollflow2_spark.sources.scene import ACCEPTED_MESSAGE_TYPES, MESSAGE_SCHEMA
-from trollflow2_spark.sources.scene import MessageTimeError, message_time
+from trollflow2_spark.sources.scene import ACCEPTED_MESSAGE_TYPES, MessageTimeError
+from trollflow2_spark.sources.scene import message_time
 
 logger = logging.getLogger(__name__)
 
@@ -70,101 +72,33 @@ PROCESSED_LOG = "processed-files.log"
 
 
 # ---------------------------------------------------------------------------
-# One parse and gate for every source: a JSON line as Spark's JSON reader
-# read it under MESSAGE_SCHEMA, then the type filter and the age gate.
+# One parse and gate for every source: a line is the JSON object its
+# sender wrote, then the type filter and the age gate.
 
-_DECODER = json.JSONDecoder()
-_WS = re.compile(r"[ \t\n\r]*")
-_LINE_BREAK = re.compile(r"\r\n|\r|\n")
-_LONG_RANGE = (-(2**63), 2**63 - 1)
-#: a value Spark cannot convert to its field's type (the field reads null)
-_BAD = object()
+_LINE_BREAK = re.compile(rb"\r\n|\r|\n")
 
 
-def _convert(doc: str, pos: int, dtype: T.DataType) -> tuple[object, int]:
-    """The JSON value at ``doc[pos:]`` as ``dtype``, and the index after
-    it. A string field takes the source text of a non-string value; a
-    long takes only an integer in range; anything else is ``_BAD``."""
-    pos = _WS.match(doc, pos).end()
-    if isinstance(dtype, T.StructType) and doc.startswith("{", pos):
-        return _convert_object(doc, pos, dtype)
-    if isinstance(dtype, T.ArrayType) and doc.startswith("[", pos):
-        return _convert_array(doc, pos, dtype.elementType)
-    value, end = _DECODER.raw_decode(doc, pos)
-    if value is None:
-        return None, end
-    if isinstance(dtype, T.StringType):
-        return (value if isinstance(value, str) else doc[pos:end]), end
-    if isinstance(dtype, T.LongType) and type(value) is int:
-        if _LONG_RANGE[0] <= value <= _LONG_RANGE[1]:
-            return value, end
-    return _BAD, end
+def decode_line(data: bytes | None) -> str:
+    """One line's bytes as strict UTF-8 text, the one decode every source
+    uses. Absent or undecodable bytes give ``""``, a malformed line that
+    :func:`parse_message_line` drops."""
+    try:
+        return bytes(data).decode("utf-8")
+    except (TypeError, UnicodeDecodeError):
+        return ""
 
 
-def _convert_array(doc: str, pos: int, etype: T.DataType) -> tuple[object, int]:
-    """A JSON array at ``doc[pos]``; one element Spark cannot convert
-    makes the whole array ``_BAD``."""
-    out: list = []
-    pos = _WS.match(doc, pos + 1).end()
-    if doc.startswith("]", pos):
-        return out, pos + 1
-    while True:
-        value, pos = _convert(doc, pos, etype)
-        out.append(value)
-        pos = _WS.match(doc, pos).end()
-        if doc.startswith(",", pos):
-            pos += 1
-        elif doc.startswith("]", pos):
-            return (_BAD if any(v is _BAD for v in out) else out), pos + 1
-        else:
-            raise ValueError(f"expected ',' or ']' at {pos}")
-
-
-def _convert_object(doc: str, pos: int, schema: T.StructType) -> tuple[dict, int]:
-    """A JSON object at ``doc[pos]`` as a dict of the schema's fields:
-    unknown keys dropped, missing or unconvertible fields ``None``."""
-    types = {f.name: f.dataType for f in schema.fields}
-    out = dict.fromkeys(types)
-    pos = _WS.match(doc, pos + 1).end()
-    if doc.startswith("}", pos):
-        return out, pos + 1
-    while True:
-        if not doc.startswith('"', pos):
-            raise ValueError(f"expected a key at {pos}")
-        key, pos = scanstring(doc, pos + 1)
-        pos = _WS.match(doc, pos).end()
-        if not doc.startswith(":", pos):
-            raise ValueError(f"expected ':' at {pos}")
-        if key in types:
-            value, pos = _convert(doc, pos + 1, types[key])
-            out[key] = None if value is _BAD else value
-        else:
-            _, pos = _DECODER.raw_decode(doc, _WS.match(doc, pos + 1).end())
-        pos = _WS.match(doc, pos).end()
-        if doc.startswith(",", pos):
-            pos = _WS.match(doc, pos + 1).end()
-        elif doc.startswith("}", pos):
-            return out, pos + 1
-        else:
-            raise ValueError(f"expected ',' or '}}' at {pos}")
-
-
-def parse_message_line(line: str) -> dict:
-    """One JSON line -> a dict of every :data:`MESSAGE_SCHEMA` field, as
-    Spark's JSON reader read it under that schema: unknown keys dropped
-    (inside ``dataset`` entries too), ``orbit_number`` only from a JSON
-    integer, a string field given a non-string value holds that value's
-    JSON text, and a field Spark could not convert is ``None``. A line
-    that is not a JSON object reads as all ``None``s (Spark's reader split
-    a top-level array into rows; here it is one malformed line). Times
-    stay text, read by :func:`message_time` where they are used."""
-    pos = _WS.match(line).end()
-    if line.startswith("{", pos):
-        try:
-            return _convert_object(line, pos, MESSAGE_SCHEMA)[0]
-        except (ValueError, RecursionError):
-            pass
-    return dict.fromkeys(MESSAGE_SCHEMA.fieldNames())
+def parse_message_line(line: str) -> dict | None:
+    """One line -> the JSON object on it, every key and value as its
+    sender wrote it, or ``None`` when the line is not exactly one JSON
+    object (malformed, a top-level array or scalar, or nested too deep to
+    decode). Times stay text, read by :func:`message_time` where they are
+    used."""
+    try:
+        message = json.loads(line)
+    except (ValueError, RecursionError):
+        return None
+    return message if isinstance(message, dict) else None
 
 
 def accept_message(row: dict, max_age_minutes: float | None = None) -> dict | None:
@@ -190,15 +124,18 @@ def accepted_messages(lines: Iterable[str], max_age_minutes: float | None = None
     """Each line through :func:`parse_message_line` then
     :func:`accept_message`: the accepted messages, in line order."""
     for line in lines:
-        message = accept_message(parse_message_line(line), max_age_minutes)
+        message = parse_message_line(line)
+        if message is not None:
+            message = accept_message(message, max_age_minutes)
         if message is not None:
             yield message
 
 
-def _lines(text: str) -> list[str]:
-    """The non-blank lines of ``text``, split where Spark's line reader
-    splits (``\\n``, ``\\r\\n``, ``\\r``)."""
-    return [line for line in _LINE_BREAK.split(text) if line.strip()]
+def _lines(data: bytes) -> list[str]:
+    """The non-blank lines of ``data`` (split at ``\\n``, ``\\r\\n`` or
+    ``\\r``), each through :func:`decode_line`: one undecodable line
+    does not take the others with it."""
+    return [decode_line(line) for line in _LINE_BREAK.split(data) if line.strip()]
 
 
 # ---------------------------------------------------------------------------
@@ -302,16 +239,10 @@ KAFKA_WIRE_SCHEMA = (
 
 
 def kafka_record_lines(records: Iterable[Row]) -> list[str]:
-    """Kafka wire records -> message lines: each record's ``value`` as
-    UTF-8 text. A null or non-UTF-8 ``value`` becomes an empty line, which
-    parses as malformed and is dropped."""
-    lines = []
-    for record in records:
-        try:
-            lines.append(bytes(record["value"]).decode("utf-8"))
-        except (TypeError, UnicodeDecodeError):
-            lines.append("")
-    return lines
+    """Kafka wire records -> message lines: each record's ``value``
+    through :func:`decode_line`, so a null or non-UTF-8 ``value`` is a
+    malformed line and is dropped."""
+    return [decode_line(record["value"]) for record in records]
 
 
 def message_stream_kafka(
@@ -453,10 +384,10 @@ def _file_batches(
                 t0 = time.perf_counter()
                 try:
                     with open(path, "rb") as fh:
-                        text = fh.read().decode("utf-8-sig", "replace")
+                        data = fh.read().removeprefix(codecs.BOM_UTF8)
                 except FileNotFoundError:
                     continue
-                yield t0, _lines(text), functools.partial(commit, name)
+                yield t0, _lines(data), functools.partial(commit, name)
             if drain:
                 return
             if not new:
@@ -482,7 +413,7 @@ def _socket_batches(
             data, pending = pending + chunk, b""
             if chunk:
                 data, _, pending = data.rpartition(b"\n")
-            for line in _lines(data.decode("utf-8", "replace")):
+            for line in _lines(data):
                 yield time.perf_counter(), [line], lambda: None
             if not chunk:
                 break
