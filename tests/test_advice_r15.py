@@ -9,7 +9,7 @@ import uuid
 import pytest
 from pyspark.sql import Row
 
-from trollflow2_spark.sources.roaring import (
+from trollflow2_spark.extensions.roaring import (
     RoaringError,
     decode_rbm_array,
     z85_encode,
@@ -102,7 +102,7 @@ def test_apply_column_mapping_with_dv(spark):
         delta_log_snapshot,
         delta_table_info,
     )
-    from trollflow2_spark.sources.roaring import encode_dv_data
+    from trollflow2_spark.extensions.roaring import encode_dv_data
 
     sch = {"type": "struct", "fields": [
         {"name": "amount", "type": "double", "nullable": True,
@@ -121,7 +121,7 @@ def test_apply_column_mapping_with_dv(spark):
         "configuration": {"delta.columnMapping.mode": "name"}}})
     data = encode_dv_data([0, 3])
     payload_z85 = None
-    from trollflow2_spark.sources.roaring import z85_encode as _z
+    from trollflow2_spark.extensions.roaring import z85_encode as _z
     payload_z85 = _z(data + b"\x00" * ((-len(data)) % 4))
     add = json.dumps({"add": {
         "path": "f1", "size": 10,

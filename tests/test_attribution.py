@@ -4,7 +4,7 @@ import datetime
 
 from pyspark.sql import Row
 
-from trollflow2_spark.operators.windows import touch_attribution
+from trollflow2_spark.extensions.windows import touch_attribution
 
 
 def _t(m):

@@ -1,8 +1,8 @@
-"""From-scratch Avro container reader/writer (`sources/avro.py`)."""
+"""From-scratch Avro container reader/writer (`extensions/avro.py`)."""
 
 import pytest
 
-from trollflow2_spark.sources.avro import (
+from trollflow2_spark.extensions.avro import (
     AvroError,
     read_container,
     write_container,
@@ -80,7 +80,7 @@ def test_malformed_containers():
 
 def test_union_and_enum_bounds():
     # hand-craft: union index out of range
-    from trollflow2_spark.sources.avro import _encode, _write_long
+    from trollflow2_spark.extensions.avro import _encode, _write_long
 
     blob = write_container([], SCHEMA)
     # decode a raw union with a bad index via the container of one
@@ -88,7 +88,7 @@ def test_union_and_enum_bounds():
     # directly through a tiny schema instead
     import io
 
-    from trollflow2_spark.sources.avro import _decode
+    from trollflow2_spark.extensions.avro import _decode
 
     with pytest.raises(AvroError, match="union index"):
         _decode(["null", "long"], io.BytesIO(_write_long(5)))
@@ -102,7 +102,7 @@ def test_union_and_enum_bounds():
 
 
 def test_read_avro_kernel(spark):
-    from trollflow2_spark.sources.avro import read_avro
+    from trollflow2_spark.extensions.avro import read_avro
 
     small = {
         "type": "record", "name": "R",
@@ -122,11 +122,11 @@ def test_read_avro_kernel(spark):
     assert got[2][0] == 2 and got[2][2] is None
 
 
-# --- WebDataset shard intake (sources/webdataset.py) ---
+# --- WebDataset shard intake (extensions/webdataset.py) ---
 
 
 def test_webdataset_grouping_and_dup_flag(spark):
-    from trollflow2_spark.sources.webdataset import (
+    from trollflow2_spark.extensions.webdataset import (
         read_webdataset,
         write_webdataset,
     )
@@ -164,7 +164,7 @@ def test_logical_types_roundtrip_and_fallback():
     import datetime
     import decimal
 
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         read_container,
         write_container,
     )
@@ -217,7 +217,7 @@ def test_logical_decimal_negative_minimal_bytes():
     and decode back exactly (sign extension must be correct)."""
     import decimal
 
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         read_container,
         write_container,
     )
@@ -239,7 +239,7 @@ def test_logical_decimal_negative_minimal_bytes():
 
 
 def test_invalid_uuid_falls_back_to_string():
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         read_container,
         write_container,
     )
@@ -264,7 +264,7 @@ def test_schema_resolution_evolution_paths():
     string<->bytes, union re-match; missing default errors loudly."""
     import pytest as _pytest
 
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         AvroError,
         read_container_resolved,
         resolve_value,
@@ -314,7 +314,7 @@ def test_schema_resolution_evolution_paths():
 
 
 def test_schema_resolution_enum_default_and_nested():
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         read_container_resolved,
         write_container,
     )
@@ -381,7 +381,7 @@ def test_named_type_references_and_recursion():
 
 
 def test_reader_schema_aliases_and_recursive_evolution():
-    from trollflow2_spark.sources.avro import read_container_resolved
+    from trollflow2_spark.extensions.avro import read_container_resolved
 
     w = {"type": "record", "name": "R",
          "fields": [{"name": "old_name", "type": "string"},
@@ -416,7 +416,7 @@ def test_reader_schema_aliases_and_recursive_evolution():
 
 
 def test_wire_format_round_trip_and_errors():
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         AvroError,
         decode_wire_message,
         encode_wire_message,
@@ -442,7 +442,7 @@ def test_wire_format_round_trip_and_errors():
 def test_wire_format_reader_resolution():
     """Evolution on the wire path: a v2 consumer (added defaulted
     field, promoted type) reads v1-framed messages."""
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         decode_wire_message,
         encode_wire_message,
     )

@@ -19,7 +19,7 @@ import ctypes.util
 import numpy as np
 import pytest
 
-from trollflow2_spark.sources.brotlicodec import brotli_decompress
+from trollflow2_spark.extensions.brotlicodec import brotli_decompress
 
 
 def _load_libbrotlienc():
@@ -179,7 +179,7 @@ def test_warc_br_body_route():
     """An HTTP response with content-encoding: br inside a WARC record
     decodes through the intake; a corrupt br body stays raw (hygiene
     gates flag it) instead of crashing the parse."""
-    from trollflow2_spark.sources.warc import _parse_http
+    from trollflow2_spark.extensions.warc import _parse_http
 
     body = (b"<html><body>" + b"brotli encoded page " * 50 + b"</body></html>")
     comp = _ref_compress(body, 5, mode=1)

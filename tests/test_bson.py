@@ -1,12 +1,12 @@
 """Conformance + property tests for the from-scratch BSON reader
-(`sources/bson.py`): bsonspec.org known-answer vectors pin the byte
+(`extensions/bson.py`): bsonspec.org known-answer vectors pin the byte
 layout; hypothesis round-trips fuzz the full supported type lattice."""
 
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
-from trollflow2_spark.sources.bson import (
+from trollflow2_spark.extensions.bson import (
     BsonError,
     MongoTimestamp,
     ObjectId,

@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from trollflow2_spark.sources.cbor import (
+from trollflow2_spark.extensions.cbor import (
     CborError,
     decode,
     decode_all,
@@ -129,7 +129,7 @@ def test_sequence_decode_and_roundtrip():
 def test_spark_intake_quarantine(spark):
     from pyspark.sql import Row
 
-    from trollflow2_spark.sources.cbor import read_cbor
+    from trollflow2_spark.extensions.cbor import read_cbor
 
     good = encode({"a": 1}) + encode([2, 3])
     bad = bytes.fromhex("8301")  # truncated array
@@ -143,7 +143,7 @@ def test_spark_intake_quarantine(spark):
 
 
 def test_simple_values_surface_distinctly():
-    from trollflow2_spark.sources.cbor import CborError, decode
+    from trollflow2_spark.extensions.cbor import CborError, decode
 
     assert decode(b"\xf8\x20") == {"__simple": 32}
     assert decode(b"\xe0") == {"__simple": 0}
@@ -154,7 +154,7 @@ def test_simple_values_surface_distinctly():
 
 
 def test_nesting_depth_quarantines_not_crashes(spark):
-    from trollflow2_spark.sources.cbor import CborError, decode, read_cbor
+    from trollflow2_spark.extensions.cbor import CborError, decode, read_cbor
 
     deep = b"\x81" * 2000 + b"\x00"
     with pytest.raises(CborError, match="nesting"):

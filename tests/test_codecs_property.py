@@ -98,7 +98,7 @@ def test_stretch_never_crashes_and_bounds(h, w, seed):
 def test_jpeg_constant_even_blocks_exact(h, w, v):
     """Constant even-valued images survive baseline JPEG losslessly:
     DC-only blocks whose quantized coefficient divides exactly."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     arr = np.full((h, w), v * 2, dtype=np.uint8)
     out = jpeg.decode_jpeg(jpeg.encode_jpeg_gray(arr, quality=50))
@@ -112,7 +112,7 @@ def test_jpeg_constant_even_blocks_exact(h, w, v):
 def test_jpeg_lossy_roundtrip_tolerance(h, w, seed, quality):
     """Arbitrary images round-trip within a lossy-compression tolerance
     that tightens with quality (worst-case random noise stays bounded)."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     rng = np.random.RandomState(seed)
     arr = rng.randint(0, 256, size=(h, w), dtype=np.uint8)
@@ -129,7 +129,7 @@ def test_jpeg_lossy_roundtrip_tolerance(h, w, seed, quality):
 @given(seed=st.integers(0, 2**31 - 1))
 def test_jpeg_smooth_images_high_fidelity(seed):
     """Smooth gradients (what JPEG is built for) reconstruct closely."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     rng = np.random.RandomState(seed)
     fx, fy = rng.uniform(4, 15, size=2)
@@ -146,7 +146,7 @@ def test_jpeg_smooth_images_high_fidelity(seed):
 def test_jpeg_constant_color_exact(h, w, v, subsample):
     """Constant gray-RGB images survive color JPEG losslessly in both
     subsampling modes (zero chroma coefficients, lossless even luma)."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     arr = np.full((h, w, 3), v * 2, dtype=np.uint8)
     out = jpeg.decode_jpeg(jpeg.encode_jpeg(arr, quality=50, subsample=subsample))
@@ -160,7 +160,7 @@ def test_jpeg_constant_color_exact(h, w, v, subsample):
 def test_jpeg_color_roundtrip_tolerance(h, w, seed, subsample):
     """Arbitrary RGB images round-trip within tolerance; 4:2:0 pays the
     chroma-resolution price on sharp color edges but stays bounded."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     rng = np.random.RandomState(seed)
     arr = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
@@ -181,7 +181,7 @@ def test_jpeg_progressive_equals_baseline(h, w, seed, color, subsample):
     reproduce the baseline decode PIXEL-EXACTLY — a far stronger
     property than a lossy tolerance: any error in the four progressive
     scan codecs (DC/AC x first/refine) breaks exact equality."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     rng = np.random.RandomState(seed)
     shape = (h, w, 3) if color else (h, w)
@@ -198,7 +198,7 @@ def test_jpeg_progressive_equals_baseline(h, w, seed, color, subsample):
 def test_jpeg_progressive_constant_even_exact(h, w, v):
     """Constant even-valued images survive the progressive path
     losslessly, like baseline — the contract-query oracle's premise."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     arr = np.full((h, w), v * 2, dtype=np.uint8)
     out = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(arr, quality=50))
@@ -215,7 +215,7 @@ def test_jpeg_restart_interval_equals_plain(h, w, seed, color, ri):
     (same quantized coefficients; predictors reset at each RSTn).
     Exercises byte-pad + marker consumption and the modulo-8 marker
     cycle across arbitrary MCU counts."""
-    from trollflow2_spark.sinks import jpeg
+    from trollflow2_spark.extensions import jpeg
 
     rng = np.random.RandomState(seed)
     shape = (h, w, 3) if color else (h, w)
@@ -240,7 +240,7 @@ def test_flac_roundtrip_exact(n, ch, bps, seed, strategy, block):
     """FLAC is lossless: any signal round-trips EXACTLY through both
     encoder strategies, at every supported bit depth, across frame
     boundaries (block < n) and partial tail frames."""
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     rng = np.random.RandomState(seed)
     lo, hi = -(1 << (bps - 1)), (1 << (bps - 1)) - 1
@@ -257,7 +257,7 @@ def _flac_stream_with_frame(frame: bytes, n: int, n_ch: int) -> bytes:
     """fLaC header + STREAMINFO (borrowed from the encoder) + one
     hand-crafted frame — lets tests drive decoder paths the encoder
     never emits (LPC subframes, stereo decorrelation modes)."""
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     tmpl = flac.encode_flac(
         np.zeros((n, n_ch), dtype=np.int64), 8000, 16, block_size=max(n, 16)
@@ -266,7 +266,7 @@ def _flac_stream_with_frame(frame: bytes, n: int, n_ch: int) -> bytes:
 
 
 def _frame_header(n: int, ch_code: int) -> bytearray:
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     bw = flac._BitWriter()
     bw.write(0x3FFE, 14)
@@ -285,7 +285,7 @@ def _frame_header(n: int, ch_code: int) -> bytearray:
 
 
 def _finish_frame(hdr: bytearray, body) -> bytes:
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     body.align()
     frame = bytes(hdr) + body.bytes()
@@ -296,7 +296,7 @@ def test_flac_decodes_handcrafted_lpc_subframe():
     """LPC subframes (which the fixed-predictor encoder never emits)
     decode correctly: order-2 coefficients [2, -1] at shift 0 replicate
     the fixed-2 predictor, so a linear ramp has all-zero residuals."""
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     n = 12
     ramp = np.arange(40, 40 + n, dtype=np.int64)
@@ -325,7 +325,7 @@ def test_flac_decodes_stereo_decorrelation_modes():
     """left/side, right/side and mid/side channel assignments (never
     emitted by the independent-channels encoder) reconstruct the
     original stereo pair; the side channel carries its extra bit."""
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     n = 8
     left, right = 1000, -25
@@ -360,23 +360,23 @@ def test_decoders_reject_garbage_without_hanging(seed, size, codec):
     rng = np.random.RandomState(seed)
     junk = rng.randint(0, 256, size=size, dtype=np.uint8).tobytes()
     if codec == "jpeg":
-        from trollflow2_spark.sinks.jpeg import decode_jpeg
+        from trollflow2_spark.extensions.jpeg import decode_jpeg
 
         blob = b"\xff\xd8" + junk
         decode = decode_jpeg
     elif codec == "flac":
-        from trollflow2_spark.sinks.flac import decode_flac
+        from trollflow2_spark.extensions.flac import decode_flac
 
         blob = b"fLaC" + junk
         decode = decode_flac
     elif codec == "webp":
-        from trollflow2_spark.sinks.webp import decode_webp
+        from trollflow2_spark.extensions.webp import decode_webp
 
         blob = (b"RIFF" + (len(junk) + 10).to_bytes(4, "little") + b"WEBP"
                 + b"VP8L" + len(junk).to_bytes(4, "little") + b"\x2f" + junk)
         decode = decode_webp
     else:
-        from trollflow2_spark.sources.warc import parse_warc_bytes
+        from trollflow2_spark.extensions.warc import parse_warc_bytes
 
         blob = b"WARC/1.0\r\n" + junk
         decode = lambda b: parse_warc_bytes(b, "fuzz")  # noqa: E731
@@ -391,7 +391,7 @@ def test_corrupt_flac_quarantines_in_decode_media(spark):
     (on_error='null'): id kept, every feature column NULL, good rows
     unaffected."""
     from trollflow2_spark.extensions.multimodal import decode_media
-    from trollflow2_spark.sinks.flac import encode_flac
+    from trollflow2_spark.extensions.flac import encode_flac
 
     good = encode_flac(np.arange(100, dtype=np.int64), 8000, 16)
     bad = good[:40] + b"\x00" * 10
@@ -411,7 +411,7 @@ def test_flac_rejects_corrupt_crc():
     """A flipped bit in the frame payload fails the CRC-16 check."""
     import pytest as _pytest
 
-    from trollflow2_spark.sinks import flac
+    from trollflow2_spark.extensions import flac
 
     s = np.arange(0, 200, dtype=np.int64)
     blob = bytearray(flac.encode_flac(s, 8000, 16, block_size=256))
@@ -427,7 +427,7 @@ def test_webp_bitflip_terminates(seed, h, w, nflip):
     """Byte corruption inside a valid VP8L stream must terminate —
     raise, or decode to wrong pixels with in-range dimensions — never
     hang (the executor-quarantine property)."""
-    from trollflow2_spark.sinks.webp import decode_webp, encode_webp_lossless
+    from trollflow2_spark.extensions.webp import decode_webp, encode_webp_lossless
 
     rng = np.random.RandomState(seed)
     arr = rng.randint(0, 256, (h, w, 3), np.uint8)
@@ -448,7 +448,7 @@ def test_bmp_pnm_roundtrip_properties():
     import numpy as np
     import pytest
 
-    from trollflow2_spark.sinks.bmp import (
+    from trollflow2_spark.extensions.bmp import (
         decode_bmp,
         decode_pnm,
         encode_bmp,
@@ -549,7 +549,7 @@ def test_ico_decode_properties():
     import numpy as np
     import pytest
 
-    from trollflow2_spark.sinks.bmp import decode_ico, encode_ico
+    from trollflow2_spark.extensions.bmp import decode_ico, encode_ico
     from trollflow2_spark.sinks.imagery import encode_png
 
     rng = np.random.RandomState(4)

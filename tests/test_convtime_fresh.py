@@ -5,7 +5,7 @@ import datetime
 
 from pyspark.sql import Row, functions as F
 
-from trollflow2_spark.operators.windows import conversion_time_stats
+from trollflow2_spark.extensions.windows import conversion_time_stats
 
 
 def _t(m):

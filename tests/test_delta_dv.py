@@ -8,7 +8,7 @@ import zlib
 
 import pytest
 
-from trollflow2_spark.sources.roaring import (
+from trollflow2_spark.extensions.roaring import (
     RoaringError,
     decode_dv_data,
     decode_dv_file_at,
@@ -395,7 +395,7 @@ class TestRoaringProperty:
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
-        from trollflow2_spark.sources.roaring import (
+        from trollflow2_spark.extensions.roaring import (
             decode_rbm_array,
             encode_rbm_array,
         )
@@ -421,7 +421,7 @@ class TestRoaringProperty:
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
-        from trollflow2_spark.sources.roaring import (
+        from trollflow2_spark.extensions.roaring import (
             decode_dv_inline,
             encode_dv_data,
             z85_encode,
@@ -442,7 +442,7 @@ class TestRoaringProperty:
         never IndexError/struct.error — the quarantine contract."""
         import pytest as _pytest
 
-        from trollflow2_spark.sources.roaring import (
+        from trollflow2_spark.extensions.roaring import (
             RoaringError,
             decode_rbm_array,
             encode_rbm_array,

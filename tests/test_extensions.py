@@ -202,64 +202,13 @@ def test_quality_and_lang(docs):
     assert lang[4] == "de"
 
 
-def test_read_corpus_jsonl_csv_with_quarantine(spark, sf_dir, tmp_path):
-    """JSONL/CSV ingestion: explicit schema, corrupt lines quarantined
-    into the rejects side instead of killing the read."""
-    import os
-    from trollflow2_spark.sources.corpus import read_corpus
-
-    ref = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .limit(50)
-        .cache()
-    )
-    jl = str(tmp_path / "dump.jsonl")
-    ref.coalesce(1).write.json(jl)
-    # a malformed shard arrives alongside the good ones
-    with open(os.path.join(jl, "part-bad.json"), "w") as fh:
-        fh.write('{"doc_id": broken\n')
-    docs, rejects = read_corpus(spark, jl, format="jsonl")
-    assert docs.count() == 50
-    assert rejects.count() == 1
-    got = {r["doc_id"]: r["text"] for r in docs.collect()}
-    want = {r["doc_id"]: r["text"] for r in ref.collect()}
-    assert got == want
-
-    cs = str(tmp_path / "dump.csv")
-    ref.select("doc_id", "text", "lang", "source", "n_chars").coalesce(1) \
-        .write.option("header", "true").csv(cs)
-    docs2, rejects2 = read_corpus(spark, cs, format="csv")
-    assert docs2.count() == 50 and rejects2.count() == 0
-    assert {r["doc_id"]: r["text"] for r in docs2.collect()} == want
-
-
-def test_read_corpus_gzip_jsonl(spark, tmp_path):
-    """Compressed crawl shards read transparently through the codec
-    (gzip: one task per file — shards, not one big dump)."""
-    import gzip
-    import json as _json
-    import os
-
-    from trollflow2_spark.sources.corpus import read_corpus
-
-    d = str(tmp_path / "gz")
-    os.makedirs(d)
-    with gzip.open(os.path.join(d, "shard-0.json.gz"), "wt") as fh:
-        for i in range(10):
-            fh.write(_json.dumps({"doc_id": i, "text": f"doc {i}", "lang": "en",
-                                  "source": "s", "n_chars": 5}) + "\n")
-    docs, rejects = read_corpus(spark, d, format="jsonl")
-    assert docs.count() == 10 and rejects.count() == 0
-    assert docs.filter("doc_id = 3").collect()[0]["text"] == "doc 3"
-
-
 def test_global_shuffle_matches_global_ordinal(spark, sf_dir):
     """The bucketed parallel ordinal must equal the plain global
     row_number over (hash, id) — and be a permutation of 1..N."""
     import os
     from pyspark.sql import Window
     from trollflow2_spark.extensions.sampling import ORD_HASH_MOD, global_shuffle
-    from trollflow2_spark.functions.hashing import hash64
+    from trollflow2_spark.extensions.hashing import hash64
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id"
@@ -599,7 +548,7 @@ def test_multimodal_stub_raises_without_fake(spark, sf_dir):
 def test_fast_hash_mode_same_dups_no_md5(docs):
     """The injectable xxhash64 path must find the same exact-dup
     collisions as the portable hash and keep md5 out of the plan."""
-    from trollflow2_spark.functions.hashing import fast_hash64
+    from trollflow2_spark.extensions.hashing import fast_hash64
 
     sigs = minhash_signatures(docs, shingle_words=2, num_hashes=8, hash_fn=fast_hash64)
     pairs = lsh_candidate_pairs(sigs, num_hashes=8, bands=4, hash_fn=fast_hash64)
@@ -997,7 +946,7 @@ def test_decode_and_resize_media_real_jpeg_route(spark):
     import numpy as np
 
     from trollflow2_spark.extensions.multimodal import decode_media, resize_media
-    from trollflow2_spark.sinks.jpeg import decode_jpeg, encode_jpeg_gray
+    from trollflow2_spark.extensions.jpeg import decode_jpeg, encode_jpeg_gray
 
     blob = encode_jpeg_gray(np.full((16, 8), 200, dtype=np.uint8), quality=50)
     df = spark.createDataFrame(
@@ -1023,7 +972,7 @@ def test_decode_media_color_jpeg_channels(spark):
     import numpy as np
 
     from trollflow2_spark.extensions.multimodal import decode_media
-    from trollflow2_spark.sinks.jpeg import encode_jpeg
+    from trollflow2_spark.extensions.jpeg import encode_jpeg
 
     blob = encode_jpeg(
         np.full((16, 32, 3), 100, dtype=np.uint8), quality=50, subsample="420"
@@ -1046,7 +995,7 @@ def test_frame_sample_real_mjpeg(spark):
     import numpy as np
 
     from trollflow2_spark.extensions.multimodal import frame_sample
-    from trollflow2_spark.sinks.jpeg import encode_jpeg_gray
+    from trollflow2_spark.extensions.jpeg import encode_jpeg_gray
 
     frames = [np.full((8, 8), 20 * (f + 1), dtype=np.uint8) for f in range(5)]
     blob = b"".join(encode_jpeg_gray(f, quality=50) for f in frames)
@@ -1067,7 +1016,7 @@ def test_decode_media_quarantines_corrupt_tiff_and_jpeg(spark):
 
     from trollflow2_spark.extensions.multimodal import decode_media
     from trollflow2_spark.sinks.imagery import encode_geotiff
-    from trollflow2_spark.sinks.jpeg import encode_jpeg_gray
+    from trollflow2_spark.extensions.jpeg import encode_jpeg_gray
 
     tif = encode_geotiff(np.full((3, 4), 9, dtype=np.uint8))
     jpg = encode_jpeg_gray(np.full((8, 8), 50, dtype=np.uint8), quality=50)
@@ -1303,7 +1252,7 @@ def test_decode_media_real_webp_route_and_quarantine(spark):
     import numpy as np
 
     from trollflow2_spark.extensions.multimodal import decode_media
-    from trollflow2_spark.sinks.webp import encode_webp_lossless
+    from trollflow2_spark.extensions.webp import encode_webp_lossless
 
     good = encode_webp_lossless(np.full((3, 4), 7, dtype=np.uint8))
     lossy = (
@@ -1339,7 +1288,7 @@ def test_resize_media_real_webp_route(spark):
     import numpy as np
 
     from trollflow2_spark.extensions.multimodal import resize_media
-    from trollflow2_spark.sinks.webp import decode_webp, encode_webp_lossless
+    from trollflow2_spark.extensions.webp import decode_webp, encode_webp_lossless
 
     src = (np.arange(6 * 8) % 256).astype(np.uint8).reshape(6, 8)
     blob = encode_webp_lossless(src)
@@ -1373,7 +1322,7 @@ def test_contamination_bloom_prunes_and_matches_exact(spark, sf_dir):
         contamination_scores,
         contamination_scores_bloom,
     )
-    from trollflow2_spark.functions.hashing import hash64, word_shingles
+    from trollflow2_spark.extensions.hashing import hash64, word_shingles
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     corpus = docs.filter(F.col("doc_id") % 7 != 3)
@@ -2568,7 +2517,7 @@ def test_script_mixing_and_meta_robots(spark):
     from pyspark.sql import functions as F
 
     from trollflow2_spark.extensions.text import script_mixing_audit
-    from trollflow2_spark.sources.warc import meta_robots_flags
+    from trollflow2_spark.extensions.warc import meta_robots_flags
 
     # homoglyph plant: 'пример' is pure Cyrillic (not mixed), 'sаle'
     # hides a Cyrillic а inside a Latin word (mixed + confusable)

@@ -1,9 +1,9 @@
-"""Grid-bucketed radius join (`operators/geo.py`)."""
+"""Grid-bucketed radius join (`extensions/geo.py`)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from trollflow2_spark.operators.geo import geo_radius_join, haversine_km
+from trollflow2_spark.extensions.geo import geo_radius_join, haversine_km
 
 
 def _brute(spark, points, sites, radius):
@@ -120,7 +120,7 @@ def test_plan_is_hash_join_and_fixture_margin(spark, sf_dir):
 def test_point_in_polygon_degenerate_polygon_raises(spark):
     import pytest as _pytest
 
-    from trollflow2_spark.operators.geo import point_in_polygon
+    from trollflow2_spark.extensions.geo import point_in_polygon
 
     pts = spark.createDataFrame([(0.5, 0.5)], ["lon", "lat"])
     with _pytest.raises(ValueError, match="non-horizontal"):
@@ -132,7 +132,7 @@ def test_point_in_polygon_degenerate_polygon_raises(spark):
 def test_spatial_join_pip_semantics(spark):
     from pyspark.sql import Row
 
-    from trollflow2_spark.operators.geo import (
+    from trollflow2_spark.extensions.geo import (
         spatial_join_points_in_polygons,
     )
 
@@ -165,7 +165,7 @@ def test_spatial_join_pip_semantics(spark):
 def test_spatial_join_pip_hole_via_parity(spark):
     from pyspark.sql import Row
 
-    from trollflow2_spark.operators.geo import (
+    from trollflow2_spark.extensions.geo import (
         spatial_join_points_in_polygons,
     )
 
@@ -188,7 +188,7 @@ def test_spatial_join_pip_hole_via_parity(spark):
 def test_spatial_join_pip_degenerate_ring_fails_loudly(spark):
     from pyspark.sql import Row
 
-    from trollflow2_spark.operators.geo import (
+    from trollflow2_spark.extensions.geo import (
         spatial_join_points_in_polygons,
     )
 

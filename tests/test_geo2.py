@@ -4,7 +4,7 @@ point-in-polygon tagging and pure-Column geohash encoding."""
 from pyspark.sql import Row, functions as F
 
 from trollflow2_spark.functions.geometry import geohash_encode
-from trollflow2_spark.operators.geo import point_in_polygon
+from trollflow2_spark.extensions.geo import point_in_polygon
 from trollflow2_spark import qconst as C
 
 

@@ -1,5 +1,5 @@
 """Semantics tests for the GeoJSON feature reader
-(`sources/geojson.py`): bbox recursion, shoelace areas with holes,
+(`extensions/geojson.py`): bbox recursion, shoelace areas with holes,
 RFC 7946 winding audit, malformed-feature taxonomy."""
 
 import json
@@ -7,7 +7,7 @@ import json
 import pytest
 from pyspark.sql import Row
 
-from trollflow2_spark.sources.geojson import feature_metrics, read_geojson
+from trollflow2_spark.extensions.geojson import feature_metrics, read_geojson
 
 
 def _feat(geom, props=None):
@@ -111,7 +111,7 @@ def test_spark_reader_quarantine(spark):
 def test_multipolygon_all_exterior_rings_audited():
     """ccw = 1 only if EVERY exterior ring winds CCW; holes never
     participate in the audit."""
-    from trollflow2_spark.sources.geojson import feature_metrics
+    from trollflow2_spark.extensions.geojson import feature_metrics
 
     sq = lambda x: [[x, 0], [x + 1, 0], [x + 1, 1], [x, 1], [x, 0]]  # noqa: E731
     both_ccw = {

@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from trollflow2_spark.sinks import gif
+from trollflow2_spark.extensions import gif
 
 dims = st.integers(min_value=1, max_value=17)
 
@@ -225,7 +225,7 @@ def test_gif_out_of_table_transparent_index_decodes():
 
     import numpy as np
 
-    from trollflow2_spark.sinks.gif import (
+    from trollflow2_spark.extensions.gif import (
         _encode_frame_block,
         decode_gif,
     )

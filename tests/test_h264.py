@@ -15,8 +15,8 @@ from fractions import Fraction
 import numpy as np
 import pytest
 
-from trollflow2_spark.sinks import h264 as H
-from trollflow2_spark.sinks import h264_tables as T
+from trollflow2_spark.extensions import h264 as H
+from trollflow2_spark.extensions import h264_tables as T
 
 
 # --- table structure ---------------------------------------------------------

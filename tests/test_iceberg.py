@@ -5,8 +5,8 @@ import json
 import pytest
 from pyspark.sql import Row
 
-from trollflow2_spark.sources.avro import write_container
-from trollflow2_spark.sources.iceberg import (
+from trollflow2_spark.extensions.avro import write_container
+from trollflow2_spark.extensions.iceberg import (
     MANIFEST_LIST_SCHEMA,
     MANIFEST_SCHEMA,
     parse_table_metadata,
@@ -101,7 +101,7 @@ def test_missing_manifest_list_fails_loudly(spark):
 
 
 def _mlist_v2(entries):
-    from trollflow2_spark.sources.iceberg import MANIFEST_LIST_V2_SCHEMA
+    from trollflow2_spark.extensions.iceberg import MANIFEST_LIST_V2_SCHEMA
 
     return write_container(
         [
@@ -118,7 +118,7 @@ def _mlist_v2(entries):
 
 
 def _del_manifest(entries):
-    from trollflow2_spark.sources.iceberg import DELETE_MANIFEST_SCHEMA
+    from trollflow2_spark.extensions.iceberg import DELETE_MANIFEST_SCHEMA
 
     return write_container(
         [
@@ -136,7 +136,7 @@ def _del_manifest(entries):
 
 
 def _pos_deletes(rows):
-    from trollflow2_spark.sources.iceberg import POSITION_DELETE_SCHEMA
+    from trollflow2_spark.extensions.iceberg import POSITION_DELETE_SCHEMA
 
     return write_container(
         [{"file_path": f, "pos": p} for f, p in rows],
@@ -229,7 +229,7 @@ def test_v1_lists_still_decode_as_data_manifests(spark):
 
 
 def test_snapshot_as_of_timestamp():
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.iceberg import (
         parse_table_metadata,
         snapshot_as_of,
     )
@@ -401,7 +401,7 @@ def test_expire_snapshots_plan_reachability(spark):
     """Shared files must survive: only files reachable SOLELY from
     expired snapshots become deletable; keep_last and current are
     always retained; no expiry -> empty plan."""
-    from trollflow2_spark.sources.iceberg import expire_snapshots_plan
+    from trollflow2_spark.extensions.iceberg import expire_snapshots_plan
 
     m_old = write_container(
         [_entry(1, "a", "p0"), _entry(1, "shared", "p0")],
@@ -449,7 +449,7 @@ def test_expire_snapshots_plan_reachability(spark):
 
 def test_murmur3_spec_vectors():
     """The Iceberg spec's published bucket-hash examples."""
-    from trollflow2_spark.functions.murmur3 import (
+    from trollflow2_spark.extensions.murmur3 import (
         iceberg_hash_long,
         iceberg_hash_string,
     )
@@ -463,8 +463,8 @@ def test_murmur3_spec_vectors():
 def test_partition_projection_semantics(spark):
     import datetime
 
-    from trollflow2_spark.functions.murmur3 import iceberg_bucket_long
-    from trollflow2_spark.sources.iceberg import partition_projection
+    from trollflow2_spark.extensions.murmur3 import iceberg_bucket_long
+    from trollflow2_spark.extensions.iceberg import partition_projection
 
     df = spark.createDataFrame(
         [

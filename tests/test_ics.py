@@ -1,4 +1,4 @@
-"""Conformance tests for the iCalendar reader (`sources/ics.py`):
+"""Conformance tests for the iCalendar reader (`extensions/ics.py`):
 unfolding, escaping, duration math, RRULE expansion semantics."""
 
 import datetime
@@ -6,7 +6,7 @@ import datetime
 import pytest
 from pyspark.sql import Row
 
-from trollflow2_spark.sources.ics import expand_rrule, parse_ics, read_ics
+from trollflow2_spark.extensions.ics import expand_rrule, parse_ics, read_ics
 
 
 def _cal(*event_lines):

@@ -4,7 +4,7 @@ import datetime
 
 from pyspark.sql import Row
 
-from trollflow2_spark.operators.windows import gaps_islands, peak_concurrency
+from trollflow2_spark.extensions.windows import gaps_islands, peak_concurrency
 
 
 def _islands(spark, seqs, min_length=1):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trollflow2_spark.extensions.classify import logreg_train_score
-from trollflow2_spark.functions.hashing import hash64
+from trollflow2_spark.extensions.hashing import hash64
 
 
 def _python_reference(rows, dim, iters, lr):

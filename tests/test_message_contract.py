@@ -365,3 +365,66 @@ def test_list_sensor_is_published_as_a_json_array(tmp_path):
             rb'{"topic":"/parquet/ar","message":"{\"uri\":\"/o/a.parquet\",\"uid\":\"a.parquet\",'
             rb'\"product\":\"p\",\"area\":\"ar\",\"format\":\"parquet\",\"size_bytes\":5,'
             rb'\"platform_name\":\"X\",\"sensor\":[\"viirs\",\"avhrr-3\"]}"}' b"\n")
+
+
+def _pattern_plist(tmp_path, fname_pattern):
+    return read_product_list(raw_string=PL_YAML.format(out_dir=tmp_path / "out").replace(
+        "{platform_name}_{productname}.{format}", fname_pattern))
+
+
+@pytest.mark.parametrize("field, pattern, value", [
+    ("orbit_number", "{orbit_number:05d}_{productname}.{format}", "12345"),
+    ("start_time", "{start_time:%Y%m%d}_{productname}.{format}", "not a time"),
+    ("start_time", "{start_time:%Y%m%d}_{productname}.{format}", 20240115),
+])
+def test_a_value_its_pattern_cannot_render_aborts_the_batch(
+    spark, tmp_path, field, pattern, value
+):
+    """A message value that does not fit its file name pattern's format
+    spec aborts the batch with a reason naming the field, before any
+    output or .tmp exists."""
+    message = {"type": "file", "uid": "bad", field: value,
+               "dataset": [{"uri": _scene(spark, tmp_path)}]}
+    summary = process_message(spark, message, _pattern_plist(tmp_path, pattern),
+                              [{"fun": "create_scene"}, {"fun": "save_datasets"}])
+    assert summary["status"] == "aborted"
+    (reason,) = summary["aborted_priorities"].values()
+    assert field in reason and repr(value) in reason
+    assert not os.path.exists(tmp_path / "out") or os.listdir(tmp_path / "out") == []
+
+
+@pytest.mark.parametrize("worker", [
+    {"fun": "format_decoration", "text": "orbit {orbit_number:05d}"},
+    {"fun": "publish", "topic_pattern": "/{orbit_number:05d}/{area}"},
+])
+def test_decoration_and_topic_patterns_abort_the_same_way(spark, tmp_path, worker):
+    message = {"type": "file", "uid": "bad", "orbit_number": "12345",
+               "dataset": [{"uri": _scene(spark, tmp_path)}]}
+    summary = process_message(spark, message, _plist(tmp_path),
+                              [{"fun": "create_scene"}, {"fun": "save_datasets"}, worker])
+    assert summary["status"] == "aborted"
+    (reason,) = summary["aborted_priorities"].values()
+    assert "orbit_number" in reason
+
+
+def test_daemon_handles_the_message_after_one_its_pattern_cannot_render(spark, tmp_path):
+    """Without on_crash an unrendered pattern used to end the listener;
+    now the bad message aborts and the next one is processed."""
+    scene = _scene(spark, tmp_path)
+    msg_dir = str(tmp_path / "messages")
+    _write(msg_dir, "m.json", *(
+        json.dumps({"type": "file", "uid": uid, "orbit_number": orbit,
+                    "dataset": [{"uri": scene}]})
+        for uid, orbit in (("bad", "12345"), ("good", 12345))
+    ))
+    summaries = {}
+    assert run_streaming(
+        spark, msg_dir,
+        _pattern_plist(tmp_path, "{uid}_{orbit_number:05d}_{productname}.{format}"),
+        str(tmp_path / "ckpt"),
+        workers=[{"fun": "create_scene"}, {"fun": "save_datasets"}],
+        available_now=True,
+        on_result=lambda m, s: summaries.__setitem__(m["uid"], s["status"]),
+    ).awaitTermination(120)
+    assert summaries == {"bad": "aborted", "good": "nominal"}
+    assert os.listdir(tmp_path / "out") == ["good_12345_p1.parquet"]

@@ -17,7 +17,7 @@ from trollflow2_spark.extensions.profile import (
     benford_audit,
     l_diversity_audit,
 )
-from trollflow2_spark.operators.windows import ewma_bounded
+from trollflow2_spark.extensions.windows import ewma_bounded
 
 
 def test_assoc_rules_counts_and_prune(spark):

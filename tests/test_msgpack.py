@@ -1,11 +1,11 @@
-"""From-scratch MessagePack reader/writer (`sources/msgpack.py`)."""
+"""From-scratch MessagePack reader/writer (`extensions/msgpack.py`)."""
 
 import math
 import struct
 
 import pytest
 
-from trollflow2_spark.sources.msgpack import MsgpackError, pack, unpack
+from trollflow2_spark.extensions.msgpack import MsgpackError, pack, unpack
 
 
 def test_int_boundaries_roundtrip():
@@ -92,7 +92,7 @@ def test_malformed_inputs():
 
 
 def test_read_msgpack_kernel(spark):
-    from trollflow2_spark.sources.msgpack import read_msgpack
+    from trollflow2_spark.extensions.msgpack import read_msgpack
 
     rows = [
         (1, pack({"x": 1, "raw": b"\xab"})),
@@ -107,14 +107,14 @@ def test_read_msgpack_kernel(spark):
     assert got[3]["json"] == '[1,"two",null]'
 
 
-# --- EML/MIME intake (sources/eml.py) — shares this file's
+# --- EML/MIME intake (extensions/eml.py) — shares this file's
 # binary-intake fixtures style ---
 
 
 def test_read_eml_paths(spark):
     """Multipart with qp+base64, RFC 2047 subject, single-part,
     nested multipart/alternative, and junk bytes -> error row."""
-    from trollflow2_spark.sources.eml import read_eml
+    from trollflow2_spark.extensions.eml import read_eml
 
     multi = (
         b"From: a@x.org\r\nSubject: =?utf-8?b?SMOpbGxv?=\r\n"

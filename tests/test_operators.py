@@ -10,7 +10,7 @@ from trollflow2_spark.operators.resample import (
     weighted_resample_1d,
 )
 from trollflow2_spark.operators.transforms import block_aggregate
-from trollflow2_spark.operators.windows import top1_per_group, topk_per_group
+from trollflow2_spark.extensions.windows import top1_per_group, topk_per_group
 
 
 def test_block_aggregate_2x2(spark):
@@ -144,7 +144,7 @@ def test_funnel_stages_strict_order(spark):
     """Steps only count after the previous one: a view BEFORE the first
     click is ignored; ties at one timestamp resolve by type string."""
     from datetime import datetime
-    from trollflow2_spark.operators.windows import funnel_stages
+    from trollflow2_spark.extensions.windows import funnel_stages
 
     t = lambda s: datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
     rows = [
@@ -171,7 +171,7 @@ def test_salted_agg_matches_plain_groupby(spark, sf_dir):
     groupBy (counts/min/max are decomposable)."""
     import os
     from pyspark.sql import functions as F
-    from trollflow2_spark.operators.skew import salted_agg
+    from trollflow2_spark.extensions.skew import salted_agg
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     hashed = docs.select(F.md5("text").alias("h"), "doc_id")
@@ -194,7 +194,7 @@ def test_salted_agg_matches_plain_groupby(spark, sf_dir):
 
 def test_salted_agg_rejects_non_decomposable(spark, sf_dir):
     import pytest as _pytest
-    from trollflow2_spark.operators.skew import salted_agg
+    from trollflow2_spark.extensions.skew import salted_agg
 
     with _pytest.raises(ValueError):
         salted_agg(spark.range(5), ["id"], {"a": ("avg", "id")})
@@ -242,7 +242,7 @@ def test_salted_agg_deterministic_salt(spark):
     match the plain groupBy."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.operators.skew import salted_agg
+    from trollflow2_spark.extensions.skew import salted_agg
 
     rows = [(i, "hot" if i % 3 else f"k{i % 11}") for i in range(2000)]
     df = spark.createDataFrame(rows, ["rid", "key"])
@@ -285,7 +285,7 @@ def test_sequence_fingerprint_salted_digest_chain(spark):
     import hashlib
     from collections import defaultdict
 
-    from trollflow2_spark.operators.skew import sequence_fingerprint
+    from trollflow2_spark.extensions.skew import sequence_fingerprint
 
     rows = [(i, -1 if i % 2 == 0 else i % 5, f"e{i % 7}") for i in range(1000)]
     df = spark.createDataFrame(rows, ["seq_id", "key", "val"])
@@ -328,7 +328,7 @@ def test_interval_join_semantics_and_plan(spark):
     BroadcastNestedLoopJoin a naive inequality join produces."""
     from datetime import datetime as DT
 
-    from trollflow2_spark.operators.interval import interval_join
+    from trollflow2_spark.extensions.interval import interval_join
 
     pts = spark.createDataFrame(
         [
@@ -365,7 +365,7 @@ def test_interval_join_semantics_and_plan(spark):
 def test_zorder_key_matches_python_reference(spark):
     """The Column-expression Morton interleave equals a bit-twiddling
     python reference over adversarial values (0, max, powers of two)."""
-    from trollflow2_spark.functions.zorder import zorder_key
+    from trollflow2_spark.extensions.zorder import zorder_key
 
     def ref(x, y, bits=16):
         out = 0
@@ -425,7 +425,7 @@ def test_zorder_write_clusters_both_dimensions(spark, tmp_path):
     per-file range at full width."""
     import numpy as np
 
-    from trollflow2_spark.functions.zorder import zorder_write
+    from trollflow2_spark.extensions.zorder import zorder_write
 
     rng = np.random.RandomState(7)
     n = 20_000
@@ -493,7 +493,7 @@ def test_interval_join_property_vs_bruteforce(spark):
         for j, (a, b) in enumerate(ivs_s)
         if a <= s <= b
     )
-    from trollflow2_spark.operators.interval import interval_join
+    from trollflow2_spark.extensions.interval import interval_join
 
     for width in (600, 3600, 50_000):
         got = sorted(
@@ -510,7 +510,7 @@ def test_downsample_ohlc_tie_semantics(spark):
     earliest reading, close the latest, and the agg is one pass."""
     from datetime import datetime as DT
 
-    from trollflow2_spark.operators.windows import downsample_ohlc
+    from trollflow2_spark.extensions.windows import downsample_ohlc
 
     t = DT(2024, 1, 1, 10, 15)
     rows = [

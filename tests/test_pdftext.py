@@ -24,7 +24,7 @@ def _pdf(content: bytes, extra: bytes = b"", flate: bool = False) -> bytes:
 
 
 def test_escapes_hex_octal_and_tj_arrays():
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     c = (
         rb"BT (a\(b\)c) Tj (l1\nl2) Tj (\101\61) Tj "
@@ -36,7 +36,7 @@ def test_escapes_hex_octal_and_tj_arrays():
 
 
 def test_flate_stream_and_nested_parens():
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     c = b"BT ((nested (deep)) ok) Tj ET"
     out = extract_pdf_text(_pdf(c, flate=True))
@@ -44,7 +44,7 @@ def test_flate_stream_and_nested_parens():
 
 
 def test_content_dict_quote_op_and_bad_hex():
-    from trollflow2_spark.sources.pdftext import _content_text
+    from trollflow2_spark.extensions.pdftext import _content_text
 
     # a <<...>> marked-content dict must not be parsed as a hex
     # string; the '"' show op must flush pending; an unterminated hex
@@ -86,7 +86,7 @@ def _cid_pdf(codes: list[int], with_cmap: bool = True) -> bytes:
 
 
 def test_cid_tounicode_decode():
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     # bfchar 'D', array-bfrange 'o'/'c', continuous bfrange digits
     codes = [1, 5, 6, 0x10 + 4, 0x10 + 2]  # D o c 4 2
@@ -99,7 +99,7 @@ def test_cid_tounicode_decode():
 
 
 def test_cid_without_cmap_suppressed():
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     out = extract_pdf_text(_cid_pdf([1, 5, 6], with_cmap=False))
     # no ToUnicode: nothing to decode with — text suppressed (never
@@ -109,7 +109,7 @@ def test_cid_without_cmap_suppressed():
 
 
 def test_tounicode_utf16_surrogates_and_multiunit():
-    from trollflow2_spark.sources.pdftext import parse_tounicode
+    from trollflow2_spark.extensions.pdftext import parse_tounicode
 
     cm = parse_tounicode(
         b"beginbfchar\n<0001> <D83DDE00>\n<0002> <00660066>\nendbfchar"
@@ -119,7 +119,7 @@ def test_tounicode_utf16_surrogates_and_multiunit():
 
 
 def test_cid_flag_and_non_pdf():
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     extra = b"5 0 obj << /Subtype /Type0 >> endobj\n"
     out = extract_pdf_text(_pdf(b"BT (x) Tj ET", extra=extra))
@@ -136,7 +136,7 @@ def test_objstm_unpacks_page_tree_and_fonts():
     ONLY inside a Flate /Type /ObjStm must resolve — pages counted,
     text extracted, CID fonts decoded through the packed font dict."""
     from trollflow2_spark.queries import _pdf_objstm_blob
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     m = extract_pdf_text(_pdf_objstm_blob(1))
     assert m["ok"] == 1 and m["version"] == "1.5"
@@ -149,7 +149,7 @@ def test_objstm_unpacks_page_tree_and_fonts():
 
 
 def test_objstm_malformed_header_yields_no_packed_objects():
-    from trollflow2_spark.sources.pdftext import _unpack_objstm
+    from trollflow2_spark.extensions.pdftext import _unpack_objstm
 
     assert _unpack_objstm(b"<< /Type /ObjStm >>", b"10 0 x") == []
     # header promises more pairs than the prelude carries
@@ -160,7 +160,7 @@ def test_objstm_malformed_header_yields_no_packed_objects():
 
 def test_encrypted_pdf_flagged_not_failed():
     from trollflow2_spark.queries import _pdf_objstm_blob
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     m = extract_pdf_text(_pdf_objstm_blob(6))
     assert m["ok"] == 1 and m["encrypted"] == 1
@@ -174,7 +174,7 @@ def test_encrypted_pdf_flagged_not_failed():
 def test_rc4_and_aes_published_vectors():
     """The from-scratch ciphers pin to published vectors: classic RC4
     pairs, the FIPS-197 AES-128 block, and an SP800-38A CBC block."""
-    from trollflow2_spark.sources.pdftext import (
+    from trollflow2_spark.extensions.pdftext import (
         _aes128_cbc_decrypt,
         _aes128_cbc_encrypt,
         _aes_decrypt_block,
@@ -211,7 +211,7 @@ def test_empty_password_decrypts_all_three_cipher_modes():
     fixtures all open with the empty user password and yield the
     planted text; the encrypted flag stays honest (=1)."""
     from trollflow2_spark.queries import _encrypted_pdf_blob
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     for d in (3, 1, 2):  # modes 0, 1, 2; none divisible by 7
         r = extract_pdf_text(_encrypted_pdf_blob(d))
@@ -224,7 +224,7 @@ def test_real_user_password_stays_suppressed():
     stays encrypted=1 with text suppressed but fully accounted —
     never a task failure."""
     from trollflow2_spark.queries import _encrypted_pdf_blob
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     for d in (0, 7, 14):  # locked docs across all three cipher modes
         r = extract_pdf_text(_encrypted_pdf_blob(d))
@@ -236,7 +236,7 @@ def test_malformed_encrypt_dict_stays_suppressed():
     """An /Encrypt dict without usable /O//U (the legacy fixture
     shape, and any unsupported /V) keeps the old behavior verbatim:
     encrypted=1, text empty."""
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     blob = (
         b"%PDF-1.4\n"
@@ -254,7 +254,7 @@ def test_malformed_encrypt_dict_stays_suppressed():
 def test_aes256_fips_vectors_and_hardened_hash_shape():
     """AES-256/192 pin to FIPS-197 known answers; the R6 hardened
     hash is deterministic, 32 bytes, and password/salt sensitive."""
-    from trollflow2_spark.sources.pdftext import (
+    from trollflow2_spark.extensions.pdftext import (
         _aes_cbc_decrypt_nopad,
         _aes_cbc_encrypt_nopad,
         _aes_decrypt_block,
@@ -289,7 +289,7 @@ def test_v5_r6_empty_password_opens_and_real_stays_locked():
     the content; a real user password stays suppressed. (Fixture
     doc_ids with d % 4 == 3 take the V5 path; 21 is locked AND V5.)"""
     from trollflow2_spark.queries import _encrypted_pdf_blob
-    from trollflow2_spark.sources.pdftext import extract_pdf_text
+    from trollflow2_spark.extensions.pdftext import extract_pdf_text
 
     for d in (3, 11, 15):  # open V5 docs
         r = extract_pdf_text(_encrypted_pdf_blob(d))
@@ -302,7 +302,7 @@ def test_v5_r6_empty_password_opens_and_real_stays_locked():
 def test_cipher_vectors_on_the_pure_python_route(monkeypatch):
     """The published-vector tests above also hold with the native
     backend absent (the stdlib-only route)."""
-    from trollflow2_spark.sources import pdftext
+    from trollflow2_spark.extensions import pdftext
 
     monkeypatch.setattr(pdftext, "_native", lambda: None)
     pdftext.pdf2_hardened_hash.cache_clear()
@@ -322,7 +322,7 @@ def test_import_leaves_cryptography_unloaded():
 
     code = (
         "import sys\n"
-        "import trollflow2_spark.sources.pdftext as p\n"
+        "import trollflow2_spark.extensions.pdftext as p\n"
         "before = 'cryptography' in sys.modules\n"
         "p._rc4(bytes(16), b'x')\n"
         "print(before, p._native() is None or 'cryptography' in sys.modules)\n"

@@ -852,6 +852,57 @@ product_list:
     assert len(both) == 2 and first < both
 
 
+def test_mapped_nearest_resamples_each_area_of_a_batch_onto_its_own_grid(
+    spark, tmp_path
+):
+    """One priority batch naming two target areas writes each area on its
+    own grid: 16 rows for the 4x4 area, 4 for the 2x2 one, the same rows
+    the 2x2 area writes when it is the batch's only area."""
+    import numpy as np
+
+    from trollflow2_spark.operators.resample import GridArea, register_area
+
+    register_area(GridArea("src8", width=8, height=8, dx=1.0, dy=1.0))
+    register_area(GridArea("tgt4", width=4, height=4, dx=2.0, dy=2.0))
+    register_area(GridArea("tgt2", width=2, height=2, dx=4.0, dy=4.0))
+    path = _write_netcdf(
+        tmp_path / "g.nc", {"v": np.arange(64, dtype="float64").reshape(8, 8)}
+    )
+    workers = [
+        {"fun": "create_scene", "reader": "netcdf"},
+        {"fun": "resample", "resampler": "nearest", "radius_of_influence": 4.0},
+        {"fun": "save_datasets"},
+    ]
+
+    def run(out, areas):
+        area_yaml = "".join(f"""
+    {area}:
+      products:
+        v:
+          productname: v
+          formats: [{{format: parquet, writer: parquet}}]""" for area in areas)
+        plist = read_product_list(raw_string=f"""
+product_list:
+  output_dir: "{tmp_path / out}"
+  fname_pattern: "{{area}}_{{productname}}.{{format}}"
+  areas:{area_yaml}
+""")
+        msg = {"type": "file", "uid": out, "uri": path, "source_area": "src8"}
+        summary = process_message(spark, msg, plist, workers)
+        assert summary["status"] == "nominal"
+        assert summary["aborted_priorities"] == {}
+        return {
+            area: sorted(
+                spark.read.parquet(str(tmp_path / out / f"{area}_v.parquet")).collect()
+            )
+            for area in areas
+        }
+
+    both = run("both", ["tgt4", "tgt2"])
+    assert [len(both["tgt4"]), len(both["tgt2"])] == [16, 4]
+    assert both["tgt2"] == run("alone", ["tgt2"])["tgt2"]
+
+
 def test_resample_plugin_ewa_radius_precedence(spark):
     """An explicit radius_of_influence must not be silently beaten by the
     *default* weight_distance_max=1.0; an explicit weight_distance_max

@@ -80,7 +80,7 @@ def test_bucketed_join_has_no_exchange(spark, sf):
     SCALE.md (Joins) path for recurring lineitem×orders-class joins."""
     import os
 
-    from trollflow2_spark.operators.bucketing import bucketed_join, write_bucketed
+    from trollflow2_spark.extensions.bucketing import bucketed_join, write_bucketed
 
     orders = spark.read.parquet(os.path.join(sf, "orders.parquet"))
     lineitem = spark.read.parquet(os.path.join(sf, "lineitem.parquet"))

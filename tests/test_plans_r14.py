@@ -16,7 +16,7 @@ def _formatted(df):
 
 
 def _dv_log(spark, n=40):
-    from trollflow2_spark.sources.roaring import encode_dv_data, z85_encode
+    from trollflow2_spark.extensions.roaring import encode_dv_data, z85_encode
 
     lines = []
     for d in range(n):
@@ -116,8 +116,8 @@ def test_equality_delete_scoping_broadcasts_delete_dim(spark):
 
     from pyspark.sql import Row as R
 
-    from trollflow2_spark.sources.avro import write_container
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.avro import write_container
+    from trollflow2_spark.extensions.iceberg import (
         MANIFEST_LIST_V2_SCHEMA,
         snapshot_partition_summary,
     )

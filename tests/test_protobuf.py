@@ -1,8 +1,8 @@
-"""Descriptor-free protobuf wire reader (`sources/protobuf.py`)."""
+"""Descriptor-free protobuf wire reader (`extensions/protobuf.py`)."""
 
 import pytest
 
-from trollflow2_spark.sources.protobuf import (
+from trollflow2_spark.extensions.protobuf import (
     ProtobufError,
     _key,
     _varint,
@@ -85,7 +85,7 @@ def test_malformed_inputs():
 
 
 def test_read_protobuf_kernel(spark):
-    from trollflow2_spark.sources.protobuf import read_protobuf
+    from trollflow2_spark.extensions.protobuf import read_protobuf
 
     rows = [
         (1, encode_message({"u": 3, "name": "a"}, SPEC)),

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from trollflow2_spark.sinks.qoi import QoiError, decode_qoi, encode_qoi
+from trollflow2_spark.extensions.qoi import QoiError, decode_qoi, encode_qoi
 
 
 def test_handcrafted_vector_all_ops():

@@ -6,7 +6,7 @@ import datetime
 from pyspark.sql import Row, functions as F
 
 from trollflow2_spark.extensions.mining import sequential_pattern_support
-from trollflow2_spark.operators.windows import clamped_running_balance
+from trollflow2_spark.extensions.windows import clamped_running_balance
 
 
 def _t(m):

@@ -6,7 +6,7 @@ import zlib
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from trollflow2_spark.sources.snappy import (
+from trollflow2_spark.extensions.snappy import (
     SnappyError,
     compress,
     decompress,
@@ -44,7 +44,7 @@ def test_overlapping_copy_is_rle():
 def test_long_literal_length_escape():
     data = bytes(range(256)) * 2  # 512 bytes, no 4-byte repeats? has;
     # force all-literal via direct emit: length 512 needs 2-byte escape
-    from trollflow2_spark.sources.snappy import (
+    from trollflow2_spark.extensions.snappy import (
         _emit_literal,
         _write_uvarint,
     )
@@ -91,7 +91,7 @@ def test_compressor_actually_compresses_repeats():
 
 
 def test_avro_container_snappy_roundtrip_and_crc():
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         AvroError,
         read_container,
         write_container,
@@ -118,14 +118,14 @@ def test_avro_container_snappy_roundtrip_and_crc():
 
 
 def test_crc_is_of_uncompressed_data():
-    from trollflow2_spark.sources.avro import write_container
+    from trollflow2_spark.extensions.avro import write_container
 
     schema = {"type": "record", "name": "R",
               "fields": [{"name": "x", "type": "long"}]}
     blob = write_container([{"x": 1}], schema, codec="snappy")
     # last 16 bytes are the sync marker; the 4 before that are the CRC
     crc = int.from_bytes(blob[-20:-16], "big")
-    from trollflow2_spark.sources.avro import _encode
+    from trollflow2_spark.extensions.avro import _encode
 
     payload = _encode(schema, {"x": 1})
     assert crc == zlib.crc32(payload)

@@ -1,5 +1,5 @@
 """Conformance tests for the from-scratch SQLite b-tree reader
-(`sources/sqlitefile.py`) — the stdlib sqlite3 module is the
+(`extensions/sqlitefile.py`) — the stdlib sqlite3 module is the
 reference implementation the parser is pinned against."""
 
 import sqlite3
@@ -7,7 +7,7 @@ import sqlite3
 import pytest
 from pyspark.sql import Row, functions as F
 
-from trollflow2_spark.sources.sqlitefile import (
+from trollflow2_spark.extensions.sqlitefile import (
     parse_sqlite,
     read_sqlite_blobs,
     write_sqlite_blob,

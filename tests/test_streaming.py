@@ -511,7 +511,7 @@ def test_streaming_url_dedup_on_canonical_key(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import canonicalize_url
+    from trollflow2_spark.extensions.warc import canonicalize_url
 
     src_dir = str(tmp_path / "frontier_in")
     os.makedirs(src_dir)

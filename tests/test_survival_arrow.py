@@ -9,7 +9,7 @@ from trollflow2_spark.extensions.profile import (
     survival_curve,
     weighted_median,
 )
-from trollflow2_spark.sources.arrowipc import read_arrow_ipc, write_ipc_blob
+from trollflow2_spark.extensions.arrowipc import read_arrow_ipc, write_ipc_blob
 
 
 def test_km_known_curve(spark):

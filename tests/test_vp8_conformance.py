@@ -24,7 +24,7 @@ import ctypes.util
 import numpy as np
 import pytest
 
-from trollflow2_spark.sinks import vp8 as V
+from trollflow2_spark.extensions import vp8 as V
 
 
 def _load_libwebp():
@@ -213,8 +213,8 @@ def test_every_bmode_every_context_row():
 def test_closed_form_dc_fixture_is_exact():
     """The contract-query fixture: one-MB DC-only frames reconstruct to
     the closed-form constant the oracle computes."""
-    from trollflow2_spark.sinks.vp8_tables import DC_QLOOKUP
-    from trollflow2_spark.sinks.webp import decode_webp
+    from trollflow2_spark.extensions.vp8_tables import DC_QLOOKUP
+    from trollflow2_spark.extensions.webp import decode_webp
 
     dcq2 = DC_QLOOKUP[40] * 2
     for v in range(-4, 5):

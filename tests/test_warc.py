@@ -7,7 +7,7 @@ import gzip
 import pytest
 from pyspark.sql import functions as F
 
-from trollflow2_spark.sources.warc import (
+from trollflow2_spark.extensions.warc import (
     gunzip_members,
     html_to_text,
     parse_warc_bytes,
@@ -88,7 +88,7 @@ def test_canonicalize_url_edges(spark):
     path case preserved, all-tracking query drops the '?', fragments
     stripped even without a query, already-canonical input is a fixed
     point."""
-    from trollflow2_spark.sources.warc import canonicalize_url
+    from trollflow2_spark.extensions.warc import canonicalize_url
 
     cases = [
         ("http://Example.com:8080/A/B?b=2&a=1",
@@ -112,7 +112,7 @@ def test_registrable_domain_edges(spark):
     style suffixes, deep subdomains collapse, ports stripped, single
     labels pass through, a bare two-label public suffix stays itself
     (no fourth label to promote)."""
-    from trollflow2_spark.sources.warc import host_of_url, registrable_domain
+    from trollflow2_spark.extensions.warc import host_of_url, registrable_domain
 
     cases = [
         ("www.site3.com", "site3.com"),
@@ -158,7 +158,7 @@ def test_http_body_content_encodings_decode():
     import gzip
     import zlib
 
-    from trollflow2_spark.sources.warc import _parse_http
+    from trollflow2_spark.extensions.warc import _parse_http
     from trollflow2_spark.sources.zstdcodec import zstd_compress_store
 
     plain = b"<p>hello encoded world</p>"
@@ -187,88 +187,12 @@ def test_http_body_content_encodings_decode():
     assert _parse_http(payload)[2] == b"not-gzip"
 
 
-def test_warc_python_datasource(spark, tmp_path):
-    """spark.read.format('warc'): the registered Python DataSource
-    yields the same rows as the binaryFile+mapInPandas composition
-    (shared parser), with one input partition per file."""
-    import gzip
-
-    from trollflow2_spark.sources.warc import read_warc
-    from trollflow2_spark.sources.warc_datasource import register_warc
-
-    def rec(uri: bytes, body: bytes) -> bytes:
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-            b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n"
-            + body
-        )
-        return (
-            b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: " + uri
-            + b"\r\nContent-Length: " + str(len(http)).encode()
-            + b"\r\n\r\n" + http + b"\r\n\r\n"
-        )
-
-    d = tmp_path / "crawl"
-    d.mkdir()
-    (d / "a.warc.gz").write_bytes(
-        gzip.compress(rec(b"http://a/1", b"<p>alpha</p>"))
-    )
-    (d / "b.warc.gz").write_bytes(
-        gzip.compress(
-            rec(b"http://b/1", b"<p>beta</p>")
-            + rec(b"http://b/2", b"<p>gamma</p>")
-        )
-    )
-
-    register_warc(spark)
-    via_ds = spark.read.format("warc").load(str(d))
-    assert via_ds.rdd.getNumPartitions() == 2  # one per file
-    ds_rows = {
-        (r["warc_target_uri"], bytes(r["payload"]))
-        for r in via_ds.collect()
-    }
-    ref_rows = {
-        (r["warc_target_uri"], bytes(r["payload"]))
-        for r in read_warc(spark, str(d)).collect()
-    }
-    assert ds_rows == ref_rows
-    assert ds_rows == {
-        ("http://a/1", b"<p>alpha</p>"),
-        ("http://b/1", b"<p>beta</p>"),
-        ("http://b/2", b"<p>gamma</p>"),
-    }
-    # glob load paths work too
-    assert (
-        spark.read.format("warc").load(str(d / "*.warc.gz")).count() == 3
-    )
-    # wildcards in NON-terminal components: match one directory level
-    d2 = tmp_path / "multi" / "2024-01"
-    d2.mkdir(parents=True)
-    (d2 / "p.warc.gz").write_bytes(
-        gzip.compress(rec(b"http://m/1", b"<p>m1</p>"))
-    )
-    d3 = tmp_path / "multi" / "2024-02" / "deep"
-    d3.mkdir(parents=True)
-    (d3 / "p.warc.gz").write_bytes(
-        gzip.compress(rec(b"http://m/2", b"<p>m2</p>"))
-    )
-    pat = str(tmp_path / "multi" / "2024-*" / "p.warc.gz")
-    got = spark.read.format("warc").load(pat)
-    # the * spans exactly one level: the deep file does not match
-    assert [r["warc_target_uri"] for r in got.collect()] == ["http://m/1"]
-    # multi-path load: both directories in one scan
-    both = spark.read.format("warc").load(
-        [str(d2), str(tmp_path / "multi" / "2024-02")]
-    )
-    assert both.count() == 2
-
-
 def test_html_to_markdown_structures(spark):
     """Headings, links, lists, emphasis and noise removal in one page;
     nested inline tags inside a link keep their markers."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import html_to_markdown
+    from trollflow2_spark.extensions.warc import html_to_markdown
 
     html = (
         "<h2>Sub</h2><p>a<br>b</p>"
@@ -285,7 +209,7 @@ def test_html_to_markdown_structures(spark):
 def test_feed_urls_four_dialects(spark):
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import feed_urls
+    from trollflow2_spark.extensions.warc import feed_urls
 
     rows = [
         (1, '<urlset xmlns="x"><url><loc> https://a.com/1 </loc>'
@@ -319,7 +243,7 @@ def test_main_content_density_rule(spark):
     survive; a NULL page degrades to empty output."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import main_content_blocks
+    from trollflow2_spark.extensions.warc import main_content_blocks
 
     pages = spark.createDataFrame(
         [
@@ -351,7 +275,7 @@ def test_main_content_density_rule(spark):
 def test_url_spam_features_signals_and_verdict(spark):
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import url_spam_features
+    from trollflow2_spark.extensions.warc import url_spam_features
 
     rows = [
         (1, "https://example.com/a/b"),
@@ -382,7 +306,7 @@ def test_resolve_charset_order_and_labels():
     """Resolution order header -> meta -> BOM -> default; WHATWG label
     folding (iso-8859-1/latin1/ascii declare -> cp1252); unknown labels
     fall through to the next source."""
-    from trollflow2_spark.sources.warc import resolve_charset
+    from trollflow2_spark.extensions.warc import resolve_charset
 
     body_meta = b'<html><head><meta charset="shift_jis"></head></html>'
     # header beats meta
@@ -419,7 +343,7 @@ def test_resolve_charset_order_and_labels():
 def test_decode_payload_text_flags_lying_charsets():
     """Bytes that betray the declaration decode with U+FFFD and
     decode_ok=0 — never a task failure; BOMs are stripped."""
-    from trollflow2_spark.sources.warc import decode_payload_text
+    from trollflow2_spark.extensions.warc import decode_payload_text
 
     # honest cp1252
     t, cs, src, ok = decode_payload_text(
@@ -453,7 +377,7 @@ def test_decoded_text_raises_encoding_keep_rate(spark):
     from pyspark.sql import functions as F
 
     from trollflow2_spark.extensions.text import encoding_quality
-    from trollflow2_spark.sources.warc import decoded_text
+    from trollflow2_spark.extensions.warc import decoded_text
 
     rows = []
     for d in range(20):
@@ -503,7 +427,7 @@ def test_robots_pattern_match_vs_regex_reference(spark):
     runs, and patterns longer than the path."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import robots_pattern_match
+    from trollflow2_spark.extensions.warc import robots_pattern_match
 
     pats = ["/", "/p/", "/p/*.html$", "/p/1", "/p/1$", "*", "/*/",
             "/a*b$", "/a*b*c$", "/a**b", "/p/*", "$", "/x$",
@@ -531,7 +455,7 @@ def test_robots_allowed_rfc9309_semantics(spark):
     unmatched paths default to allowed; empty Disallow is a no-op."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         parse_robots_rules,
         robots_allowed,
     )
@@ -567,7 +491,7 @@ def test_detected_utf8_overrides_lying_single_byte_header():
     decoded as UTF-8, with charset_source='detected'; a REAL cp1252
     payload (invalid as UTF-8) keeps its declared codec; pure-ASCII
     bodies never trigger detection (both codecs agree anyway)."""
-    from trollflow2_spark.sources.warc import decode_payload_text
+    from trollflow2_spark.extensions.warc import decode_payload_text
 
     t, cs, src, ok = decode_payload_text(
         "übergröße 中".encode("utf-8"), "text/html; charset=iso-8859-1"
@@ -589,7 +513,7 @@ def test_jsonld_metadata_classes(spark):
     JSON -> has_jsonld 1 with NULL fields (the quarantine signal)."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import jsonld_metadata
+    from trollflow2_spark.extensions.warc import jsonld_metadata
 
     good = ('{"@type":"Article","headline":"H1","datePublished":'
             '"2024-01-02","author":{"@type":"Person","name":"A"},'
@@ -622,7 +546,7 @@ def test_jsonld_metadata_classes(spark):
 def test_html_table_rows_first_table_and_entities(spark):
     """Only the FIRST table extracts; th rows flag is_header; cell
     tags strip and entities decode; table-less pages yield nothing."""
-    from trollflow2_spark.sources.warc import html_table_rows
+    from trollflow2_spark.extensions.warc import html_table_rows
 
     html = ("<html><table><tr><th>K</th><th>V</th></tr>"
             "<tr><td><b>a</b> &amp; b</td><td>1 &lt; 2</td></tr>"
@@ -646,7 +570,7 @@ def test_robots_sitemaps_directive(spark):
     on the URL, in file order, from anywhere in the file."""
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.sources.warc import robots_sitemaps
+    from trollflow2_spark.extensions.warc import robots_sitemaps
 
     body = (
         "User-agent: *\nDisallow: /a\n"
@@ -666,7 +590,7 @@ def test_robots_sitemaps_directive(spark):
 def test_fetch_schedule_politeness_invariants(spark):
     """One worker per domain (affinity), slots follow priority order,
     offsets step by the domain's delay."""
-    from trollflow2_spark.sources.warc import fetch_schedule
+    from trollflow2_spark.extensions.warc import fetch_schedule
 
     rows = [
         ("a.com", "https://a.com/1", 10, 2),

@@ -18,7 +18,7 @@ under fully-transparent pixels (alpha-cleanup; ``exact`` is off), and
 a conformant decoder must reproduce the stream, not the input.
 
 Skipped wholesale when libwebp is absent — the production codec
-(`trollflow2_spark/sinks/webp.py`) never touches it.
+(`trollflow2_spark/extensions/webp.py`) never touches it.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import ctypes.util
 import numpy as np
 import pytest
 
-from trollflow2_spark.sinks.webp import decode_webp, encode_webp_lossless
+from trollflow2_spark.extensions.webp import decode_webp, encode_webp_lossless
 
 
 def _load_libwebp():
@@ -221,7 +221,7 @@ def test_lossy_vp8_route_decodes_for_real():
     """Lossy (VP8) stills now decode through the from-scratch VP8
     decoder (full conformance lives in test_vp8_conformance.py); a
     truncated VP8 chunk still raises cleanly."""
-    from trollflow2_spark.sinks.vp8 import encode_vp8_i16, wrap_webp
+    from trollflow2_spark.extensions.vp8 import encode_vp8_i16, wrap_webp
 
     out = decode_webp(wrap_webp(encode_vp8_i16([3], 1, 1, 16, 16, qi=40)))
     assert out.shape == (16, 16, 3)
@@ -258,7 +258,7 @@ def test_animated_webp_roundtrip_and_container_shape():
     """VP8X+ANIM/ANMF container: frames round-trip losslessly, the
     container walk yields them in order, and a still image decodes as a
     single frame through the same API."""
-    from trollflow2_spark.sinks.webp import (
+    from trollflow2_spark.extensions.webp import (
         decode_webp_frames,
         encode_webp_animation,
     )
@@ -274,7 +274,7 @@ def test_animated_webp_roundtrip_and_container_shape():
 
 
 def test_animated_webp_rejects_mismatched_frames():
-    from trollflow2_spark.sinks.webp import encode_webp_animation
+    from trollflow2_spark.extensions.webp import encode_webp_animation
 
     a = np.zeros((4, 4), np.uint8)
     b = np.zeros((5, 4), np.uint8)
@@ -285,7 +285,7 @@ def test_animated_webp_rejects_mismatched_frames():
 
 
 def test_still_decode_of_animation_yields_first_frame():
-    from trollflow2_spark.sinks.webp import (
+    from trollflow2_spark.extensions.webp import (
         decode_webp,
         encode_webp_animation,
     )

@@ -6,7 +6,7 @@ import json
 
 from pyspark.sql import Row
 
-from trollflow2_spark.sources.warc import (
+from trollflow2_spark.extensions.warc import (
     WARC_RECORD_SCHEMA,
     wet_text,
     wat_outlinks,

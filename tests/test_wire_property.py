@@ -7,9 +7,9 @@ the strongest cheap evidence they transcribe the specs correctly."""
 
 from hypothesis import given, settings, strategies as st
 
-from trollflow2_spark.sources.avro import read_container, write_container
-from trollflow2_spark.sources.msgpack import pack, unpack
-from trollflow2_spark.sources.protobuf import decode_message, encode_message
+from trollflow2_spark.extensions.avro import read_container, write_container
+from trollflow2_spark.extensions.msgpack import pack, unpack
+from trollflow2_spark.extensions.protobuf import decode_message, encode_message
 
 # -- msgpack: arbitrary JSON-ish values ------------------------------------
 

@@ -5,7 +5,7 @@ hardening."""
 import pytest
 from pyspark.sql import Row, functions as F
 
-from trollflow2_spark.sources.xmlsrc import (
+from trollflow2_spark.extensions.xmlsrc import (
     XmlError,
     flatten_xml,
     parse_xml,

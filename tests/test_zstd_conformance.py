@@ -131,7 +131,7 @@ def test_store_mode_roundtrip_and_cross_decode():
 def test_warc_zst_route():
     """gunzip_members dispatches zstd frames to the from-scratch
     decoder, so .warc.zst records parse like .warc.gz ones."""
-    from trollflow2_spark.sources.warc import gunzip_members, parse_warc_bytes
+    from trollflow2_spark.extensions.warc import gunzip_members, parse_warc_bytes
 
     body = b"HTTP/1.1 200 OK\r\ncontent-type: text/html\r\n\r\n<p>hi</p>"
     rec = (

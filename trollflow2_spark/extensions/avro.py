@@ -1,8 +1,8 @@
 """Avro object-container intake (from-scratch reader + writer).
 
 Avro is the remaining big-name lake format next to parquet/orc/csv/
-json (all native here) and the wire formats (`sources/msgpack.py`,
-`sources/protobuf.py`): Kafka archives and Hadoop exports ship as
+json (all native here) and the wire formats (`extensions/msgpack.py`,
+`extensions/protobuf.py`): Kafka archives and Hadoop exports ship as
 ``.avro`` container files. Spark's avro support lives in a separate
 ``spark-avro`` package that this container does not ship, so this
 module implements the public specification
@@ -18,7 +18,7 @@ module implements the public specification
   (``avro.schema`` JSON + ``avro.codec``), a 16-byte sync marker,
   then data blocks of (record count, byte length, payload, sync) —
   ``null``, ``deflate`` (raw zlib) and ``snappy`` (from-scratch block
-  codec, `sources/snappy.py`, + the spec's big-endian CRC32 of the
+  codec, `extensions/snappy.py`, + the spec's big-endian CRC32 of the
   uncompressed data) codecs supported, sync markers
   VERIFIED per block so a corrupt/resynced file cannot silently
   produce shifted garbage.
@@ -427,7 +427,7 @@ def write_container(
         elif codec == "snappy":
             # per spec: snappy block + 4-byte BIG-endian CRC32 of the
             # UNCOMPRESSED data
-            from trollflow2_spark.sources.snappy import compress
+            from trollflow2_spark.extensions.snappy import compress
 
             payload = compress(payload) + zlib.crc32(payload).to_bytes(
                 4, "big"
@@ -468,7 +468,7 @@ def read_container(blob: bytes) -> tuple[dict, list]:
             except zlib.error as e:
                 raise AvroError("bad deflate block") from e
         elif codec == "snappy":
-            from trollflow2_spark.sources.snappy import (
+            from trollflow2_spark.extensions.snappy import (
                 SnappyError,
                 decompress,
             )

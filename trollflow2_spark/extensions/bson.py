@@ -17,7 +17,7 @@ spec (https://bsonspec.org, version 1.1) directly:
   as do truncation, length mismatches, missing terminators,
   non-canonical bools and out-of-order array keys.
 
-Spark shape matches the other wire tiers (`sources/msgpack.py`): one
+Spark shape matches the other wire tiers (`extensions/msgpack.py`): one
 Arrow ``mapInPandas`` pass per blob column, one CANONICAL sorted-key
 JSON row per document (bytes/ObjectId as lowercase hex, datetimes as
 epoch-ms integers), so every downstream cut is native ``from_json``

@@ -1,6 +1,6 @@
 """CBOR intake (RFC 8949, from scratch) — the remaining big wire
-format next to msgpack (`sources/msgpack.py`), BSON
-(`sources/bson.py`) and protobuf (`sources/protobuf.py`): CoAP/IoT
+format next to msgpack (`extensions/msgpack.py`), BSON
+(`extensions/bson.py`) and protobuf (`extensions/protobuf.py`): CoAP/IoT
 payloads, WebAuthn attestations, COSE envelopes and c2pa manifests
 all ship CBOR.
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from trollflow2_spark.functions.hashing import hash64, tokens
+from trollflow2_spark.extensions.hashing import hash64, tokens
 
 
 def nb_train_score(

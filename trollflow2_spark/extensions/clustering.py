@@ -8,7 +8,7 @@ density algorithm (Ester et al. 1996, public): points with ≥
 ``eps`` of a core point join as BORDER; everything else is NOISE.
 
 Scale shape — the same economics as
-`operators/geo.py::spatial_join_points_in_polygons`:
+`extensions/geo.py::spatial_join_points_in_polygons`:
 
 - the neighbor search never goes quadratic: points bucket into
   eps-sized grid cells, ONE side explodes to its 3×3 cell

@@ -26,7 +26,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from trollflow2_spark.functions.hashing import hash64, word_shingles
+from trollflow2_spark.extensions.hashing import hash64, word_shingles
 
 HashFn = type(hash64)
 

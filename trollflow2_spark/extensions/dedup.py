@@ -14,9 +14,9 @@ by bucket size — salting degenerate buckets (boilerplate docs) is the
 known mitigation and is applied via a max-bucket-size guard.
 
 All hashes default to the portable md5-derived family
-(:mod:`trollflow2_spark.functions.hashing`) so a SQL oracle reproduces
+(:mod:`trollflow2_spark.extensions.hashing`) so a SQL oracle reproduces
 results bit-for-bit; every operator takes ``hash_fn=`` so production
-pipelines can inject :func:`~trollflow2_spark.functions.hashing.fast_hash64`
+pipelines can inject :func:`~trollflow2_spark.extensions.hashing.fast_hash64`
 (xxhash64, ~3-5x cheaper, no oracle) without touching the plan shape.
 """
 
@@ -26,7 +26,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from trollflow2_spark.functions.hashing import (
+from trollflow2_spark.extensions.hashing import (
     fast_hash64,
     hash64,
     hash64_lane,
@@ -80,9 +80,9 @@ def minhash_signatures(
     ``hash_fn`` defaults to the portable oracle-reproducible hash, in
     which case hashes come in LANE PAIRS — two independent 60-bit
     values sliced from each seeded md5 digest
-    (:func:`~trollflow2_spark.functions.hashing.hash64_lane`), so
+    (:func:`~trollflow2_spark.extensions.hashing.hash64_lane`), so
     ``num_hashes`` functions cost ``num_hashes / 2`` md5 calls per
-    shingle. Pass :func:`~trollflow2_spark.functions.hashing.
+    shingle. Pass :func:`~trollflow2_spark.extensions.hashing.
     fast_hash64` in production (per-seed xxhash64 — already one cheap
     call per hash).
     """
@@ -212,7 +212,7 @@ def lsh_candidate_pairs(
     by (band_id, band_hash), emit candidate pairs that share any bucket.
 
     ``hash_fn=None`` keeps the oracle-matched md5 band hash; pass
-    :func:`~trollflow2_spark.functions.hashing.fast_hash64` for the
+    :func:`~trollflow2_spark.extensions.hashing.fast_hash64` for the
     production band hash (bigint buckets, one xxhash64 call).
 
     Scale guards, in order:

@@ -5,7 +5,7 @@ xiph.org), the one modern compressed media format that is feasible
 without external codec libraries — and, being lossless, the one whose
 round-trip can be oracle-checked EXACTLY (unlike JPEG's tolerance
 tests). Companion to the repo's other from-scratch codecs
-(:mod:`trollflow2_spark.sinks.jpeg`, ``imagery``); reference parity:
+(:mod:`trollflow2_spark.extensions.jpeg`, ``imagery``); reference parity:
 the trollflow2 reference delegates all media IO to rasterio/satpy
 (``/root/reference/trollflow2/plugins/__init__.py:86-99``) and ships no
 codec of its own.

@@ -2,7 +2,7 @@
 
 Scope: the keyframe-decode step for mp4/avc1 crawl intake, extending
 `extensions/multimodal.py:h264_slice_index` (which reads slice
-HEADERS) to actual pixels — exactly the step `sinks/vp8.py` took for
+HEADERS) to actual pixels — exactly the step `extensions/vp8.py` took for
 WebP keyframes. Supported: Baseline-profile IDR slices, CAVLC entropy
 coding, Intra_16x16 / Intra_4x4 / I_PCM macroblocks, 4:2:0 chroma
 with all four chroma prediction modes, integer inverse transforms
@@ -17,7 +17,7 @@ Correctness strategy (no system H.264 decoder ships in this
 container, unlike libwebp for VP8):
 
 - every VLC table is structurally validated (prefix-free + complete
-  modulo the spec's all-zeros leaf — `sinks/h264_tables.py`);
+  modulo the spec's all-zeros leaf — `extensions/h264_tables.py`);
 - the CAVLC entropy layer is pinned against the widely published
   worked example (coeff_token/level/total_zeros/run_before bits for
   the classic 5-coefficient block);
@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from trollflow2_spark.sinks.h264_tables import (
+from trollflow2_spark.extensions.h264_tables import (
     CBP_INTRA,
     COEFF_TOKEN_CHROMA_DC,
     COEFF_TOKEN_NC0,
@@ -1198,7 +1198,7 @@ def h264_decode_annexb(
 class H264IntraEncoder:
     """Author one Baseline IDR picture with EXPLICIT macroblock
     decisions — prediction modes and quantized levels are inputs, not
-    search results (the `sinks/vp8.py` full-control-encoder pattern).
+    search results (the `extensions/vp8.py` full-control-encoder pattern).
     Macroblocks are added in raster order; `encode()` emits an
     Annex-B stream (SPS + PPS + one IDR slice, deblocking disabled —
     the decoder's supported configuration).

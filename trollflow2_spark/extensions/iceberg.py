@@ -10,7 +10,7 @@ non-deleted entries — that indirection is what makes O(1) commits and
 time travel possible on a million-file table.
 
 This reader implements the documented CORE of that contract on the
-repo's own from-scratch Avro container codec (`sources/avro.py`):
+repo's own from-scratch Avro container codec (`extensions/avro.py`):
 
 - table metadata JSON: snapshots list (id, timestamp, manifest list
   path), current-snapshot-id;
@@ -39,8 +39,8 @@ Iceberg v3 DELETION VECTORS are supported end to end: delete-manifest
 entries whose ``referenced_data_file`` is set point at a
 ``deletion-vector-v1`` blob slice inside a Puffin file
 (``content_offset`` / ``content_size_in_bytes``); the slice decodes
-through `sources/puffin.py` (length word + CRC + shared Delta magic)
-into the `sources/roaring.py` 64-bit bitmap. DVs scope like position
+through `extensions/puffin.py` (length word + CRC + shared Delta magic)
+into the `extensions/roaring.py` 64-bit bitmap. DVs scope like position
 deletes (``data_seq <= del_seq``) and SUPERSEDE leftover v2
 position-delete files for any (snapshot, data file) an applicable DV
 covers — the DV is the complete mask, double-applying would
@@ -200,7 +200,7 @@ def read_manifest_entries(blob_df: DataFrame) -> DataFrame:
     def kernel(batches) -> Iterator:
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import read_container
+        from trollflow2_spark.extensions.avro import read_container
 
         for pdf in batches:
             out = []
@@ -283,7 +283,7 @@ def read_delete_manifest_entries(
     def kernel(batches) -> Iterator:
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import read_container
+        from trollflow2_spark.extensions.avro import read_container
 
         for pdf in batches:
             out = []
@@ -329,7 +329,7 @@ def read_position_deletes(blob_df: DataFrame) -> DataFrame:
     def kernel(batches) -> Iterator:
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import read_container
+        from trollflow2_spark.extensions.avro import read_container
 
         for pdf in batches:
             out = []
@@ -369,7 +369,7 @@ def read_dv_positions(
     DVs.
 
     This is the fast path real v3 scans take: the manifest's slice
-    coordinates go straight into `sources/puffin.py::
+    coordinates go straight into `extensions/puffin.py::
     puffin_dv_slice` (length word + CRC + magic all verified), no
     footer read. One Arrow ``mapInPandas`` pass; the Puffin blob
     routes to each consumer task via an equi-join on its path, so
@@ -386,7 +386,7 @@ def read_dv_positions(
     def kernel(batches) -> Iterator:
         import pandas as pd
 
-        from trollflow2_spark.sources.puffin import puffin_dv_slice
+        from trollflow2_spark.extensions.puffin import puffin_dv_slice
 
         for pdf in batches:
             out = []
@@ -443,7 +443,7 @@ def read_keyed_rows(blob_df: DataFrame, id_fields: list[str]) -> DataFrame:
     def kernel(batches) -> Iterator:
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import read_container
+        from trollflow2_spark.extensions.avro import read_container
 
         for pdf in batches:
             out = []
@@ -473,7 +473,7 @@ def partition_projection(
     - ``bucket[N]``: ``(murmur3_x86_32(bytes) & Int.MAX) % N`` with
       the spec's byte layouts (int/long/date/timestamp as 8-byte LE
       long — int 34 and long 34 MUST bucket identically — strings as
-      UTF-8), via the conformance-pinned `functions/murmur3.py` in a
+      UTF-8), via the conformance-pinned `extensions/murmur3.py` in a
       vectorized pandas_udf (the one transform Column algebra can't
       express);
     - ``year``/``month``/``day``/``hour``: ordinals from the 1970
@@ -534,7 +534,7 @@ def partition_projection(
 
                 import pandas as pd
 
-                from trollflow2_spark.functions.murmur3 import (
+                from trollflow2_spark.extensions.murmur3 import (
                     iceberg_bucket_long,
                     iceberg_bucket_string,
                 )
@@ -673,7 +673,7 @@ def expire_snapshots_plan(
 
     Returns (kind, path): kind in 'manifest-list' / 'manifest' /
     'data-file' / 'delete-file'. Empty when nothing expires."""
-    from trollflow2_spark.sources.avro import read_container
+    from trollflow2_spark.extensions.avro import read_container
 
     md = parse_table_metadata(metadata_json)
     by_ts = sorted(
@@ -790,7 +790,7 @@ def snapshot_partition_summary(
     idempotent; a fully-deleted data file still counts in
     ``n_files`` (it exists until a compaction rewrites it) with its
     rows at zero."""
-    from trollflow2_spark.sources.avro import read_container
+    from trollflow2_spark.extensions.avro import read_container
 
     md = parse_table_metadata(metadata_json)
     list_blobs = {

@@ -69,29 +69,29 @@ def decode_media(
       decode_geotiff`) — page-0 pixel statistics and dimensions
       (overview pages ignored; deflate strips supported);
     - ``image/jpeg``: REAL decode through the repo's from-scratch JPEG
-      codec (:func:`trollflow2_spark.sinks.jpeg.decode_jpeg` —
+      codec (:func:`trollflow2_spark.extensions.jpeg.decode_jpeg` —
       grayscale + YCbCr color, baseline sequential AND progressive
       (SOF2, spectral selection + successive approximation) streams);
     - ``image/webp``: REAL decode through the repo's from-scratch
-      WebP codecs (:func:`trollflow2_spark.sinks.webp.decode_webp`) —
+      WebP codecs (:func:`trollflow2_spark.extensions.webp.decode_webp`) —
       BOTH halves of the still format: lossless VP8L (all four
       transforms, meta prefix codes, color cache, LZ77 plane-coded
       distances) and lossy VP8 keyframes (boolean decoder, token
       trees, WHT/DCT, intra prediction, loop filter); both
       conformance-pinned against libwebp in tests;
     - ``image/gif``: REAL decode through the repo's from-scratch GIF
-      codec (:func:`trollflow2_spark.sinks.gif.decode_gif` — LZW,
+      codec (:func:`trollflow2_spark.extensions.gif.decode_gif` — LZW,
       global/local palettes, interlacing, GIF89a transparency) —
       statistics over the first composited frame;
     - ``image/qoi``: REAL decode through the repo's from-scratch QOI
-      codec (:func:`trollflow2_spark.sinks.qoi.decode_qoi` — all six
+      codec (:func:`trollflow2_spark.extensions.qoi.decode_qoi` — all six
       op families, 64-entry hash index, wrap-around deltas);
     - ``audio/wav``: REAL decode through the stdlib ``wave`` module —
       statistics over the decoded PCM samples; the dimension columns
       carry ``width=sample_rate``, ``height=frames per channel``,
       ``n_channels=channels``;
     - ``audio/flac``: REAL decode through the repo's from-scratch FLAC
-      codec (:func:`trollflow2_spark.sinks.flac.decode_flac` — fixed +
+      codec (:func:`trollflow2_spark.extensions.flac.decode_flac` — fixed +
       LPC predictors, Rice partitions, all stereo decorrelation modes);
       lossless, so the statistics are exact functions of the original
       samples — same dimension-column convention as WAV;
@@ -144,7 +144,7 @@ def decode_media(
         import pandas as pd
 
         from trollflow2_spark.sinks.imagery import decode_geotiff, decode_png
-        from trollflow2_spark.sinks.jpeg import decode_jpeg
+        from trollflow2_spark.extensions.jpeg import decode_jpeg
 
         for pdf in batches:
             n = len(pdf)
@@ -230,27 +230,27 @@ def decode_media(
                     elif is_jpg[i]:
                         arr = decode_jpeg(bytes(payload[i]))
                     elif is_webp[i]:
-                        from trollflow2_spark.sinks.webp import decode_webp
+                        from trollflow2_spark.extensions.webp import decode_webp
 
                         arr = decode_webp(bytes(payload[i]))
                     elif is_gif[i]:
-                        from trollflow2_spark.sinks.gif import decode_gif
+                        from trollflow2_spark.extensions.gif import decode_gif
 
                         arr = decode_gif(bytes(payload[i]))
                     elif is_bmp[i]:
-                        from trollflow2_spark.sinks.bmp import decode_bmp
+                        from trollflow2_spark.extensions.bmp import decode_bmp
 
                         arr = decode_bmp(bytes(payload[i]))
                     elif is_pnm[i]:
-                        from trollflow2_spark.sinks.bmp import decode_pnm
+                        from trollflow2_spark.extensions.bmp import decode_pnm
 
                         arr = decode_pnm(bytes(payload[i]))
                     elif is_ico[i]:
-                        from trollflow2_spark.sinks.bmp import decode_ico
+                        from trollflow2_spark.extensions.bmp import decode_ico
 
                         arr = decode_ico(bytes(payload[i]))
                     elif is_qoi[i]:
-                        from trollflow2_spark.sinks.qoi import decode_qoi
+                        from trollflow2_spark.extensions.qoi import decode_qoi
 
                         arr = decode_qoi(bytes(payload[i]))
                     else:
@@ -296,7 +296,7 @@ def decode_media(
             # real path: the repo's from-scratch FLAC decoder — lossless,
             # so the stats are exact functions of the original samples
             if is_flac.any():
-                from trollflow2_spark.sinks.flac import decode_flac
+                from trollflow2_spark.extensions.flac import decode_flac
 
                 for i in np.flatnonzero(is_flac):
                     try:
@@ -420,7 +420,7 @@ def resize_media(
             encode_geotiff,
             encode_png,
         )
-        from trollflow2_spark.sinks.jpeg import decode_jpeg, encode_jpeg
+        from trollflow2_spark.extensions.jpeg import decode_jpeg, encode_jpeg
 
         for pdf in batches:
             metas_in = pdf[meta_col]
@@ -466,23 +466,23 @@ def resize_media(
                     elif is_jpg[i]:
                         arr = decode_jpeg(bytes(payload[i]))
                     elif is_webp[i]:
-                        from trollflow2_spark.sinks.webp import decode_webp
+                        from trollflow2_spark.extensions.webp import decode_webp
 
                         arr = decode_webp(bytes(payload[i]))
                     elif is_gif[i]:
-                        from trollflow2_spark.sinks.gif import decode_gif
+                        from trollflow2_spark.extensions.gif import decode_gif
 
                         arr = decode_gif(bytes(payload[i]))
                     elif is_bmp[i]:
-                        from trollflow2_spark.sinks.bmp import decode_bmp
+                        from trollflow2_spark.extensions.bmp import decode_bmp
 
                         arr = decode_bmp(bytes(payload[i]))
                     elif is_pnm[i]:
-                        from trollflow2_spark.sinks.bmp import decode_pnm
+                        from trollflow2_spark.extensions.bmp import decode_pnm
 
                         arr = decode_pnm(bytes(payload[i]))
                     elif is_ico[i]:
-                        from trollflow2_spark.sinks.bmp import decode_ico
+                        from trollflow2_spark.extensions.bmp import decode_ico
 
                         arr = decode_ico(bytes(payload[i]))
                     else:
@@ -500,25 +500,25 @@ def resize_media(
                 elif is_jpg[i]:
                     blob = encode_jpeg(out_arr)  # gray or RGB
                 elif is_webp[i]:
-                    from trollflow2_spark.sinks.webp import (
+                    from trollflow2_spark.extensions.webp import (
                         encode_webp_lossless,
                     )
 
                     blob = encode_webp_lossless(out_arr)
                 elif is_gif[i]:
-                    from trollflow2_spark.sinks.gif import encode_gif
+                    from trollflow2_spark.extensions.gif import encode_gif
 
                     blob = encode_gif(out_arr)
                 elif is_bmp[i]:
-                    from trollflow2_spark.sinks.bmp import encode_bmp
+                    from trollflow2_spark.extensions.bmp import encode_bmp
 
                     blob = encode_bmp(out_arr)
                 elif is_pnm[i]:
-                    from trollflow2_spark.sinks.bmp import encode_pnm
+                    from trollflow2_spark.extensions.bmp import encode_pnm
 
                     blob = encode_pnm(out_arr)
                 elif is_ico[i]:
-                    from trollflow2_spark.sinks.bmp import encode_ico
+                    from trollflow2_spark.extensions.bmp import encode_ico
 
                     rgb = (
                         out_arr if out_arr.ndim == 3
@@ -581,7 +581,7 @@ def frame_sample(
     Every ``every_n_frames``-th frame is sampled and ``frame_byte``
     carries that frame's max pixel value. mp4/avc1 blobs route their
     stss KEYFRAMES through the from-scratch H.264 baseline intra
-    decoder (`sinks/h264.py`); inter-predicted (P/B) frames remain
+    decoder (`extensions/h264.py`); inter-predicted (P/B) frames remain
     the documented boundary and raise ``NotImplementedError`` only
     for containers with no decodable keyframe route at all.
 
@@ -603,7 +603,7 @@ def frame_sample(
         import pandas as pd
 
         from trollflow2_spark.sinks.imagery import decode_geotiff
-        from trollflow2_spark.sinks.jpeg import decode_jpeg
+        from trollflow2_spark.extensions.jpeg import decode_jpeg
 
         for pdf in batches:
             if not fake:
@@ -615,7 +615,7 @@ def frame_sample(
                     if blob[:4] == b"II*\x00":
                         frames = decode_geotiff(blob)[0]
                     elif blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-                        from trollflow2_spark.sinks.webp import (
+                        from trollflow2_spark.extensions.webp import (
                             decode_webp_frames,
                         )
 
@@ -624,7 +624,7 @@ def frame_sample(
                             for f in decode_webp_frames(blob)
                         ]
                     elif blob[:4] == b"GIF8":
-                        from trollflow2_spark.sinks.gif import (
+                        from trollflow2_spark.extensions.gif import (
                             decode_gif_frames,
                         )
 
@@ -648,7 +648,7 @@ def frame_sample(
                         ]
                     elif blob[:2] in (b"P5", b"P6"):
                         # concatenated netpbm (image2pipe raw video)
-                        from trollflow2_spark.sinks.bmp import (
+                        from trollflow2_spark.extensions.bmp import (
                             decode_pnm_frames,
                         )
 
@@ -656,7 +656,7 @@ def frame_sample(
                     elif len(blob) >= 8 and blob[4:8] == b"ftyp":
                         # mp4/avc1: every stss KEYFRAME decodes
                         # through the from-scratch H.264 baseline
-                        # intra decoder (sinks/h264.py) — the
+                        # intra decoder (extensions/h264.py) — the
                         # clip-sampling route real video needs;
                         # inter (P/B) frames remain the documented
                         # boundary and are not sampled
@@ -749,7 +749,7 @@ def perceptual_hash(
         import pandas as pd
 
         from trollflow2_spark.sinks.imagery import decode_geotiff, decode_png
-        from trollflow2_spark.sinks.jpeg import decode_jpeg
+        from trollflow2_spark.extensions.jpeg import decode_jpeg
 
         def decode(blob: bytes, mtype: str):
             if mtype == "image/png":
@@ -759,23 +759,23 @@ def perceptual_hash(
             if mtype == "image/tiff":
                 return decode_geotiff(blob)[0][0]
             if mtype == "image/webp":
-                from trollflow2_spark.sinks.webp import decode_webp
+                from trollflow2_spark.extensions.webp import decode_webp
 
                 return decode_webp(blob)
             if mtype == "image/gif":
-                from trollflow2_spark.sinks.gif import decode_gif
+                from trollflow2_spark.extensions.gif import decode_gif
 
                 return decode_gif(blob)
             if mtype == "image/bmp":
-                from trollflow2_spark.sinks.bmp import decode_bmp
+                from trollflow2_spark.extensions.bmp import decode_bmp
 
                 return decode_bmp(blob)
             if mtype == "image/x-portable-anymap":
-                from trollflow2_spark.sinks.bmp import decode_pnm
+                from trollflow2_spark.extensions.bmp import decode_pnm
 
                 return decode_pnm(blob)
             if mtype in ("image/x-icon", "image/vnd.microsoft.icon"):
-                from trollflow2_spark.sinks.bmp import decode_ico
+                from trollflow2_spark.extensions.bmp import decode_ico
 
                 return decode_ico(blob)
             raise NotImplementedError(
@@ -1663,7 +1663,7 @@ def _decode_mp4_keyframes(blob: bytes) -> list:
     the from-scratch H.264 baseline intra decoder — the per-item
     kernel behind frame_sample's mp4 route. Raises on non-avc1 or
     undecodable streams (frame_sample's contract is loud)."""
-    from trollflow2_spark.sinks.h264 import (
+    from trollflow2_spark.extensions.h264 import (
         decode_idr,
         parse_pps,
         parse_sps,
@@ -1690,7 +1690,7 @@ def _decode_mp4_keyframes(blob: bytes) -> list:
                 break
             nal = blob[pos + 4 : pos + 4 + ln]
             if (nal[0] & 0x1F) == 5:
-                from trollflow2_spark.sinks.h264 import apply_crop
+                from trollflow2_spark.extensions.h264 import apply_crop
 
                 planes = decode_idr(sps, pps, rbsp_unescape(nal[1:]))
                 frames.append(apply_crop(*planes, sps)[0])
@@ -1705,7 +1705,7 @@ def h264_keyframe_decode(
     """REAL H.264 keyframe decode for mp4/avc1 blobs — the step past
     :func:`h264_slice_index`'s header reads: the first stss keyframe
     sample's IDR slice decodes through the from-scratch baseline
-    intra decoder (`sinks/h264.py`: CAVLC, I16x16/I4x4/I_PCM, 4:2:0)
+    intra decoder (`extensions/h264.py`: CAVLC, I16x16/I4x4/I_PCM, 4:2:0)
     into Y/U/V planes, reported as exact integer pixel evidence (sum
     + the four MB-corner samples + chroma corners). Non-mp4, non-avc1
     and non-decodable payloads yield zero rows, never task failures —
@@ -1715,7 +1715,7 @@ def h264_keyframe_decode(
     def kernel(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        from trollflow2_spark.sinks.h264 import (
+        from trollflow2_spark.extensions.h264 import (
             decode_idr,
             parse_pps,
             parse_sps,
@@ -1763,7 +1763,7 @@ def h264_keyframe_decode(
                         pos += 4 + ln
                     if planes is None:
                         continue
-                    from trollflow2_spark.sinks.h264 import apply_crop
+                    from trollflow2_spark.extensions.h264 import apply_crop
 
                     y, u, v = apply_crop(*planes, sps)
                     h, w = y.shape

@@ -1,7 +1,7 @@
 """IP-network enrichment: longest-prefix-match CIDR joins.
 
 The crawl tier keys politeness and provenance on hostnames
-(`sources/warc.py:host_of_url`); real crawl/serving logs key on IP
+(`extensions/warc.py:host_of_url`); real crawl/serving logs key on IP
 addresses, and the canonical enrichment is a point-in-range join
 against a CIDR table (GeoIP / BGP-ASN / allowlist blocks) with
 *longest-prefix* precedence — an operator the reference has no

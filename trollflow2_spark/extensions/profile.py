@@ -1400,7 +1400,7 @@ def delta_dv_positions(
     def _dv_name(storage, payload):
         import pandas as pd
 
-        from trollflow2_spark.sources.roaring import dv_relative_path
+        from trollflow2_spark.extensions.roaring import dv_relative_path
 
         return pd.Series(
             [
@@ -1414,7 +1414,7 @@ def delta_dv_positions(
     def kernel(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.roaring import (
+        from trollflow2_spark.extensions.roaring import (
             decode_dv_file_at,
             decode_dv_inline,
         )
@@ -1490,7 +1490,7 @@ def dp_noisy_counts(
     One map-side-combinable hash agg; noise arithmetic is scan-stage
     Column algebra over the group-cardinality output.
     """
-    from trollflow2_spark.functions.hashing import hash64
+    from trollflow2_spark.extensions.hashing import hash64
 
     hash_fn = hash_fn or hash64
     counts = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n"))

@@ -1,7 +1,7 @@
 """Protocol-Buffers wire-format intake (descriptor-free, from scratch).
 
 Protobuf is the other half of the binary-log world next to msgpack
-(`sources/msgpack.py`): gRPC payloads, profiler dumps, and event logs
+(`extensions/msgpack.py`): gRPC payloads, profiler dumps, and event logs
 arrive as length-prefixed messages. No protobuf library ships in this
 container and the reference never touches binary RPC formats; this
 module implements the public wire encoding

@@ -25,7 +25,7 @@ the table's statistics blobs use). Public specs only:
 Reference parity note: pytroll/trollflow2 has no lakehouse reader;
 this module closes VERDICT r14 "What's missing #2" (v3 tables from
 Iceberg 1.8+ writers previously died in manifest decode). The
-roaring codec is `sources/roaring.py`; only the framing lives here.
+roaring codec is `extensions/roaring.py`; only the framing lives here.
 
 Pure Python over ``bytes`` — runs inside Arrow ``mapInPandas``
 kernels, one DV slice per task, so decode distributes with the
@@ -38,7 +38,7 @@ import json
 import struct
 import zlib
 
-from trollflow2_spark.sources.roaring import (
+from trollflow2_spark.extensions.roaring import (
     RoaringError,
     decode_dv_data,
     encode_dv_data,

@@ -211,7 +211,7 @@ def _stage_decontaminate(
     per-doc hit count, and the final keep is a left-anti on the id.
     """
     from trollflow2_spark import qconst as C
-    from trollflow2_spark.functions.hashing import hash64, word_shingles
+    from trollflow2_spark.extensions.hashing import hash64, word_shingles
 
     mod = C.CONTAM_MOD if mod is None else int(mod)
     residue = C.CONTAM_RESIDUE if residue is None else int(residue)

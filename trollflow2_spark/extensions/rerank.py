@@ -86,7 +86,7 @@ def lexical_proxy_scorer(
     first-occurrence proximity bonus, all integers (value-checkable in
     SQL). ``terms`` is the (query_id, term) table — broadcast onto the
     bounded candidates, never onto the corpus."""
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     toks = F.transform(tokens(F.col("text")), lambda t: F.lower(t))
     base = cand_text.select(

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from trollflow2_spark.functions.hashing import hash64
+from trollflow2_spark.extensions.hashing import hash64
 
 #: hash buckets for rate thresholds: rates are exact to 1/10000
 RATE_BUCKETS = 10_000
@@ -178,7 +178,7 @@ def weighted_sample_topk(
 
     Output: input columns + ``rank`` (1-based within stratum).
     """
-    from trollflow2_spark.operators.windows import topk_per_group
+    from trollflow2_spark.extensions.windows import topk_per_group
 
     u = (
         hash64(F.col(id_col).cast("string"), seed=seed).cast("double")
@@ -475,7 +475,7 @@ def sft_chat_masks(
     digests plus the scalar accounting columns, which is what the
     audit joins want (the packer consumes ``n_tokens`` downstream).
     """
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     over = 3  # marker tokens
     # NULL prompt/response coalesce to empty so such rows flow through
@@ -547,7 +547,7 @@ def dpo_pairs(
     ``min_len_ratio_permille`` of the longer, the pair teaches length,
     not preference, so it drops with the ratio stated. Pure-Column
     scan-stage work; sequence digests + scalar accounting out."""
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     over = 3
     # NULL columns coalesce to empty — same accounted-policy rationale

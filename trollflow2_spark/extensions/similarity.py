@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from trollflow2_spark.operators.windows import topk_per_group
+from trollflow2_spark.extensions.windows import topk_per_group
 
 
 def _dot(a: Column, b: Column) -> Column:

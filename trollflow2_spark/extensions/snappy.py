@@ -3,7 +3,7 @@ https://github.com/google/snappy/blob/main/format_description.txt).
 
 Why here: Avro containers in Kafka land overwhelmingly ship
 ``avro.codec: snappy`` (it is the Java client's default choice), and
-no snappy library ships in this container — so `sources/avro.py`
+no snappy library ships in this container — so `extensions/avro.py`
 routes snappy blocks through this module, the same from-scratch
 discipline as the zstd/brotli/deflate tiers.
 

@@ -153,7 +153,7 @@ def cms_sketch(
     Determinism: the row hashes are the portable md5-derived
     :func:`hash64` with per-row seeds, so a SQL oracle reproduces
     every cell exactly."""
-    from trollflow2_spark.functions.hashing import hash64, tokens
+    from trollflow2_spark.extensions.hashing import hash64, tokens
 
     tk = df.select(
         F.explode(
@@ -198,7 +198,7 @@ def cms_heavy_hitter_audit(
     per token (CMS never undercounts; collisions only inflate). The
     candidate side is k rows, so the estimate join is broadcast-sized;
     the sketch side is the bounded depth x width table."""
-    from trollflow2_spark.functions.hashing import hash64, tokens
+    from trollflow2_spark.extensions.hashing import hash64, tokens
 
     sketch = cms_sketch(
         df, text_col=text_col, depth=depth, width=width,
@@ -468,7 +468,7 @@ def kmv_sketch(
     reduce to the final bottom-k — the classic distributed top-k
     shape, every stage bounded. The sketch column is a sorted
     ``array<bigint>`` of length <= k, mergeable by construction."""
-    from trollflow2_spark.functions.hashing import hash64
+    from trollflow2_spark.extensions.hashing import hash64
 
     h = hash64(F.col(value_col).cast("string"), seed=seed)
     d = df.select(*key_cols, h.alias("__h")).distinct()
@@ -694,7 +694,7 @@ def balance_replay_state(
     timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming maintenance of the zero-clamped running balance
-    (`operators/windows.py::clamped_running_balance`) — the state is
+    (`extensions/windows.py::clamped_running_balance`) — the state is
     just ``(batch_sum, batch_min_prefix)`` per key per micro-batch,
     because the clamp's closed form merges: with prefix offset P
     (sum of earlier batches), a batch contributes candidate minimum

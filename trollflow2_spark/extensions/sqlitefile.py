@@ -25,7 +25,7 @@ downstream cuts are native ``from_json`` Column algebra, and corrupt
 files yield ONE quarantine row with ``error`` set — loud, never
 silent garbage. The stdlib ``sqlite3`` module is the reference
 implementation used only to AUTHOR fixtures and conformance-check the
-from-scratch reader (the pyarrow pattern from `sources/arrowipc.py`).
+from-scratch reader (the pyarrow pattern from `extensions/arrowipc.py`).
 """
 
 from __future__ import annotations

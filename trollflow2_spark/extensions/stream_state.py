@@ -61,7 +61,7 @@ def streaming_dedup(
     """
     from pyspark.sql import functions as F
 
-    from trollflow2_spark.functions.hashing import hash64
+    from trollflow2_spark.extensions.hashing import hash64
 
     fn = hash_fn or hash64
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")

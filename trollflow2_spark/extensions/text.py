@@ -16,7 +16,7 @@ from typing import Callable
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from trollflow2_spark.functions.hashing import hash64, tokens, word_shingles
+from trollflow2_spark.extensions.hashing import hash64, tokens, word_shingles
 
 HashFn = Callable[..., Column]
 
@@ -1499,7 +1499,7 @@ def collocations_pmi(
     counts are three map-side-combinable hash aggs; the unigram side
     broadcasts back onto the bigram table. The PMI is one scalar log
     per surviving pair — no float folds to order."""
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     tk = df.select(
         F.transform(tokens(F.col(text_col)), lambda t: F.lower(t)).alias(
@@ -1578,7 +1578,7 @@ def rake_keyphrases(
     above the count floor with their score."""
     from pyspark.sql import Window
 
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     tk = df.select(
         F.col(id_col),

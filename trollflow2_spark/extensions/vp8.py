@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from trollflow2_spark.sinks.vp8_tables import (
+from trollflow2_spark.extensions.vp8_tables import (
     AC_QLOOKUP,
     COEFF_PROBS,
     COEFF_UPDATE_PROBS,

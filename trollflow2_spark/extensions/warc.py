@@ -108,7 +108,7 @@ def _parse_http(payload: bytes) -> tuple[int | None, str | None, bytes]:
     if chunked:
         body = _dechunk(body)
     if cenc == b"br":
-        from trollflow2_spark.sources.brotlicodec import brotli_decompress
+        from trollflow2_spark.extensions.brotlicodec import brotli_decompress
 
         try:
             body = brotli_decompress(body)
@@ -886,7 +886,7 @@ def fetch_schedule(
     production paths. Output adds (slot, offset_s, worker)."""
     from pyspark.sql import Window
 
-    from trollflow2_spark.functions.hashing import hash64
+    from trollflow2_spark.extensions.hashing import hash64
 
     hash_fn = hash_fn or hash64
     w = Window.partitionBy(domain_col).orderBy(

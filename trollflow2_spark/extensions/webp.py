@@ -26,7 +26,7 @@ predictor, and palette (color-indexing, with sub-byte pixel bundling).
 It emits a conservative but spec-valid stream; libwebp must decode it
 bit-exactly (also pinned in the conformance suite).
 
-Lossy VP8 keyframes decode through sinks/vp8.py (bit-exact YUV vs
+Lossy VP8 keyframes decode through extensions/vp8.py (bit-exact YUV vs
 libwebp), so both halves of the still format decode for real. VP8X containers
 are walked to find the image chunk; animated files (ANIM/ANMF with lossless frames)
 decode frame-by-frame via :func:`decode_webp_frames`, and the still
@@ -709,13 +709,13 @@ def decode_webp(data: bytes) -> np.ndarray:
 
 def _decode_vp8_rgb(payload: bytes) -> np.ndarray:
     """Lossy VP8 keyframe -> RGB through the repo's from-scratch VP8
-    decoder (:mod:`trollflow2_spark.sinks.vp8`, bit-exact YUV vs
+    decoder (:mod:`trollflow2_spark.extensions.vp8`, bit-exact YUV vs
     libwebp). Chroma upsamples by sample replication and converts with
     the BT.601 studio-swing integer matrix — deterministic and
     SQL-replayable, matching libwebp's "simple" (non-fancy) mode in
     spirit; the YUV planes themselves are the conformance surface.
     Returns (h, w, 3) uint8."""
-    from trollflow2_spark.sinks.vp8 import decode_vp8
+    from trollflow2_spark.extensions.vp8 import decode_vp8
 
     y, u, v = decode_vp8(payload)
     h, w = y.shape

@@ -2,7 +2,7 @@
 
 Config dumps, product catalogs, MathML/JATS scientific corpora and
 enterprise exports arrive as structured XML where attributes, nesting
-and CDATA carry meaning — `sources/warc.py:feed_urls` deliberately
+and CDATA carry meaning — `extensions/warc.py:feed_urls` deliberately
 stays regexp-level for the machine-regular sitemap/RSS dialects, and
 this module is its structured complement (the same split msgpack /
 protobuf / avro follow for binary wire formats). No XML library is

@@ -1,6 +1,6 @@
-"""DataFrame operators: composites and block aggregation, resampling
-joins, skew-safe aggregation, window top-k, geo and interval joins.
-The worker plugins in ``plans/pipeline.py`` import ``transforms`` and
-``resample``; the query library imports the rest. Pipelines name worker
-plugins, not operators (``plans.pipeline.PLUGIN_REGISTRY``).
+"""DataFrame operators of the worker plugins in ``plans/pipeline.py``:
+``transforms`` (composites, block aggregation) and ``resample``
+(nearest and weighted resampling joins). Pipelines name worker plugins,
+not operators (``plans.pipeline.PLUGIN_REGISTRY``). The query library's
+operators live in ``extensions/``.
 """

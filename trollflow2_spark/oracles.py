@@ -14,7 +14,7 @@ from trollflow2_spark import qconst as C
 from trollflow2_spark.extensions.profile import BENFORD_P
 from trollflow2_spark.extensions.text import BPE_ISH_PATTERN, LANG_MARKERS, STOPWORDS
 from trollflow2_spark.functions.geometry import SZA_SQL
-from trollflow2_spark.functions.hashing import (
+from trollflow2_spark.extensions.hashing import (
     HASH64_LANE_SQL,
     HASH64_SQL,
     TOKENS_SQL,
@@ -4221,7 +4221,7 @@ GROUP BY lang, source
 
 
 def _zorder_oracle() -> str:
-    from trollflow2_spark.functions.zorder import zorder_sql
+    from trollflow2_spark.extensions.zorder import zorder_sql
 
     zexpr = zorder_sql(["ub", "tb"], bits=C.ZORDER_BITS)
     return f"""
@@ -10970,12 +10970,12 @@ FROM live GROUP BY 1, 2
 
 
 # hidden-partitioning transforms: the bucket lookup VALUES tables are
-# generated from functions/murmur3.py, itself conformance-pinned in
+# generated from extensions/murmur3.py, itself conformance-pinned in
 # pytest against the Iceberg spec's published hash vectors (34 ->
 # 2017239379, "iceberg" -> 1210000089, …) — the oracle verifies the
 # Spark-side plumbing; the hash is verified against the spec
 def _bucket_values_sql() -> str:
-    from trollflow2_spark.functions.murmur3 import (
+    from trollflow2_spark.extensions.murmur3 import (
         iceberg_bucket_long,
         iceberg_bucket_string,
     )

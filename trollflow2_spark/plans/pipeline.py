@@ -21,7 +21,9 @@ Worker plugins are ``fn(job, **kwargs)`` callables resolved from
 :data:`PLUGIN_REGISTRY` by *name* (safe-YAML pipelines; no code-exec
 tags). ``AbortProcessing`` skips the rest of the current priority batch
 (≙ ``plugins/__init__.py:82-83``, caught at ``launcher.py:456-457``), and
-so does the ``MessageTimeError`` of a message time that is unreadable.
+so do the ``MessageTimeError`` of a message time that is unreadable and
+the ``PatternFieldError`` of a message value that a file name, topic or
+decoration pattern cannot render.
 Per-worker ``timeout`` cancels the batch's Spark jobs via job-group
 cancellation — the cluster-side replacement for the reference's
 SIGALRM-based timers (``launcher.py:441-455``) — and sets the batch's
@@ -59,7 +61,12 @@ from trollflow2_spark.operators.transforms import (
     COMPOSITE_REGISTRY,
     block_aggregate,
 )
-from trollflow2_spark.sinks.save import SaveResult, check_results, save_datasets
+from trollflow2_spark.sinks.save import (
+    PatternFieldError,
+    SaveResult,
+    check_results,
+    save_datasets,
+)
 from trollflow2_spark.sinks.publish import publisher_messages, write_messages
 from trollflow2_spark.sources.scene import (
     ACCEPTED_MESSAGE_TYPES,
@@ -538,7 +545,10 @@ def resample_plugin(
     box *before* the join — the pushed-down-filter form of the
     reference's ``reduce_data: True`` default (``plugins/__init__.py:
     149-156``). Results land in ``job["resampled_scenes"]`` keyed by
-    area (and replace ``job["scene"]`` for the downstream chain).
+    area; the first area's frame also replaces ``job["scene"]`` for the
+    downstream chain. Only the mapped nearest path depends on the area:
+    there each target area gets its own frame, every other kernel builds
+    one frame that all areas share.
     """
     scene = job["scene"]
     if scene is None:
@@ -552,6 +562,7 @@ def resample_plugin(
         },
     )
     radius = float(opts.get("radius_of_influence") or 1.0)
+    per_area: dict = {}  # area -> its own frame (mapped nearest only)
     if opts.get("reduce_data", True) and bbox is not None:
         x, y = coords
         xmin, ymin, xmax, ymax = bbox
@@ -639,30 +650,37 @@ def resample_plugin(
         # the (target px -> source px) mapping is computed once per
         # (source, target) pair, cached, and broadcast-joined — no 9x
         # probe explode of the target side per message (the reference's
-        # cached resamplers, plugins/__init__.py:159-201)
-        item0 = job["work_items"][0] if job["work_items"] else {}
-        tgt_area = resolve_area(
-            job.get("target_area")
-            or item0.get("area_def")  # inline grid definition in the YAML
-            or item0.get("area")  # registered name
-        )
+        # cached resamplers, plugins/__init__.py:159-201). The mapping
+        # depends on the target area, so each distinct target area of the
+        # batch gets its own frame; items without one share the
+        # target_grid frame.
         src_area = resolve_area(
             job.get("source_area") or job["input_mda"].get("source_area")
         )
-        if tgt_area is not None and src_area is not None:
-            resampled = _resample_mapped(
-                job["spark"], scene, src_area, tgt_area, radius, coords
+        by_target: dict = {}
+        for item in job["work_items"]:
+            tgt_area = None if src_area is None else resolve_area(
+                job.get("target_area")
+                or item.get("area_def")  # inline grid definition in the YAML
+                or item.get("area")  # registered name
             )
-        else:
-            target = job.get("target_grid")
-            if target is None:
-                raise AbortProcessing(
-                    "resample: nearest needs job['target_grid'] or resolvable "
-                    "source/target GridArea definitions"
-                )
-            resampled = nearest_join_2d(
-                target, scene, coords=coords, radius=radius, how="inner"
-            )
+            if tgt_area not in by_target:
+                if tgt_area is not None:
+                    by_target[tgt_area] = _resample_mapped(
+                        job["spark"], scene, src_area, tgt_area, radius, coords
+                    )
+                elif job.get("target_grid") is not None:
+                    by_target[tgt_area] = nearest_join_2d(
+                        job["target_grid"], scene, coords=coords, radius=radius,
+                        how="inner",
+                    )
+                else:
+                    raise AbortProcessing(
+                        "resample: nearest needs job['target_grid'] or resolvable "
+                        "source/target GridArea definitions"
+                    )
+            per_area[item.get("area")] = by_target[tgt_area]
+        resampled = next(iter(by_target.values()), scene)
     elif resampler in ("ewa", "bilinear"):
         target = job.get("target_grid")
         if target is None:
@@ -684,7 +702,9 @@ def resample_plugin(
     else:
         raise AbortProcessing(f"unknown resampler {resampler!r}")
     for item in job["work_items"]:
-        job["resampled_scenes"][item.get("area")] = resampled
+        job["resampled_scenes"][item.get("area")] = per_area.get(
+            item.get("area"), resampled
+        )
     job["scene"] = resampled
 
 
@@ -758,20 +778,28 @@ def add_overviews_plugin(job: dict, factors: Sequence[int] = (4, 16)) -> None:
 
 @register_plugin("save_datasets")
 def save_datasets_plugin(job: dict, **kwargs: Any) -> None:
-    """Write every work-item leaf (≙ ``plugins/__init__.py:330-395``)."""
+    """Write every work-item leaf from its area's resampled frame
+    (≙ ``plugins/__init__.py:330-395``, which saves each area's
+    resampled scene): one ``save_datasets`` call, and so one gather, per
+    distinct frame."""
     if job.get("scene") is None:
         raise AbortProcessing("save_datasets: no scene loaded")
-    result = save_datasets(
-        job["spark"],
-        job["scene"],
-        job["work_items"],
-        base_mda={
-            k: v for k, v in job["input_mda"].items() if not isinstance(v, (dict, list))
-        },
-        job=job,
-        **kwargs,
-    )
-    job["produced_files"].produced.extend(result.produced)
+    frames: dict[int, tuple[DataFrame, list]] = {}
+    for item in job["work_items"]:
+        frame = job["resampled_scenes"].get(item.get("area"), job["scene"])
+        frames.setdefault(id(frame), (frame, []))[1].append(item)
+    if len(frames) <= 1:
+        # one frame for the whole batch: write the scene as the plugins
+        # after the resample left it
+        frames = {0: (job["scene"], job["work_items"])}
+    base_mda = {
+        k: v for k, v in job["input_mda"].items() if not isinstance(v, (dict, list))
+    }
+    for frame, items in frames.values():
+        result = save_datasets(
+            job["spark"], frame, items, base_mda=base_mda, job=job, **kwargs
+        )
+        job["produced_files"].produced.extend(result.produced)
 
 
 @register_plugin("publish")
@@ -906,7 +934,7 @@ def process_message(
                 if not job["work_items"]:
                     logger.info("priority %s: all work items pruned", prio)
                     break
-        except (AbortProcessing, MessageTimeError) as exc:
+        except (AbortProcessing, MessageTimeError, PatternFieldError) as exc:
             logger.warning("priority %s aborted: %s", prio, exc)
             aborted[prio] = str(exc)
         finally:

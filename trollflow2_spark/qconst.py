@@ -437,7 +437,7 @@ LDIV_L = 3  # distinct-sensitive-values floor
 EWMA_ALPHA = 0.3  # EWMA smoothing factor
 EWMA_LAGS = 8  # bounded-lag window: truncation error (1-a)^8 ~ 5.8e-2
 # of the oldest tail... the DEFINITION is the bounded window (see
-# operators/windows.py:ewma_bounded), so both engines replay it exactly
+# extensions/windows.py:ewma_bounded), so both engines replay it exactly
 KMV_K = 64  # bottom-k sketch size (distinct-count / set-op estimates)
 KMV_SEED = 77  # hash seed for the KMV value hash
 BT_ITERS = 3  # Bradley-Terry MM iterations (each unrolled in the oracle)

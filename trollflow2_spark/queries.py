@@ -59,7 +59,7 @@ from trollflow2_spark.extensions.text import (
     quality_features,
     token_count,
 )
-from trollflow2_spark.functions.hashing import fast_hash64
+from trollflow2_spark.extensions.hashing import fast_hash64
 from trollflow2_spark.functions.geometry import (
     pseudo_coverage_percent,
     sun_zenith_angle_deg,
@@ -70,7 +70,7 @@ from trollflow2_spark.operators.resample import (
     weighted_resample_1d,
 )
 from trollflow2_spark.operators.transforms import block_aggregate
-from trollflow2_spark.operators.windows import top1_per_group, topk_per_group
+from trollflow2_spark.extensions.windows import top1_per_group, topk_per_group
 from trollflow2_spark.tables import load_table
 
 
@@ -145,7 +145,7 @@ def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 over pre-bucketed fact tables: orders and lineitem are written
-    bucketed+sorted on the order key (``operators/bucketing.py``), so
+    bucketed+sorted on the order key (``extensions/bucketing.py``), so
     the fact-fact join needs NO exchange and the subsequent group-by on
     the order key reuses the same clustering — the named 100 TB fix for
     recurring fact-fact joins. Results identical to
@@ -158,7 +158,7 @@ def q_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
     from urllib.parse import urlparse as _urlparse
 
-    from trollflow2_spark.operators.bucketing import write_bucketed
+    from trollflow2_spark.extensions.bucketing import write_bucketed
 
     tag = _re2.sub(r"[^0-9A-Za-z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
 
@@ -744,7 +744,7 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-days window: one shuffle, sorted-array state-machine scan —
     no N-pass self-joins. (Unwindowed, every synthetic user converts;
     the cutoff spreads users across stages 0-3.)"""
-    from trollflow2_spark.operators.windows import funnel_stages
+    from trollflow2_spark.extensions.windows import funnel_stages
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit(C.FUNNEL_TS_MAX).cast("timestamp_ntz")
@@ -756,7 +756,7 @@ def q_event_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-proof aggregation: event_type has 3 hot keys owning the
     whole table; the salted two-stage agg spreads each over 16 tasks.
     The oracle is the plain GROUP BY (salting is semantics-preserving)."""
-    from trollflow2_spark.operators.skew import salted_agg
+    from trollflow2_spark.extensions.skew import salted_agg
 
     ev = load_table(spark, sf_dir, "events")
     return salted_agg(
@@ -811,7 +811,7 @@ def q_skew_seq_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture, single-stage groupBy: collect_list has no map-side
     reduction, so the hot key's full history lands in ONE reduce task —
     the benched skew baseline the salted twin must beat."""
-    from trollflow2_spark.operators.skew import sequence_fingerprint
+    from trollflow2_spark.extensions.skew import sequence_fingerprint
 
     out = sequence_fingerprint(
         _skewed_events(spark, sf_dir), "skew_user", "seq_id", "payload"
@@ -831,7 +831,7 @@ def q_skew_seq_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     are contiguous). Stage 2 carries O(n_buckets x 32) bytes per key,
     never the key's full payload, so no task re-concentrates the hot
     key at any scale. Oracle: DuckDB replays the md5-of-md5s chain."""
-    from trollflow2_spark.operators.skew import sequence_fingerprint
+    from trollflow2_spark.extensions.skew import sequence_fingerprint
 
     out = sequence_fingerprint(
         _skewed_events(spark, sf_dir),
@@ -1383,7 +1383,7 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelopes — parsed executor-side, response payloads stripped to
     text by the JVM-side regexp chain. The oracle knows the extracted
     text closed-form."""
-    from trollflow2_spark.sources.warc import html_to_text, parse_warc_bytes
+    from trollflow2_spark.extensions.warc import html_to_text, parse_warc_bytes
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -1467,7 +1467,7 @@ def q_warc_ingest_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture frames are STORE-mode (spec-valid raw blocks — any zstd
     implementation reads them); REAL compressed-frame decoding is
     conformance-pinned against libzstd in tests."""
-    from trollflow2_spark.sources.warc import html_to_text, parse_warc_bytes
+    from trollflow2_spark.extensions.warc import html_to_text, parse_warc_bytes
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -1556,7 +1556,7 @@ def q_warc_ingest_br(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads them, cross-checked against libbrotlidec in tests); REAL
     compressed-stream decoding is conformance-pinned against
     libbrotlienc across qualities in ``test_brotli_conformance.py``."""
-    from trollflow2_spark.sources.warc import html_to_text, parse_warc_bytes
+    from trollflow2_spark.extensions.warc import html_to_text, parse_warc_bytes
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -1574,7 +1574,7 @@ def q_warc_ingest_br(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_and_parse(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.brotlicodec import brotli_compress_store
+        from trollflow2_spark.extensions.brotlicodec import brotli_compress_store
 
         for pdf in batches:
             rows = []
@@ -1660,7 +1660,7 @@ def _warc_fixture_records(spark, sf_dir, build_records):
 
         import pandas as pd
 
-        from trollflow2_spark.sources.warc import parse_warc_bytes
+        from trollflow2_spark.extensions.warc import parse_warc_bytes
 
         for pdf in batches:
             rows = []
@@ -1709,7 +1709,7 @@ def q_wet_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-empty line count Column-side. The oracle states the planted
     text closed-form; the warcinfo row vanishing is implicit in the
     row count."""
-    from trollflow2_spark.sources.warc import wet_text
+    from trollflow2_spark.extensions.warc import wet_text
 
     def build(d):
         text = (
@@ -1742,7 +1742,7 @@ def q_wet_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_warc_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Charset-aware text intake (`sources/warc.py:decoded_text`): the
+    """Charset-aware text intake (`extensions/warc.py:decoded_text`): the
     crawl reality the UTF-8-only cast loses. Planted response records
     cycle five charset situations — windows-1252 and Shift_JIS
     declared in the HTTP Content-Type header, ISO-8859-1 declared only
@@ -1755,7 +1755,7 @@ def q_warc_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution order header -> meta -> BOM -> default is observable in
     charset_source. The oracle restates the decoded UTF-8 text, the
     resolved codec and the source closed-form per doc_id."""
-    from trollflow2_spark.sources.warc import decoded_text
+    from trollflow2_spark.extensions.warc import decoded_text
 
     def build(d):
         m = d % 6
@@ -1811,7 +1811,7 @@ def q_warc_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset shard intake
-    (`sources/webdataset.py:read_webdataset`): LAION-style .tar
+    (`extensions/webdataset.py:read_webdataset`): LAION-style .tar
     shards become one row per sample (key = basename to the FIRST
     dot, contiguous grouping). Fixture shards carry 2 + d%2 samples
     of jpg+json(+txt — missing on every (d+j)%4==0 sample, the
@@ -1820,7 +1820,7 @@ def q_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag dup_key=1 as its own occurrence; every 19th shard is
     truncated -> one error row. Oracle restates every sample
     closed-form."""
-    from trollflow2_spark.sources.webdataset import read_webdataset
+    from trollflow2_spark.extensions.webdataset import read_webdataset
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -1835,7 +1835,7 @@ def q_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_shards(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.webdataset import write_webdataset
+        from trollflow2_spark.extensions.webdataset import write_webdataset
 
         for pdf in batches:
             blobs = []
@@ -1879,21 +1879,21 @@ def q_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro container intake (`sources/avro.py:read_avro`): Kafka
+    """Avro container intake (`extensions/avro.py:read_avro`): Kafka
     archives/Hadoop exports, read by the from-scratch spec reader
     (zigzag varints, blocks, VERIFIED sync markers, null + deflate
     codecs — spark-avro does not ship here). Each doc's fixture file
     holds 1 + d%3 records (record/array/union/enum/fixed fields,
     dyadic doubles) split 2-per-block so multi-block reads exercise;
     every 6th file is deflate-coded, every 11th%7 snappy-coded
-    (from-scratch `sources/snappy.py` + the spec's uncompressed-data
+    (from-scratch `extensions/snappy.py` + the spec's uncompressed-data
     CRC32); every 17th truncated -> one
     err row with rec_idx -1. r13 adds the spec's logical types to
     the record (bytes-decimal incl. negatives, date,
     timestamp-millis/micros, time-millis, uuid, and an UNKNOWN
     logicalType that must fall back to its physical long). Oracle
     restates every record closed-form."""
-    from trollflow2_spark.sources.avro import read_avro
+    from trollflow2_spark.extensions.avro import read_avro
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -1942,7 +1942,7 @@ def q_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import write_container
+        from trollflow2_spark.extensions.avro import write_container
 
         epoch_d = _dt.date(1970, 1, 1)
         epoch_t = _dt.datetime(1970, 1, 1)
@@ -2025,7 +2025,7 @@ def q_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_avro_wire_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confluent wire-format Avro intake (`sources/avro.py::
+    """Confluent wire-format Avro intake (`extensions/avro.py::
     read_avro_wire`): Kafka-exported Avro is registry-framed — magic
     ``0x00`` + 4-byte BE schema id + one raw datum, NO container —
     far more often than it is container files; pointing the
@@ -2037,7 +2037,7 @@ def q_avro_wire_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     known ids named (schema_id preserved), every 17th has a non-zero
     magic byte and quarantines with schema_id null. One Arrow pass,
     one message per row."""
-    from trollflow2_spark.sources.avro import (
+    from trollflow2_spark.extensions.avro import (
         encode_wire_message,
         read_avro_wire,
     )
@@ -2102,7 +2102,7 @@ def q_avro_wire_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_eml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Email/MIME intake (`sources/eml.py:read_eml`): mailing-list
+    """Email/MIME intake (`extensions/eml.py:read_eml`): mailing-list
     corpora as RFC 5322 bytes — multipart/mixed with a
     quoted-printable UTF-8 text part and a base64 attachment, RFC
     2047 encoded-word subjects on every third message, and a
@@ -2110,7 +2110,7 @@ def q_eml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     transfer encodings + encoded-words; the oracle restates every
     decoded field closed-form (body compared trimmed: the trailing
     CRLF before a MIME boundary belongs to the boundary)."""
-    from trollflow2_spark.sources.eml import read_eml
+    from trollflow2_spark.extensions.eml import read_eml
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -2193,7 +2193,7 @@ def q_eml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_protobuf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Protobuf wire intake (`sources/protobuf.py:read_protobuf`):
+    """Protobuf wire intake (`extensions/protobuf.py:read_protobuf`):
     span-shaped telemetry decoded descriptor-free from the raw wire
     encoding — varint, ZigZag sint (negative deltas), fixed64,
     packed repeated varints, repeated nested messages — plus an
@@ -2201,7 +2201,7 @@ def q_protobuf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (forward compatibility), and every 13th blob truncated to the
     quarantine path. The double field is dyadic (d * 0.25) so JSON
     round-tripping is exact. Oracle restates every field closed-form."""
-    from trollflow2_spark.sources.protobuf import read_protobuf
+    from trollflow2_spark.extensions.protobuf import read_protobuf
 
     spec = {
         1: ("trace_id", "fixed64"),
@@ -2226,7 +2226,7 @@ def q_protobuf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.protobuf import (
+        from trollflow2_spark.extensions.protobuf import (
             _key,
             _varint,
             encode_message,
@@ -2282,7 +2282,7 @@ def q_protobuf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_msgpack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MessagePack intake (`sources/msgpack.py:read_msgpack`): the
+    """MessagePack intake (`extensions/msgpack.py:read_msgpack`): the
     fluentd/Redis-stream wire format, decoded by the from-scratch
     spec-v5 reader to canonical JSON (one Arrow kernel pass), then
     cut up JVM-side with native `from_json`. The fixture packs a
@@ -2291,7 +2291,7 @@ def q_msgpack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin (hex-rendered), fixarray and nested fixmap — and TRUNCATES
     every 11th blob, which must surface as err=1 with NULL fields,
     never an exception. Oracle restates every field closed-form."""
-    from trollflow2_spark.sources.msgpack import read_msgpack
+    from trollflow2_spark.extensions.msgpack import read_msgpack
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -2306,7 +2306,7 @@ def q_msgpack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.msgpack import pack
+        from trollflow2_spark.extensions.msgpack import pack
 
         for pdf in batches:
             blobs = []
@@ -2351,7 +2351,7 @@ def q_msgpack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_html_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
     """schema.org JSON-LD provenance extraction
-    (`sources/warc.py:jsonld_metadata`): the structured headline /
+    (`extensions/warc.py:jsonld_metadata`): the structured headline /
     publish-date / author / language block publishers embed — the
     metadata a training corpus keeps when page text alone loses it.
     Fixture classes per doc_id % 4: a well-formed NewsArticle block,
@@ -2361,7 +2361,7 @@ def q_html_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything — fixture assembly, regexp extraction, the typed
     from_json — is Column algebra in the scan stage; the oracle
     restates every field closed-form."""
-    from trollflow2_spark.sources.warc import jsonld_metadata
+    from trollflow2_spark.extensions.warc import jsonld_metadata
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -2423,7 +2423,7 @@ def q_html_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML table extraction (`sources/warc.py:html_table_rows`):
+    """HTML table extraction (`extensions/warc.py:html_table_rows`):
     tables carry the densest facts on a page and plain text
     extraction shreds them — this is the table-to-text intake step.
     Fixture: a header row (<th>) plus 1 + d%3 data rows with an
@@ -2431,7 +2431,7 @@ def q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     be ignored; every 6th doc has no table (zero rows). Fixture and
     extraction are both pure Column algebra; the oracle restates
     every row and cell verbatim."""
-    from trollflow2_spark.sources.warc import html_table_rows
+    from trollflow2_spark.extensions.warc import html_table_rows
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -2471,7 +2471,7 @@ def q_wat_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     origin-resolved relative."""
     import json as _json
 
-    from trollflow2_spark.sources.warc import wat_outlinks
+    from trollflow2_spark.extensions.warc import wat_outlinks
 
     def build(d):
         env = {
@@ -2529,7 +2529,7 @@ def q_wat_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     group_split chain applied to the WAT link graph)."""
     import json as _json
 
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         host_of_url,
         registrable_domain,
         wat_outlinks,
@@ -2595,7 +2595,7 @@ def q_crawl_to_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     what a trainer loads; every stage replays closed-form in the
     oracle."""
     from trollflow2_spark.extensions.sampling import concat_chunk_spans
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     survivors = q_crawl_pipeline(spark, sf_dir).select(
         "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
@@ -2612,7 +2612,7 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the messy string; the oracle states the clean form closed-form.
     The fixture construction itself is Column concat — the whole query
     is JVM-side, zero Python."""
-    from trollflow2_spark.sources.warc import canonicalize_url
+    from trollflow2_spark.extensions.warc import canonicalize_url
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -2952,7 +2952,7 @@ def q_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bare/subdomain x .com/.org/.io/.co.uk). The whole chain is Column
     algebra in the scan stage + one groupBy — the only shuffle carries
     (domain, partial aggs)."""
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         canonicalize_url,
         host_of_url,
         registrable_domain,
@@ -3171,14 +3171,14 @@ def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polite fetch planning (`sources/warc.py:fetch_schedule`): the
+    """Polite fetch planning (`extensions/warc.py:fetch_schedule`): the
     scored frontier becomes an executable plan — per-domain slots in
     (priority desc, url asc) order, offset = slot x crawl_delay, and
     DOMAIN-AFFINE worker assignment (portable hash), the only
     assignment that preserves per-domain politeness under horizontal
     scale. One bounded per-domain window; everything else map-side.
     Oracle replays the window and the md5-derived worker hash."""
-    from trollflow2_spark.sources.warc import fetch_schedule
+    from trollflow2_spark.extensions.warc import fetch_schedule
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -3199,14 +3199,14 @@ def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemap discovery from robots.txt
-    (`sources/warc.py:robots_sitemaps`): the `Sitemap:` directive
+    (`extensions/warc.py:robots_sitemaps`): the `Sitemap:` directive
     lives outside user-agent groups and is how a crawl finds the
     sitemap XML that `feed_urls` then parses — the missing hop
     between the politeness tier and the frontier tier. Fixture
     robots bodies mix comments, rule lines, and 0-2 Sitemap lines
     (one lowercase-keyed, indented) per fetch; URLs must come back
     verbatim and in file order."""
-    from trollflow2_spark.sources.warc import robots_sitemaps
+    from trollflow2_spark.extensions.warc import robots_sitemaps
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -3275,7 +3275,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edges shuffle once per iteration keyed on the target host;
     out-degrees broadcast (host-cardinality table); the rank table is
     host-sized, not page-sized — the standard web-graph rollup."""
-    from trollflow2_spark.sources.warc import host_of_url
+    from trollflow2_spark.extensions.warc import host_of_url
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -3433,7 +3433,7 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex extraction in the scan stage, one window shuffle keyed on
     canonical_url, one digest agg — the text itself shuffles once, as
     (digest, id)."""
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         canonicalize_url,
         html_to_text,
         parse_warc_bytes,
@@ -3537,7 +3537,7 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robots.txt politeness gate, full RFC 9309 group-member
-    semantics (`sources/warc.py:robots_allowed`): per-domain robots
+    semantics (`extensions/warc.py:robots_allowed`): per-domain robots
     bodies carry BOTH Allow and Disallow rules with `*` wildcards and
     `$` end anchors; each URL's verdict is the longest-matching
     pattern (length in octets as written, the Google-matcher
@@ -3550,7 +3550,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     /p/33 resolved to Allow. Rules are domain-cardinality and the
     match is a higher-order fold over a small array — at 100 TB this
     broadcasts against the scan, zero Python, no data-derived regex."""
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         parse_robots_rules,
         robots_allowed,
     )
@@ -3598,7 +3598,7 @@ def q_chi2_feature_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer arithmetic divided once at the end, so the oracle
     replays it bit-for-bit. Top-K by (chi2, term) without a global
     sort (TakeOrderedAndProject)."""
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -3755,7 +3755,7 @@ def q_url_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard keep-latest shape; at 100 TB the shuffle key is the
     canonical URL, whose cardinality tracks unique pages, so the
     window partitions stay tiny (captures per page)."""
-    from trollflow2_spark.sources.warc import canonicalize_url
+    from trollflow2_spark.extensions.warc import canonicalize_url
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -4078,7 +4078,7 @@ def q_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     examples; output is the (example, doc) overlap span table a loader
     joins back to token shards. Sharded cumsum — no global window."""
     from trollflow2_spark.extensions.sampling import concat_chunk_spans
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
@@ -4187,7 +4187,7 @@ def q_embedding_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_encode,
         pq_topk,
     )
-    from trollflow2_spark.operators.windows import topk_per_group
+    from trollflow2_spark.extensions.windows import topk_per_group
 
     emb, X, books = _pq_books(spark, sf_dir)
     codes = pq_encode(emb, books)
@@ -5012,11 +5012,11 @@ def _maintenance_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval (range) join via time bucketing: events landing inside
     any daily maintenance window, counted per window. The operator
-    (`operators/interval.py`) turns point-in-interval matching into a
+    (`extensions/interval.py`) turns point-in-interval matching into a
     shuffled equi-join on hour buckets + exact verify — never the
     BroadcastNestedLoopJoin a naive inequality join plans, so it
     survives interval tables too big to broadcast."""
-    from trollflow2_spark.operators.interval import interval_join
+    from trollflow2_spark.extensions.interval import interval_join
 
     ev = load_table(spark, sf_dir, "events")
     wins = _maintenance_windows(spark, sf_dir)
@@ -5251,7 +5251,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZORDER strategy). Locality is pinned behaviorally in
     `test_zorder_write_clusters_both_dimensions`; this query pins the
     key arithmetic against the oracle's replay."""
-    from trollflow2_spark.functions.zorder import zorder_key
+    from trollflow2_spark.extensions.zorder import zorder_key
 
     ev = load_table(spark, sf_dir, "events")
     ub = F.pmod(F.col("user_id"), F.lit(1024))
@@ -6077,7 +6077,7 @@ def q_delta_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_delta_snapshot_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta deletion vectors (`extensions/profile.py::
     delta_log_snapshot(stats=True)` + `delta_dv_positions` +
-    `sources/roaring.py`): modern Delta writers attach a
+    `extensions/roaring.py`): modern Delta writers attach a
     `deletionVector` descriptor to add actions instead of rewriting
     files — counting DV-masked rows as live silently overstates
     every rollup. Fixture (`_delta_dv_fixture`): every doc adds
@@ -6129,7 +6129,7 @@ def _delta_dv_fixture(spark: SparkSession, sf_dir: str):
 
         import pandas as pd
 
-        from trollflow2_spark.sources.roaring import (
+        from trollflow2_spark.extensions.roaring import (
             encode_dv_data,
             frame_dv_file,
             z85_encode,
@@ -6344,13 +6344,13 @@ def q_delta_dv_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC telemetry downsampling
-    (`operators/windows.py:downsample_ohlc`): first/extreme/last
+    (`extensions/windows.py:downsample_ohlc`): first/extreme/last
     reading per (event type, hour) as ONE map-side-combinable hash
     agg — min_by/max_by on the total (ts, event_id) key — instead of
     the two row_number windows the naive form pays. The oracle
     replays open/close with ordered windows; everything else is
     plain min/max/decimal-sum."""
-    from trollflow2_spark.operators.windows import downsample_ohlc
+    from trollflow2_spark.extensions.windows import downsample_ohlc
 
     ev = load_table(spark, sf_dir, "events")
     out = downsample_ohlc(
@@ -7917,7 +7917,7 @@ def q_h264_slice_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mp4_h264_blob(d: int) -> bytes:
     """Closed-form DECODABLE mp4/avc1 fixture: a 32x32 IDR picture
     authored by the repo's full-control H.264 encoder
-    (`sinks/h264.py`) — four macroblocks whose DC chains are
+    (`extensions/h264.py`) — four macroblocks whose DC chains are
     closed-form in doc_id at QP 28: MB0 is Intra_16x16 DC (or, every
     7th doc, an Intra_4x4 all-DC macroblock) with a single luma DC
     level, MB1/MB2 predict DC from MB0's reconstructed edges, MB3
@@ -7926,7 +7926,7 @@ def _mp4_h264_blob(d: int) -> bytes:
     length-prefixed IDR NAL. Every 11th doc is not an mp4."""
     if d % 11 == 0:
         return b"\x00\x00\x00\x08oops" + bytes([d % 256])
-    from trollflow2_spark.sinks.h264 import (
+    from trollflow2_spark.extensions.h264 import (
         H264IntraEncoder,
         build_pps,
         build_sps,
@@ -8055,7 +8055,7 @@ def _mp4_h264_multi_blob(d: int) -> bytes:
     mp4."""
     if d % 11 == 0:
         return b"\x00\x00\x00\x08oops" + bytes([d % 256])
-    from trollflow2_spark.sinks.h264 import (
+    from trollflow2_spark.extensions.h264 import (
         H264IntraEncoder,
         build_pps,
         build_sps,
@@ -8679,7 +8679,7 @@ def q_html_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     markdown keeps the structure LLM training wants where flat text
     loses headings and link targets. Pure regexp chain in the scan
     stage; the oracle states the converted markdown verbatim."""
-    from trollflow2_spark.sources.warc import html_to_markdown
+    from trollflow2_spark.extensions.warc import html_to_markdown
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id").cast("string")
@@ -8791,7 +8791,7 @@ def q_domain_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Free-form radius join (`operators/geo.py:geo_radius_join`):
+    """Free-form radius join (`extensions/geo.py:geo_radius_join`):
     every customer point within 300 km of a nation site — the
     store-catchment / POI-tagging join Spark lacks, planned as a
     grid-cell EQUI hash join (sites explode to a 3x3 cell
@@ -8802,7 +8802,7 @@ def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot flap (`test_geo.py` pins the margin).
     The oracle is the naive cross join + identical haversine — the
     bucketed plan must reproduce it exactly."""
-    from trollflow2_spark.operators.geo import geo_radius_join
+    from trollflow2_spark.extensions.geo import geo_radius_join
 
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey")
     k = F.col("n_nationkey").cast("long")
@@ -8951,7 +8951,7 @@ def q_url_spam_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly (the merely-long URL fires one signal and stays
     unflagged — single oddities are not spam). The oracle rebuilds the
     same URLs and replays the same regexp arithmetic."""
-    from trollflow2_spark.sources.warc import url_spam_features
+    from trollflow2_spark.extensions.warc import url_spam_features
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -9001,7 +9001,7 @@ def q_main_content_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer — the block-level text/link-density rule must keep exactly
     the paragraphs. Pure Column algebra; the oracle restates the
     extracted text and every count verbatim."""
-    from trollflow2_spark.sources.warc import main_content_blocks
+    from trollflow2_spark.extensions.warc import main_content_blocks
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -9133,7 +9133,7 @@ def q_meta_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and keeps nofollow links out of the frontier before any dedup or
     quality work runs. Scan-stage Column regexps; the oracle states
     every flag and count closed-form from the planted fixture."""
-    from trollflow2_spark.sources.warc import meta_robots_flags
+    from trollflow2_spark.extensions.warc import meta_robots_flags
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -9207,7 +9207,7 @@ def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, so the oracle states the extracted text verbatim."""
     import pandas as pd
 
-    from trollflow2_spark.sources.pdftext import pdf_text_table
+    from trollflow2_spark.extensions.pdftext import pdf_text_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
@@ -9353,7 +9353,7 @@ def q_feed_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     href attributes): one (kind, url, stamp) row per entry via a pure
     Column regexp block parse + posexplode, zero Python. The oracle
     restates every entry verbatim."""
-    from trollflow2_spark.sources.warc import feed_urls
+    from trollflow2_spark.extensions.warc import feed_urls
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -9513,7 +9513,7 @@ def q_subtitle_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     timing lines via a higher-order fold — all pure Column regexp
     algebra in the scan stage, the same family as HTML->markdown. The
     oracle restates text and timing arithmetic verbatim."""
-    from trollflow2_spark.sources.subtitles import (
+    from trollflow2_spark.extensions.subtitles import (
         subtitle_cue_stats,
         subtitle_text,
     )
@@ -9582,7 +9582,7 @@ def q_pdf_text_cid(spark: SparkSession, sf_dir: str) -> DataFrame:
     text verbatim."""
     import pandas as pd
 
-    from trollflow2_spark.sources.pdftext import pdf_text_table
+    from trollflow2_spark.extensions.pdftext import pdf_text_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
@@ -9726,7 +9726,7 @@ def q_pdf_text_objstm(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed simple+CID text verbatim."""
     import pandas as pd
 
-    from trollflow2_spark.sources.pdftext import pdf_text_table
+    from trollflow2_spark.extensions.pdftext import pdf_text_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
@@ -9759,7 +9759,7 @@ def _encrypted_pdf_blob(d: int) -> bytes:
     RC4 40-bit (/V 1 /R 2), RC4 128-bit (/V 2 /R 3 /Length 128), or
     AES-128-CBC (/V 4 /R 4 /AESV2) — with /O, /U and the file /ID
     derived exactly per ISO 32000-1 Algorithms 2/3/4/5 (forward
-    authoring of the same math `sources/pdftext.py` inverts). The user
+    authoring of the same math `extensions/pdftext.py` inverts). The user
     password is EMPTY (the owner-restricted crawl case) except every
     7th doc, which locks with a real user password and must stay
     text-suppressed. The IV and /ID are md5-derived from doc_id —
@@ -9767,7 +9767,7 @@ def _encrypted_pdf_blob(d: int) -> bytes:
     import hashlib
     import struct
 
-    from trollflow2_spark.sources.pdftext import (
+    from trollflow2_spark.extensions.pdftext import (
         _PDF_PAD,
         _aes128_cbc_encrypt,
         _rc4,
@@ -9887,7 +9887,7 @@ def _encrypted_pdf_blob_v5(d: int, user_pw: bytes, owner_pw: bytes) -> bytes:
     per-object derivation at /V 5)."""
     import hashlib
 
-    from trollflow2_spark.sources.pdftext import (
+    from trollflow2_spark.extensions.pdftext import (
         _aes128_cbc_encrypt,
         _aes_cbc_encrypt_nopad,
         pdf2_hardened_hash,
@@ -9959,7 +9959,7 @@ def q_pdf_text_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates the recovered plaintext closed-form per doc_id."""
     import pandas as pd
 
-    from trollflow2_spark.sources.pdftext import pdf_text_table
+    from trollflow2_spark.extensions.pdftext import pdf_text_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -10229,7 +10229,7 @@ def q_multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     BGR DIBs (odd docs) encoded with the repo's own encoder —
     bottom-up rows, 4-byte padding, palette resolution all exercised;
     pixel statistics replay closed-form in SQL."""
-    from trollflow2_spark.sinks.bmp import encode_bmp
+    from trollflow2_spark.extensions.bmp import encode_bmp
 
     return _decode_fixture_query(
         spark, sf_dir, "image/bmp", encode_bmp, encode_bmp
@@ -10237,14 +10237,14 @@ def q_multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_decode_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL QOI decode (`sinks/qoi.py`, the from-scratch qoiformat.org
+    """REAL QOI decode (`extensions/qoi.py`, the from-scratch qoiformat.org
     codec): even docs carry a gray ramp replicated to RGB (RUN/INDEX
     heavy), docs ≡1 (mod 4) an RGBA ramp (alpha ops), the rest an RGB
     ramp (DIFF/LUMA heavy) — every op family exercised; pixel
     statistics replay closed-form."""
     import numpy as _np
 
-    from trollflow2_spark.sinks.qoi import encode_qoi
+    from trollflow2_spark.extensions.qoi import encode_qoi
 
     from trollflow2_spark.extensions.multimodal import decode_media
 
@@ -10302,7 +10302,7 @@ def q_multimodal_decode_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_decode_pnm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL netpbm decode: binary P5 (even docs) and P6 (odd docs)
     through the whitespace/comment-tolerant header parser."""
-    from trollflow2_spark.sinks.bmp import encode_pnm
+    from trollflow2_spark.extensions.bmp import encode_pnm
 
     return _decode_fixture_query(
         spark, sf_dir, "image/x-portable-anymap", encode_pnm, encode_pnm
@@ -10331,7 +10331,7 @@ def q_multimodal_decode_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.bmp import encode_ico
+        from trollflow2_spark.extensions.bmp import encode_ico
 
         for pdf in batches:
             out = []
@@ -10396,7 +10396,7 @@ def q_multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.webp import encode_webp_lossless
+        from trollflow2_spark.extensions.webp import encode_webp_lossless
 
         for pdf in batches:
             blobs, metas = [], []
@@ -10508,7 +10508,7 @@ def q_multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL JPEG decode through the repo's from-scratch baseline codec
-    (sinks/jpeg.py — DCT, Annex-K tables, Huffman entropy coding). JPEG
+    (extensions/jpeg.py — DCT, Annex-K tables, Huffman entropy coding). JPEG
     is lossy, so the fixture uses constant EVEN-valued images, which
     quantize losslessly (only the DC coefficient survives and Annex-K
     Q[0,0]=16 divides 8*(v-128) exactly for even v): the decoded pixels
@@ -10530,7 +10530,7 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.jpeg import encode_jpeg_gray
+        from trollflow2_spark.extensions.jpeg import encode_jpeg_gray
 
         for pdf in batches:
             blobs, metas = [], []
@@ -10589,7 +10589,7 @@ def q_multimodal_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFram
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.jpeg import encode_jpeg
+        from trollflow2_spark.extensions.jpeg import encode_jpeg
 
         for pdf in batches:
             blobs, metas = [], []
@@ -10654,7 +10654,7 @@ def q_multimodal_decode_jpeg_progressive(
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.jpeg import encode_jpeg_progressive
+        from trollflow2_spark.extensions.jpeg import encode_jpeg_progressive
 
         for pdf in batches:
             blobs, metas = [], []
@@ -10693,7 +10693,7 @@ def q_multimodal_decode_jpeg_progressive(
 
 def q_multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL FLAC decode through the repo's from-scratch codec
-    (sinks/flac.py — fixed predictors, Rice residuals, CRC-verified
+    (extensions/flac.py — fixed predictors, Rice residuals, CRC-verified
     frames). FLAC is LOSSLESS, so unlike the JPEG fixtures no
     even-value trickery is needed: deterministic ramp signals decode to
     exactly the encoded samples and every statistic is closed-form."""
@@ -10714,7 +10714,7 @@ def q_multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.flac import encode_flac
+        from trollflow2_spark.extensions.flac import encode_flac
 
         for pdf in batches:
             blobs, metas = [], []
@@ -10908,7 +10908,7 @@ def q_frame_sample_pnm(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.bmp import encode_pnm
+        from trollflow2_spark.extensions.bmp import encode_pnm
 
         for pdf in batches:
             blobs = []
@@ -10953,7 +10953,7 @@ def q_frame_sample_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.jpeg import encode_jpeg_gray
+        from trollflow2_spark.extensions.jpeg import encode_jpeg_gray
 
         for pdf in batches:
             blobs = []
@@ -10996,7 +10996,7 @@ def q_frame_sample_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.webp import encode_webp_animation
+        from trollflow2_spark.extensions.webp import encode_webp_animation
 
         for pdf in batches:
             blobs = []
@@ -11039,7 +11039,7 @@ def q_multimodal_decode_webp_lossy(
     def make_vp8(batches):
         import pandas as pd
 
-        from trollflow2_spark.sinks.vp8 import encode_vp8_i16, wrap_webp
+        from trollflow2_spark.extensions.vp8 import encode_vp8_i16, wrap_webp
 
         for pdf in batches:
             blobs, metas = [], []
@@ -11097,7 +11097,7 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.gif import encode_gif
+        from trollflow2_spark.extensions.gif import encode_gif
 
         for pdf in batches:
             blobs, metas = [], []
@@ -11157,7 +11157,7 @@ def q_frame_sample_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from trollflow2_spark.sinks.gif import encode_gif_animation
+        from trollflow2_spark.extensions.gif import encode_gif_animation
 
         for pdf in batches:
             blobs = []
@@ -11337,7 +11337,7 @@ def q_hybrid_multi_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     two (nq x k)-row sides on (query_id, doc_id)."""
     from trollflow2_spark.extensions.similarity import cosine
     from trollflow2_spark.extensions.text import bm25_scores_multi
-    from trollflow2_spark.operators.windows import topk_per_group
+    from trollflow2_spark.extensions.windows import topk_per_group
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -11418,7 +11418,7 @@ def q_domain_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast when small, shuffled join fallback when not (plan-pinned
     both ways in tests/test_plans.py)."""
     from trollflow2_spark.extensions.text import quality_features
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         canonicalize_url,
         host_of_url,
         registrable_domain,
@@ -11573,7 +11573,7 @@ def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays canonicalization, the PSL rule, and the bucket arithmetic
     in SQL over the same planted URLs."""
     from trollflow2_spark.extensions.sampling import deterministic_split
-    from trollflow2_spark.sources.warc import (
+    from trollflow2_spark.extensions.warc import (
         canonicalize_url,
         host_of_url,
         registrable_domain,
@@ -11703,7 +11703,7 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     curly brace); the operator is pure higher-order Column work in the
     scan stage — zero shuffles, zero Python."""
     from trollflow2_spark.extensions.text import c4_line_filter
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
@@ -11818,7 +11818,7 @@ def q_sft_chat_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays tokenization, slicing, the mask string and both digests
     verbatim."""
     from trollflow2_spark.extensions.sampling import sft_chat_masks
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
@@ -11841,7 +11841,7 @@ def q_dpo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbosity-bias gate (integer per-mille ratio). The oracle replays
     slicing, both gates and both sequence digests."""
     from trollflow2_spark.extensions.sampling import dpo_pairs
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
@@ -12009,7 +12009,7 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the admission decision, the running total and the budget are all
     integers. The oracle replays the hash order and the running-sum
     window."""
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
@@ -12055,7 +12055,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old = docs.where(F.col("doc_id") % 13 != 3)
     new = docs.where(F.col("doc_id") % 11 != 7)
-    from trollflow2_spark.functions.hashing import tokens
+    from trollflow2_spark.extensions.hashing import tokens
 
     def toks(df: DataFrame, side: str) -> DataFrame:
         return df.select(
@@ -12628,7 +12628,7 @@ def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 readings, renormalized at sequence starts). One window shuffle
     on user_id, zero Python; the weighted sum is a literal expression
     chain identical on both engines."""
-    from trollflow2_spark.operators.windows import ewma_bounded
+    from trollflow2_spark.extensions.windows import ewma_bounded
 
     ev = load_table(spark, sf_dir, "events")
     return ewma_bounded(
@@ -12693,7 +12693,7 @@ def q_streaming_kmv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured XML intake (`sources/xmlsrc.py:read_xml`): the
+    """Structured XML intake (`extensions/xmlsrc.py:read_xml`): the
     from-scratch pull parser — attributes (both quote styles),
     CDATA, predefined entities + numeric charrefs, comments/PI/
     DOCTYPE skipping with NO entity expansion (XXE/billion-laughs
@@ -12703,8 +12703,8 @@ def q_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     then native DataFrame algebra over that table. Every 13th blob
     truncates mid-document and must surface as err=1 with NULL
     fields. The structured complement of the regexp-level
-    `feed_urls` (sources/warc.py:1020-1035)."""
-    from trollflow2_spark.sources.xmlsrc import read_xml
+    `feed_urls` (extensions/warc.py:1020-1035)."""
+    from trollflow2_spark.extensions.xmlsrc import read_xml
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -12975,14 +12975,14 @@ def q_cusum_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow IPC stream intake (`sources/arrowipc.py`): multi-batch
+    """Arrow IPC stream intake (`extensions/arrowipc.py`): multi-batch
     feature-store blobs -> one canonical-JSON row per record in one
     Arrow pass, downstream cuts native from_json; every 17th blob
     truncates and must surface as err=1 with NULL fields. pyarrow is
     the reference implementation here (it IS Spark's Python data
     plane) — the contract under test is the Spark intake shape +
     quarantine taxonomy."""
-    from trollflow2_spark.sources.arrowipc import read_arrow_ipc
+    from trollflow2_spark.extensions.arrowipc import read_arrow_ipc
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -12997,7 +12997,7 @@ def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.arrowipc import write_ipc_blob
+        from trollflow2_spark.extensions.arrowipc import write_ipc_blob
 
         for pdf in batches:
             blobs = []
@@ -13166,7 +13166,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sqlite_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQLite file intake (`sources/sqlitefile.py`): from-scratch
+    """SQLite file intake (`extensions/sqlitefile.py`): from-scratch
     b-tree/record/overflow parsing of .sqlite blobs — one canonical-
     JSON row per record, INTEGER PRIMARY KEY rowid-alias substitution,
     512-byte pages so long names exercise overflow chains; every 17th
@@ -13174,7 +13174,7 @@ def q_sqlite_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stdlib sqlite3 module authors the fixture blobs (reference
     implementation, the arrowipc pattern); the reader under test
     never touches it."""
-    from trollflow2_spark.sources.sqlitefile import read_sqlite_blobs
+    from trollflow2_spark.extensions.sqlitefile import read_sqlite_blobs
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -13189,7 +13189,7 @@ def q_sqlite_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.sqlitefile import write_sqlite_blob
+        from trollflow2_spark.extensions.sqlitefile import write_sqlite_blob
 
         sql = (
             "CREATE TABLE t(id INTEGER PRIMARY KEY, name TEXT, "
@@ -13248,12 +13248,12 @@ def q_sqlite_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BSON/mongodump intake (`sources/bson.py`): from-scratch wire
+    """BSON/mongodump intake (`extensions/bson.py`): from-scratch wire
     decode of concatenated BSON documents — ObjectId/datetime/binary/
     nested docs/arrays to canonical JSON in one Arrow pass, downstream
     cuts native from_json; every 17th dump truncates and must surface
     as ONE err=1 quarantine row."""
-    from trollflow2_spark.sources.bson import read_bson_dump
+    from trollflow2_spark.extensions.bson import read_bson_dump
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -13268,7 +13268,7 @@ def q_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.bson import (
+        from trollflow2_spark.extensions.bson import (
             ObjectId,
             UtcDatetime,
             pack_dump,
@@ -13333,13 +13333,13 @@ def q_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geofence tagging (`operators/geo.py::point_in_polygon`):
+    """Geofence tagging (`extensions/geo.py::point_in_polygon`):
     customer points ray-cast against the shared integer-vertex
     polygon catalog (a concave shape, a polygon with a hole, a
     triangle) as ZERO-shuffle scan-stage Column algebra — all-integer
     crossing tests, no float flap. The oracle is the naive
     edges-cross-join parity count."""
-    from trollflow2_spark.operators.geo import point_in_polygon
+    from trollflow2_spark.extensions.geo import point_in_polygon
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     c = F.col("c_custkey")
@@ -13402,11 +13402,11 @@ def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands (`operators/windows.py::gaps_islands`):
+    """Gaps-and-islands (`extensions/windows.py::gaps_islands`):
     maximal runs of consecutive active DAYS per user — the streak
     readout. One exchange end to end (window and agg share the user
     key); day indices are exact integers."""
-    from trollflow2_spark.operators.windows import gaps_islands
+    from trollflow2_spark.extensions.windows import gaps_islands
 
     ev = load_table(spark, sf_dir, "events")
     days = ev.select(
@@ -13421,12 +13421,12 @@ def q_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep-line interval overlap (`operators/windows.py::
+    """Sweep-line interval overlap (`extensions/windows.py::
     peak_concurrency`): peak concurrent synthetic sessions per event
     type (each event holds a slot for event_id%7+1 minutes), with the
     inclusive starts-before-ends tie rule and the earliest peak
     instant via one min_by."""
-    from trollflow2_spark.operators.windows import peak_concurrency
+    from trollflow2_spark.extensions.windows import peak_concurrency
 
     ev = load_table(spark, sf_dir, "events")
     iv = ev.select(
@@ -13440,7 +13440,7 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geojson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GeoJSON FeatureCollection intake (`sources/geojson.py`):
+    """GeoJSON FeatureCollection intake (`extensions/geojson.py`):
     per-feature bbox, shoelace areas with hole subtraction, and the
     RFC 7946 exterior-winding audit, all computed at the byte
     boundary; every 17th document truncates to ONE err=1 quarantine
@@ -13448,7 +13448,7 @@ def q_geojson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets), so areas replay exactly. r13 adds a MultiPolygon whose
     SECOND exterior flips winding on d%4==1 docs — the RFC 7946
     audit must check every exterior ring, not just the first."""
-    from trollflow2_spark.sources.geojson import read_geojson
+    from trollflow2_spark.extensions.geojson import read_geojson
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -13611,14 +13611,14 @@ def q_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ics_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """iCalendar intake (`sources/ics.py`): RFC 5545 line unfolding,
+    """iCalendar intake (`extensions/ics.py`): RFC 5545 line unfolding,
     TEXT unescaping, DURATION parsing and DAILY-RRULE expansion to
     one row per occurrence; every 17th document truncates to ONE
     err=1 quarantine row. r13 adds a YEARLY event per doc — every
     5th doc a Feb-29 leap rule whose occurrences skip non-leap years
     without consuming COUNT (2020/2024/2028), every 7th an explicit
     BYMONTH/BYMONTHDAY pair."""
-    from trollflow2_spark.sources.ics import read_ics
+    from trollflow2_spark.extensions.ics import read_ics
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -13927,11 +13927,11 @@ def q_tree_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion attribution (`operators/windows.py::
+    """Conversion attribution (`extensions/windows.py::
     touch_attribution`): first/last touch and touch count in the 7
     days before each purchase — ONE range window per user, no
     self-join fan-out."""
-    from trollflow2_spark.operators.windows import touch_attribution
+    from trollflow2_spark.extensions.windows import touch_attribution
 
     ev = load_table(spark, sf_dir, "events")
     return touch_attribution(
@@ -14068,13 +14068,13 @@ def q_seq_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stock_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-clamped running balance (`operators/windows.py::
+    """Zero-clamped running balance (`extensions/windows.py::
     clamped_running_balance`): per event type, signed event values
     folded as stock movements — the max(0, b+x) recurrence computed
     via the prefix-sum/running-min closed form in ONE shuffle (two
     windows over the same sort). Budget-capped to the first 400
     events per type so the row set stays artifact-sized."""
-    from trollflow2_spark.operators.windows import clamped_running_balance
+    from trollflow2_spark.extensions.windows import clamped_running_balance
 
     ev = load_table(spark, sf_dir, "events")
     capped = ev.where(F.col("event_id") < 2000).select(
@@ -14244,7 +14244,7 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg metadata-tree reading (`sources/iceberg.py`): a
+    """Iceberg metadata-tree reading (`extensions/iceberg.py`): a
     two-snapshot table whose manifests derive from the documents
     table — snapshot 2 drops ten manifests, REWRITES ten with
     status=2 deletions (doc_id%7 files), REUSES ten unchanged and
@@ -14252,11 +14252,11 @@ def q_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Avro decodes distributed through the from-scratch container
     codec, and the per-(snapshot, partition) live rollup must match
     the closed-form oracle for BOTH snapshots (time travel)."""
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.iceberg import (
         MANIFEST_LIST_SCHEMA,
         snapshot_partition_summary,
     )
-    from trollflow2_spark.sources.avro import write_container
+    from trollflow2_spark.extensions.avro import write_container
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", (F.col("doc_id") % 40).alias("bucket")
@@ -14271,8 +14271,8 @@ def q_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_manifests(key, pdf):
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import write_container as wc
-        from trollflow2_spark.sources.iceberg import MANIFEST_SCHEMA
+        from trollflow2_spark.extensions.avro import write_container as wc
+        from trollflow2_spark.extensions.iceberg import MANIFEST_SCHEMA
 
         b = int(key[0])
         ids = sorted(int(d) for d in pdf["doc_id"])
@@ -14367,7 +14367,7 @@ def q_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_iceberg_snapshot_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v2 merge-on-read (`sources/iceberg.py`): snapshot 2
+    """Iceberg v2 merge-on-read (`extensions/iceberg.py`): snapshot 2
     overlays POSITION-delete files on the same 20 data manifests
     snapshot 1 reads — delete manifests route by manifest-list
     ``content``, delete files decode distributed, and DISTINCT
@@ -14376,8 +14376,8 @@ def q_iceberg_snapshot_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Live rollups must match the closed-form oracle for BOTH
     snapshots: v1 semantics for snapshot 1, subtracted rows for
     snapshot 2."""
-    from trollflow2_spark.sources.avro import write_container
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.avro import write_container
+    from trollflow2_spark.extensions.iceberg import (
         MANIFEST_LIST_V2_SCHEMA,
         snapshot_partition_summary,
     )
@@ -14395,8 +14395,8 @@ def q_iceberg_snapshot_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(key, pdf):
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import write_container as wc
-        from trollflow2_spark.sources.iceberg import (
+        from trollflow2_spark.extensions.avro import write_container as wc
+        from trollflow2_spark.extensions.iceberg import (
             DELETE_MANIFEST_SCHEMA,
             MANIFEST_SCHEMA,
             POSITION_DELETE_SCHEMA,
@@ -14529,7 +14529,7 @@ def q_iceberg_snapshot_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_iceberg_eq_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v2 EQUALITY deletes (`sources/iceberg.py::
+    """Iceberg v2 EQUALITY deletes (`extensions/iceberg.py::
     snapshot_partition_summary(equality_id_fields=...)`): the default
     output of Flink CDC writers — delete-file rows are identifier
     tuples masking matching rows of data files with a STRICTLY lower
@@ -14541,8 +14541,8 @@ def q_iceberg_eq_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH forms must count once (d%6==0 files whose pos-0 id is ≡0
     mod 7). Only affected data files decode rows; snapshot 1 (data
     only) must be untouched."""
-    from trollflow2_spark.sources.avro import write_container
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.avro import write_container
+    from trollflow2_spark.extensions.iceberg import (
         MANIFEST_LIST_V2_SCHEMA,
         snapshot_partition_summary,
     )
@@ -14590,8 +14590,8 @@ def q_iceberg_eq_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(key, pdf):
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import write_container as wc
-        from trollflow2_spark.sources.iceberg import (
+        from trollflow2_spark.extensions.avro import write_container as wc
+        from trollflow2_spark.extensions.iceberg import (
             POSITION_DELETE_SCHEMA,
         )
 
@@ -14723,8 +14723,8 @@ def q_iceberg_eq_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_iceberg_dv_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v3 deletion vectors (`sources/puffin.py` +
-    `sources/iceberg.py::read_dv_positions`): v3 replaces
+    """Iceberg v3 deletion vectors (`extensions/puffin.py` +
+    `extensions/iceberg.py::read_dv_positions`): v3 replaces
     position-delete Avro files with roaring deletion vectors stored
     as ``deletion-vector-v1`` blobs in PUFFIN files, referenced from
     delete manifests by (puffin path, content_offset,
@@ -14741,12 +14741,12 @@ def q_iceberg_dv_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the closed-form oracle if the Puffin framing, the DV
     blob CRC/magic/length validation, the roaring decode, the seq
     scoping AND the supersede rule are all right."""
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.iceberg import (
         DELETE_MANIFEST_V3_SCHEMA,
         MANIFEST_LIST_V2_SCHEMA,
         snapshot_partition_summary,
     )
-    from trollflow2_spark.sources.avro import write_container
+    from trollflow2_spark.extensions.avro import write_container
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", (F.col("doc_id") % 20).alias("bucket")
@@ -14785,11 +14785,11 @@ def q_iceberg_dv_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(key, pdf):
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import write_container as wc
-        from trollflow2_spark.sources.iceberg import (
+        from trollflow2_spark.extensions.avro import write_container as wc
+        from trollflow2_spark.extensions.iceberg import (
             POSITION_DELETE_SCHEMA,
         )
-        from trollflow2_spark.sources.puffin import (
+        from trollflow2_spark.extensions.puffin import (
             encode_dv_v3,
             read_puffin_footer,
             write_puffin,
@@ -14946,8 +14946,8 @@ def q_iceberg_dv_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_iceberg_partition_transforms(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Iceberg hidden-partitioning transforms (`sources/iceberg.py::
-    partition_projection` + `functions/murmur3.py`): bucket[16] over
+    """Iceberg hidden-partitioning transforms (`extensions/iceberg.py::
+    partition_projection` + `extensions/murmur3.py`): bucket[16] over
     a 997-value long domain and bucket[8] over the 5 priority
     strings (murmur3_x86_32 with the spec's byte layouts —
     conformance-pinned against the spec's published hashes),
@@ -14956,7 +14956,7 @@ def q_iceberg_partition_transforms(
     a VALUES table generated from the SAME spec-pinned murmur3 (the
     hash itself is verified against the spec's vectors in pytest;
     the oracle verifies the Spark-side plumbing end to end)."""
-    from trollflow2_spark.sources.iceberg import partition_projection
+    from trollflow2_spark.extensions.iceberg import partition_projection
 
     orders = load_table(spark, sf_dir, "orders").select(
         (F.col("o_orderkey") % 997).alias("k"),
@@ -14984,7 +14984,7 @@ def q_iceberg_partition_transforms(
 
 
 def q_iceberg_expire_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-expiry / orphan-file planner (`sources/iceberg.py::
+    """Snapshot-expiry / orphan-file planner (`extensions/iceberg.py::
     expire_snapshots_plan`): snapshot 1 (ts 1000) falls out of the
     ts>=1500/keep-1 retention; its manifest list and per-bucket
     manifests become deletable, and of its data files exactly those
@@ -14995,8 +14995,8 @@ def q_iceberg_expire_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodes."""
     import json as _json
 
-    from trollflow2_spark.sources.avro import write_container
-    from trollflow2_spark.sources.iceberg import (
+    from trollflow2_spark.extensions.avro import write_container
+    from trollflow2_spark.extensions.iceberg import (
         MANIFEST_LIST_V2_SCHEMA,
         expire_snapshots_plan,
     )
@@ -15014,8 +15014,8 @@ def q_iceberg_expire_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(key, pdf):
         import pandas as pd
 
-        from trollflow2_spark.sources.avro import write_container as wc
-        from trollflow2_spark.sources.iceberg import (
+        from trollflow2_spark.extensions.avro import write_container as wc
+        from trollflow2_spark.extensions.iceberg import (
             DELETE_MANIFEST_SCHEMA,
             MANIFEST_SCHEMA,
         )
@@ -15131,7 +15131,7 @@ def q_iceberg_expire_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_spatial_join_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-bucketed point-in-polygon JOIN (`operators/geo.py::
+    """Grid-bucketed point-in-polygon JOIN (`extensions/geo.py::
     spatial_join_points_in_polygons`): polygons as DATA, not plan
     literals — 12 closed-form diamonds explode onto covering grid
     cells, customers land in exactly one cell each, the candidate
@@ -15140,7 +15140,7 @@ def q_spatial_join_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     .625-radius diamonds keep every comparison exact-binary, and
     the oracle is the CLOSED-FORM L1 diamond test — a different
     algorithm agreeing exactly."""
-    from trollflow2_spark.operators.geo import (
+    from trollflow2_spark.extensions.geo import (
         spatial_join_points_in_polygons,
     )
 
@@ -15305,14 +15305,14 @@ def q_dictmatch_bigdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cbor_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CBOR sequence intake (`sources/cbor.py`, RFC 8949 from
+    """CBOR sequence intake (`extensions/cbor.py`, RFC 8949 from
     scratch): per doc a 3-item sequence — a definite map (ints,
     negatives, bytes, nested array with true/null), a tag-1 epoch
     int, and an INDEFINITE-length text string — decoded to one
     canonical sorted-key JSON row per item; every 17th document
     truncates mid-map into ONE err=1 quarantine row. The oracle
     restates the exact canonical JSON strings closed-form."""
-    from trollflow2_spark.sources.cbor import read_cbor
+    from trollflow2_spark.extensions.cbor import read_cbor
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
@@ -15327,7 +15327,7 @@ def q_cbor_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_blobs(batches):
         import pandas as pd
 
-        from trollflow2_spark.sources.cbor import encode
+        from trollflow2_spark.extensions.cbor import encode
 
         for pdf in batches:
             blobs = []
@@ -15542,12 +15542,12 @@ def q_logrank_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_conversion_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert (`operators/windows.py::
+    """Time-to-convert (`extensions/windows.py::
     conversion_time_stats`): signup -> first subsequent purchase per
     user, rolled to weekly start cohorts with conversion rate and
     p50/p90 durations — two conditional min-aggs, no self-join
     fan-out."""
-    from trollflow2_spark.operators.windows import conversion_time_stats
+    from trollflow2_spark.extensions.windows import conversion_time_stats
 
     ev = load_table(spark, sf_dir, "events")
     return conversion_time_stats(

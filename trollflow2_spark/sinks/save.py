@@ -343,28 +343,42 @@ WRITER_REGISTRY["cf"] = _write_cf
 
 # ---------------------------------------------------------------------------
 # Filename composition (driver-side trollsift analog for output paths;
-# the Column version lives in operators/transforms.py).
+# the Column version lives in extensions/column_plugins.py).
 
 import re as _re
 
 _FIELD_RE = _re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)(?::([^}]+))?\}")
 
 
+class PatternFieldError(ValueError):
+    """A metadata value that its pattern field's format spec cannot
+    render: a type the spec does not fit, an unreadable time, or a
+    non-time value under a ``%`` spec. It comes from the message, so it
+    aborts the batch rather than the process."""
+
+
 def compose_filename(pattern: str, mda: dict) -> str:
     """Render ``{field}`` / ``{field:%strftime}`` patterns from metadata
-    (≙ trollsift ``compose`` used at ``plugins/__init__.py:211-212``)."""
+    (≙ trollsift ``compose`` used at ``plugins/__init__.py:211-212``).
+    Raises :class:`PatternFieldError` for a value its spec cannot
+    render."""
 
     def sub(m: _re.Match) -> str:
         field_name, spec = m.group(1), m.group(2)
         val = mda.get(field_name)
         if val is None:
             return ""
-        if spec and "%" in spec:
-            if isinstance(val, str):
-                val = _dt.datetime.fromisoformat(val)
-            return val.strftime(spec)
-        if spec:
-            return format(val, spec)
+        try:
+            if spec and "%" in spec:
+                when = _dt.datetime.fromisoformat(val) if isinstance(val, str) else val
+                return when.strftime(spec)
+            if spec:
+                return format(val, spec)
+        except (AttributeError, TypeError, ValueError) as exc:
+            raise PatternFieldError(
+                f"pattern field {field_name!r} with spec {spec!r} cannot "
+                f"render {val!r}: {exc}"
+            ) from exc
         return str(val)
 
     return _FIELD_RE.sub(sub, pattern)
@@ -482,7 +496,7 @@ def save_datasets(
         callbacks.append(callback_move)
     cancelled = (job or {}).get("cancelled")
 
-    # resolve every leaf's writer and columns before any data moves
+    # resolve every leaf's writer, columns and path before any data moves
     columns = scene.columns
     leaves = []
     for item in work_items:
@@ -509,15 +523,19 @@ def save_datasets(
                 for c in (mda.get("y_col", "y"), mda.get("x_col", "x"))
                 if c in columns and c not in cols
             ] + cols
-        leaves.append((item, mda, writer_name, writer, cols or columns))
+        pattern = mda.get("fname_pattern", "{productname}.{format}")
+        final_path = os.path.join(
+            mda.get("output_dir", "."), compose_filename(pattern, mda)
+        )
+        leaves.append((item, mda, writer_name, writer, cols or columns, final_path))
     if not leaves:
         return result
 
-    table = scene.select(*dict.fromkeys(c for *_, cols in leaves for c in cols)).toArrow()
-    for item, mda, writer_name, writer, cols in leaves:
-        pattern = mda.get("fname_pattern", "{productname}.{format}")
+    table = scene.select(
+        *dict.fromkeys(c for *_, cols, _path in leaves for c in cols)
+    ).toArrow()
+    for item, mda, writer_name, writer, cols, final_path in leaves:
         out_dir = mda.get("output_dir", ".")
-        final_path = os.path.join(out_dir, compose_filename(pattern, mda))
         stage_dir = staging_zone or out_dir
         os.makedirs(stage_dir, exist_ok=True)
         os.makedirs(out_dir, exist_ok=True)
