@@ -9,10 +9,12 @@ values exactly. Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's queries/oracles, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _key(row):

@@ -74,6 +74,7 @@ from trollflow2_spark.sources.scene import (
     SceneCreationError,
     create_scene,
     message_time,
+    read_parquet,
     resolve_filesystem_paths,
 )
 
@@ -761,7 +762,8 @@ def add_overviews_plugin(job: dict, factors: Sequence[int] = (4, 16)) -> None:
             continue
         if p.get("writer") != "parquet":
             continue
-        df = spark.read.parquet(p["filename"])
+        # typed from the part file's footer: no inference job per product
+        df = read_parquet(spark, [p["filename"]])
         numeric = [c for c, t in df.dtypes if t in ("double", "float", "bigint", "int")]
         if not numeric:
             continue

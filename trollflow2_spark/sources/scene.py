@@ -12,9 +12,15 @@ fed by filenames pulled out of a posttroll message
   loader (≙ the satpy reader registry; ours maps to Spark datasources),
 - the scene is a DataFrame: lazy, columnar, schema known after load.
 
-Scale notes: readers go straight to ``spark.read.<format>`` so the scan
-keeps predicate/projection pushdown; a 1000-file message becomes one
-multi-path scan (parallelism = files × row-groups), never a driver loop.
+Scale notes: the columnar readers go straight to ``spark.read.<format>``
+so the scan keeps predicate/projection pushdown; a 1000-file message
+becomes one multi-path scan (parallelism = files × row-groups), never a
+driver loop. Building a parquet, ORC or raster scene starts no Spark
+job, so the data's first job is the save gather. Parquet scenes are
+typed from the files' footers, read on the driver (``spark.read.parquet``
+alone would run one job per scene to infer the schema); ORC inference
+already runs no job, and the raster readers type the scene from a
+driver-side header read.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ import tarfile
 from datetime import datetime, timezone
 from typing import Any, Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -324,9 +331,130 @@ def register_reader(name: str):
     return deco
 
 
+#: the footer key under which Spark's parquet writer stores the schema it wrote
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+#: Spark's type for each parameterless Arrow type pyarrow reads a parquet
+#: column as; parquet's unsigned ints widen to the next signed type
+_ARROW_TO_SPARK = {
+    pa.bool_(): T.BooleanType(),
+    pa.int8(): T.ByteType(),
+    pa.int16(): T.ShortType(),
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    pa.uint8(): T.ShortType(),
+    pa.uint16(): T.IntegerType(),
+    pa.uint32(): T.LongType(),
+    pa.uint64(): T.DecimalType(20, 0),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.string(): T.StringType(),
+    pa.date32(): T.DateType(),
+}
+
+
+def _spark_type(t: pa.DataType, flag: Callable[[str], bool]) -> T.DataType | None:
+    """Spark's type for a parquet column that pyarrow reads as ``t``, or
+    None where this map does not cover it (nanosecond timestamps, which
+    Spark rejects or, under ``nanosAsLong``, reads as bigint; the null
+    type; large and dictionary types; ...).
+    ``flag(conf)`` reads a boolean session conf the answer depends on."""
+    if t in _ARROW_TO_SPARK:
+        return _ARROW_TO_SPARK[t]
+    if t == pa.binary():
+        return T.StringType() if flag("spark.sql.parquet.binaryAsString") else T.BinaryType()
+    if pa.types.is_timestamp(t) and t.unit in ("ms", "us"):
+        naive = t.tz is None and flag("spark.sql.parquet.inferTimestampNTZ.enabled")
+        return T.TimestampNTZType() if naive else T.TimestampType()
+    if pa.types.is_decimal128(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_list(t):
+        element = _spark_type(t.value_type, flag)
+        return element and T.ArrayType(element)
+    if pa.types.is_map(t):
+        key, item = _spark_type(t.key_type, flag), _spark_type(t.item_type, flag)
+        return key and item and T.MapType(key, item)
+    if pa.types.is_struct(t):
+        return _spark_struct(list(t), flag)
+    return None
+
+
+def _spark_struct(fields: list[pa.Field], flag: Callable[[str], bool]) -> T.StructType | None:
+    # every field nullable: Spark reads any file source's schema as nullable
+    types = [_spark_type(f.type, flag) for f in fields]
+    if None in types:
+        return None
+    return T.StructType([T.StructField(f.name, t) for f, t in zip(fields, types)])
+
+
+def _parquet_data_files(path: str) -> list[str] | None:
+    """The data files Spark's file listing finds at ``path``: the file
+    itself, or a directory's files except the names Spark skips (those
+    starting ``_`` or ``.``). None where Spark's own listing must decide:
+    a glob, a URI or a missing path, a subdirectory, or a ``_metadata``
+    summary file that Spark would read for the schema."""
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in os.scandir(path):
+        name = entry.name
+        hidden = name.startswith(".") or name.endswith("._COPYING_")
+        summary = name.startswith(("_metadata", "_common_metadata"))
+        if hidden or (name.startswith("_") and "=" not in name and not summary):
+            continue  # Spark's listing skips these
+        if name.startswith("_") or not entry.is_file():
+            return None  # a summary file Spark reads first, or a subdirectory
+        files.append(entry.path)
+    return files
+
+
+def parquet_footer_schema(spark: SparkSession, paths: list[str]) -> T.StructType | None:
+    """The schema ``spark.read.parquet(*paths)`` infers, read from every
+    data file's footer on the driver: the schema Spark's writer stored
+    in the footer, else the Arrow schema mapped to Spark types. None
+    wherever Spark must infer it itself: a path that is not a plain file
+    or a flat directory of them, an unreadable footer, a type the map
+    does not cover, or files whose schemas differ. Spark's inference
+    then raises what it raises for them."""
+    import pyarrow.parquet as pq
+
+    def flag(conf: str) -> bool:
+        return spark.conf.get(conf).lower() == "true"
+
+    schema = None
+    for path in paths:
+        files = _parquet_data_files(path)
+        if not files:
+            return None
+        for f in files:
+            try:
+                arrow = pq.read_schema(f)
+                written = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+                if written is not None:
+                    found = T.StructType.fromJson(json.loads(written))
+                else:
+                    found = _spark_struct(list(arrow), flag)
+            except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
+                return None  # an unreadable footer or schema: Spark's read reports it
+            if found is None or (schema is not None and found != schema):
+                return None
+            schema = found
+    return schema
+
+
 @register_reader("parquet")
-def _read_parquet(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
-    return spark.read.options(**kwargs).parquet(*paths)
+def read_parquet(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
+    """``spark.read.parquet`` with the schema :func:`parquet_footer_schema`
+    reads on the driver, so opening the scan starts no Spark job. Spark
+    infers it (one job) where the footers cannot give it, or where reader
+    options are given: some of them (``mergeSchema``, say) change
+    inference."""
+    schema = None if kwargs else parquet_footer_schema(spark, paths)
+    reader = spark.read.options(**kwargs)
+    return (reader if schema is None else reader.schema(schema)).parquet(*paths)
 
 
 @register_reader("csv")
@@ -344,7 +472,9 @@ def _read_json(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
 @register_reader("orc")
 def _read_orc(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
     """ORC scans get the same native treatment as parquet (predicate
-    pushdown, column pruning, vectorized reader). Avro stays
+    pushdown, column pruning, vectorized reader). Unlike parquet, ORC
+    needs no driver-side footer read: ``spark.read.orc`` infers the
+    schema without a Spark job. Avro stays
     unregistered: the spark-avro module is an external jar absent in
     this environment — registering it here would fail at first read
     instead of at configuration time."""
