@@ -4,6 +4,10 @@ outputs, using availableNow to drain deterministically."""
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 from trollflow2_spark.config.product_list import read_product_list
 from trollflow2_spark.streaming.runner import run_streaming
 
@@ -161,6 +165,63 @@ def test_streaming_crash_handler(spark, tmp_path):
     )
     query.awaitTermination(120)
     assert crashes == ["kaboom"]
+
+
+@pytest.mark.parametrize("fault", ["deleted", "truncated"])
+def test_scene_file_lost_before_save_goes_to_on_crash(spark, tmp_path, monkeypatch, fault):
+    """A parquet scene file deleted or truncated between create_scene and
+    save_datasets: the save gather fails, so the message goes to
+    on_crash with no output, no ``.tmp`` and no published message, and
+    the next message is nominal."""
+    from trollflow2_spark.plans.pipeline import PLUGIN_REGISTRY
+
+    def lose_scene_file(job, **kwargs):
+        for path in job["input_filenames"]:
+            if os.path.basename(path).startswith("doomed"):
+                data = open(path, "rb").read()
+                os.remove(path)
+                if fault == "truncated":
+                    with open(path, "wb") as fh:
+                        fh.write(data[: len(data) // 2])
+
+    monkeypatch.setitem(PLUGIN_REGISTRY, "lose_scene_file", lose_scene_file)
+    msg_dir = str(tmp_path / "messages")
+    out_dir = str(tmp_path / "out")
+    for name, platform in (("doomed", "SAT-A"), ("fine", "SAT-B")):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"y": [0, 1], "x": [0, 0], "ch1": [1.0, 2.0]}), path)
+        _write_message(msg_dir, f"m_{name}.json", path, platform=platform)
+    plist = read_product_list(raw_string=PL_YAML.format(out_dir=out_dir))
+    crashes, results = [], []
+    query = run_streaming(
+        spark,
+        msg_dir,
+        plist,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        workers=[
+            {"fun": "create_scene"},
+            {"fun": "lose_scene_file"},
+            {"fun": "save_datasets"},
+            {"fun": "publish"},
+        ],
+        on_result=lambda msg, summary: results.append((msg["platform_name"], summary["status"])),
+        on_crash=lambda msg, exc: crashes.append(msg["platform_name"]),
+        available_now=True,
+    )
+    query.awaitTermination(120)
+    assert crashes == ["SAT-A"]
+    assert results == [("SAT-B", "nominal")]
+    assert sorted(os.listdir(out_dir)) == ["SAT-B_p1.parquet", "published_messages"]
+    assert not [
+        name for _root, _dirs, names in os.walk(out_dir) for name in _dirs + names
+        if name.endswith(".tmp")
+    ]
+    published = [
+        json.loads(line)
+        for name in os.listdir(os.path.join(out_dir, "published_messages"))
+        for line in open(os.path.join(out_dir, "published_messages", name))
+    ]
+    assert [json.loads(m["message"])["platform_name"] for m in published] == ["SAT-B"]
 
 
 def test_windowed_counts_with_watermark(spark, sf_dir, tmp_path):

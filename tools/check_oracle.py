@@ -69,6 +69,9 @@ def main() -> int:
     from trollflow2_spark.session import get_spark
     from trollflow2_spark.tables import TABLE_NAMES
 
+    # one Spark task thread per CPU this process may use, as the tier-1
+    # command sets it (`nproc`), not get_spark's local[32] default
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLE_NAMES:

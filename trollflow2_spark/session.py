@@ -17,8 +17,11 @@ from pyspark.sql import SparkSession
 # Runtime-settable confs every query needs regardless of who built the
 # session (the correctness driver builds its own SparkSession).
 _RUNTIME_CONFS = {
-    # Test parquet uses TIMESTAMP(NANOS); under this flag Spark 4 reads it
-    # as timestamp_ntz (naive), which matches DuckDB semantics exactly.
+    # Test parquet uses TIMESTAMP(NANOS), which Spark rejects without this
+    # flag. Under it Spark reads such a column, with or without a zone, as
+    # bigint nanoseconds since the epoch (2024-01-15T12:30Z reads as
+    # 1705321800000000000), not as a timestamp; tables.load_table turns
+    # events.ts back into a timestamp_ntz.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Naive timestamps + UTC rendering keeps date_format() deterministic.
     "spark.sql.session.timeZone": "UTC",

@@ -6,10 +6,12 @@ Maps the reference's writer stack (``save_datasets`` /
 223-473`` and ``launcher.py:90-143``):
 
 - *one computation, many sinks*: the columns every output of a batch
-  writes are gathered once, with one ``toArrow()`` Spark job, and each
-  writer encodes its file from that Arrow table on the driver
-  (≙ the single ``compute_writer_results`` call at
-  ``plugins/__init__.py:395``);
+  writes are gathered once into one Arrow table on the driver, and each
+  writer encodes its file from that table (≙ the single
+  ``compute_writer_results`` call at ``plugins/__init__.py:395``). The
+  gather is ``sources.scene.gather_arrow``: a parquet scene no plugin
+  changed is read from its files with pyarrow, with no Spark job; any
+  other frame runs one ``toArrow()`` Spark job;
 - *atomic commit*: each output is written to ``<final>.<token>.tmp`` and
   renamed into place after success (≙ ``use_tmp_file``/``staging_zone``,
   ``plugins/__init__.py:235-255``), so downstream pollers only ever see
@@ -483,10 +485,12 @@ def save_datasets(
     shared computation, per-leaf writer dispatch, atomic tmp/staging
     commit, post-commit callbacks, manifest.
 
-    The union of the columns the leaves write is gathered once, in one
-    Spark job, and every writer encodes from that Arrow table on the
-    driver. ``eager_writing`` is accepted so reference configs load; it
-    has no effect, since every batch is computed once anyway. When
+    The union of the columns the leaves write is gathered once
+    (:func:`~trollflow2_spark.sources.scene.gather_arrow`: a read of the
+    files for an unchanged parquet scene, else one Spark job), and every
+    writer encodes from that Arrow table on the driver.
+    ``eager_writing`` is accepted so reference configs load; it has no
+    effect, since every batch is computed once anyway. When
     ``job["cancelled"]`` is set (its worker timed out) no further output
     is committed and the pending ``.tmp`` is removed.
     """
@@ -531,9 +535,12 @@ def save_datasets(
     if not leaves:
         return result
 
-    table = scene.select(
-        *dict.fromkeys(c for *_, cols, _path in leaves for c in cols)
-    ).toArrow()
+    # imported here: sources.scene imports the sinks package
+    from trollflow2_spark.sources.scene import gather_arrow
+
+    table = gather_arrow(
+        scene, list(dict.fromkeys(c for *_, cols, _path in leaves for c in cols))
+    )
     for item, mda, writer_name, writer, cols, final_path in leaves:
         out_dir = mda.get("output_dir", ".")
         stage_dir = staging_zone or out_dir

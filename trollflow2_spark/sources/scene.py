@@ -21,6 +21,16 @@ typed from the files' footers, read on the driver (``spark.read.parquet``
 alone would run one job per scene to infer the schema); ORC inference
 already runs no job, and the raster readers type the scene from a
 driver-side header read.
+
+Route rule for the save gather (:func:`gather_arrow`): a batch that
+writes the footer-typed parquet scan exactly as ``create_scene`` opened
+it only moves data, so its columns are read from the files on the
+driver with pyarrow, and the batch starts no Spark job. That read is
+taken only where it gives exactly the table ``toArrow()`` gives. Any
+frame a plugin replaced (composites, aggregate, a non-``null``
+resample, a bbox filter), and every raster scene, is gathered through
+Spark. The driver read is bounded by what the writers hold anyway: one
+batch's output columns, which every writer encodes on the driver.
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ import json
 import mmap
 import os
 import tarfile
+import weakref
 from datetime import datetime, timezone
 from typing import Any, Callable, Iterator
 
@@ -411,6 +422,41 @@ def _parquet_data_files(path: str) -> list[str] | None:
     return files
 
 
+def _footer_scan(
+    spark: SparkSession, paths: list[str]
+) -> tuple[T.StructType, list[tuple[str, Any]]] | None:
+    """``(schema, [(data file, footer), ...])`` for the files at
+    ``paths``, each footer read once with ``pyarrow.parquet.read_metadata``,
+    or None where Spark must infer the schema itself (see
+    :func:`parquet_footer_schema`)."""
+    import pyarrow.parquet as pq
+
+    def flag(conf: str) -> bool:
+        return spark.conf.get(conf).lower() == "true"
+
+    schema = None
+    footers = []
+    for path in paths:
+        files = _parquet_data_files(path)
+        if not files:
+            return None
+        for f in files:
+            try:
+                footer = pq.read_metadata(f)
+                written = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
+                if written is not None:
+                    found = T.StructType.fromJson(json.loads(written))
+                else:
+                    found = _spark_struct(list(footer.schema.to_arrow_schema()), flag)
+            except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
+                return None  # an unreadable footer or schema: Spark's read reports it
+            if found is None or (schema is not None and found != schema):
+                return None
+            schema = found
+            footers.append((f, footer))
+    return schema, footers
+
+
 def parquet_footer_schema(spark: SparkSession, paths: list[str]) -> T.StructType | None:
     """The schema ``spark.read.parquet(*paths)`` infers, read from every
     data file's footer on the driver: the schema Spark's writer stored
@@ -419,30 +465,16 @@ def parquet_footer_schema(spark: SparkSession, paths: list[str]) -> T.StructType
     or a flat directory of them, an unreadable footer, a type the map
     does not cover, or files whose schemas differ. Spark's inference
     then raises what it raises for them."""
-    import pyarrow.parquet as pq
+    scan = _footer_scan(spark, paths)
+    return None if scan is None else scan[0]
 
-    def flag(conf: str) -> bool:
-        return spark.conf.get(conf).lower() == "true"
 
-    schema = None
-    for path in paths:
-        files = _parquet_data_files(path)
-        if not files:
-            return None
-        for f in files:
-            try:
-                arrow = pq.read_schema(f)
-                written = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
-                if written is not None:
-                    found = T.StructType.fromJson(json.loads(written))
-                else:
-                    found = _spark_struct(list(arrow), flag)
-            except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
-                return None  # an unreadable footer or schema: Spark's read reports it
-            if found is None or (schema is not None and found != schema):
-                return None
-            schema = found
-    return schema
+#: the data files and footers of each DataFrame :func:`read_parquet`
+#: typed from the footers; keyed by the DataFrame object itself, so a
+#: frame any plugin derived from the scan is not in it
+_FOOTER_SCANS: weakref.WeakKeyDictionary[DataFrame, list[tuple[str, Any]]] = (
+    weakref.WeakKeyDictionary()
+)
 
 
 @register_reader("parquet")
@@ -452,9 +484,114 @@ def read_parquet(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
     infers it (one job) where the footers cannot give it, or where reader
     options are given: some of them (``mergeSchema``, say) change
     inference."""
-    schema = None if kwargs else parquet_footer_schema(spark, paths)
+    scan = None if kwargs else _footer_scan(spark, paths)
     reader = spark.read.options(**kwargs)
-    return (reader if schema is None else reader.schema(schema)).parquet(*paths)
+    if scan is None:
+        return reader.parquet(*paths)
+    frame = reader.schema(scan[0]).parquet(*paths)
+    _FOOTER_SCANS[frame] = scan[1]
+    return frame
+
+
+#: Spark types whose ``toArrow()`` values equal a pyarrow read of the
+#: parquet column cast to ``toArrow()``'s Arrow type (alone or nested in
+#: arrays, maps and structs); ``type(t)``, so char/varchar are not in it
+_DRIVER_READ_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
+    T.TimestampType, T.TimestampNTZType, T.DecimalType,
+)
+#: footer keys of a file Spark wrote in the legacy hybrid calendar; its
+#: reader rebases those values, a plain pyarrow read does not
+_SPARK_LEGACY_KEYS = (b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96")
+_SPARK_VERSION = b"org.apache.spark.version"
+
+
+def _driver_readable(t: T.DataType) -> bool:
+    if isinstance(t, T.ArrayType):
+        return _driver_readable(t.elementType)
+    if isinstance(t, T.MapType):
+        return _driver_readable(t.keyType) and _driver_readable(t.valueType)
+    if isinstance(t, T.StructType):
+        return all(_driver_readable(f.dataType) for f in t)
+    return type(t) in _DRIVER_READ_TYPES
+
+
+def _spark_rebases(footer: Any, corrected: bool) -> bool:
+    """Whether Spark's reader rebases the file's dates and timestamps, or
+    reads them raw; ``corrected``: the session's
+    ``datetimeRebaseModeInRead`` is CORRECTED (Spark's rule for a file
+    its writer did not mark)."""
+    meta = footer.metadata or {}
+    if any(key in meta for key in _SPARK_LEGACY_KEYS):
+        return True
+    version = meta.get(_SPARK_VERSION)
+    return version.decode() < "3.0.0" if version is not None else not corrected
+
+
+def gather_arrow(frame: DataFrame, columns: list[str]) -> pa.Table:
+    """The table ``frame.select(*columns).toArrow()`` gives.
+
+    When ``frame`` is the very scan :func:`read_parquet` typed from the
+    footers, its columns are read from the files on the driver with
+    pyarrow and cast to the Arrow schema ``toArrow()`` gives (the same
+    ``to_arrow_schema`` call), so no Spark job runs. That read is taken
+    only where it equals Spark's:
+
+    - every selected column's Spark type is in :data:`_DRIVER_READ_TYPES`;
+    - no file has an INT96 column, and Spark reads every file's dates and
+      timestamps raw (:func:`_spark_rebases`);
+    - no file has a Hadoop ``.<name>.crc`` sidecar, whose checksum
+      Spark's read verifies;
+    - pyarrow reads and casts every file; otherwise Spark's read reports
+      the fault, as it did before.
+
+    Rows of one file keep their order; across files only the set of rows
+    is Spark's, as with Spark. Any other frame (one a plugin derived from
+    the scan, a raster scene, another reader's) is gathered through Spark.
+    """
+    footers = _FOOTER_SCANS.get(frame)
+    table = None if footers is None else _read_on_driver(frame, columns, footers)
+    return frame.select(*columns).toArrow() if table is None else table
+
+
+def _read_on_driver(
+    frame: DataFrame, columns: list[str], footers: list[tuple[str, Any]]
+) -> pa.Table | None:
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # the schema select(*columns) has, without asking Spark to analyse it:
+    # plain, unambiguous top-level names (Spark parses '.', '`' and '*')
+    if any(set(c) & set(".`*") for c in columns) or len(
+        {c.lower() for c in frame.columns}
+    ) < len(frame.columns):
+        return None
+    schema = T.StructType([frame.schema[c] for c in columns])
+    if not all(_driver_readable(f.dataType) for f in schema):
+        return None
+    conf = frame.sparkSession.conf
+    corrected = conf.get("spark.sql.parquet.datetimeRebaseModeInRead").upper() == "CORRECTED"
+    for path, footer in footers:
+        leaves = footer.schema
+        head, name = os.path.split(path)
+        if (
+            _spark_rebases(footer, corrected)
+            or any(leaves.column(i).physical_type == "INT96" for i in range(len(leaves)))
+            or os.path.exists(os.path.join(head, f".{name}.crc"))
+        ):
+            return None
+    target = to_arrow_schema(
+        schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true",
+    )
+    try:
+        return pa.concat_tables(
+            [pq.ParquetFile(path).read(columns=columns).cast(target) for path, _ in footers]
+        )
+    except (OSError, pa.ArrowException):
+        return None  # a file changed or gone since create_scene: Spark's read reports it
 
 
 @register_reader("csv")
