@@ -2,8 +2,9 @@
 schema equals what ``spark.read.parquet`` infers, building the scene
 starts no Spark job, and an unreadable file still aborts at
 ``create_scene``. The save gather of an unchanged parquet scene reads
-its files on the driver and equals ``toArrow()``; any other frame is
-gathered through Spark."""
+its files on the driver and equals ``toArrow()``, and the scan's Spark
+plan is built only when a plugin derives a frame from it; any other
+frame is gathered through Spark."""
 
 import collections
 import datetime as dt
@@ -18,11 +19,13 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrameReader
 from pyspark.sql import types as T
 
 from trollflow2_spark.config.product_list import read_product_list
 from trollflow2_spark.plans.pipeline import PLUGIN_REGISTRY, process_message
 from trollflow2_spark.sources.scene import (
+    FooterScan,
     SceneCreationError,
     create_scene,
     gather_arrow,
@@ -252,6 +255,11 @@ def test_footer_schema_equals_spark_inference(spark, tmp_path):
         scene = create_scene(spark, paths)
         assert scene.schema == spark.read.parquet(*paths).schema, name
         assert _assert_gather_is_to_arrow(spark, scene, name) == on_driver, name
+        assert isinstance(scene, FooterScan) == from_footer, name
+        if from_footer:
+            # the preset schema is the one the JVM reports once the plan is built
+            jvm = T.StructType.fromJson(json.loads(scene._jdf.schema().json()))
+            assert jvm == scene.schema, (name, jvm, scene.schema)
 
 
 @pytest.mark.parametrize(
@@ -382,7 +390,8 @@ def test_add_overviews_levels_from_footer_typed_read(spark, tmp_path):
 
 def _process_counting_jobs(spark, monkeypatch, path, product, workers):
     """process_message on one scene file -> (summary, Spark jobs started
-    in the batches' job groups, written values, published messages)."""
+    in the batches' job groups, Spark parquet plans built, written
+    values, published messages)."""
     sc = spark.sparkContext
     groups = []
     set_job_group = sc.setJobGroup
@@ -393,6 +402,14 @@ def _process_counting_jobs(spark, monkeypatch, path, product, workers):
         return set_job_group(group, *args, **kwargs)
 
     monkeypatch.setattr(sc, "setJobGroup", record)
+    plans = []
+    parquet = DataFrameReader.parquet
+
+    def plan(reader, *paths, **options):
+        plans.append(paths)
+        return parquet(reader, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", plan)
     out = os.path.join(os.path.dirname(path), "out")
     plist = read_product_list(raw_string=PL_YAML.format(out=out, product=product))
     msg = {"type": "file", "platform_name": "TEST-1", "dataset": [{"uri": path}]}
@@ -404,7 +421,7 @@ def _process_counting_jobs(spark, monkeypatch, path, product, workers):
         for f in glob.glob(os.path.join(out, "published_messages", "*.json"))
         for line in open(f)
     ]
-    return summary, jobs, written, published
+    return summary, jobs, len(plans), written, published
 
 
 def _grid_scene(tmp_path):
@@ -415,23 +432,36 @@ def _grid_scene(tmp_path):
 def test_unchanged_parquet_scene_batch_starts_no_spark_job(spark, tmp_path, monkeypatch):
     """create_scene -> save_datasets -> publish on a pyarrow-written
     scene: the gather reads the file on the driver, so the batch starts
-    no Spark job (one before this route existed) and writes the scene's
-    rows in file order."""
+    no Spark job (one before this route existed), builds no Spark plan
+    for the scan, and writes the scene's rows in file order."""
     workers = [{"fun": "create_scene"}, {"fun": "save_datasets"}, {"fun": "publish"}]
-    summary, jobs, written, published = _process_counting_jobs(
+    summary, jobs, plans, written, published = _process_counting_jobs(
         spark, monkeypatch, _grid_scene(tmp_path), "v", workers
     )
     assert summary["status"] == "nominal"
     assert jobs == 0
+    assert plans == 0
     assert written == list(np.arange(16.0))
     assert len(published) == 1
+
+
+def test_clear_cache_without_cache_scene_builds_no_plan(spark, tmp_path, monkeypatch):
+    """A clear_cache with nothing cached has nothing to release: the
+    unchanged batch still builds no Spark plan for the scan."""
+    workers = [{"fun": "create_scene"}, {"fun": "save_datasets"}, {"fun": "clear_cache"}]
+    summary, jobs, plans, written, _published = _process_counting_jobs(
+        spark, monkeypatch, _grid_scene(tmp_path), "v", workers
+    )
+    assert summary["status"] == "nominal"
+    assert (jobs, plans) == (0, 0)
+    assert written == list(np.arange(16.0))
 
 
 @pytest.mark.parametrize("changed_by", ["resample_bbox", "load_composites"])
 def test_changed_parquet_scene_is_gathered_by_spark(spark, tmp_path, monkeypatch, changed_by):
     """A frame a plugin replaced (a bbox crop, a composite) is not the
-    footer-typed scan: the batch's gather is its one Spark job, and the
-    rows written are the plugin's."""
+    footer-typed scan: the scan's Spark plan is built once, the batch's
+    gather is its one Spark job, and the rows written are the plugin's."""
     from pyspark.sql import functions as F
 
     from trollflow2_spark.operators.transforms import COMPOSITE_REGISTRY
@@ -444,10 +474,11 @@ def test_changed_parquet_scene_is_gathered_by_spark(spark, tmp_path, monkeypatch
         monkeypatch.setitem(COMPOSITE_REGISTRY, "v2", lambda scene: F.col("v") * 2)
         step = {"fun": "load_composites"}
     workers = [{"fun": "create_scene"}, step, {"fun": "save_datasets"}, {"fun": "publish"}]
-    summary, jobs, written, published = _process_counting_jobs(
+    summary, jobs, plans, written, published = _process_counting_jobs(
         spark, monkeypatch, _grid_scene(tmp_path), product, workers
     )
     assert summary["status"] == "nominal"
     assert jobs == 1
+    assert plans == 1
     assert sorted(written) == want
     assert len(published) == 1

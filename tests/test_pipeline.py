@@ -574,6 +574,54 @@ product_list:
     assert "ch1_avg" in lvl.columns
 
 
+@pytest.mark.parametrize("ends", ["clear_cache", "abort"])
+def test_cached_scene_is_released_after_the_batch(spark, input_file, tmp_path, monkeypatch, ends):
+    """The frame cache_scene persisted is unpersisted, although a later
+    plugin replaced ``job["scene"]`` with a frame derived from it: by
+    clear_cache, or at the end of a batch that aborted before reaching
+    it. The persisted scene's storage level is NONE afterwards and the
+    session's persistent RDDs are back to what they were."""
+    from pyspark import StorageLevel
+
+    from trollflow2_spark.operators.transforms import COMPOSITE_REGISTRY
+    from trollflow2_spark.plans.pipeline import PLUGIN_REGISTRY
+
+    persisted = []
+    monkeypatch.setitem(COMPOSITE_REGISTRY, "ch1x2", lambda scene: F.col("ch1") * 2)
+    monkeypatch.setitem(
+        PLUGIN_REGISTRY, "keep_scene", lambda job: persisted.append(job["scene"])
+    )
+
+    def abort(job):
+        raise AbortProcessing("stop after the data checks")
+
+    monkeypatch.setitem(PLUGIN_REGISTRY, "abort", abort)
+    plist = read_product_list(raw_string=f"""
+product_list:
+  output_dir: "{tmp_path / 'out'}"
+  fname_pattern: "{{productname}}.{{format}}"
+  areas:
+    a1:
+      products:
+        ch1x2:
+          productname: ch1x2
+          formats: [{{format: parquet, writer: parquet}}]
+""")
+    last = {"clear_cache": ["save_datasets", "clear_cache"], "abort": ["abort"]}[ends]
+    workers = [
+        {"fun": name}
+        for name in ["create_scene", "cache_scene", "keep_scene", "load_composites",
+                     "check_valid_data_fraction", *last]
+    ]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    summary = process_message(spark, _message(input_file), plist, workers)
+    assert summary["status"] == ("nominal" if ends == "clear_cache" else "aborted")
+    (scene,) = persisted
+    assert scene.storageLevel == StorageLevel.NONE
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+
 def test_metadata_alias_plugin_list_values(spark, input_file, tmp_path):
     from trollflow2_spark.plans.pipeline import PLUGIN_REGISTRY
 

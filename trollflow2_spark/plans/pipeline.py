@@ -11,7 +11,9 @@ This is the engine's query lifecycle (≙ ``process_files`` →
       "input_mda":        {message metadata},
       "product_list":     {raw config dict},
       "work_items":       [flat leaf dicts for this priority batch],
-      "scene":            DataFrame (set by create_scene),
+      "scene":            DataFrame (set by create_scene; a parquet scene's
+                          Spark plan is built on first use),
+      "cached_scene":     the frame cache_scene persisted (until released),
       "resampled_scenes": {area: DataFrame},
       "produced_files":   SaveResult (set by save_datasets),
       "cancelled":        threading.Event (set when a worker times out),
@@ -731,17 +733,23 @@ def cache_scene_plugin(job: dict) -> None:
     """Persist the scene across the downstream multi-consumer stages
     (≙ ``use_fsspec_cache``, ``plugins/__init__.py:1141-1158`` — input
     caching; under Spark the useful cache level is the parsed columnar
-    scene, not raw bytes)."""
+    scene, not raw bytes). The persisted frame is kept as
+    ``job["cached_scene"]``: plugins after this one may replace
+    ``job["scene"]`` with a frame derived from it."""
     if job.get("scene") is not None:
-        job["scene"] = job["scene"].persist()
+        job["cached_scene"] = job["scene"] = job["scene"].persist()
 
 
 @register_plugin("clear_cache")
 def clear_cache_plugin(job: dict) -> None:
-    """Drop the cached scene after the job (≙ ``clear_fsspec_cache``,
-    ``plugins/__init__.py:1161-1167``)."""
-    if job.get("scene") is not None:
-        job["scene"].unpersist()
+    """Drop the frame :func:`cache_scene_plugin` persisted, whatever
+    ``job["scene"]`` holds by now (≙ ``clear_fsspec_cache``,
+    ``plugins/__init__.py:1161-1167``). Without a ``cache_scene`` it
+    does nothing; a batch that ends before it runs is released by
+    :func:`process_message`."""
+    cached = job.pop("cached_scene", None)
+    if cached is not None:
+        cached.unpersist()
 
 
 @register_plugin("add_overviews")
@@ -941,6 +949,7 @@ def process_message(
             aborted[prio] = str(exc)
         finally:
             spark.sparkContext.setJobGroup("", "", False)
+            clear_cache_plugin(job)  # an aborted, timed-out or crashed batch's cached scene
         merged.produced.extend(job["produced_files"].produced)
 
     audit = check_results(merged, start_time=t0)

@@ -10,8 +10,8 @@ Maps the reference's writer stack (``save_datasets`` /
   writer encodes its file from that table (≙ the single
   ``compute_writer_results`` call at ``plugins/__init__.py:395``). The
   gather is ``sources.scene.gather_arrow``: a parquet scene no plugin
-  changed is read from its files with pyarrow, with no Spark job; any
-  other frame runs one ``toArrow()`` Spark job;
+  changed is read from its files with pyarrow, with no Spark job and
+  no Spark plan built; any other frame runs one ``toArrow()`` Spark job;
 - *atomic commit*: each output is written to ``<final>.<token>.tmp`` and
   renamed into place after success (≙ ``use_tmp_file``/``staging_zone``,
   ``plugins/__init__.py:235-255``), so downstream pollers only ever see

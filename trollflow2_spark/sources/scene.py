@@ -18,19 +18,23 @@ becomes one multi-path scan (parallelism = files × row-groups), never a
 driver loop. Building a parquet, ORC or raster scene starts no Spark
 job, so the data's first job is the save gather. Parquet scenes are
 typed from the files' footers, read on the driver (``spark.read.parquet``
-alone would run one job per scene to infer the schema); ORC inference
+alone would run one job per scene to infer the schema), and the scan's
+Spark plan is built only when something first calls into Spark
+(:class:`FooterScan`), so opening one builds no plan; ORC inference
 already runs no job, and the raster readers type the scene from a
 driver-side header read.
 
 Route rule for the save gather (:func:`gather_arrow`): a batch that
-writes the footer-typed parquet scan exactly as ``create_scene`` opened
-it only moves data, so its columns are read from the files on the
-driver with pyarrow, and the batch starts no Spark job. That read is
-taken only where it gives exactly the table ``toArrow()`` gives. Any
-frame a plugin replaced (composites, aggregate, a non-``null``
-resample, a bbox filter), and every raster scene, is gathered through
-Spark. The driver read is bounded by what the writers hold anyway: one
-batch's output columns, which every writer encodes on the driver.
+writes the :class:`FooterScan` exactly as ``create_scene`` opened it
+(the rule is its type) only moves data, so its columns are read from
+the files on the driver with pyarrow; the batch starts no Spark job and
+never builds the scan's plan. That read is taken only where it gives
+exactly the table ``toArrow()`` gives. Any frame a plugin derived
+(composites, aggregate, a non-``null`` resample, a bbox filter) is a
+plain DataFrame and builds the scan's plan once; it, and every raster
+scene, is gathered through Spark. The driver read is bounded by what
+the writers hold anyway: one batch's output columns, which every writer
+encodes on the driver.
 """
 
 from __future__ import annotations
@@ -39,13 +43,14 @@ import json
 import mmap
 import os
 import tarfile
-import weakref
 from datetime import datetime, timezone
+from functools import cached_property
 from typing import Any, Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from trollflow2_spark.sinks import imagery, netcdf
 
@@ -397,6 +402,21 @@ def _spark_struct(fields: list[pa.Field], flag: Callable[[str], bool]) -> T.Stru
     return T.StructType([T.StructField(f.name, t) for f, t in zip(fields, types)])
 
 
+def _as_read(t: T.DataType) -> T.DataType:
+    """``t`` as Spark reports it for a file-source read (its
+    ``asNullable``): every field, array element and map value nullable,
+    field metadata kept. Spark's writer stores ``nullable=false``."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_read(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_read(t.elementType))
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_read(t.keyType), _as_read(t.valueType))
+    return t
+
+
 def _parquet_data_files(path: str) -> list[str] | None:
     """The data files Spark's file listing finds at ``path``: the file
     itself, or a directory's files except the names Spark skips (those
@@ -445,7 +465,7 @@ def _footer_scan(
                 footer = pq.read_metadata(f)
                 written = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
                 if written is not None:
-                    found = T.StructType.fromJson(json.loads(written))
+                    found = _as_read(T.StructType.fromJson(json.loads(written)))
                 else:
                     found = _spark_struct(list(footer.schema.to_arrow_schema()), flag)
             except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
@@ -460,7 +480,8 @@ def _footer_scan(
 def parquet_footer_schema(spark: SparkSession, paths: list[str]) -> T.StructType | None:
     """The schema ``spark.read.parquet(*paths)`` infers, read from every
     data file's footer on the driver: the schema Spark's writer stored
-    in the footer, else the Arrow schema mapped to Spark types. None
+    in the footer, made nullable as Spark reports any file-source read
+    (:func:`_as_read`), else the Arrow schema mapped to Spark types. None
     wherever Spark must infer it itself: a path that is not a plain file
     or a flat directory of them, an unreadable footer, a type the map
     does not cover, or files whose schemas differ. Spark's inference
@@ -469,28 +490,44 @@ def parquet_footer_schema(spark: SparkSession, paths: list[str]) -> T.StructType
     return None if scan is None else scan[0]
 
 
-#: the data files and footers of each DataFrame :func:`read_parquet`
-#: typed from the footers; keyed by the DataFrame object itself, so a
-#: frame any plugin derived from the scan is not in it
-_FOOTER_SCANS: weakref.WeakKeyDictionary[DataFrame, list[tuple[str, Any]]] = (
-    weakref.WeakKeyDictionary()
-)
+class FooterScan(ClassicDataFrame):
+    """A parquet scan typed from its data files' footers on the driver.
+
+    ``schema`` (and so ``columns`` and ``dtypes``) and ``sparkSession``
+    need no JVM call; the JVM plan, ``spark.read.schema(schema)
+    .parquet(*paths)``, is built the first time anything calls into
+    Spark, once. ``_footers`` is the ``[(data file, footer), ...]`` list
+    :func:`gather_arrow` reads the batch's columns from (private names,
+    so that a column named ``paths`` stays an attribute of the frame)."""
+
+    def __new__(cls, *args):
+        return object.__new__(cls)  # the base __new__ would call __init__ with its own arguments
+
+    def __init__(
+        self, spark: SparkSession, paths: list[str], schema: T.StructType, footers: list
+    ):
+        super().__init__(None, spark)
+        del self._jdf  # the base sets it; the plan below is built on first use
+        self.schema = schema  # the cached property, preset
+        self._paths = paths
+        self._footers = footers
+
+    @cached_property
+    def _jdf(self):
+        return self.sparkSession.read.schema(self.schema).parquet(*self._paths)._jdf
 
 
 @register_reader("parquet")
 def read_parquet(spark: SparkSession, paths: list[str], **kwargs) -> DataFrame:
-    """``spark.read.parquet`` with the schema :func:`parquet_footer_schema`
-    reads on the driver, so opening the scan starts no Spark job. Spark
-    infers it (one job) where the footers cannot give it, or where reader
-    options are given: some of them (``mergeSchema``, say) change
-    inference."""
+    """The parquet scan of ``paths``. A :class:`FooterScan` typed by
+    :func:`parquet_footer_schema` on the driver, so opening it builds no
+    Spark plan and starts no Spark job. Spark infers the schema (one job,
+    run here) where the footers cannot give it, or where reader options
+    are given: some of them (``mergeSchema``, say) change inference."""
     scan = None if kwargs else _footer_scan(spark, paths)
-    reader = spark.read.options(**kwargs)
     if scan is None:
-        return reader.parquet(*paths)
-    frame = reader.schema(scan[0]).parquet(*paths)
-    _FOOTER_SCANS[frame] = scan[1]
-    return frame
+        return spark.read.options(**kwargs).parquet(*paths)
+    return FooterScan(spark, paths, *scan)
 
 
 #: Spark types whose ``toArrow()`` values equal a pyarrow read of the
@@ -532,11 +569,12 @@ def _spark_rebases(footer: Any, corrected: bool) -> bool:
 def gather_arrow(frame: DataFrame, columns: list[str]) -> pa.Table:
     """The table ``frame.select(*columns).toArrow()`` gives.
 
-    When ``frame`` is the very scan :func:`read_parquet` typed from the
-    footers, its columns are read from the files on the driver with
-    pyarrow and cast to the Arrow schema ``toArrow()`` gives (the same
-    ``to_arrow_schema`` call), so no Spark job runs. That read is taken
-    only where it equals Spark's:
+    When ``frame`` is a :class:`FooterScan`, the very scan
+    :func:`read_parquet` typed from the footers, its columns are read
+    from the files on the driver with pyarrow and cast to the Arrow
+    schema ``toArrow()`` gives (the same ``to_arrow_schema`` call), so
+    no Spark job runs and the scan's plan is not built. That read is
+    taken only where it equals Spark's:
 
     - every selected column's Spark type is in :data:`_DRIVER_READ_TYPES`;
     - no file has an INT96 column, and Spark reads every file's dates and
@@ -544,20 +582,18 @@ def gather_arrow(frame: DataFrame, columns: list[str]) -> pa.Table:
     - no file has a Hadoop ``.<name>.crc`` sidecar, whose checksum
       Spark's read verifies;
     - pyarrow reads and casts every file; otherwise Spark's read reports
-      the fault, as it did before.
+      the fault (a file gone since ``create_scene`` fails as the plan
+      is built, PATH_NOT_FOUND).
 
     Rows of one file keep their order; across files only the set of rows
     is Spark's, as with Spark. Any other frame (one a plugin derived from
     the scan, a raster scene, another reader's) is gathered through Spark.
     """
-    footers = _FOOTER_SCANS.get(frame)
-    table = None if footers is None else _read_on_driver(frame, columns, footers)
+    table = _read_on_driver(frame, columns) if isinstance(frame, FooterScan) else None
     return frame.select(*columns).toArrow() if table is None else table
 
 
-def _read_on_driver(
-    frame: DataFrame, columns: list[str], footers: list[tuple[str, Any]]
-) -> pa.Table | None:
+def _read_on_driver(frame: FooterScan, columns: list[str]) -> pa.Table | None:
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -572,7 +608,7 @@ def _read_on_driver(
         return None
     conf = frame.sparkSession.conf
     corrected = conf.get("spark.sql.parquet.datetimeRebaseModeInRead").upper() == "CORRECTED"
-    for path, footer in footers:
+    for path, footer in frame._footers:
         leaves = footer.schema
         head, name = os.path.split(path)
         if (
@@ -588,7 +624,7 @@ def _read_on_driver(
     )
     try:
         return pa.concat_tables(
-            [pq.ParquetFile(path).read(columns=columns).cast(target) for path, _ in footers]
+            [pq.ParquetFile(path).read(columns=columns).cast(target) for path, _ in frame._footers]
         )
     except (OSError, pa.ArrowException):
         return None  # a file changed or gone since create_scene: Spark's read reports it
